@@ -1,11 +1,18 @@
 """Seeded inputs and truth for the analyze_traces workload.
 
-    python3 gen_analyze.py SEED DIR
+    python3 gen_analyze.py SEED DIR ORACLE_SQL
 
 writes into DIR
     spans/part-N.jsonl  a trace forest as OTLP/JSON lines, one trace per
                         line: varied depth (1-16), fan-out, orphan spans
     truth_*.parquet     the exact output each trace operator must produce
+    registry/           the tables the query registry registers: clustered
+                        64-d vectors as embeddings.parquet, which
+                        dd_semantic_clusters reads, and one-row stubs of
+                        the tables it does not read
+    truth_semantic_clusters.parquet
+                        that query's output, computed by DuckDB running
+                        ORACLE_SQL, the query's oracle from the registry
 """
 import json
 import random
@@ -13,6 +20,7 @@ import sys
 from collections import defaultdict
 from pathlib import Path
 
+import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -22,6 +30,11 @@ SERVICES = [f"svc-{i}" for i in range(12)]
 OPS = [f"op-{w}" for w in ("get", "put", "list", "auth", "query", "render", "pay",
                              "ship", "cache", "index", "scan", "merge", "send", "poll")]
 BASE_US = 1_700_000_000_000_000
+N_VECTORS = 600
+N_CENTERS = 12
+# the registry's fixture tables besides embeddings (graft.Tables)
+STUBS = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+         "documents")
 
 
 def forest(rnd):
@@ -172,6 +185,30 @@ def spans(seed, out):
                    f"{out}/truth_service_graph.parquet")
 
 
+def embeddings(seed, out, oracle_sql):
+    """Vectors scattered around a few centers, so the k-NN graph has
+    components of several sizes; the truth is the oracle's answer."""
+    rnd = random.Random(seed * 7919 + 1)
+    centers = [[rnd.gauss(0, 1) for _ in range(64)] for _ in range(N_CENTERS)]
+    vecs = [[x + rnd.gauss(0, 0.9) for x in rnd.choice(centers)] for _ in range(N_VECTORS)]
+    reg = Path(out, "registry")
+    reg.mkdir()
+    for t in STUBS:
+        pq.write_table(pa.table({"stub": pa.array([0], pa.int32())}), reg / f"{t}.parquet")
+    pq.write_table(pa.table({"ts": pa.array([0], pa.timestamp("us"))}), reg / "events.parquet")
+    f = reg / "embeddings.parquet"
+    pq.write_table(pa.table({"vec_id": pa.array(range(N_VECTORS), pa.int64()),
+                             "embedding": pa.array(vecs, pa.list_(pa.float32()))}), f)
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{f}')")
+        truth = con.execute(Path(oracle_sql).read_text()).arrow()
+    finally:
+        con.close()
+    pq.write_table(truth, f"{out}/truth_semantic_clusters.parquet")
+
+
 if __name__ == "__main__":
     Path(sys.argv[2], "spans").mkdir(parents=True, exist_ok=True)
     spans(int(sys.argv[1]), sys.argv[2])
+    embeddings(int(sys.argv[1]), sys.argv[2], sys.argv[3])

@@ -3,8 +3,8 @@
     python3 e2ebench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
 Builds the engine from source (build.py), makes the workload's inputs from
-the seed (cached by seed under .bench_build/e2ebench/inputs and verified by
-checksum before use), runs the workload in a fresh JVM, checks its outputs,
+the seed (cached by seed and build under .bench_build/e2ebench/inputs and
+verified by checksum before use), runs the workload in a fresh JVM, checks its outputs,
 and prints one JSON line: {"correct", "attempted", "failed", "metrics"}.
 --trace 0 reports the end-to-end metrics of BENCHMARK.json, --trace 1 the
 per-layer ones. See README.md for the workloads and the metrics.
@@ -30,9 +30,6 @@ T0 = time.monotonic()
 BENCH = ROOT / ".bench_build" / "e2ebench"
 WORK = BENCH / "run"
 HEAP = "2g"
-# ingest_http_pb's fixed offered rate in requests/s (400 rows each): about
-# half of the closed-loop saturation measured on a 4-core host (README.md)
-INGEST_RATE = 30
 WORKLOADS = ("ingest_http_pb", "analyze_traces")
 JVM_OPTS = ["--add-opens=java.base/java.lang=ALL-UNNAMED",
             "--add-opens=java.base/java.lang.invoke=ALL-UNNAMED",
@@ -47,7 +44,8 @@ JVM_OPTS = ["--add-opens=java.base/java.lang=ALL-UNNAMED",
             "--add-opens=java.base/sun.nio.cs=ALL-UNNAMED",
             "--add-opens=java.base/sun.security.action=ALL-UNNAMED",
             "--add-opens=java.base/sun.util.calendar=ALL-UNNAMED",
-            "-XX:-UsePerfData", "-Dspark.ui.enabled=false"]
+            "-XX:-UsePerfData", "-XX:-UseDynamicNumberOfCompilerThreads",
+            "-Dspark.ui.enabled=false"]
 
 
 def note(msg):
@@ -103,13 +101,18 @@ def inputs(classes, workload, seed):
     log = WORK / "gen.log"
     if workload == "analyze_traces":
         def make(d):
+            sql = WORK / "oracle.sql"
+            if java(classes, ["oracle-sql", "dd_semantic_clusters", sql], "1g", log, 120) != 0:
+                return False
             with open(log, "ab") as err:
                 return subprocess.run([sys.executable, str(HERE / "gen_analyze.py"), str(seed),
-                                       str(d)], stdout=err, stderr=err).returncode == 0
+                                       str(d), str(sql)], stdout=err, stderr=err).returncode == 0
     else:
         def make(d):
             return java(classes, ["gen-ingest", seed, d], "1g", log, 300) == 0
-    return cached(BENCH / "inputs" / workload / str(seed), make)
+    # keyed by the build and the generator too: the truth comes from them
+    key = hashlib.sha256(classes.name.encode() + (HERE / "gen_analyze.py").read_bytes())
+    return cached(BENCH / "inputs" / workload / key.hexdigest()[:16] / str(seed), make)
 
 
 def result(spec, res, trace):
@@ -152,14 +155,11 @@ def main():
         log = WORK / "run.log"
         rc = java(classes, ["run", "--workload", args.workload, "--inputs", str(d),
                             "--work", str(WORK), "--seconds", str(args.seconds),
-                            "--trace", str(args.trace), "--out", str(out),
-                            "--rate", str(INGEST_RATE)], HEAP, log, 150)
+                            "--trace", str(args.trace), "--out", str(out)], HEAP, log, 150)
         if rc != 0 or not out.exists():
             sys.stderr.write(log.read_text()[-4000:])
             fail(f"{args.workload} run exited with {rc}")
         note("run done")
-        if os.environ.get("E2EBENCH_LOG"):
-            sys.stderr.write(log.read_text())
         res = json.loads(out.read_text())
         for e in res["errors"]:
             sys.stderr.write(f"e2ebench: check failed: {e}\n")

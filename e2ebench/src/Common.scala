@@ -14,13 +14,13 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 final case class Args(workload: String, inputs: File, work: File, seconds: Int,
-                      trace: Boolean, out: File, rate: Double)
+                      trace: Boolean, out: File)
 
 object Args {
   def parse(a: Seq[String]): Args = {
     val m = a.grouped(2).map(p => p(0).stripPrefix("--") -> p(1)).toMap
     Args(m("workload"), new File(m("inputs")), new File(m("work")), m("seconds").toInt,
-      m("trace") == "1", new File(m("out")), m.getOrElse("rate", "0").toDouble)
+      m("trace") == "1", new File(m("out")))
   }
 }
 
@@ -44,14 +44,36 @@ object Stat {
   def ms(ns: Long): Double = ns / 1e6
 }
 
-/** Process-level meters: CPU time, GC time and pauses, post-GC heap. */
+/** Process-level meters: CPU time, JIT and GC time, GC pauses, heap. */
 object Jvm {
   private val os = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-  private val jit = ManagementFactory.getCompilationMXBean
-  /** Process CPU time less the JIT compilers' time: the program's own work,
-    * without the compile bursts that make short runs disagree. */
-  def cpuNs: Long = os.getProcessCpuTime - jit.getTotalCompilationTime * 1000000L
+  /** CPU time of the process less its JIT compiler threads: the work the
+    * program's own threads and the collector do. */
+  def cpuNs: Long = os.getProcessCpuTime - jitCpuNs
+  /** CPU time of the JIT compiler threads, summed from each thread's own
+    * counters in /proc (the JVMs run with a fixed set of compiler threads,
+    * so none exits and takes its count with it). */
+  def jitCpuNs: Long = {
+    val ticks = new File("/proc/self/task").listFiles().iterator.map { t =>
+      try {
+        val s = new String(java.nio.file.Files.readAllBytes(new File(t, "stat").toPath), "US-ASCII")
+        val name = s.substring(s.indexOf('(') + 1, s.lastIndexOf(')'))
+        if (!name.matches("C[12] CompilerThre.*")) 0L
+        else {
+          // fields after the name start at field 3; utime and stime are 14 and 15
+          val f = s.substring(s.lastIndexOf(')') + 2).split(' ')
+          f(11).toLong + f(12).toLong
+        }
+      } catch { case _: java.io.IOException => 0L }
+    }.sum
+    ticks * 10000000L // clock ticks of 10 ms
+  }
+  /** Heap in use after two full collections: what the live state holds. */
+  def liveHeapMb(): Double = {
+    System.gc(); System.gc()
+    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1e6
+  }
   /** (steal, total) CPU ticks of the host so far: the share of CPU time the
     * hypervisor gave to others, which slows wall clocks but not CPU time. */
   def hostTicks: (Long, Long) =

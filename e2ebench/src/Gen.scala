@@ -88,6 +88,17 @@ object Gen {
     s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
   private def words(r: SplittableRandom, n: Int): String =
     (0 until n).map(_ => Words(r.nextInt(Words.length))).mkString(" ")
+  private val B64 = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/"
+  private def b64(r: SplittableRandom, n: Int): String = {
+    val sb = new StringBuilder(n)
+    var i = 0
+    while (i < n) { sb.append(B64.charAt(r.nextInt(64))); i += 1 }
+    sb.toString
+  }
+  /** Mean length of a log record's random payload attribute, chosen so a
+    * gzip'd logs request carries about 786 bytes per record: the record
+    * size the reference's capacity harness is calibrated to. */
+  val LogPayloadChars = 830
 
   private final case class Attr(key: String, s: String, i: Long, isInt: Boolean)
   private def attrs(r: SplittableRandom): Seq[Attr] = Seq(
@@ -127,8 +138,11 @@ object Gen {
     while (i < n) {
       val off = tsOffsetUs(r)
       val (sn, st) = Sev(r.nextInt(Sev.length))
-      val body = words(r, 4 + r.nextInt(12))
-      val as = attrs(r)
+      val body = s"${words(r, 8 + r.nextInt(16))} user=${hex(r, 8)} latency_ms=${r.nextInt(5000)}"
+      val as = attrs(r) ++ Seq(
+        Attr("http.route", s"/api/v1/${Words(r.nextInt(Words.length))}/${r.nextInt(100000)}", 0, isInt = false),
+        Attr("client.address", s"10.${r.nextInt(256)}.${r.nextInt(256)}.${r.nextInt(256)}", 0, isInt = false),
+        Attr("payload", b64(r, LogPayloadChars * 4 / 5 + r.nextInt(LogPayloadChars * 2 / 5)), 0, isInt = false))
       val (tid, sid) = (hex(r, 16), hex(r, 8))
       val ns = Check.BaseNs + off * 1000
       recs(i) = o => o.msg(2) { lr =>

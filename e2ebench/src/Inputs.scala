@@ -7,8 +7,8 @@ import java.util.concurrent.{Executors, TimeUnit}
 /** Seeded request bodies for the ingest workload, written with their truth.
   * The analyze inputs come from gen_analyze.py. */
 object Inputs {
-  // ingest request mix
-  val Bodies = 240
+  // ingest request mix: distinct bodies, and records per body (see README.md)
+  val Bodies = 120
   val RecsPerBody = 400
 
   private def parallel(tasks: Seq[() => Unit]): Unit = {
@@ -21,7 +21,8 @@ object Inputs {
   private def rnd(seed: Long, stream: Long) = new SplittableRandom(seed * 1000003L + stream)
 
   /** Logs-heavy mix: 7 in 10 bodies are logs, 2 traces, 1 metrics (all four
-    * shapes). Bodies are gzip'd protobuf, as the collector sends them. */
+    * shapes). Bodies are gzip'd protobuf, as the collector sends them. The
+    * mix is a choice; the reference publishes none. */
   def genIngest(seed: Long, dir: File): Unit = {
     val out = new Array[(String, Array[Byte], Truth)](Bodies)
     parallel(Seq.tabulate(4) { w => () =>

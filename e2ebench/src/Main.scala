@@ -22,7 +22,8 @@ final class Ctx(val a: Args) {
   /** The meters of one measured phase, from construction to `stop`: CPU,
     * GC, Spark totals, and whether spans are kept. */
   final class Meter {
-    private val cpu0 = Jvm.cpuNs; private val gc0 = Jvm.gcMs; private val t0 = System.nanoTime()
+    private val cpu0 = Jvm.cpuNs; private val gc0 = Jvm.gcMs; private val jit0 = Jvm.jitCpuNs
+    private val t0 = System.nanoTime()
     private val l0 = listener.map(_.snapshot)
     private val host0 = Jvm.hostTicks
     Jvm.recording = true
@@ -36,6 +37,7 @@ final class Ctx(val a: Args) {
       val host1 = Jvm.hostTicks
       r.layer("host.steal_pct") = (100.0 * (host1._1 - host0._1) / math.max(host1._2 - host0._2, 1), "%")
       r.layer("jvm.gc_s") = ((Jvm.gcMs - gc0) / 1000.0, "s")
+      r.layer("jvm.jit_cpu_s") = ((Jvm.jitCpuNs - jit0) / 1e9, "s")
       r.layer("jvm.gc_pause_max_ms") = (Jvm.pauseMaxMs.get.toDouble, "ms")
       val d = (for (l <- listener; a <- l0) yield l.snapshot.map { case (k, v) => k -> (v - a(k)) / units })
         .getOrElse(Map.empty[String, Double].withDefaultValue(0.0))
@@ -46,34 +48,6 @@ final class Ctx(val a: Args) {
       r.layer("spark.shuffle_write_mb") = (d("shuffle") / 1e6, "MB")
       r.layer("spark.spill_mb") = (d("spill") / 1e6, "MB")
     }
-  }
-
-  /** Warm up, then measure whole passes: `gate` (the correctness pass) and
-    * `warm` run untimed until pass times stop falling by more than 3% or
-    * the warm-up has used `a.seconds`; `timed` then runs at least
-    * `minPasses` times and until `a.seconds` have passed. Returns the
-    * timed passes' wall times and the process CPU seconds they used. */
-  def passes(r: Report, minPasses: Int)(gate: => Double, warm: => Double,
-                                         timed: => Double): (Seq[Double], Double) = {
-    val w0 = System.nanoTime()
-    var prev = gate
-    Log(f"gate pass $prev%.2fs")
-    var done = false
-    while (!done && (System.nanoTime() - w0) / 1e9 < a.seconds) {
-      val cur = warm
-      Log(f"warm-up pass $cur%.2fs")
-      done = cur > prev * 0.97
-      prev = cur
-    }
-    val m = new Meter
-    val times = scala.collection.mutable.ArrayBuffer[Double]()
-    while (times.size < minPasses || m.wallS < a.seconds) {
-      times += timed
-      Log(f"pass ${times.last}%.2fs")
-    }
-    val cpu = m.cpuS
-    m.stop(r, times.size)
-    (times.toSeq, cpu)
   }
 
   def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
@@ -103,6 +77,7 @@ object Main {
   def main(args: Array[String]): Unit = args.head match {
     case "gen-ingest" => Inputs.genIngest(args(1).toLong, new File(args(2)))
     case "loadgen" => LoadGen.main(args.tail)
+    case "oracle-sql" => Gen.writeText(new File(args(2)), graft.SparkEntry.oracleSql(args(1)))
     case "run" =>
       val code = try run(Args.parse(args.tail.toSeq)) catch {
         case e: Throwable => e.printStackTrace(); 1
@@ -119,26 +94,15 @@ object Main {
       case "ingest_http_pb" => new Ingest(ctx)
     }
     val r = new Report
-    // set up five times: once cold from JVM start, four more in this JVM
-    var spark = Session.build(a.work)
+    // set-up, timed from JVM start: what a user waits for before the first
+    // request or query
+    val spark = Session.build(a.work)
     w.setup(spark)
-    val setups = scala.collection.mutable.ArrayBuffer((System.currentTimeMillis() - jvmStartMs) / 1000.0)
-    for (_ <- 0 until 4) {
-      w.teardown(spark); spark.stop()
-      val t0 = System.nanoTime()
-      spark = Session.build(a.work)
-      w.setup(spark)
-      setups += (System.nanoTime() - t0) / 1e9
-    }
-    Log(s"set-ups ${setups.mkString(" ")}")
-    r.e2e("setup_s") = (Stat.median(setups.toSeq), "s")
-    r.layer("setup.cold_s") = (setups.head, "s")
+    r.e2e("setup_s") = ((System.currentTimeMillis() - jvmStartMs) / 1000.0, "s")
+    Log(s"set-up ${r.e2e("setup_s")._1}")
     ctx.attach(spark)
     try w.run(spark, r)
     finally { w.teardown(spark) }
-    // what the program keeps once the work is done: heap after full GCs
-    System.gc(); System.gc()
-    r.e2e("heap_retained_mb") = (ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1e6, "MB")
     r.layer("jvm.heap_peak_after_gc_mb") = (Jvm.heapPeakAfterGc.get / 1e6, "MB")
     Log("run done")
     if (a.trace) r.e2e.foreach { case (k, v) => r.layer(s"traced.$k") = v }

@@ -26,8 +26,8 @@ def run_on(workload, inputs):
     out = run.WORK / "result.json"
     rc = run.java(build.build(), ["run", "--workload", workload, "--inputs", inputs,
                                   "--work", run.WORK,
-                                  "--seconds", 1, "--trace", 0, "--out", out,
-                                  "--rate", run.INGEST_RATE], run.HEAP, run.WORK / "run.log", 170)
+                                  "--seconds", 1, "--trace", 0, "--out", out],
+                 run.HEAP, run.WORK / "run.log", 170)
     assert rc == 0, (run.WORK / "run.log").read_text()[-3000:]
     res = json.loads(out.read_text())
     return res["correct"], res["errors"]
@@ -55,7 +55,8 @@ class Gates(unittest.TestCase):
     def test_analyze_operators_against_truth(self):
         import pyarrow.parquet as pq
         d = self.copy("analyze_traces")
-        ops = ("trace_tree", "critical_path", "self_time", "red_metrics", "service_graph")
+        ops = ("trace_tree", "critical_path", "self_time", "red_metrics", "service_graph",
+               "semantic_clusters")
         for q in ops:  # drop one truth row of every operator
             f = d / f"truth_{q}.parquet"
             pq.write_table(pq.read_table(f).slice(1), f)
