@@ -118,7 +118,7 @@ object Bench {
     //   not a global unpersist-everything sweep that would also eat any
     //   future long-lived cached state.
     // - if fn() threw during CONSTRUCTION: operators with eager internal
-    //   checkpoints (traceTree, neardupClusters, semDedup rounds) may
+    //   checkpoints outside Blocks.iterate (semDedup rounds) may
     //   already hold blocks no frame references — the global sweep is
     //   the only handle left, and on this failure path nothing
     //   long-lived can be cached mid-query.

@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, when}
 
 /** Deterministic release of the block-manager blocks behind
-  * `Dataset.localCheckpoint()`.
+  * `Dataset.localCheckpoint()`, and the fixpoint kernel of the iterative
+  * walks that own such checkpoints round by round.
   *
   * `Dataset.unpersist()` only clears CacheManager entries (the
   * `.persist()`/`.cache()` path); a localCheckpoint's blocks belong to the
@@ -32,27 +34,61 @@ private[graft] object Blocks {
       case lr: LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
 
-  /** Eager localCheckpoint that additionally returns the value of a
-    * one-row aggregate `metric` OBSERVED during the same materialization:
-    * the rows already stream past a CollectMetrics node while the
-    * checkpoint job runs, so iterative operators (connected components,
-    * trace walks) read their per-round convergence statistic for free
-    * instead of paying a separate aggregate job per round. Metric
-    * delivery is an async listener hop — poll with a generous timeout and
-    * return None if it never arrives (a future Spark behavior change), so
-    * a caller can fall back to the explicit job: correctness never rides
-    * the piggyback. */
-  def checkpointObserving(df: DataFrame, metric: org.apache.spark.sql.Column)
-      : (DataFrame, Option[org.apache.spark.sql.Row]) = {
-    val obs = org.apache.spark.sql.Observation()
-    val out = df.observe(obs, metric).localCheckpoint()
-    val t0 = System.nanoTime()
-    val row =
-      try Some(scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(10, "s")))
-      catch { case _: java.util.concurrent.TimeoutException => None }
-    if (sys.env.contains("SPARK_GRAFT_OBS_DEBUG"))
-      System.err.println(f"[obs-wait] ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-    (out, row)
+  /** Runs an iterative walk ([[Traces.traceTree]], [[Traces.criticalPath]],
+    * [[Dedup.neardupClusters]]) to its stop rule and returns its last
+    * round's frame, whose blocks the caller then owns.
+    *
+    * Round 0 eagerly localCheckpoints `init`; round r >= 1 checkpoints
+    * `step` over round r-1's frame, so lineage stays flat however many
+    * rounds run. Each round's checkpoint counts its rows where `pending`
+    * holds, and `more(r, count, previous count)` decides whether round
+    * r+1 runs. The count rides the checkpoint job as a name-based observed
+    * metric, read from the checkpointed query's `observedMetrics` once the
+    * job returns: its accumulators merge on the driver before the job
+    * completes, so there is nothing to wait for and no separate count job.
+    * Round 0 is counted only under `countInit`; otherwise it reports
+    * `Long.MaxValue` (unknown, assume work is pending) and that is also
+    * round 1's previous count.
+    *
+    * `between`, when given, turns a frame the walk goes on from into the
+    * next step's input through one more, uncounted checkpoint (the
+    * pointer-chase of connected components). A superseded frame's blocks
+    * are released as soon as its successor is materialized; when a round
+    * throws, the live frame is released before the exception leaves. Past
+    * `maxRounds` rounds that still ask for more, the walk fails with an
+    * IllegalStateException. */
+  def iterate(walk: String, init: DataFrame, pending: Column,
+              maxRounds: Int = Int.MaxValue, countInit: Boolean = false)(
+      step: DataFrame => DataFrame,
+      between: Option[DataFrame => DataFrame] = None)(
+      more: (Int, Long, Long) => Boolean): DataFrame = {
+    var live: DataFrame = null
+    def advance(next: DataFrame, counted: Boolean): Long = {
+      val observed =
+        if (counted) next.observe("pending", count(when(pending, true)))
+        else next
+      val frame = observed.localCheckpoint()
+      if (live != null) release(live)
+      live = frame
+      if (counted) observed.queryExecution.observedMetrics("pending").getLong(0)
+      else Long.MaxValue
+    }
+    try {
+      var n = advance(init, countInit)
+      var prev = Long.MaxValue
+      var r = 0
+      while (more(r, n, prev)) {
+        if (r == maxRounds)
+          throw new IllegalStateException(
+            s"$walk did not converge within $maxRounds rounds")
+        if (r > 0) between.foreach(b => advance(b(live), counted = false))
+        prev = n
+        n = advance(step(live), counted = true)
+        r += 1
+      }
+      val out = live
+      live = null
+      out
+    } finally if (live != null) release(live)
   }
 }

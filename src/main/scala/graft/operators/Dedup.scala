@@ -339,117 +339,69 @@ object Dedup {
     * by id — uniform shuffles, no skew amplification. The shortcut makes
     * rounds O(log diameter): a 64-node adversarial chain converges in ~7
     * rounds instead of 63, while the shallow clusters LSH actually emits
-    * still finish in 2-3. Lineage is truncated per round with an eager
-    * localCheckpoint so the plan stays flat however many rounds run.
-    * Driver work per round is one converged? counter — no row data ever
-    * reaches the driver. `maxRounds` bounds an adversarial input that
-    * cannot converge (2^maxRounds exceeds any real component diameter). */
+    * still finish in 2-3. [[Blocks.iterate]] runs the rounds: lineage is
+    * truncated per round with an eager localCheckpoint so the plan stays
+    * flat however many rounds run, and the driver's only work per round is
+    * the count of labels the propagate step lowered, read off that step's
+    * own checkpoint job — no row data ever reaches the driver, and numeric
+    * and string ids walk alike. `maxRounds` bounds an adversarial input
+    * that cannot converge (2^maxRounds exceeds any real component
+    * diameter). */
   def neardupClusters(pairs: DataFrame, idA: String = "id_a",
                       idB: String = "id_b", maxRounds: Int = 64): DataFrame = {
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionAll(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .distinct().persist()
-    val numericIds = edges.schema("src").dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType]
-    // Convergence check: labels only ever decrease, so for NUMERIC ids one
-    // overflow-proof sum aggregate per round detects the fixpoint with no
-    // extra join — and that sum rides the round's own checkpoint action as
-    // an observed metric (the rows already stream past the CollectMetrics
-    // node during materialization), so the numeric path pays NO separate
-    // convergence job per round. String ids (the module contract allows
-    // hex-digest ids) have no such homomorphism — they keep the
-    // type-agnostic changed-rows join on the freshly checkpointed frames.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val v = df.agg(sum(col("cluster_id").cast("decimal(38,0)"))).first()
-      if (v.isNullAt(0)) java.math.BigDecimal.ZERO else v.getDecimal(0)
-    }
-    // Checkpoint `df`, returning the frame plus (numeric path) the label
-    // sum observed DURING that materialization. Metric delivery is an
-    // async listener hop, so poll briefly; if it never arrives (a future
-    // Spark behavior change), fall back to the explicit aggregate job —
-    // correctness never rides the piggyback.
-    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) =
-      if (!numericIds) (df.localCheckpoint(), null)
-      else {
-        val (out, row) = Blocks.checkpointObserving(df,
-          sum(col("cluster_id").cast("decimal(38,0)")).as("s"))
-        val s = row match {
-          case Some(r) if r.isNullAt(0) => java.math.BigDecimal.ZERO
-          case Some(r) => r.getDecimal(0)
-          case None => labelSum(out)
-        }
-        (out, s)
-      }
     // Round 1's neighbor-min folds into the SAME shuffle that used to
     // build the id set (`select(src).distinct` paid an identical exchange
     // to emit labels = id): labels start at min(id, min neighbor) — one
     // full propagation round ahead — and the iteration below converges to
     // the same per-component minimum fixpoint (labels stay within the
     // component's id set, the component min keeps labeling itself).
-    var (labels, prevSum) = checkpointWithSum(
-      edges.groupBy(col("src"))
-        .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
-        .select(col("src").as("id"), col("cluster_id")))
-    var converged = false
-    var round = 0
-    while (!converged) {
-      round += 1
-      if (round > maxRounds)
-        throw new IllegalStateException(
-          s"neardupClusters did not converge within $maxRounds rounds")
+    val init = edges.groupBy(col("src"))
+      .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
+      .select(col("src").as("id"), col("cluster_id"))
+    // The propagate step counts the labels it lowered. Labels only ever
+    // decrease, so a round that lowers none found labels ALREADY a
+    // fixpoint of the propagate step (for all edges (x,y):
+    // label(x) <= label(y), which by symmetry makes labels constant per
+    // component and equal to the component min): the walk stops there,
+    // without a chase checkpoint that would re-materialize an identical
+    // table. (The step's checkpoint also serves the chase below, which
+    // self-joins its frame: unmaterialized, the self-join would recompute
+    // the neighbor-min shuffle on both branches.)
+    def propagate(labels: DataFrame): DataFrame = {
       val nbrMin = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src")).agg(min("cluster_id").as("nbr_min"))
-      // the propagate step rides its own checkpoint's observed sum too:
-      // an unchanged sum here means labels was ALREADY a fixpoint of the
-      // propagate step (for all edges (x,y): label(x) <= label(y), which
-      // by symmetry makes labels constant per component and equal to the
-      // component min) — the confirming round then skips the chase
-      // checkpoint entirely instead of re-materializing an identical table
-      val (stepped, sSum) = checkpointWithSum(labels.as("l")
+      labels.as("l")
         .join(nbrMin.as("n"), col("l.id") === col("n.src"), "left")
         .select(col("l.id").as("id"),
           least(col("l.cluster_id"),
-            coalesce(col("n.nbr_min"), col("l.cluster_id"))).as("cluster_id")))
-      // (the checkpoint also serves its original purpose: the chase below
-      // self-joins this frame, and an unmaterialized self-join would
-      // recompute the neighbor-min shuffle on both branches)
-      if (numericIds && sSum.compareTo(prevSum) == 0) {
-        converged = true
-        Blocks.release(labels)
-        labels = stepped
-      } else {
-        // pointer doubling: chase one extra hop through the label table so
-        // label distance halves per round (O(log diameter) total rounds).
-        // NEGATIVE RESULT (r18): composing the chase with itself (a 4x
-        // jump per round from the same two checkpoints, inner join
-        // recomputed on both sides of the outer) measured dd_semantic_
-        // clusters 4.7->19.5 s in the PlanProbe A/B — the nested
-        // unmaterialized self-join's recompute + per-round planning far
-        // exceeded the saved rounds, the same lesson as r17's fused-round
-        // revert. Single chase per materialization is the measured
-        // optimum on this family.
-        val (next, s) = checkpointWithSum(stepped.as("a")
-          .join(stepped.select(col("id").as("pid"),
-            col("cluster_id").as("pcluster")).as("p"),
-            col("a.cluster_id") === col("p.pid"), "left")
-          .select(col("a.id").as("id"),
-            least(col("a.cluster_id"),
-              coalesce(col("p.pcluster"), col("a.cluster_id"))).as("cluster_id")))
-        Blocks.release(stepped) // next is materialized; the intermediate can go
-        if (numericIds) {
-          converged = s.compareTo(prevSum) == 0
-          prevSum = s
-        } else
-          converged = next.as("a")
-            .join(labels.as("b"), col("a.id") === col("b.id"))
-            .where(col("a.cluster_id") =!= col("b.cluster_id"))
-            .isEmpty
-        Blocks.release(labels) // drop the superseded checkpoint's blocks
-        labels = next
-      }
+            coalesce(col("n.nbr_min"), col("l.cluster_id"))).as("cluster_id"),
+          (col("n.nbr_min") < col("l.cluster_id")).as("lowered"))
     }
-    edges.unpersist()
-    labels
+    // pointer doubling: chase one extra hop through the label table so
+    // label distance halves per round (O(log diameter) total rounds).
+    // NEGATIVE RESULT (r18): composing the chase with itself (a 4x jump
+    // per round from the same two checkpoints, inner join recomputed on
+    // both sides of the outer) measured dd_semantic_clusters 4.7->19.5 s
+    // in the PlanProbe A/B — the nested unmaterialized self-join's
+    // recompute + per-round planning far exceeded the saved rounds, the
+    // same lesson as r17's fused-round revert. Single chase per
+    // materialization is the measured optimum on this family.
+    def chase(stepped: DataFrame): DataFrame =
+      stepped.as("a")
+        .join(stepped.select(col("id").as("pid"),
+          col("cluster_id").as("pcluster")).as("p"),
+          col("a.cluster_id") === col("p.pid"), "left")
+        .select(col("a.id").as("id"),
+          least(col("a.cluster_id"),
+            coalesce(col("p.pcluster"), col("a.cluster_id"))).as("cluster_id"))
+    try
+      Blocks.iterate("neardupClusters", init, col("lowered"), maxRounds)(
+          propagate, Some(chase))((_, lowered, _) => lowered != 0)
+        .select(col("id"), col("cluster_id"))
+    finally edges.unpersist()
   }
 
   /** Exact n-gram Jaccard similarity for an explicit pair list

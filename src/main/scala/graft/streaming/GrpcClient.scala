@@ -50,7 +50,7 @@ final class GrpcClient(host: String, port: Int) {
     def nextMessage(timeoutMs: Long = 15000): Option[Array[Byte]] =
       Option(handler.messages.poll(timeoutMs, TimeUnit.MILLISECONDS))
 
-    /** Await trailers; returns (grpc-status, grpc-message). */
+    /** Waits for the trailers; returns (grpc-status, grpc-message). */
     def awaitStatus(timeoutMs: Long = 15000): (Int, String) = {
       if (!handler.done.await(timeoutMs, TimeUnit.MILLISECONDS))
         throw new RuntimeException("gRPC call did not complete in time")

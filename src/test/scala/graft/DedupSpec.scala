@@ -52,6 +52,21 @@ class DedupSpec extends SparkTestBase {
     assert(got.forall(_._2 == 0L), s"all labels must reach 0: ${got.toMap}")
   }
 
+  test("neardup clusters: a walk that passes maxRounds throws and leaves " +
+    "nothing persisted") {
+    import spark.implicits._
+    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    intercept[IllegalStateException](
+      Dedup.neardupClusters(pairs, maxRounds = 1))
+    // the edge cache and every round checkpoint must be gone again (a key
+    // can only vanish in between, when the ContextCleaner collects an
+    // earlier spec's garbage)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"still persisted after the throw: $leaked")
+  }
+
   test("neardup clusters: graphs already converged by the fused init " +
     "(stars, 2-cliques) still emit every id with its component min") {
     import spark.implicits._
@@ -65,6 +80,20 @@ class DedupSpec extends SparkTestBase {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       7L -> 7L, 8L -> 7L), s"got $got")
+  }
+
+  test("neardup clusters: no pairs (numeric or string ids) give no " +
+    "clusters, and a self-pair is its own cluster") {
+    import spark.implicits._
+    // the round counts ride observed metrics: they must be read (as 0)
+    // off checkpoints of empty frames too
+    assert(Dedup.neardupClusters(
+      Seq.empty[(Long, Long)].toDF("id_a", "id_b")).collect().isEmpty)
+    assert(Dedup.neardupClusters(
+      Seq.empty[(String, String)].toDF("id_a", "id_b")).collect().isEmpty)
+    val got = Dedup.neardupClusters(Seq((3L, 3L)).toDF("id_a", "id_b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(3L -> 3L), s"got $got")
   }
 
   test("keep-first dedup = keep id == cluster_id") {

@@ -104,6 +104,17 @@ class TracesSpec extends SparkTestBase {
     assert(got("tc") == (("orph", 0, 3000000L, false)), got)
   }
 
+  test("traceTree and criticalPath on no spans: empty results, not a " +
+    "missing round count") {
+    import spark.implicits._
+    val spans = Seq.empty[(String, String, String, String,
+        java.sql.Timestamp, Long)]
+      .toDF("trace_id", "span_id", "parent_span_id", "name",
+        "start_time_unix_nano", "duration_time_unix_nano")
+    assert(Traces.traceTree(spans).collect().isEmpty)
+    assert(Traces.criticalPath(spans).collect().isEmpty)
+  }
+
   test("exception report: events named 'exception' only, replay-safe, " +
     "typed + counted per service — hand-computed golden") {
     val got = Traces.exceptionReport(
