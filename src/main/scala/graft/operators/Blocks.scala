@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.util.DynamicVariable
+
+import org.apache.spark.sql.{Column, DataFrame, GraftAccess, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{count, when}
+import org.apache.spark.sql.functions.{count, lit, struct, when}
+import org.apache.spark.sql.types._
 
 /** Deterministic release of the block-manager blocks behind
   * `Dataset.localCheckpoint()`, and the fixpoint kernel of the iterative
@@ -34,6 +39,72 @@ private[graft] object Blocks {
       case lr: LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
 
+  /** A walk's in-memory twin of its step, for [[iterate]]'s bounded
+    * finish: the same rounds over round 0's rows on the driver, row for
+    * row what the distributed step computes, duplicate keys, nulls,
+    * Spark's string order and overflow included. */
+  trait Twin {
+    /** The tables the distributed step reads beside its input frame
+      * (criticalPath's span table, CC's edges), collected in round 0's
+      * collect job. */
+    def sides: Seq[DataFrame] = Nil
+    /** Estimated bytes of [[sides]], given round 0's observed metrics. */
+    def sideBytes(round0: Map[String, Row]): Long = 0L
+    /** Takes round 0's rows and those of [[sides]]; false when they hold
+      * what the twin cannot mirror, such as a null key. */
+    def load(rows: Array[InternalRow], sides: Seq[Array[InternalRow]]): Boolean
+    /** Runs round r + 1, the `between` pass first when r > 0, and returns
+      * its pending count. An ArithmeticException (the twin of an ANSI
+      * overflow) means the round cannot be mirrored. */
+    def round(r: Int): Long
+    /** The last round's rows, in the frame's column order. */
+    def rows: Seq[InternalRow]
+  }
+
+  private val distributed = new DynamicVariable(false)
+
+  /** Runs `body` with every walk's finish forced onto the distributed
+    * rounds, whatever the budget: the handle that keeps the path over the
+    * budget tested. Not a parameter and not a conf. */
+  def distributedOnly[T](body: => T): T = distributed.withValue(true)(body)
+
+  /** Spark's estimated bytes per row of `df` (8 bytes of row overhead plus
+    * each column type's default size), the width the budget checks use. */
+  def rowWidth(df: DataFrame): Long =
+    EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output).toLong
+
+  /** Twin arithmetic: Spark's `+` on longs, which wraps, or under ANSI
+    * mode throws where Spark's would. */
+  def plus(ansi: Boolean, a: Long, b: Long): Long =
+    if (ansi) Math.addExact(a, b) else a + b
+
+  /** Whether Spark's `===` on values of `dt` is the equality of their
+    * Catalyst values (strings compare as UTF-8 bytes), so a twin can key a
+    * hash map with them. Floating point (NaN, -0.0), binary and nested
+    * types are not. */
+  def exactKey(dt: DataType): Boolean = dt match {
+    case StringType | LongType | IntegerType | ShortType | ByteType |
+         BooleanType | DateType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** The rows of `df` and of each of `sides`, in one job: a union of
+    * structs tagged by frame, split back on the driver. */
+  private def collectWith(df: DataFrame,
+                          sides: Seq[DataFrame]): Seq[Array[InternalRow]] = {
+    val frames = df +: sides
+    val types = frames.map(_.schema)
+    val tagged = frames.zipWithIndex.map { case (f, i) =>
+      f.select(lit(i).as("tag") +: types.indices.map { j =>
+        (if (j == i) struct(f.columns.map(f(_)): _*)
+         else lit(null).cast(types(j))).as(s"f$j")
+      }: _*)
+    }
+    val rows = GraftAccess.collectInternal(tagged.reduce(_ unionAll _))
+    frames.indices.map(i => rows.filter(_.getInt(0) == i)
+      .map(_.getStruct(i + 1, types(i).size)))
+  }
+
   /** Runs an iterative walk ([[Traces.traceTree]], [[Traces.criticalPath]],
     * [[Dedup.neardupClusters]]) to its stop rule and returns its last
     * round's frame, whose blocks the caller then owns.
@@ -56,39 +127,92 @@ private[graft] object Blocks {
     * are released as soon as its successor is materialized; when a round
     * throws, the live frame is released before the exception leaves. Past
     * `maxRounds` rounds that still ask for more, the walk fails with an
-    * IllegalStateException. */
+    * IllegalStateException.
+    *
+    * Bounded in-memory finish: with a `twin`, round 0's checkpoint job
+    * also counts its rows. When more rounds are due and round 0's rows times
+    * [[rowWidth]], plus the twin's side tables, fit under the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (the size Spark already ships
+    * whole to every task; 0 or less turns the finish off), one job
+    * collects round 0 with the side tables and the remaining rounds run on
+    * the driver under the same `more` and `maxRounds`. The result is a local frame with the
+    * distributed frame's schema, names, types and nullability. A twin that
+    * cannot mirror the input (a null key, an ANSI overflow) hands the walk
+    * back to the distributed rounds from round 0, so Spark raises its own
+    * errors. Over the budget nothing changes. */
   def iterate(walk: String, init: DataFrame, pending: Column,
-              maxRounds: Int = Int.MaxValue, countInit: Boolean = false)(
+              maxRounds: Int = Int.MaxValue, countInit: Boolean = false,
+              twin: Option[Twin] = None)(
       step: DataFrame => DataFrame,
       between: Option[DataFrame => DataFrame] = None)(
       more: (Int, Long, Long) => Boolean): DataFrame = {
     var live: DataFrame = null
-    def advance(next: DataFrame, counted: Boolean): Long = {
-      val observed =
-        if (counted) next.observe("pending", count(when(pending, true)))
-        else next
-      val frame = observed.localCheckpoint()
+    // checkpoints `next` as the live frame; the metrics observed on it
+    def advance(next: DataFrame, metrics: Seq[Column]): Map[String, Row] = {
+      val run = if (metrics.isEmpty) next
+        else next.observe("round", metrics.head, metrics.tail: _*)
+      val frame = run.localCheckpoint()
       if (live != null) release(live)
       live = frame
-      if (counted) observed.queryExecution.observedMetrics("pending").getLong(0)
-      else Long.MaxValue
+      if (metrics.isEmpty) Map.empty else run.queryExecution.observedMetrics
     }
+    val counted = Seq(count(when(pending, true)).as("pending"))
     try {
-      var n = advance(init, countInit)
-      var prev = Long.MaxValue
-      var r = 0
-      while (more(r, n, prev)) {
-        if (r == maxRounds)
-          throw new IllegalStateException(
-            s"$walk did not converge within $maxRounds rounds")
-        if (r > 0) between.foreach(b => advance(b(live), counted = false))
-        prev = n
-        n = advance(step(live), counted = true)
-        r += 1
+      val round0 = advance(init, (if (countInit) counted else Nil) ++
+        twin.map(_ => count(lit(1)).as("rows")))
+      val n0 =
+        if (countInit) round0("round").getAs[Long]("pending") else Long.MaxValue
+      // rounds 1.. from round 0, `next(r)` running round r + 1 and
+      // returning its count; the number of rounds run
+      def rounds(next: Int => Long): Int = {
+        var (n, prev, r) = (n0, Long.MaxValue, 0)
+        while (more(r, n, prev)) {
+          if (r == maxRounds)
+            throw new IllegalStateException(
+              s"$walk did not converge within $maxRounds rounds")
+          prev = n
+          n = next(r)
+          r += 1
+        }
+        r
       }
-      val out = live
-      live = null
-      out
+      val spark = init.sparkSession
+      // the distributed frame's schema after r rounds, from the steps'
+      // analysis over empty frames, until step after between keeps it
+      def schemaAfter(r: Int): StructType = {
+        var (s, i, fixed) = (live.schema, 0, false)
+        while (i < r && !fixed) {
+          val in = GraftAccess.localFrame(spark, s, Nil)
+          val next = step(if (i == 0) in else between.fold(in)(_(in))).schema
+          fixed = i > 0 && next == s
+          s = next
+          i += 1
+        }
+        s
+      }
+      val budget = spark.sessionState.conf.autoBroadcastJoinThreshold
+      val finished = twin.filter { t =>
+        lazy val side = t.sideBytes(round0)
+        !distributed.value && budget > 0 && more(0, n0, Long.MaxValue) &&
+          side <= budget &&
+          round0("round").getAs[Long]("rows") * rowWidth(live) <= budget - side
+      }.flatMap { t =>
+        val collected = collectWith(live, t.sides)
+        if (!t.load(collected.head, collected.tail)) None
+        else try {
+          val r = rounds(t.round)
+          Some(GraftAccess.localFrame(spark, schemaAfter(r), t.rows))
+        } catch { case _: ArithmeticException => None }
+      }
+      finished.getOrElse {
+        rounds { r =>
+          if (r > 0) between.foreach(b => advance(b(live), Nil))
+          advance(step(live), counted)("round").getAs[Long]("pending")
+        }
+        val out = live
+        live = null
+        out
+      }
     } finally if (live != null) release(live)
   }
 }

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -346,12 +350,17 @@ object Dedup {
     * own checkpoint job — no row data ever reaches the driver, and numeric
     * and string ids walk alike. `maxRounds` bounds an adversarial input
     * that cannot converge (2^maxRounds exceeds any real component
-    * diameter). */
+    * diameter). A graph whose labels and edges fit under the session's
+    * broadcast threshold (some 400k directed edges of numeric ids at the
+    * 10 MB default) runs the rounds after round 0 on the driver, over int
+    * ranks, after one collect ([[Blocks.iterate]]'s bounded finish): the
+    * candidate graphs of a single crawl batch or a registry query. A
+    * 100 TB graph is far over it and every round stays distributed. */
   def neardupClusters(pairs: DataFrame, idA: String = "id_a",
                       idB: String = "id_b", maxRounds: Int = 64): DataFrame = {
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionAll(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct().persist()
+      .distinct().observe("edges", count(lit(1))).persist()
     // Round 1's neighbor-min folds into the SAME shuffle that used to
     // build the id set (`select(src).distinct` paid an identical exchange
     // to emit labels = id): labels start at min(id, min neighbor) — one
@@ -398,10 +407,69 @@ object Dedup {
           least(col("a.cluster_id"),
             coalesce(col("p.pcluster"), col("a.cluster_id"))).as("cluster_id"))
     try
-      Blocks.iterate("neardupClusters", init, col("lowered"), maxRounds)(
+      Blocks.iterate("neardupClusters", init, col("lowered"), maxRounds,
+          twin = LabelTwin(edges))(
           propagate, Some(chase))((_, lowered, _) => lowered != 0)
         .select(col("id"), col("cluster_id"))
     finally edges.unpersist()
+  }
+
+  /** [[neardupClusters]]' rounds on the driver, for [[Blocks.iterate]]'s
+    * in-memory finish: the chase (from round 2 on), then the propagate
+    * step, each exactly as the distributed join computes it, so the
+    * lowered counts, the round the walk stops at and a `maxRounds` throw
+    * all match. Ids become their ranks in Spark's order (integers
+    * numerically, strings by their UTF-8 bytes), so every min is an int
+    * compare. Null ids are left to the distributed rounds. */
+  private final class LabelTwin(edges: DataFrame, idType: DataType,
+                                order: Ordering[Any]) extends Blocks.Twin {
+    private var ids: Array[Any] = Array.empty
+    private var label: Array[Int] = Array.empty
+    private var lowered: Array[Boolean] = Array.empty
+    private var src, dst: Array[Int] = Array.empty
+    override def sides: Seq[DataFrame] = Seq(edges)
+    // no count when the optimizer pruned the edge scan (no pairs): the
+    // edges are then unknown, so over any budget
+    override def sideBytes(round0: Map[String, Row]): Long =
+      round0.get("edges").fold(Long.MaxValue)(
+        _.getLong(0) * Blocks.rowWidth(edges))
+    def load(rows: Array[InternalRow],
+             sides: Seq[Array[InternalRow]]): Boolean =
+      !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)) && {
+        ids = rows.map(_.get(0, idType)).sorted(order)
+        val rank = ids.zipWithIndex.toMap
+        val byId = rows.map(r => rank(r.get(0, idType)) -> r.get(1, idType))
+        label = new Array[Int](ids.length)
+        byId.foreach { case (i, c) => label(i) = rank(c) }
+        src = sides.head.map(e => rank(e.get(0, idType)))
+        dst = sides.head.map(e => rank(e.get(1, idType)))
+        true
+      }
+    def rows: Seq[InternalRow] = ids.indices.map(i =>
+      new GenericInternalRow(Array[Any](ids(i), ids(label(i)), lowered(i))))
+    def round(r: Int): Long = {
+      if (r > 0) label = label.map(l => math.min(l, label(l)))
+      val nbr = Array.fill(ids.length)(Int.MaxValue)
+      src.indices.foreach(e => nbr(src(e)) = math.min(nbr(src(e)), label(dst(e))))
+      lowered = nbr.indices.map(i => nbr(i) < label(i)).toArray
+      label = nbr.indices.map(i => math.min(label(i), nbr(i))).toArray
+      lowered.count(identity).toLong
+    }
+  }
+
+  private object LabelTwin {
+    def apply(edges: DataFrame): Option[Blocks.Twin] = {
+      val t = edges.schema("src").dataType
+      val order: Option[Ordering[Any]] = t match {
+        case StringType => Some(Ordering.fromLessThan[Any]((a, b) =>
+          a.asInstanceOf[UTF8String].binaryCompare(b.asInstanceOf[UTF8String]) < 0))
+        case LongType | IntegerType | ShortType | ByteType =>
+          Some(Ordering.by[Any, Long](_.asInstanceOf[Number].longValue))
+        case _ => None
+      }
+      order.filter(_ => edges.schema("dst").dataType == t)
+        .map(new LabelTwin(edges, t, _))
+    }
   }
 
   /** Exact n-gram Jaccard similarity for an explicit pair list

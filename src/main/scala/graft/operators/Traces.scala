@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Trace-structure analytics over the span tables the OTLP readers and the
   * seal export produce — the queries an operator actually asks of traces
@@ -50,7 +54,12 @@ object Traces {
     * per span with four small columns, localCheckpoint'ed by the kernel so
     * lineage stays flat (superseded round checkpoints release their blocks
     * eagerly); nothing ever materializes a whole trace in one place, so a
-    * million-span trace is as distributable as a million one-span traces. */
+    * million-span trace is as distributable as a million one-span traces.
+    * Only a small forest (round 0's state within the session's broadcast
+    * threshold, some 100k spans at the 10 MB default) finishes its rounds
+    * on the driver, after one collect ([[Blocks.iterate]]'s bounded
+    * finish); at 100 TB round 0 is far over any such budget and every
+    * round stays the join above. */
   def traceTree(spans: DataFrame, rounds: Int = 6,
                 idCol: String = "span_id",
                 parentCol: String = "parent_span_id",
@@ -78,9 +87,9 @@ object Traces {
     // within the blind budget that is the only stop. Past it, the count
     // must shrink every round: in acyclic data it strictly does, so a
     // stall means a parent-pointer cycle, which no round can resolve.
-    val st = Blocks.iterate("traceTree",
-        traceTreeNormalized(spans, idCol, parentCol, traceCol, durCol),
-        col("anc").isNotNull)(doubling) { (r, unresolved, previous) =>
+    val init = traceTreeNormalized(spans, idCol, parentCol, traceCol, durCol)
+    val st = Blocks.iterate("traceTree", init, col("anc").isNotNull,
+        twin = DoublingTwin(init))(doubling) { (r, unresolved, previous) =>
       unresolved != 0 && (r <= rounds || unresolved < previous)
     }
     st.groupBy(col("t").as("trace_id"))
@@ -91,6 +100,91 @@ object Traces {
         sum(col("dur")).as("total_span_ns"),
         (sum(when(col("anc").isNotNull, 1L).otherwise(0L)) === 0)
           .as("converged"))
+  }
+
+  /** [[traceTree]]'s doubling on the driver, for [[Blocks.iterate]]'s
+    * in-memory finish. State rows are (t, s, anc, d, w, is_root, dur), the
+    * columns `traceTreeNormalized` and `doubling` emit in that order. A
+    * state row keeps the loaded row it started from (its t, s, is_root and
+    * dur) and takes one output row per state row keyed (t, anc), so
+    * duplicate (t, s) keys multiply exactly as in the left join; a null
+    * key matches nothing, and a row without a match passes unchanged.
+    * Keys are interned to ints once, so a round is array work. */
+  private final class DoublingTwin(tType: DataType, sType: DataType,
+                                   ansi: Boolean) extends Blocks.Twin {
+    private var loaded: Array[InternalRow] = Array.empty
+    private var keyOf: Array[Int] = Array.empty // loaded row -> (t, s) key
+    private var keys = 0
+    // the state, one entry per row
+    private var from, ancKey, d: Array[Int] = Array.empty
+    private var anc: Array[Any] = Array.empty
+    private var w: Array[java.lang.Long] = Array.empty
+
+    def load(rows: Array[InternalRow],
+             sides: Seq[Array[InternalRow]]): Boolean = {
+      val ids = new java.util.HashMap[(Any, Any), Integer]
+      def key(r: InternalRow, i: Int) = (r.get(0, tType), r.get(i, sType))
+      loaded = rows
+      keyOf = rows.map(r => if (r.isNullAt(0) || r.isNullAt(1)) -1
+        else ids.computeIfAbsent(key(r, 1), _ => ids.size).intValue)
+      keys = ids.size
+      from = rows.indices.toArray
+      anc = rows.map(_.get(2, sType))
+      ancKey = rows.map(r => if (r.isNullAt(0) || r.isNullAt(2)) -1
+        else ids.getOrDefault(key(r, 2), -1).intValue)
+      d = rows.map(_.getInt(3))
+      w = rows.map(r => if (r.isNullAt(4)) null else Long.box(r.getLong(4)))
+      true
+    }
+
+    def rows: Seq[InternalRow] = from.indices.map { i =>
+      val r = loaded(from(i))
+      new GenericInternalRow(Array[Any](r.get(0, tType), r.get(1, sType),
+        anc(i), d(i), w(i), r.getBoolean(5), r.get(6, LongType)))
+    }
+
+    def round(r: Int): Long = {
+      // the state rows of each (t, s) key, as one array sliced by `start`
+      val start = new Array[Int](keys + 1)
+      from.foreach(f => if (keyOf(f) >= 0) start(keyOf(f) + 1) += 1)
+      for (k <- 1 to keys) start(k) += start(k - 1)
+      val fill = start.clone()
+      val byKey = new Array[Int](start(keys))
+      from.indices.foreach { i =>
+        val k = keyOf(from(i))
+        if (k >= 0) { byKey(fill(k)) = i; fill(k) += 1 }
+      }
+      val (nFrom, nAncKey, nD) =
+        (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Int])
+      val (nAnc, nW) = (Array.newBuilder[Any], Array.newBuilder[java.lang.Long])
+      def emit(f: Int, a: Any, ak: Int, dd: Int, ww: java.lang.Long): Unit = {
+        nFrom += f; nAnc += a; nAncKey += ak; nD += dd; nW += ww
+      }
+      from.indices.foreach { i =>
+        val k = ancKey(i)
+        if (k < 0 || start(k) == start(k + 1)) emit(from(i), anc(i), k, d(i), w(i))
+        else (start(k) until start(k + 1)).foreach { m =>
+          val j = byKey(m)
+          emit(from(i), anc(j), ancKey(j),
+            if (ansi) Math.addExact(d(i), d(j)) else d(i) + d(j),
+            if (w(i) == null || w(j) == null) null
+            else Long.box(Blocks.plus(ansi, w(i), w(j))))
+        }
+      }
+      from = nFrom.result(); anc = nAnc.result(); ancKey = nAncKey.result()
+      d = nD.result(); w = nW.result()
+      anc.count(_ != null).toLong
+    }
+  }
+
+  private object DoublingTwin {
+    def apply(init: DataFrame): Option[Blocks.Twin] = {
+      val f = init.schema.fields
+      val (t, s) = (f(0).dataType, f(1).dataType)
+      if (Blocks.exactKey(t) && Blocks.exactKey(s) && f(2).dataType == s)
+        Some(new DoublingTwin(t, s, init.sparkSession.sessionState.conf.ansiEnabled))
+      else None
+    }
   }
 
   /** [[traceTree]]'s round-0 state: replay-deduped spans with dangling
@@ -223,7 +317,11 @@ object Traces {
     * slice-sized joins, never a self-join of the corpus; per-round
     * state is localCheckpoint'ed by [[Blocks.iterate]] and superseded
     * rounds release their blocks ([[traceTree]]'s discipline). A cycle
-    * keeps its chain unresolved until `maxDepth` rounds stop the walk. */
+    * keeps its chain unresolved until `maxDepth` rounds stop the walk.
+    * When round 0's chains and the span table together fit under the
+    * session's broadcast threshold, one collect brings both to the driver
+    * and the hops finish there ([[Blocks.iterate]]'s bounded finish); a
+    * 100 TB span table is far over it, so the walk is the join above. */
   def criticalPath(spans: DataFrame, maxDepth: Int = 20,
                    idCol: String = "span_id",
                    parentCol: String = "parent_span_id",
@@ -234,11 +332,15 @@ object Traces {
     require(maxDepth >= 1 && maxDepth <= 64, s"maxDepth out of range: $maxDepth")
     val endNs = unix_micros(col(startCol)) * lit(1000L) +
       col(durCol).cast("long")
-    val base = Replay.dedupWithin(
+    val counted = Replay.dedupWithin(
       spans.select(col(traceCol).as("t"), col(idCol).as("s"),
         col(parentCol).as("p"), col(nameCol).as("nm"),
         endNs.as("e"), col(durCol).cast("long").as("dur")),
-      Seq(col("t"), col("s"))).localCheckpoint()
+      Seq(col("t"), col("s"))).observe("spans", count(lit(1)))
+    val base = counted.localCheckpoint()
+    val spanBytes =
+      counted.queryExecution.observedMetrics("spans").getLong(0) *
+        Blocks.rowWidth(base)
     val tgt = base.groupBy("t")
       .agg(max(struct(col("e"), col("s"), col("nm"), col("dur"), col("p")))
         .as("m"))
@@ -271,12 +373,67 @@ object Traces {
           tgt.select(col("t"), col("m.p").as("par"),
             col("m.nm").as("path"), col("m.dur").as("path_dur"),
             lit(0).as("depth"), lit(false).as("dangling")),
-          col("par").isNotNull, countInit = true)(round) {
+          col("par").isNotNull, countInit = true,
+          twin = HopTwin(base, spanBytes))(round) {
         (r, unresolved, _) => unresolved != 0 && r < maxDepth
       }.select(col("t").as("trace_id"), col("path"),
         col("depth").as("n_hops"), col("path_dur").as("path_dur_ns"),
         (col("par").isNull && !col("dangling")).as("reached_root"))
     finally Blocks.release(base)
+  }
+
+  /** [[criticalPath]]'s parent hop on the driver, for [[Blocks.iterate]]'s
+    * in-memory finish. State rows are (t, par, path, path_dur, depth,
+    * dangling), in `round`'s column order; the span table comes with them
+    * as (t, s, p, nm, dur). A state row takes one output row per span
+    * keyed (t, par), so duplicate span ids multiply as in the left join;
+    * a null key matches nothing. */
+  private final class HopTwin(base: DataFrame, spanBytes: Long,
+                              tType: DataType, sType: DataType,
+                              ansi: Boolean) extends Blocks.Twin {
+    private var st: Array[InternalRow] = Array.empty
+    private var spans = Map.empty[(Any, Any), Array[InternalRow]]
+    override def sides: Seq[DataFrame] =
+      Seq(base.select("t", "s", "p", "nm", "dur"))
+    override def sideBytes(round0: Map[String, Row]): Long = spanBytes
+    def load(rows: Array[InternalRow],
+             sides: Seq[Array[InternalRow]]): Boolean = {
+      st = rows
+      spans = sides.head.filter(h => !h.isNullAt(0) && !h.isNullAt(1))
+        .groupBy(h => (h.get(0, tType), h.get(1, sType)))
+      true
+    }
+    def rows: Seq[InternalRow] = st.toSeq
+    def round(r: Int): Long = {
+      st = st.flatMap { x =>
+        val to = if (x.isNullAt(0) || x.isNullAt(1)) None
+          else spans.get((x.get(0, tType), x.get(1, sType)))
+        to.fold(Array[InternalRow](new GenericInternalRow(Array[Any](
+            x.get(0, tType), null, x.getUTF8String(2), x.get(3, LongType),
+            x.getInt(4), x.getBoolean(5) || !x.isNullAt(1))))) { _.map { h =>
+          val dur = if (x.isNullAt(3) || h.isNullAt(4)) null
+            else Blocks.plus(ansi, x.getLong(3), h.getLong(4))
+          new GenericInternalRow(Array[Any](x.get(0, tType), h.get(2, sType),
+            UTF8String.concat(h.getUTF8String(3), Sep, x.getUTF8String(2)),
+            dur, x.getInt(4) + 1, x.getBoolean(5)))
+        } }
+      }
+      st.count(x => !x.isNullAt(1)).toLong
+    }
+  }
+
+  private val Sep = UTF8String.fromString(">")
+
+  private object HopTwin {
+    def apply(base: DataFrame, spanBytes: Long): Option[Blocks.Twin] = {
+      val f = base.schema
+      val (t, s) = (f("t").dataType, f("s").dataType)
+      if (Blocks.exactKey(t) && Blocks.exactKey(s) && f("p").dataType == s &&
+          f("nm").dataType == StringType)
+        Some(new HopTwin(base, spanBytes, t, s,
+          base.sparkSession.sessionState.conf.ansiEnabled))
+      else None
+    }
   }
 
   /** Per-trace WALL duration — end-to-end latency as the user saw it:

@@ -478,12 +478,7 @@ object OtapDecoder {
   private def hexOrNull(v: Any): String = v match {
     case null => null
     case b: Array[Byte] =>
-      if (b.isEmpty) null
-      else {
-        val sb = new StringBuilder(b.length * 2)
-        b.foreach(x => sb.append(f"${x & 0xff}%02x"))
-        sb.toString
-      }
+      if (b.isEmpty) null else Hex.lower(b)
     case s: String => if (s.isEmpty) null else s.toLowerCase
   }
   private def intOrZero(v: Any): Int = v match {

@@ -109,11 +109,6 @@ object OtlpProtoParser {
     }
   }
 
-  private def hex(b: Array[Byte]): String = {
-    val sb = new StringBuilder(b.length * 2)
-    b.foreach(x => sb.append(f"${x & 0xff}%02x"))
-    sb.toString
-  }
   /** u64 as decimal string node (JSON encodes 64-bit ints as strings; keeps
     * the >i64::MAX overflow guard in the shared row builder). */
   private def u64Node(v: Long): JsonNode =
@@ -245,8 +240,8 @@ object OtlpProtoParser {
         case (6, 2)  => attrList(o, "attributes").add(keyValue(r.readSub()))
         case (7, 0)  => o.put("droppedAttributesCount", r.readVarint().toInt)
         case (8, 5)  => o.put("flags", r.readFixed32())
-        case (9, 2)  => o.put("traceId", hex(r.readBytes()))
-        case (10, 2) => o.put("spanId", hex(r.readBytes()))
+        case (9, 2)  => o.put("traceId", Hex.lower(r.readBytes()))
+        case (10, 2) => o.put("spanId", Hex.lower(r.readBytes()))
         case (11, 1) => o.set[JsonNode]("observedTimeUnixNano", u64Node(r.readFixed64()))
         case (12, 2) => o.put("eventName", r.readString())
         case _       => r.skip(w)
@@ -288,10 +283,10 @@ object OtlpProtoParser {
     while (r.hasMore) {
       val (f, w) = r.readTag()
       (f, w) match {
-        case (1, 2)  => o.put("traceId", hex(r.readBytes()))
-        case (2, 2)  => o.put("spanId", hex(r.readBytes()))
+        case (1, 2)  => o.put("traceId", Hex.lower(r.readBytes()))
+        case (2, 2)  => o.put("spanId", Hex.lower(r.readBytes()))
         case (3, 2)  => o.put("traceState", r.readString())
-        case (4, 2)  => o.put("parentSpanId", hex(r.readBytes()))
+        case (4, 2)  => o.put("parentSpanId", Hex.lower(r.readBytes()))
         case (5, 2)  => o.put("name", r.readString())
         case (6, 0)  => o.put("kind", r.readVarint().toInt)
         case (7, 1)  => o.set[JsonNode]("startTimeUnixNano", u64Node(r.readFixed64()))
@@ -317,8 +312,8 @@ object OtlpProtoParser {
           while (sub.hasMore) {
             val (sf, sw) = sub.readTag()
             (sf, sw) match {
-              case (1, 2) => lk.put("traceId", hex(sub.readBytes()))
-              case (2, 2) => lk.put("spanId", hex(sub.readBytes()))
+              case (1, 2) => lk.put("traceId", Hex.lower(sub.readBytes()))
+              case (2, 2) => lk.put("spanId", Hex.lower(sub.readBytes()))
               case (3, 2) => lk.put("traceState", sub.readString())
               case (4, 2) => attrList(lk, "attributes").add(keyValue(sub.readSub()))
               case (5, 0) => lk.put("droppedAttributesCount", sub.readVarint().toInt)
@@ -442,8 +437,8 @@ object OtlpProtoParser {
         case (2, 1) => o.set[JsonNode]("timeUnixNano", u64Node(r.readFixed64()))
         case (3, 1) => o.put("asDouble", r.readDouble())
         case (6, 1) => o.put("asInt", nodeLong(r.readFixed64()))
-        case (4, 2) => o.put("spanId", hex(r.readBytes()))
-        case (5, 2) => o.put("traceId", hex(r.readBytes()))
+        case (4, 2) => o.put("spanId", Hex.lower(r.readBytes()))
+        case (5, 2) => o.put("traceId", Hex.lower(r.readBytes()))
         case _      => r.skip(w)
       }
     }

@@ -52,7 +52,7 @@ object ServerConfig {
   def mintToken(): String = {
     val b = new Array[Byte](16)
     new SecureRandom().nextBytes(b)
-    b.map(x => f"${x & 0xff}%02x").mkString
+    graft.otlp.Hex.lower(b)
   }
 
   def apply(fn: String, uriStr: String, params: Map[String, String]): ServerConfig = {

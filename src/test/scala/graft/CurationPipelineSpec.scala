@@ -20,6 +20,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
   */
 class CurationPipelineSpec extends SparkTestBase {
 
+  private val ports = SparkTestBase.freePorts(1)
+
   private val client = HttpClient.newHttpClient()
   private val Token = "dev-token-1234567890"
 
@@ -47,7 +49,7 @@ class CurationPipelineSpec extends SparkTestBase {
 
   test("capstone: HTTP ingest -> otlp-seals stream -> dedup -> quality " +
       "gate -> packShards matches the batch pipeline on the same seals") {
-    val uri = "otlp:127.0.0.1:45860"
+    val uri = s"otlp:127.0.0.1:${ports(0)}"
     val sealRoot = java.nio.file.Files.createTempDirectory("cap_root").toString
     val curatedDir = java.nio.file.Files.createTempDirectory("cap_cur").toString
     val ckpt = java.nio.file.Files.createTempDirectory("cap_ckpt").toString
@@ -57,7 +59,7 @@ class CurationPipelineSpec extends SparkTestBase {
       "stream_retain_seals" -> "64"))
     def post(lines: Seq[String]): Unit = {
       val code = client.send(
-        HttpRequest.newBuilder(URI.create("http://127.0.0.1:45860/v1/logs"))
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${ports(0)}/v1/logs"))
           .header("Content-Type", "application/x-ndjson")
           .header("Authorization", s"Bearer $Token")
           .POST(HttpRequest.BodyPublishers.ofByteArray(

@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
   * RESOURCE_EXHAUSTED / UNIMPLEMENTED). Runs over real HTTP/2 h2c via the
   * netty-based GrpcClient. */
 class OtlpGrpcSpec extends SparkTestBase {
+  private val ports = SparkTestBase.freePorts(2)
+
   import ProtoW._
 
   private val Token = "dev-token-1234567890"
@@ -87,10 +89,10 @@ class OtlpGrpcSpec extends SparkTestBase {
   }
 
   test("gRPC unary Export: status codes and rows sealed to catalog") {
-    val uri = "otlp:127.0.0.1:45841"
+    val uri = s"otlp:127.0.0.1:${ports(0)}"
     OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "transport" -> "grpc", "schema" -> "otlptest_grpc"))
-    val cli = new GrpcClient("127.0.0.1", 45841)
+    val cli = new GrpcClient("127.0.0.1", ports(0))
     try {
       // no token → UNAUTHENTICATED
       assert(cli.unary(LogsPath, logsPb, None)._1 == GrpcWire.Unauthenticated)
@@ -126,7 +128,7 @@ class OtlpGrpcSpec extends SparkTestBase {
     assume(new java.io.File(s"$corpus/logs-reuse.bar").exists())
     def bar(name: String) = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$corpus/$name"))
-    val uri = "otap:127.0.0.1:45842"
+    val uri = s"otap:127.0.0.1:${ports(1)}"
     // no transport param: gRPC is otap_serve's DEFAULT wire (serve.md).
     // max_buffered_bytes is sized so ONE .bar message fits but two do
     // not — the backpressure leg below relies on it
@@ -134,7 +136,7 @@ class OtlpGrpcSpec extends SparkTestBase {
       Map("token" -> Token, "schema" -> "otlptest_grpcotap",
         "max_buffered_bytes" -> "25000",
         "seal_target_bytes" -> "1073741824", "seal_max_age_ms" -> "3600000"))
-    val cli = new GrpcClient("127.0.0.1", 45842)
+    val cli = new GrpcClient("127.0.0.1", ports(1))
     try {
       // the OTLP unary family is not served here
       assert(cli.unary(LogsPath, logsPb, Some(Token))._1 == GrpcWire.Unimplemented)

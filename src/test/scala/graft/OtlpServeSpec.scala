@@ -11,6 +11,8 @@ import java.nio.charset.StandardCharsets
   * uri.test, and the manual HTTP harness contracts in FIXTURES.md §C). */
 class OtlpServeSpec extends SparkTestBase {
 
+  private val ports = SparkTestBase.freePorts(19)
+
   private val fx = "src/test/resources/otlp"
   private val client = HttpClient.newHttpClient()
   private val Token = "dev-token-1234567890"
@@ -75,7 +77,7 @@ class OtlpServeSpec extends SparkTestBase {
   // ---- config validation (test/sql/otlp_serve.test errors) -----------------
 
   test("serve validation errors mirror the reference") {
-    def err(params: Map[String, String], uri: String = "otlp:127.0.0.1:45801") =
+    def err(params: Map[String, String], uri: String = s"otlp:127.0.0.1:${ports(0)}") =
       intercept[Exception](OtlpServe.otlpServe(spark, uri, params)).getMessage
     assert(err(Map("token" -> "short")).contains(
       "OTLP server token must be at least 16 characters long"))
@@ -103,24 +105,24 @@ class OtlpServeSpec extends SparkTestBase {
     assert(err(Map("token" -> Token, "parquet_export_path" -> "/tmp/x",
       "target" -> "catalog"))
       .contains("parquet_export_path is mutually exclusive with a catalog target"))
-    assert(err(Map("token" -> Token), uri = "otlp:0.0.0.0:45802")
+    assert(err(Map("token" -> Token), uri = s"otlp:0.0.0.0:${ports(1)}")
       .contains("Only localhost is allowed"))
-    assert(err(Map("token" -> Token), uri = "otap:127.0.0.1:45803")
+    assert(err(Map("token" -> Token), uri = s"otap:127.0.0.1:${ports(2)}")
       .contains("otlp_serve requires an 'otlp:' URI"))
     assert(intercept[Exception](
-      OtlpServe.otapServe(spark, "otlp:127.0.0.1:45804", Map("token" -> Token)))
+      OtlpServe.otapServe(spark, s"otlp:127.0.0.1:${ports(3)}", Map("token" -> Token)))
       .getMessage.contains("otap_serve requires an 'otap:' URI"))
   }
 
   // ---- lifecycle ----------------------------------------------------------
 
   test("serve → list → flush-empty → stop lifecycle goldens") {
-    val uri = "otlp:127.0.0.1:45811"
+    val uri = s"otlp:127.0.0.1:${ports(4)}"
     val row = OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "schema" -> "otlptest_lc",
         "seal_target_bytes" -> "1048576", "seal_max_age_ms" -> "2500")).first()
-    assert(row.getAs[String]("listen_uri") == "otlp:127.0.0.1:45811")
-    assert(row.getAs[String]("listen_url") == "http://127.0.0.1:45811")
+    assert(row.getAs[String]("listen_uri") == s"otlp:127.0.0.1:${ports(4)}")
+    assert(row.getAs[String]("listen_url") == s"http://127.0.0.1:${ports(4)}")
     assert(row.getAs[String]("schema_name") == "otlptest_lc")
     assert(row.getAs[String]("logs_table") == "otlptest_lc.otlp_logs")
 
@@ -129,7 +131,7 @@ class OtlpServeSpec extends SparkTestBase {
       Map("token" -> Token))).getMessage.contains("OTLP server already exists"))
 
     val list = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45811").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(4)}").first()
     assert(list.getAs[Boolean]("is_listening"))
     assert(list.isNullAt(list.fieldIndex("last_error")))
     assert(list.getAs[Long]("total_requests") == 0L)
@@ -147,29 +149,29 @@ class OtlpServeSpec extends SparkTestBase {
     assert(fl.getAs[Long]("sealed_rows") == 0L)
 
     // flushing an unknown server reports not found
-    assert(OtlpServe.otlpFlush(spark, "otlp:127.0.0.1:45999").first()
-      .getAs[String]("status") == "No server found listening on otlp:127.0.0.1:45999")
+    assert(OtlpServe.otlpFlush(spark, s"otlp:127.0.0.1:${ports(5)}").first()
+      .getAs[String]("status") == s"No server found listening on otlp:127.0.0.1:${ports(5)}")
 
     val st = OtlpServe.otlpStop(spark, uri).first()
-    assert(st.getAs[String]("status") == "Stopped listening on otlp:127.0.0.1:45811")
+    assert(st.getAs[String]("status") == s"Stopped listening on otlp:127.0.0.1:${ports(4)}")
     assert(OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45811").count() == 0)
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(4)}").count() == 0)
   }
 
   test("disable_auth mints no token and skips the length floor") {
-    val r = OtlpServe.otapServe(spark, "otap:127.0.0.1:45812",
+    val r = OtlpServe.otapServe(spark, s"otap:127.0.0.1:${ports(6)}",
       Map("disable_auth" -> "true", "token" -> "x",
         "target" -> "parquet",
         "parquet_root" -> java.nio.file.Files.createTempDirectory("otap").toString))
       .first()
     assert(r.getAs[String]("auth_token") == "")
-    OtlpServe.otlpStop(spark, "otap:127.0.0.1:45812")
+    OtlpServe.otlpStop(spark, s"otap:127.0.0.1:${ports(6)}")
   }
 
   // ---- ingest hot path (catalog mode) --------------------------------------
 
   test("HTTP ingest end-to-end: auth, 202, seal to catalog tables") {
-    val uri = "otlp:127.0.0.1:45821"
+    val uri = s"otlp:127.0.0.1:${ports(7)}"
     val r = OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "schema" -> "otlptest_e2e")).first()
     val url = r.getAs[String]("listen_url")
@@ -219,7 +221,7 @@ class OtlpServeSpec extends SparkTestBase {
 
     // buffered counters reflect ingest before seal
     val listed = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45821").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(7)}").first()
     assert(listed.getAs[Long]("buffered_rows") == 8L)
     assert(listed.getAs[Long]("total_requests") >= 5L)
     // admission telemetry: wire bytes tracked separately from the
@@ -247,7 +249,7 @@ class OtlpServeSpec extends SparkTestBase {
 
     // seal history recorded
     val seals = OtlpServe.sealList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45821")
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(7)}")
     assert(seals.count() >= 1)
     assert(seals.where(col("success")).agg(sum("rows")).first().getLong(0) == 8L)
 
@@ -255,7 +257,7 @@ class OtlpServeSpec extends SparkTestBase {
   }
 
   test("413 body cap and gzip decoding") {
-    val uri = "otlp:127.0.0.1:45822"
+    val uri = s"otlp:127.0.0.1:${ports(8)}"
     val r = OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "schema" -> "otlptest_cap",
         "max_body_bytes" -> "256")).first()
@@ -295,7 +297,7 @@ class OtlpServeSpec extends SparkTestBase {
   }
 
   test("503 admission backpressure when buffer budget is exhausted") {
-    val uri = "otlp:127.0.0.1:45823"
+    val uri = s"otlp:127.0.0.1:${ports(9)}"
     val r = OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "schema" -> "otlptest_bp",
         "max_buffered_bytes" -> "2048",
@@ -314,7 +316,7 @@ class OtlpServeSpec extends SparkTestBase {
   }
 
   test("admission pressure seals without waiting for the age trigger") {
-    val uri = "otlp:127.0.0.1:45832"
+    val uri = s"otlp:127.0.0.1:${ports(10)}"
     // wire target and age are both unreachable; only the admission-pressure
     // clause (buffered heap >= cap/2) can drain — without it a
     // high-inflation stream would sit at 503 until seal_max_age_ms
@@ -325,7 +327,7 @@ class OtlpServeSpec extends SparkTestBase {
         "seal_target_bytes" -> "1073741824",
         "seal_max_age_ms" -> "3600000"))
     val url = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45832").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(10)}").first()
       .getAs[String]("listen_url")
     val line = """{"resourceLogs":[{"resource":{},"scopeLogs":[{"scope":{},"logRecords":[{"timeUnixNano":"1640000000000000000","severityNumber":9,"severityText":"INFO","body":{"stringValue":"pressure-seal record body with some length to it"}}]}]}]}"""
     val body = Array.fill(180)(line).mkString("\n").getBytes(StandardCharsets.UTF_8)
@@ -343,14 +345,14 @@ class OtlpServeSpec extends SparkTestBase {
   }
 
   test("admission binds on decoded size, not wire size (gzip bomb)") {
-    val uri = "otlp:127.0.0.1:45831"
+    val uri = s"otlp:127.0.0.1:${ports(11)}"
     OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "schema" -> "otlptest_bomb",
         "max_buffered_bytes" -> "200000",
         "seal_target_bytes" -> "1073741824",
         "seal_max_age_ms" -> "3600000"))
     val url = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45831").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(11)}").first()
       .getAs[String]("listen_url")
     // ~2000 identical records: tiny on the wire after gzip, ~1 MB of
     // UnsafeRow images resident after decode — far over the 200 KB cap
@@ -388,7 +390,7 @@ class OtlpServeSpec extends SparkTestBase {
     assume(new java.io.File(s"$corpus/logs-reuse.bar").exists())
     def bar(name: String) = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$corpus/$name"))
-    val uri = "otap:127.0.0.1:45830"
+    val uri = s"otap:127.0.0.1:${ports(12)}"
     // transport := 'http' selects the x-otap-stream POST facade this test
     // exercises (the default otap transport is the canonical gRPC stream,
     // covered by OtlpGrpcSpec)
@@ -444,7 +446,7 @@ class OtlpServeSpec extends SparkTestBase {
 
   test("parquet target: partitioned zstd layout + inspection views") {
     val root = java.nio.file.Files.createTempDirectory("otlp_pq").toString
-    val uri = "otlp:127.0.0.1:45824"
+    val uri = s"otlp:127.0.0.1:${ports(13)}"
     val r = OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "target" -> "parquet", "parquet_root" -> root)).first()
     val url = r.getAs[String]("listen_url")
@@ -473,13 +475,13 @@ class OtlpServeSpec extends SparkTestBase {
   }
 
   test("attribute promotion: resource key becomes a real column at seal") {
-    val uri = "otlp:127.0.0.1:45825"
+    val uri = s"otlp:127.0.0.1:${ports(14)}"
     OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "schema" -> "otlptest_promo",
         "promote_resource_attributes" -> "service.name,host.name",
         "promote_scope_attributes" -> "telemetry.sdk.name"))
     val url = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45825").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(14)}").first()
       .getAs[String]("listen_url")
     assert(post(url, "/v1/logs", fixture("logs_simple.jsonl"),
       Map("Content-Type" -> "application/x-ndjson",
@@ -520,11 +522,11 @@ class OtlpServeSpec extends SparkTestBase {
 
   test("parquet_export_path is the reference spelling of the parquet target") {
     val root = java.nio.file.Files.createTempDirectory("otlp_pep").toString
-    val uri = "otlp:127.0.0.1:45832"
+    val uri = s"otlp:127.0.0.1:${ports(10)}"
     OtlpServe.otlpServe(spark, uri, Map("token" -> Token,
       "parquet_export_path" -> root, "http_threads" -> "8"))
     val url = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45832").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(10)}").first()
       .getAs[String]("listen_url")
     assert(post(url, "/v1/logs", fixture("logs_simple.jsonl"),
       Map("Content-Type" -> "application/x-ndjson",
@@ -536,10 +538,10 @@ class OtlpServeSpec extends SparkTestBase {
   }
 
   test("protobuf ingest over HTTP") {
-    val uri = "otlp:127.0.0.1:45826"
+    val uri = s"otlp:127.0.0.1:${ports(15)}"
     OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "schema" -> "otlptest_pb"))
-    val url = s"http://127.0.0.1:45826"
+    val url = s"http://127.0.0.1:${ports(15)}"
     // one-log protobuf request built with the test wire writer
     import ProtoW._
     val lr = m().fixed64(1, 1640000000000000000L).vint(2, 9)
@@ -558,7 +560,7 @@ class OtlpServeSpec extends SparkTestBase {
   }
 
   test("concurrent producers: no lost rows, accepted == sealed (reconciliation)") {
-    val uri = "otlp:127.0.0.1:45828"
+    val uri = s"otlp:127.0.0.1:${ports(16)}"
     val r = OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "schema" -> "otlptest_conc",
         "seal_max_age_ms" -> "500")).first()
@@ -586,7 +588,7 @@ class OtlpServeSpec extends SparkTestBase {
     // mid-load seals already ran (age 500ms); flush drains the rest
     OtlpServe.otlpFlush(spark, uri)
     val listed = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45828").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(16)}").first()
     assert(listed.getAs[Long]("committed_rows_total") == accepted.get())
     assert(listed.getAs[Long]("buffered_rows") == 0L)
     assert(spark.table("otlptest_conc.otlp_logs").count() == accepted.get())
@@ -605,10 +607,10 @@ class OtlpServeSpec extends SparkTestBase {
       spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
         .write.mode("overwrite").saveAsTable(s"otlptest_wide.otlp_$s")
     }
-    val uri = "otlp:127.0.0.1:45829"
+    val uri = s"otlp:127.0.0.1:${ports(17)}"
     OtlpServe.otlpServe(spark, uri,
       Map("token" -> Token, "schema" -> "otlptest_wide", "create_tables" -> "false"))
-    val url = s"http://127.0.0.1:45829"
+    val url = s"http://127.0.0.1:${ports(17)}"
     assert(post(url, "/v1/logs", fixture("logs_simple.jsonl"),
       Map("Content-Type" -> "application/x-ndjson",
         "Authorization" -> s"Bearer $Token")).statusCode() == 202)
@@ -622,12 +624,12 @@ class OtlpServeSpec extends SparkTestBase {
   }
 
   test("create_tables := false fails fast when tables are missing") {
-    val e = intercept[Exception](OtlpServe.otlpServe(spark, "otlp:127.0.0.1:45827",
+    val e = intercept[Exception](OtlpServe.otlpServe(spark, s"otlp:127.0.0.1:${ports(18)}",
       Map("token" -> Token, "schema" -> "otlptest_missing",
         "create_tables" -> "false")))
     assert(e.getMessage.contains("is not available"), e.getMessage)
     // and the failed server is not left registered
     assert(OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45827").count() == 0)
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(18)}").count() == 0)
   }
 }

@@ -15,6 +15,8 @@ import java.util.concurrent.TimeUnit
   * process of the launcher script itself. */
 class PackagingSpec extends AnyFunSuite {
 
+  private val ports = SparkTestBase.freePorts(2)
+
   private val launcher = new java.io.File("bin/graft-otlp-server").getAbsolutePath
   // pin the launcher to the freshly compiled classes: the sbt-packaged jar
   // (the production default) may be stale relative to this test run
@@ -41,7 +43,7 @@ class PackagingSpec extends AnyFunSuite {
 
   test("launcher: healthcheck exits 1 when nothing is listening") {
     val (code, _) = run(
-      Map("OTEL_HTTP_ADDR" -> "127.0.0.1:45989"), 60, "healthcheck")
+      Map("OTEL_HTTP_ADDR" -> s"127.0.0.1:${ports(0)}"), 60, "healthcheck")
     assert(code == 1)
   }
 
@@ -52,7 +54,7 @@ class PackagingSpec extends AnyFunSuite {
     val env = Map(
       "GRAFT_MODE" -> "parquet",
       "GRAFT_PARQUET_ROOT" -> root,
-      "OTEL_HTTP_ADDR" -> "127.0.0.1:45990",
+      "OTEL_HTTP_ADDR" -> s"127.0.0.1:${ports(1)}",
       "GRAFT_OTLP_TOKEN" -> token,
       "GRAFT_OTLP_SEAL_MAX_AGE_MS" -> "3600000",
       "GRAFT_SPARK_MASTER" -> "local[4]",
@@ -70,7 +72,7 @@ class PackagingSpec extends AnyFunSuite {
       var healthy = false
       while (!healthy && System.currentTimeMillis() < deadline) {
         assert(daemon.isAlive, "daemon died during startup")
-        healthy = run(Map("OTEL_HTTP_ADDR" -> "127.0.0.1:45990"),
+        healthy = run(Map("OTEL_HTTP_ADDR" -> s"127.0.0.1:${ports(1)}"),
           60, "healthcheck")._1 == 0
         if (!healthy) Thread.sleep(1000)
       }
@@ -78,7 +80,7 @@ class PackagingSpec extends AnyFunSuite {
       val body = java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("src/test/resources/otlp/logs_simple.jsonl"))
       val resp: HttpResponse[String] = HttpClient.newHttpClient().send(
-        HttpRequest.newBuilder(URI.create("http://127.0.0.1:45990/v1/logs"))
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${ports(1)}/v1/logs"))
           .header("Content-Type", "application/x-ndjson")
           .header("Authorization", s"Bearer $token")
           .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),

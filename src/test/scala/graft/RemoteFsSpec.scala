@@ -16,6 +16,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
   * which is the same path s3a/abfs/gs credentials take in production. */
 class RemoteFsSpec extends SparkTestBase {
 
+  private val ports = SparkTestBase.freePorts(2)
+
   private val fx = "src/test/resources/otlp"
   private val client = HttpClient.newHttpClient()
   private val Token = "dev-token-1234567890"
@@ -66,7 +68,7 @@ class RemoteFsSpec extends SparkTestBase {
   test("seal, inspection read, compaction and retention run on graftfs") {
     val dir = java.nio.file.Files.createTempDirectory("graftfs_seal")
     val root = s"graftfs://$dir"
-    val uri = "otlp:127.0.0.1:45961"
+    val uri = s"otlp:127.0.0.1:${ports(0)}"
     val params = Map(
       "token" -> Token, "target" -> "parquet", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824",
@@ -75,7 +77,7 @@ class RemoteFsSpec extends SparkTestBase {
     OtlpServe.otlpServe(spark, uri, params)
     val renames0 = StubRemoteFileSystem.renames.get()
     (1 to 5).foreach { _ =>
-      assert(post(45961, java.nio.file.Files.readAllBytes(
+      assert(post(ports(0), java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$fx/logs_simple.jsonl"))).statusCode() == 202)
       val fl = OtlpServe.otlpFlush(spark, uri).first()
       assert(fl.getAs[String]("status") == "sealed")
@@ -109,13 +111,13 @@ class RemoteFsSpec extends SparkTestBase {
   test("snapshot target commits and time-travels on graftfs") {
     val dir = java.nio.file.Files.createTempDirectory("graftfs_snap")
     val root = s"graftfs://$dir"
-    val uri = "otlp:127.0.0.1:45962"
+    val uri = s"otlp:127.0.0.1:${ports(1)}"
     val params = Map(
       "token" -> Token, "target" -> "snapshot", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824")
     OtlpServe.otlpServe(spark, uri, params)
     (1 to 2).foreach { _ =>
-      assert(post(45962, java.nio.file.Files.readAllBytes(
+      assert(post(ports(1), java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$fx/logs_simple.jsonl"))).statusCode() == 202)
       OtlpServe.otlpFlush(spark, uri)
     }

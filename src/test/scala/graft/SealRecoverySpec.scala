@@ -11,6 +11,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
   * and the cadence-gated post-seal compaction. */
 class SealRecoverySpec extends SparkTestBase {
 
+  private val ports = SparkTestBase.freePorts(7)
+
   private val fx = "src/test/resources/otlp"
   private val client = HttpClient.newHttpClient()
   private val Token = "dev-token-1234567890"
@@ -46,13 +48,13 @@ class SealRecoverySpec extends SparkTestBase {
   }
 
   test("failed seal restores rows, reports degradation, counts drops on stop") {
-    val uri = "otlp:127.0.0.1:45841"
+    val uri = s"otlp:127.0.0.1:${ports(0)}"
     // /dev/null is not a directory: every parquet write must fail
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "target" -> "parquet",
       "parquet_root" -> "/dev/null/otlp_broken",
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824"))
-    assert(post(45841, fixture("logs_simple.jsonl")).statusCode() == 202)
+    assert(post(ports(0), fixture("logs_simple.jsonl")).statusCode() == 202)
 
     val fl = OtlpServe.otlpFlush(spark, uri).first()
     assert(fl.getAs[String]("status") == "error")
@@ -60,7 +62,7 @@ class SealRecoverySpec extends SparkTestBase {
 
     // rows restored (order-preserving re-buffer), failure counted
     val listed = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45841").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(0)}").first()
     assert(listed.getAs[Long]("buffered_rows") == 3L)
     assert(listed.getAs[Long]("seal_failures_total") >= 1L)
     assert(listed.getAs[String]("seal_last_error") != null)
@@ -68,13 +70,13 @@ class SealRecoverySpec extends SparkTestBase {
 
     // readyz degrades while sealing is failing
     val ready = client.send(HttpRequest.newBuilder(
-        URI.create("http://127.0.0.1:45841/readyz")).GET().build(),
+        URI.create(s"http://127.0.0.1:${ports(0)}/readyz")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
     assert(ready.statusCode() == 503)
 
     // seal history records the failures
     val seals = OtlpServe.sealList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45841" && !col("success"))
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(0)}" && !col("success"))
     assert(seals.count() >= 1)
 
     // stop drains with 3 attempts, then reports the undeliverable rows
@@ -84,14 +86,14 @@ class SealRecoverySpec extends SparkTestBase {
 
   test("cadence-gated post-seal compaction merges small files") {
     val root = java.nio.file.Files.createTempDirectory("otlp_maint").toString
-    val uri = "otlp:127.0.0.1:45842"
+    val uri = s"otlp:127.0.0.1:${ports(1)}"
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "target" -> "parquet", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824",
       "maintenance_min_seals" -> "5", "maintenance_min_interval_ms" -> "1"))
     val body = fixture("logs_simple.jsonl")
     (1 to 5).foreach { _ =>
-      assert(post(45842, body).statusCode() == 202)
+      assert(post(ports(1), body).statusCode() == 202)
       val fl = OtlpServe.otlpFlush(spark, uri).first()
       assert(fl.getAs[String]("status") == "sealed", fl.toString)
     }
@@ -101,7 +103,7 @@ class SealRecoverySpec extends SparkTestBase {
     // all 15 rows survive compaction
     assert(spark.read.parquet(s"$root/otlp_logs").count() == 15)
     val listed = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45842").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(1)}").first()
     assert(listed.getAs[Long]("maintenance_runs_total") == 1L)
     assert(listed.isNullAt(listed.fieldIndex("maintenance_last_error")))
     OtlpServe.otlpStop(spark, uri)
@@ -109,17 +111,17 @@ class SealRecoverySpec extends SparkTestBase {
 
   test("inspection views see every later seal without a session restart") {
     val root = java.nio.file.Files.createTempDirectory("otlp_viewfresh").toString
-    val uri = "otlp:127.0.0.1:45843"
+    val uri = s"otlp:127.0.0.1:${ports(2)}"
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "target" -> "parquet", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824"))
-    assert(post(45843, fixture("logs_simple.jsonl")).statusCode() == 202)
+    assert(post(ports(2), fixture("logs_simple.jsonl")).statusCode() == 202)
     assert(OtlpServe.otlpFlush(spark, uri).first()
       .getAs[String]("status") == "sealed")
     assert(spark.table("otlp_logs").count() == 3)
     // a second seal must be visible through the SAME view name — the view
     // is recreated per seal because Spark pins the file listing at creation
-    assert(post(45843, fixture("logs_simple.jsonl")).statusCode() == 202)
+    assert(post(ports(2), fixture("logs_simple.jsonl")).statusCode() == 202)
     assert(OtlpServe.otlpFlush(spark, uri).first()
       .getAs[String]("status") == "sealed")
     assert(spark.table("otlp_logs").count() == 6)
@@ -128,7 +130,7 @@ class SealRecoverySpec extends SparkTestBase {
 
   test("retention expiry deletes files past the horizon, keeps newer ones") {
     val root = java.nio.file.Files.createTempDirectory("otlp_retention").toString
-    val uri = "otlp:127.0.0.1:45845"
+    val uri = s"otlp:127.0.0.1:${ports(3)}"
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "target" -> "parquet", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824",
@@ -136,26 +138,26 @@ class SealRecoverySpec extends SparkTestBase {
       "maintenance_min_seals" -> "2", "maintenance_min_interval_ms" -> "1"))
     val body = fixture("logs_simple.jsonl")
     // seal 1, then age it past the horizon
-    assert(post(45845, body).statusCode() == 202)
+    assert(post(ports(3), body).statusCode() == 202)
     assert(OtlpServe.otlpFlush(spark, uri).first().getAs[String]("status") == "sealed")
     assert(spark.read.parquet(s"$root/otlp_logs").count() == 3)
     Thread.sleep(2000)
     // seal 2 trips the maintenance cadence; expiry runs before compaction
-    assert(post(45845, body).statusCode() == 202)
+    assert(post(ports(3), body).statusCode() == 202)
     assert(OtlpServe.otlpFlush(spark, uri).first().getAs[String]("status") == "sealed")
     // seal 1's files (older than 1500 ms) are gone; seal 2's survive and
     // the inspection view still reads them
     assert(spark.read.parquet(s"$root/otlp_logs").count() == 3)
     assert(spark.table("otlp_logs").count() == 3)
     val listed = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45845").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(3)}").first()
     assert(listed.getAs[Long]("retention_deleted_files_total") >= 1L)
     assert(listed.getAs[Long]("maintenance_runs_total") >= 1L)
     OtlpServe.otlpStop(spark, uri)
   }
 
   test("catalog retry after post-commit failure inserts zero duplicate rows") {
-    val uri = "otlp:127.0.0.1:45846"
+    val uri = s"otlp:127.0.0.1:${ports(4)}"
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "schema" -> "otlptest_idem",
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824"))
@@ -164,14 +166,14 @@ class SealRecoverySpec extends SparkTestBase {
     // retry would duplicate every row of the batch
     server.writer.failAfterCatalogCommit =
       s => throw new RuntimeException(s"injected post-commit failure ($s)")
-    assert(post(45846, fixture("logs_simple.jsonl")).statusCode() == 202)
+    assert(post(ports(4), fixture("logs_simple.jsonl")).statusCode() == 202)
     val fl1 = OtlpServe.otlpFlush(spark, uri).first()
     assert(fl1.getAs[String]("status") == "error")
     assert(fl1.getAs[String]("error").contains("injected post-commit failure"))
     // the insert itself landed; the rows were also restored for retry
     assert(spark.table("otlptest_idem.otlp_logs").count() == 3)
     val listed = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45846").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(4)}").first()
     assert(listed.getAs[Long]("buffered_rows") == 3L)
     // retry: the _seal_id probe proves the prior attempt committed and
     // skips re-inserting — effectively-once, not at-least-once
@@ -183,7 +185,7 @@ class SealRecoverySpec extends SparkTestBase {
     assert(spark.table("otlptest_idem.otlp_logs")
       .select("_seal_id").distinct().count() == 1L)
     val after = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45846").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(4)}").first()
     assert(after.getAs[Long]("buffered_rows") == 0L)
     assert(after.getAs[Long]("committed_rows_total") == 3L)
     OtlpServe.otlpStop(spark, uri)
@@ -191,7 +193,7 @@ class SealRecoverySpec extends SparkTestBase {
 
   test("readExport prunes partitions for a time-ranged query") {
     val root = java.nio.file.Files.createTempDirectory("otlp_export").toString
-    val uri = "otlp:127.0.0.1:45847"
+    val uri = s"otlp:127.0.0.1:${ports(5)}"
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "target" -> "parquet", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824"))
@@ -200,7 +202,7 @@ class SealRecoverySpec extends SparkTestBase {
     // two event DAYS: 2021-12-20T12:00Z and 2021-12-21T12:00Z
     val body = (rec(1640001600000000000L, "day one") + "\n" +
       rec(1640088000000000000L, "day two")).getBytes("UTF-8")
-    assert(post(45847, body).statusCode() == 202)
+    assert(post(ports(5), body).statusCode() == 202)
     assert(OtlpServe.otlpFlush(spark, uri).first().getAs[String]("status") == "sealed")
     assert(new java.io.File(s"$root/otlp_logs/year=2021/month=12/day=20").isDirectory)
     assert(new java.io.File(s"$root/otlp_logs/year=2021/month=12/day=21").isDirectory)
@@ -219,14 +221,14 @@ class SealRecoverySpec extends SparkTestBase {
   }
 
   test("catalog-mode maintenance compacts the managed table's seal files") {
-    val uri = "otlp:127.0.0.1:45844"
+    val uri = s"otlp:127.0.0.1:${ports(6)}"
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "schema" -> "otlptest_catmaint",
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824",
       "maintenance_min_seals" -> "5", "maintenance_min_interval_ms" -> "1"))
     val body = fixture("logs_simple.jsonl")
     (1 to 5).foreach { _ =>
-      assert(post(45844, body).statusCode() == 202)
+      assert(post(ports(6), body).statusCode() == 202)
       val fl = OtlpServe.otlpFlush(spark, uri).first()
       assert(fl.getAs[String]("status") == "sealed", fl.toString)
     }
@@ -239,7 +241,7 @@ class SealRecoverySpec extends SparkTestBase {
     assert(files.length == 1, s"expected 1 compacted file, got ${files.length}")
     assert(spark.table("otlptest_catmaint.otlp_logs").count() == 15)
     val listed = OtlpServe.serverList(spark)
-      .where(col("listen_uri") === "otlp:127.0.0.1:45844").first()
+      .where(col("listen_uri") === s"otlp:127.0.0.1:${ports(6)}").first()
     assert(listed.getAs[Long]("maintenance_runs_total") == 1L)
     OtlpServe.otlpStop(spark, uri)
   }

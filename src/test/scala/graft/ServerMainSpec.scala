@@ -12,6 +12,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
   * arg dispatch. */
 class ServerMainSpec extends SparkTestBase {
 
+  private val ports = SparkTestBase.freePorts(5)
+
   private val client = HttpClient.newHttpClient()
   private val Token = "daemon-token-0123456789abcdef"
 
@@ -31,17 +33,17 @@ class ServerMainSpec extends SparkTestBase {
   }
 
   test("healthcheck exits 1 when nothing is listening") {
-    val e = Map("OTEL_HTTP_ADDR" -> "127.0.0.1:46977")
+    val e = Map("OTEL_HTTP_ADDR" -> s"127.0.0.1:${ports(0)}")
     assert(ServerMain.dispatch(Array("healthcheck"), env(e)).contains(1))
   }
 
   test("dry run prints the plan and exits 0 without binding") {
     val e = Map(
       "DRY_RUN" -> "1",
-      "OTEL_HTTP_ADDR" -> "127.0.0.1:46978",
+      "OTEL_HTTP_ADDR" -> s"127.0.0.1:${ports(1)}",
       "GRAFT_OTLP_TOKEN" -> Token)
     assert(ServerMain.run(env(e)) == 0)
-    assert(OtlpServe.get("otlp:127.0.0.1:46978").isEmpty)
+    assert(OtlpServe.get(s"otlp:127.0.0.1:${ports(1)}").isEmpty)
   }
 
   test("config validation: bad mode and missing parquet root fail") {
@@ -72,7 +74,7 @@ class ServerMainSpec extends SparkTestBase {
   test("full lifecycle: start, ready, ingest, drain on shutdown, exit 0") {
     ServerMain.reset()
     val root = java.nio.file.Files.createTempDirectory("daemon_seal").toString
-    val port = 46979
+    val port = ports(2)
     val e = Map(
       "GRAFT_MODE" -> "parquet",
       "GRAFT_PARQUET_ROOT" -> root,
@@ -116,7 +118,7 @@ class ServerMainSpec extends SparkTestBase {
     "serves the sealed rows") {
     ServerMain.reset()
     val root = java.nio.file.Files.createTempDirectory("daemon_snap").toString
-    val port = 46981
+    val port = ports(3)
     val e = Map(
       "GRAFT_MODE" -> "snapshot",
       "GRAFT_PARQUET_ROOT" -> root,
@@ -159,10 +161,10 @@ class ServerMainSpec extends SparkTestBase {
     ServerMain.requestShutdown()
     try {
       val e = Map(
-        "OTEL_HTTP_ADDR" -> "127.0.0.1:46980",
+        "OTEL_HTTP_ADDR" -> s"127.0.0.1:${ports(4)}",
         "GRAFT_OTLP_TOKEN" -> Token)
       assert(ServerMain.run(env(e)) == 0)
-      assert(OtlpServe.get("otlp:127.0.0.1:46980").isEmpty)
+      assert(OtlpServe.get(s"otlp:127.0.0.1:${ports(4)}").isEmpty)
     } finally ServerMain.reset()
   }
 }

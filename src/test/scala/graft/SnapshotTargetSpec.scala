@@ -15,6 +15,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
   * idempotence probe. */
 class SnapshotTargetSpec extends SparkTestBase {
 
+  private val ports = SparkTestBase.freePorts(7)
+
   private val fx = "src/test/resources/otlp"
   private val client = HttpClient.newHttpClient()
   private val Token = "dev-token-1234567890"
@@ -71,7 +73,7 @@ class SnapshotTargetSpec extends SparkTestBase {
 
   test("snapshot lifecycle: seals commit, expiry keeps live data, compaction time-travels") {
     val root = java.nio.file.Files.createTempDirectory("snap_target").toString
-    val uri = "otlp:127.0.0.1:45951"
+    val uri = s"otlp:127.0.0.1:${ports(0)}"
     val params = Map(
       "token" -> Token, "target" -> "snapshot", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824",
@@ -82,7 +84,7 @@ class SnapshotTargetSpec extends SparkTestBase {
 
     // five seals -> five snapshots, each appending one file to the live set
     (1 to 5).foreach { i =>
-      assert(post(45951, fixture("logs_simple.jsonl")).statusCode() == 202)
+      assert(post(ports(0), fixture("logs_simple.jsonl")).statusCode() == 202)
       val fl = OtlpServe.otlpFlush(spark, uri).first()
       assert(fl.getAs[String]("status") == "sealed", s"seal $i: $fl")
     }
@@ -148,14 +150,14 @@ class SnapshotTargetSpec extends SparkTestBase {
 
   test("inspection views resolve the current snapshot after each seal") {
     val root = java.nio.file.Files.createTempDirectory("snap_views").toString
-    val uri = "otlp:127.0.0.1:45952"
+    val uri = s"otlp:127.0.0.1:${ports(1)}"
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "target" -> "snapshot", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824"))
-    assert(post(45952, fixture("logs_simple.jsonl")).statusCode() == 202)
+    assert(post(ports(1), fixture("logs_simple.jsonl")).statusCode() == 202)
     OtlpServe.otlpFlush(spark, uri)
     assert(spark.table("otlp_logs").count() == 3)
-    assert(post(45952, fixture("logs_simple.jsonl")).statusCode() == 202)
+    assert(post(ports(1), fixture("logs_simple.jsonl")).statusCode() == 202)
     OtlpServe.otlpFlush(spark, uri)
     assert(spark.table("otlp_logs").count() == 6)
     // the view carries the partition columns of the export layout
@@ -166,7 +168,7 @@ class SnapshotTargetSpec extends SparkTestBase {
   test("snapshot retry after post-commit failure republishes zero rows " +
     "(the seal-id probe engages for the snapshot target too)") {
     val root = java.nio.file.Files.createTempDirectory("snap_idem").toString
-    val uri = "otlp:127.0.0.1:45954"
+    val uri = s"otlp:127.0.0.1:${ports(2)}"
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "target" -> "snapshot", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824"))
@@ -175,7 +177,7 @@ class SnapshotTargetSpec extends SparkTestBase {
     // at-least-once retry would re-publish and re-commit every row
     server.writer.failAfterCatalogCommit =
       s => throw new RuntimeException(s"injected post-commit failure ($s)")
-    assert(post(45954, fixture("logs_simple.jsonl")).statusCode() == 202)
+    assert(post(ports(2), fixture("logs_simple.jsonl")).statusCode() == 202)
     val fl1 = OtlpServe.otlpFlush(spark, uri).first()
     assert(fl1.getAs[String]("status") == "error")
     // the snapshot DID commit; the rows were also restored for retry
@@ -200,13 +202,13 @@ class SnapshotTargetSpec extends SparkTestBase {
   test("snapshot log integrity: truncation fails loudly, manifest catches " +
     "data-file corruption, v1 logs stay readable") {
     val root = java.nio.file.Files.createTempDirectory("snap_crc").toString
-    val uri = "otlp:127.0.0.1:45955"
+    val uri = s"otlp:127.0.0.1:${ports(3)}"
     val params = Map(
       "token" -> Token, "target" -> "snapshot", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824")
     OtlpServe.otlpServe(spark, uri, params)
     (1 to 2).foreach { _ =>
-      assert(post(45955, fixture("logs_simple.jsonl")).statusCode() == 202)
+      assert(post(ports(3), fixture("logs_simple.jsonl")).statusCode() == 202)
       assert(OtlpServe.otlpFlush(spark, uri).first()
         .getAs[String]("status") == "sealed")
     }
@@ -258,13 +260,13 @@ class SnapshotTargetSpec extends SparkTestBase {
   test("external reader: DuckDB serves a committed snapshot from its " +
     "manifest.csv — counts match readAt, time travel included") {
     val root = java.nio.file.Files.createTempDirectory("snap_ext").toString
-    val uri = "otlp:127.0.0.1:45958"
+    val uri = s"otlp:127.0.0.1:${ports(4)}"
     val params = Map(
       "token" -> Token, "target" -> "snapshot", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824")
     OtlpServe.otlpServe(spark, uri, params)
     (1 to 2).foreach { _ =>
-      assert(post(45958, fixture("logs_simple.jsonl")).statusCode() == 202)
+      assert(post(ports(4), fixture("logs_simple.jsonl")).statusCode() == 202)
       assert(OtlpServe.otlpFlush(spark, uri).first()
         .getAs[String]("status") == "sealed")
     }
@@ -324,13 +326,13 @@ class SnapshotTargetSpec extends SparkTestBase {
   test("expire quarantines a corrupt non-current snapshot log instead of " +
     "wedging maintenance; the current log stays fail-loud") {
     val root = java.nio.file.Files.createTempDirectory("snap_corrupt").toString
-    val uri = "otlp:127.0.0.1:45957"
+    val uri = s"otlp:127.0.0.1:${ports(5)}"
     val params = Map(
       "token" -> Token, "target" -> "snapshot", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824")
     OtlpServe.otlpServe(spark, uri, params)
     (1 to 2).foreach { _ =>
-      assert(post(45957, fixture("logs_simple.jsonl")).statusCode() == 202)
+      assert(post(ports(5), fixture("logs_simple.jsonl")).statusCode() == 202)
       assert(OtlpServe.otlpFlush(spark, uri).first()
         .getAs[String]("status") == "sealed")
     }
@@ -373,7 +375,7 @@ class SnapshotTargetSpec extends SparkTestBase {
 
   test("serve validation: snapshot target requires parquet_root") {
     val msg = intercept[IllegalArgumentException](
-      OtlpServe.otlpServe(spark, "otlp:127.0.0.1:45953",
+      OtlpServe.otlpServe(spark, s"otlp:127.0.0.1:${ports(6)}",
         Map("token" -> Token, "target" -> "snapshot"))).getMessage
     assert(msg.contains("parquet_root is required"))
   }

@@ -13,6 +13,8 @@ import java.sql.Timestamp
   * streaming dedup, custom per-trace state). */
 class TelemetryStreamsSpec extends SparkTestBase {
 
+  private val ports = SparkTestBase.freePorts(4)
+
   private val fx = "src/test/resources/otlp"
   private val client = HttpClient.newHttpClient()
   private val Token = "dev-token-1234567890"
@@ -23,12 +25,12 @@ class TelemetryStreamsSpec extends SparkTestBase {
   private def seededRoot(): String = {
     // seal the logs+traces fixtures into a fresh parquet export root
     val root = java.nio.file.Files.createTempDirectory("ts_stream").toString
-    val uri = "otlp:127.0.0.1:45851"
+    val uri = s"otlp:127.0.0.1:${ports(0)}"
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "target" -> "parquet", "parquet_root" -> root,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824"))
     def post(path: String, body: Array[Byte]): Int =
-      client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:45851$path"))
+      client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${ports(0)}$path"))
         .header("Content-Type", "application/x-ndjson")
         .header("Authorization", s"Bearer $Token")
         .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
@@ -37,8 +39,8 @@ class TelemetryStreamsSpec extends SparkTestBase {
     assert(post("/v1/traces", fixture("traces_simple.jsonl")) == 202)
     // duplicate spans on purpose (at-least-once contract) for the dedup test
     assert(post("/v1/traces", fixture("traces_simple.jsonl")) == 202)
-    OtlpServe.otlpFlush(spark, "otlp:127.0.0.1:45851")
-    OtlpServe.otlpStop(spark, "otlp:127.0.0.1:45851")
+    OtlpServe.otlpFlush(spark, s"otlp:127.0.0.1:${ports(0)}")
+    OtlpServe.otlpStop(spark, s"otlp:127.0.0.1:${ports(0)}")
     root
   }
 
@@ -754,7 +756,7 @@ class TelemetryStreamsSpec extends SparkTestBase {
 
   test("otlp-seals MicroBatchStream: offsets are seal ids; kill + restart " +
       "resumes from the checkpoint with no loss and no dups") {
-    val uri = "otlp:127.0.0.1:45853"
+    val uri = s"otlp:127.0.0.1:${ports(1)}"
     val sealRoot = java.nio.file.Files.createTempDirectory("ms_root").toString
     val outDir = java.nio.file.Files.createTempDirectory("ms_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ms_ckpt").toString
@@ -767,7 +769,7 @@ class TelemetryStreamsSpec extends SparkTestBase {
         s"""{"resourceLogs":[{"resource":{"attributes":[{"key":"service.name","value":{"stringValue":"ms-svc"}}]},"scopeLogs":[{"scope":{"name":"s"},"logRecords":[{"timeUnixNano":"${1640000000000000000L + base + i}","severityNumber":9,"severityText":"INFO","body":{"stringValue":"row ${base + i}"}}]}]}]}"""
       }.mkString("\n").getBytes("UTF-8")
       val code = client.send(
-        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:45853/v1/logs"))
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${ports(1)}/v1/logs"))
           .header("Content-Type", "application/x-ndjson")
           .header("Authorization", s"Bearer $Token")
           .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
@@ -800,7 +802,7 @@ class TelemetryStreamsSpec extends SparkTestBase {
     val tOut = java.nio.file.Files.createTempDirectory("ms_tout").toString
     val tCkpt = java.nio.file.Files.createTempDirectory("ms_tckpt").toString
     val traceCode = client.send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:45853/v1/traces"))
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${ports(1)}/v1/traces"))
         .header("Content-Type", "application/x-ndjson")
         .header("Authorization", s"Bearer $Token")
         .POST(HttpRequest.BodyPublishers.ofByteArray(
@@ -822,7 +824,7 @@ class TelemetryStreamsSpec extends SparkTestBase {
 
   test("otlp-seals: a consumer behind the retention cap fails loudly, " +
       "never skips silently") {
-    val uri = "otlp:127.0.0.1:45855"
+    val uri = s"otlp:127.0.0.1:${ports(2)}"
     val sealRoot = java.nio.file.Files.createTempDirectory("msg_root").toString
     val outDir = java.nio.file.Files.createTempDirectory("msg_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("msg_ckpt").toString
@@ -835,7 +837,7 @@ class TelemetryStreamsSpec extends SparkTestBase {
         s"""{"resourceLogs":[{"scopeLogs":[{"logRecords":[{"timeUnixNano":"${1640000000000000000L + i}","body":{"stringValue":"g$i"}}]}]}]}"""
           .getBytes("UTF-8")
       val code = client.send(
-        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:45855/v1/logs"))
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${ports(2)}/v1/logs"))
           .header("Content-Type", "application/x-ndjson")
           .header("Authorization", s"Bearer $Token")
           .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
@@ -863,14 +865,14 @@ class TelemetryStreamsSpec extends SparkTestBase {
 
   test("otlp-seals composes with the watermark analytics layer " +
       "(windowed severity rate over live seals, no storage round-trip)") {
-    val uri = "otlp:127.0.0.1:45854"
+    val uri = s"otlp:127.0.0.1:${ports(3)}"
     val sealRoot = java.nio.file.Files.createTempDirectory("msw_root").toString
     OtlpServe.otlpServe(spark, uri, Map(
       "token" -> Token, "target" -> "parquet", "parquet_root" -> sealRoot,
       "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1073741824",
       "stream_retain_seals" -> "16"))
     val code = client.send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:45854/v1/logs"))
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${ports(3)}/v1/logs"))
         .header("Content-Type", "application/x-ndjson")
         .header("Authorization", s"Bearer $Token")
         .POST(HttpRequest.BodyPublishers.ofByteArray(

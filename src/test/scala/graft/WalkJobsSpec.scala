@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{Dedup, Traces}
+import graft.operators.{Blocks, Dedup, Traces}
 import org.apache.spark.GraftTestAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -12,6 +12,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * round's own checkpoint job rather than add one. String ids must walk
   * exactly like numeric ids: their label order drives the same rounds, so
   * any extra job is a convergence test the numeric twin does not pay.
+  *
+  * The distributed counts run with the in-memory finish forced off
+  * (`Blocks.distributedOnly`); their in-memory twins run the same
+  * fixtures under the session's default budget.
   *
   * Only jobs started under this spec's job group are counted, so streams
   * another spec left running cannot leak into a count. */
@@ -36,8 +40,11 @@ class WalkJobsSpec extends SparkTestBase {
     super.afterAll()
   }
 
+  /** Jobs `run` starts on the distributed rounds, whatever the budget. */
+  private def jobs(run: => Any): Int = jobsIn(Blocks.distributedOnly(run))
+
   /** Jobs `run` starts, the listener bus drained on both sides. */
-  private def jobs(run: => Any): Int = {
+  private def jobsIn(run: => Any): Int = {
     val sc = spark.sparkContext
     GraftTestAccess.drain(sc)
     val before = started.get
@@ -49,55 +56,70 @@ class WalkJobsSpec extends SparkTestBase {
 
   test("neardupClusters: a 4-chain runs 16 jobs with numeric ids and as " +
     "many with string ids") {
-    import spark.implicits._
     // the same graph twice: string ids sort like their numeric twins
     val numeric = jobs(Dedup.neardupClusters(
-      Seq((2L, 1L), (2L, 3L), (3L, 4L), (24L, 25L)).toDF("id_a", "id_b"))
-      .collect())
+      WalkFixtures.chain4(spark)).collect())
     val string = jobs(Dedup.neardupClusters(
-      Seq(("b", "a"), ("b", "c"), ("c", "d"), ("x", "y")).toDF("id_a", "id_b"))
-      .collect())
+      WalkFixtures.chain4Strings(spark)).collect())
     assert(numeric == 16, s"numeric 4-chain jobs: $numeric")
     assert(string == numeric, s"string $string vs numeric $numeric jobs")
   }
 
   test("neardupClusters: the 64-node chain runs 52 jobs with numeric ids " +
     "and as many with string ids") {
-    import spark.implicits._
     val numeric = jobs(Dedup.neardupClusters(
-      (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")).collect())
-    // zero-padded so lexicographic order is numeric order
+      WalkFixtures.chain64(spark)).collect())
     val string = jobs(Dedup.neardupClusters(
-      (0 until 63).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
-        .toDF("id_a", "id_b")).collect())
+      WalkFixtures.chain64Strings(spark)).collect())
     assert(numeric == 52, s"numeric 64-chain jobs: $numeric")
     assert(string == numeric, s"string $string vs numeric $numeric jobs")
   }
 
   test("traceTree: the depth-40 chain runs 27 jobs") {
-    import spark.implicits._
-    val spans = (0 until 41).map { i =>
-      ("t1", f"s$i%03d", if (i == 0) null else f"s${i - 1}%03d", (i + 1).toLong)
-    }.toDF("trace_id", "span_id", "parent_span_id", "duration_time_unix_nano")
-    val n = jobs(Traces.traceTree(spans).collect())
+    val n = jobs(Traces.traceTree(WalkFixtures.depth40(spark)).collect())
     assert(n == 27, s"traceTree jobs: $n")
   }
 
   test("criticalPath: the laggard/cycle/dangling fixture runs 45 jobs") {
-    import spark.implicits._
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def ts(ms: Long) = new java.sql.Timestamp(t0.getTime + ms)
-    val spans = Seq(
-      ("ta", "s1", null, "root", ts(0), 100000000L),
-      ("ta", "s2", "s1", "mid", ts(1), 9000000L),
-      ("ta", "s3", "s2", "leaf", ts(5), 195000000L),
-      ("ta", "s4", "s1", "othr", ts(0), 150000000L),
-      ("tb", "b1", "b2", "cyc-a", ts(0), 5000000L),
-      ("tb", "b2", "b1", "cyc-b", ts(0), 7000000L),
-      ("tc", "c1", "zz", "orph", ts(0), 3000000L))
-      .toDF("trace_id", "span_id", "parent_span_id", "name",
-        "start_time_unix_nano", "duration_time_unix_nano")
-    val n = jobs(Traces.criticalPath(spans).collect())
+    val n = jobs(Traces.criticalPath(WalkFixtures.laggards(spark)).collect())
     assert(n == 45, s"criticalPath jobs: $n")
+  }
+
+  // The same fixtures under the default budget: round 0 stays distributed,
+  // then one job collects it together with the step's side table (CC's
+  // edges, criticalPath's spans), and the remaining rounds run on the
+  // driver, however many there are.
+
+  test("in memory, neardupClusters runs 5 jobs on the 4-chain and on the " +
+    "64-node chain, with numeric or string ids") {
+    val counts = Seq(WalkFixtures.chain4(spark), WalkFixtures.chain4Strings(spark),
+        WalkFixtures.chain64(spark), WalkFixtures.chain64Strings(spark))
+      .map(pairs => jobsIn(Dedup.neardupClusters(pairs).collect()))
+    assert(counts == Seq(5, 5, 5, 5), s"neardupClusters jobs: $counts")
+  }
+
+  test("in memory, traceTree runs 6 jobs on the depth-40 chain") {
+    val n = jobsIn(Traces.traceTree(WalkFixtures.depth40(spark)).collect())
+    assert(n == 6, s"traceTree jobs: $n")
+  }
+
+  test("in memory, criticalPath runs 5 jobs on the laggard/cycle/dangling " +
+    "fixture") {
+    val n = jobsIn(Traces.criticalPath(WalkFixtures.laggards(spark)).collect())
+    assert(n == 5, s"criticalPath jobs: $n")
+  }
+
+  test("an input over the budget takes the distributed rounds") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.get(key)
+    val pairs = WalkFixtures.chain4(spark)
+    def run = jobsIn(Dedup.neardupClusters(pairs).collect())
+    try {
+      // the 4-chain's round 0 (6 ids) and edges (8) are 24 estimated
+      // bytes a row: 336 bytes, over a 100-byte budget
+      val counts = Seq("100", "0", "-1").map { v => spark.conf.set(key, v); run }
+      // 0 or less turns the finish off
+      assert(counts == Seq(16, 16, 16), s"over the budget, 0 and -1: $counts")
+    } finally spark.conf.set(key, was)
   }
 }
