@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -281,25 +281,35 @@ object Logs {
     logs
       .withColumn("window_start", wStart)
       .groupBy(col(serviceCol).as("service_name"),
-        coalesce(col(severityCol), lit("UNSPECIFIED")).as("__sev"),
-        col("window_start"))
-      .agg(count(lit(1)).as("int_value"))
-      .select(lit("log.record.count").as("name"),
-        col("service_name"),
-        lit(null).cast("string").as("service_namespace"),
-        lit(null).cast("string").as("service_instance_id"),
-        lit(null).cast("string").as("resource_attributes"),
-        lit("graft.count_connector").as("scope_name"),
-        // to_json, not string concat: a severity carrying a quote or
-        // backslash must still yield valid JSON downstream parsers accept
-        to_json(map(lit("severity_text"), col("__sev")))
-          .as("metric_attributes"),
-        col("window_start").as("time_unix_nano"),
-        lit(true).as("is_monotonic"),
-        lit(null).cast("double").as("double_value"),
-        col("int_value"),
-        lit(1).as("aggregation_temporality"))
+        severityKey(col(severityCol)), col("window_start"))
+      .agg(logCount)
+      .select(countPoint: _*)
   }
+
+  /** The count connector's severity key; records without one count as
+    * UNSPECIFIED. */
+  private[graft] def severityKey(severity: Column): Column =
+    coalesce(severity, lit("UNSPECIFIED")).as("__sev")
+
+  private[graft] val logCount = count(lit(1)).as("int_value")
+
+  /** The count connector's delta sum point, in the metrics_sum shape,
+    * from a (window_start, service_name, __sev, int_value) rollup. */
+  private[graft] val countPoint: Seq[Column] = Seq(
+    lit("log.record.count").as("name"),
+    col("service_name"),
+    lit(null).cast("string").as("service_namespace"),
+    lit(null).cast("string").as("service_instance_id"),
+    lit(null).cast("string").as("resource_attributes"),
+    lit("graft.count_connector").as("scope_name"),
+    // to_json, not string concat: a severity carrying a quote or
+    // backslash must still yield valid JSON downstream parsers accept
+    to_json(map(lit("severity_text"), col("__sev"))).as("metric_attributes"),
+    col("window_start").as("time_unix_nano"),
+    lit(true).as("is_monotonic"),
+    lit(null).cast("double").as("double_value"),
+    col("int_value"),
+    lit(1).as("aggregation_temporality"))
 
   /** Log-volume anomaly report: per (service, aligned window) the log
     * count's z-score against THAT SERVICE's own across-window mean and
@@ -320,19 +330,30 @@ object Logs {
     val counts = logs
       .withColumn("window_start", wStart)
       .groupBy(col(serviceCol).as("service_name"), col("window_start"))
-      .agg(count(lit(1)).as("n_logs"))
+      .agg(nLogs)
     val stats = counts.groupBy("service_name")
       .agg(avg(col("n_logs")).as("svc_mean"),
         stddev_samp(col("n_logs")).as("svc_sd"),
         count(lit(1)).as("n_windows"))
     counts.join(broadcast(stats), Seq("service_name"))
-      .withColumn("z", when(col("n_windows") >= 2 && col("svc_sd") > 0,
-        round((col("n_logs") - col("svc_mean")) / col("svc_sd"), 4)))
-      .withColumn("anomaly", coalesce(abs(col("z")) >= zThreshold, lit(false)))
+      .withColumn("z", when(col("n_windows") >= 2, volumeZ))
+      .withColumn("anomaly", anomaly(zThreshold))
       .select(col("service_name"), col("window_start"), col("n_logs"),
         round(col("svc_mean"), 4).as("svc_mean"),
         round(col("svc_sd"), 4).as("svc_sd"), col("z"), col("anomaly"))
   }
+
+  private[graft] val nLogs = count(lit(1)).as("n_logs")
+
+  /** A window's log-count z-score against its service's svc_mean and
+    * svc_sd, round(4); null where the spread is zero. */
+  private[graft] val volumeZ = when(col("svc_sd") > 0,
+    round((col("n_logs") - col("svc_mean")) / col("svc_sd"), 4))
+
+  /** [[volumeAnomaly]]'s flag: |z| at or above the threshold; a null z
+    * is no anomaly. */
+  private[graft] def anomaly(zThreshold: Double): Column =
+    coalesce(abs(col("z")) >= zThreshold, lit(false))
 
   /** Instrumentation-SCOPE inventory: one row per (scope name, scope
     * version) with record and distinct-service counts — "which
@@ -450,12 +471,17 @@ object Logs {
     normalizeSeverity(logs)
       .withColumn("window_start", wStart)
       .groupBy(col(serviceCol).as("service_name"), col("window_start"))
-      .agg(count(lit(1)).as("n_logs"),
-        count(when(col("severity_canonical").isin("ERROR", "FATAL"),
-          lit(1))).as("n_errors"))
-      .withColumn("error_ratio",
-        round(col("n_errors") / col("n_logs"), 6))
+      .agg(nLogs, errorLogs)
+      .select(col("*"), errorRatio)
   }
+
+  /** ERROR+FATAL records under [[normalizeSeverity]]'s one rule. */
+  private[graft] val errorLogs =
+    count(when(col("severity_canonical").isin("ERROR", "FATAL"), lit(1)))
+      .as("n_errors")
+
+  private[graft] val errorRatio =
+    round(col("n_errors") / col("n_logs"), 6).as("error_ratio")
 
   /** Parameter extraction for one template: the values that filled each
     * `<*>` slot, with occurrence counts — the drill-down a template view

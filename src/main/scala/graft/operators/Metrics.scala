@@ -29,6 +29,16 @@ object Metrics {
     "scope_name", "metric_attributes")
   private[graft] val seriesKey = seriesKeyNames.map(col)
 
+  /** A point's value: double_value, else int_value as a double (null
+    * for a point with no recorded value). */
+  private[graft] val pointValue =
+    coalesce(col("double_value"), col("int_value").cast("double"))
+
+  /** Points with a recorded value, the value as column `as`. */
+  private[graft] def valued(points: DataFrame, as: String = "__v")
+      : DataFrame =
+    points.where(pointValue.isNotNull).withColumn(as, pointValue)
+
   /** DELTA → CUMULATIVE temporality conversion for sum metrics (the OTel
     * collector's cumulativetodelta processor, inverted): within each
     * series — (name, service, attribute set) — delta points become the
@@ -48,8 +58,7 @@ object Metrics {
       .partitionBy(seriesKey :+ col("aggregation_temporality"): _*)
       // value as tiebreaker: same-timestamp distinct points otherwise get
       // run-dependent intermediate running sums
-      .orderBy(col("time_unix_nano"),
-        coalesce(col("double_value"), col("int_value").cast("double")))
+      .orderBy(col("time_unix_nano"), pointValue)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val isDelta = col("aggregation_temporality") === 1
     Replay.dedupWithin(sums, seriesKey :+ col("aggregation_temporality"))
@@ -76,7 +85,7 @@ object Metrics {
     * [[deltaToCumulative]] — uniform high-cardinality partitions, each
     * holding one series' retention of points. */
   def rate(sums: DataFrame): DataFrame = {
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
+    val v = pointValue
     val w = Window
       .partitionBy(seriesKey: _*)
       .orderBy(col("time_unix_nano"), v)
@@ -89,9 +98,7 @@ object Metrics {
     // the lag spans the gap (Prometheus staleness behavior; keeps the
     // streaming twin's membership identical); dt > 0 guard: a deduped
     // same-microsecond pair must yield null, not an ANSI divide-by-zero
-    Replay.dedupWithin(sums, seriesKey)
-      .where(v.isNotNull)
-      .withColumn("value", v)
+    valued(Replay.dedupWithin(sums, seriesKey), "value")
       .withColumn("rate_per_sec",
         when(dtSec > 0, round(increase / dtSec, 6)))
   }
@@ -128,20 +135,23 @@ object Metrics {
     * stream with a watermark. */
   def overTime(sums: DataFrame, windowSec: Long = 60): DataFrame = {
     require(windowSec > 0, "windowSec must be positive")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val wStart = Replay.windowStart(col("time_unix_nano"), windowSec)
     Replay.dedupWithin(
-        sums.where(v.isNotNull).withColumn("window_start", wStart),
+        sums.where(pointValue.isNotNull).withColumn("window_start", wStart),
         seriesKey :+ col("window_start"))
-      .withColumn("__v", v)
+      .withColumn("__v", pointValue)
       .groupBy(seriesKey :+ col("window_start"): _*)
-      .agg(round(avg(col("__v")), 6).as("avg_value"),
-        min(col("__v")).as("min_value"),
-        max(col("__v")).as("max_value"),
-        max(struct(col("time_unix_nano").as("t"), col("__v").as("v")))
-          .getField("v").as("last_value"),
-        count(lit(1)).as("n_points"))
+      .agg(overTimeAggs.head, overTimeAggs.tail: _*)
   }
+
+  /** [[overTime]]'s window statistics over `__v`. */
+  private[graft] val overTimeAggs = Seq(
+    round(avg(col("__v")), 6).as("avg_value"),
+    min(col("__v")).as("min_value"),
+    max(col("__v")).as("max_value"),
+    max(struct(col("time_unix_nano").as("t"), col("__v").as("v")))
+      .getField("v").as("last_value"),
+    count(lit(1)).as("n_points"))
 
   /** PromQL `increase()` over aligned windows: per series, the sum of
     * positive point-to-point deltas whose LATER point lands in the
@@ -160,7 +170,7 @@ object Metrics {
     * rides it too); output cardinality is the downsampled size. */
   def increase(sums: DataFrame, windowSec: Long = 60): DataFrame = {
     require(windowSec > 0, "windowSec must be positive")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
+    val v = pointValue
     val w = Window.partitionBy(seriesKey: _*)
       .orderBy(col("time_unix_nano"), v)
     val prevV = lag(v, 1).over(w)
@@ -191,12 +201,11 @@ object Metrics {
     * map-side; replay dedup rides the same exchange. */
   def deltaOverTime(sums: DataFrame, windowSec: Long = 300): DataFrame = {
     require(windowSec > 0, "windowSec must be positive")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val wStart = Replay.windowStart(col("time_unix_nano"), windowSec)
     Replay.dedupWithin(
-        sums.where(v.isNotNull).withColumn("window_start", wStart),
+        sums.where(pointValue.isNotNull).withColumn("window_start", wStart),
         seriesKey :+ col("window_start"))
-      .withColumn("__v", v)
+      .withColumn("__v", pointValue)
       .groupBy(seriesKey :+ col("window_start"): _*)
       .agg(round(
         max(struct(col("time_unix_nano").as("t"), col("__v").as("v")))
@@ -214,11 +223,8 @@ object Metrics {
   def aggregateBy(sums: DataFrame, op: String,
                   by: Seq[String] = Seq("name")): DataFrame = {
     require(by.nonEmpty, "aggregateBy needs at least one label to keep")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val agg = aggOp(op)
-    Replay.dedupWithin(sums, by.map(col) :+ col("time_unix_nano"))
-      .where(v.isNotNull)
-      .withColumn("__v", v)
+    valued(Replay.dedupWithin(sums, by.map(col) :+ col("time_unix_nano")))
       .groupBy(by.map(col) :+ col("time_unix_nano"): _*)
       .agg(agg.as("value"), count(lit(1)).as("n_series"))
   }
@@ -229,7 +235,7 @@ object Metrics {
     * samples), stddev/stdvar (POPULATION moments, PromQL's definition),
     * and group (constant 1, the "which label sets exist" collapse).
     * Every one is a map-side-combinable partial aggregate. */
-  private def aggOp(op: String) = op match {
+  private[graft] def aggOp(op: String): Column = op match {
     case "sum"    => round(sum(col("__v")), 6)
     case "avg"    => round(avg(col("__v")), 6)
     case "min"    => min(col("__v"))
@@ -257,7 +263,6 @@ object Metrics {
   def aggregateWithout(sums: DataFrame, op: String,
                        without: Seq[String]): DataFrame = {
     require(without.nonEmpty, "aggregateWithout needs labels to drop")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val agg = aggOp(op)
     // metric_attributes is the canonical compact sorted-key JSON the
     // parser emits (scalar values, standard string escaping). Dropped
@@ -283,11 +288,9 @@ object Metrics {
       e => !array_contains(dropArr, keyOf(e)))
     val cleaned = coalesce(
       concat(lit("{"), array_join(kept, ","), lit("}")), lit("{}"))
-    Replay.dedupWithin(
+    valued(Replay.dedupWithin(
         sums.withColumn("__attrs", cleaned),
-        Seq(col("name"), col("__attrs"), col("time_unix_nano")))
-      .where(v.isNotNull)
-      .withColumn("__v", v)
+        Seq(col("name"), col("__attrs"), col("time_unix_nano"))))
       .groupBy(col("name"), col("__attrs").as("metric_attributes"),
         col("time_unix_nano"))
       .agg(agg.as("value"), count(lit(1)).as("n_series"))
@@ -324,28 +327,28 @@ object Metrics {
     * metric's whole retention history for one hour into a single window
     * task and defeat the map-side combine (the r11 skew-trap lesson) —
     * the second exchange is the price of a dedup that scales. */
-  def seasonality(sums: DataFrame, bucket: String = "hour"): DataFrame = {
-    // int64 buckets: SQL engines' hour()/minute() are BIGINT and oracle
-    // parity is type-sensitive
-    val b = (bucket match {
-      case "hour"   => hour(col("time_unix_nano"))
-      case "minute" => minute(col("time_unix_nano"))
-      case "dow"    => dayofweek(col("time_unix_nano"))
-      case other => throw new IllegalArgumentException(
-        s"unknown bucket: $other (hour|minute|dow)")
-    }).cast("long")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
-    Replay.dedupWithin(sums.withColumn("bucket", b),
-        Seq(col("name"), col("time_unix_nano")))
-      .where(v.isNotNull)
-      .withColumn("__v", v)
+  def seasonality(sums: DataFrame, bucket: String = "hour"): DataFrame =
+    valued(Replay.dedupWithin(
+        sums.withColumn("bucket", seasonalBucket(bucket)),
+        Seq(col("name"), col("time_unix_nano"))))
       .groupBy(col("name"), col("bucket"))
       .agg(round(avg(col("__v")), 6).as("avg_value"),
         min(col("__v")).as("min_value"),
         max(col("__v")).as("max_value"),
         round(stddev_pop(col("__v")), 6).as("stddev_value"),
         count(lit(1)).as("n_points"))
-  }
+
+  /** A point's time-of-day bucket: `hour` of day, `minute` of hour, or
+    * `dow` (1=Sunday). int64: SQL engines' hour()/minute() are BIGINT,
+    * oracle parity is type-sensitive, and a stream-static join on the
+    * bucket must not need a widening cast. */
+  private[graft] def seasonalBucket(bucket: String): Column = (bucket match {
+    case "hour"   => hour(col("time_unix_nano"))
+    case "minute" => minute(col("time_unix_nano"))
+    case "dow"    => dayofweek(col("time_unix_nano"))
+    case other => throw new IllegalArgumentException(
+      s"unknown bucket: $other (hour|minute|dow)")
+  }).cast("long")
 
   /** SEASONAL anomaly detection: score every point against the metric's
     * OWN time-of-day baseline ([[seasonality]]'s profile — same bucket
@@ -366,31 +369,30 @@ object Metrics {
   def seasonalAnomaly(sums: DataFrame, bucket: String = "hour",
                       k: Double = 2.0): DataFrame = {
     require(k >= 0, "k must be non-negative")
-    val base = seasonality(sums, bucket)
-      .where(col("stddev_value") > 0)
+    seasonalScores(valued(Replay.dedupWithin(
+        sums.withColumn("bucket", seasonalBucket(bucket)),
+        Seq(col("name"), col("time_unix_nano"))), "value"),
+      scorable(seasonality(sums, bucket)), k)
+  }
+
+  /** A [[seasonality]] profile's buckets that can score: those with
+    * spread. */
+  private[graft] def scorable(profile: DataFrame): DataFrame =
+    profile.where(col("stddev_value") > 0)
       .select(col("name"), col("bucket"), col("avg_value"),
         col("stddev_value"))
-    // int64 buckets: SQL engines' hour()/minute() are BIGINT and oracle
-    // parity is type-sensitive
-    val b = (bucket match {
-      case "hour"   => hour(col("time_unix_nano"))
-      case "minute" => minute(col("time_unix_nano"))
-      case "dow"    => dayofweek(col("time_unix_nano"))
-      case other => throw new IllegalArgumentException(
-        s"unknown bucket: $other (hour|minute|dow)")
-    }).cast("long")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
-    Replay.dedupWithin(sums.withColumn("bucket", b),
-        Seq(col("name"), col("time_unix_nano")))
-      .where(v.isNotNull)
-      .withColumn("value", v)
-      .join(base, Seq("name", "bucket"))
+
+  /** [[seasonalAnomaly]]'s verdict on points carrying `bucket` and
+    * `value`: z against their bucket's moments, round(6), kept at
+    * |z| ≥ k. */
+  private[graft] def seasonalScores(points: DataFrame, profile: DataFrame,
+                                    k: Double): DataFrame =
+    points.join(profile, Seq("name", "bucket"))
       .withColumn("z_score",
         round((col("value") - col("avg_value")) / col("stddev_value"), 6))
       .where(abs(col("z_score")) >= k)
       .select(col("name"), col("bucket"), col("time_unix_nano"),
         col("value"), col("avg_value"), col("stddev_value"), col("z_score"))
-  }
 
   /** PromQL `holt_winters()` (3.x: `double_exponential_smoothing`): per
     * series, the double-exponentially-smoothed LAST value — level factor
@@ -410,10 +412,7 @@ object Metrics {
                   tf: Double = 0.3): DataFrame = {
     require(sf > 0 && sf < 1, s"level factor out of (0,1): $sf")
     require(tf > 0 && tf < 1, s"trend factor out of (0,1): $tf")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
-    Replay.dedupWithin(sums, seriesKey)
-      .where(v.isNotNull)
-      .withColumn("__v", v)
+    valued(Replay.dedupWithin(sums, seriesKey))
       .groupBy(seriesKey: _*)
       .agg(expr("array_sort(collect_list(struct(time_unix_nano AS t, __v AS v)))")
           .as("__pts"),
@@ -493,10 +492,7 @@ object Metrics {
                  by: Seq[String] = Seq("name")): DataFrame = {
     require(q >= 0.0 && q <= 1.0, s"quantile out of [0,1]: $q")
     require(by.nonEmpty, "quantileBy needs at least one label to keep")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
-    Replay.dedupWithin(sums, by.map(col) :+ col("time_unix_nano"))
-      .where(v.isNotNull)
-      .withColumn("__v", v)
+    valued(Replay.dedupWithin(sums, by.map(col) :+ col("time_unix_nano")))
       .groupBy(by.map(col) :+ col("time_unix_nano"): _*)
       .agg(round(expr(s"percentile(__v, $q)"), 6).as("value"),
         count(lit(1)).as("n_series"))
@@ -516,19 +512,32 @@ object Metrics {
     * exchange. */
   def ratioBy(sums: DataFrame, numName: String, denName: String,
               by: Seq[String] = Seq.empty): DataFrame = {
-    require(numName != denName, "numerator and denominator must differ")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val keys = by.map(col) :+ col("time_unix_nano")
-    Replay.dedupWithin(
-        sums.where(col("name").isin(numName, denName) && v.isNotNull),
-        keys)
-      .withColumn("__v", v)
-      .groupBy(keys: _*)
-      .agg(sum(when(col("name") === numName, col("__v"))).as("num"),
-        sum(when(col("name") === denName, col("__v"))).as("den"))
-      .where(col("num").isNotNull && col("den").isNotNull && col("den") =!= 0)
-      .withColumn("ratio", round(col("num") / col("den"), 6))
+    val (num, den) = ratioAggs(numName, denName)
+    Replay.dedupWithin(sums.where(ratioPoints(numName, denName)), keys)
+      .withColumn("__v", pointValue)
+      .groupBy(keys: _*).agg(num, den)
+      .where(ratioMatched).select(col("*"), ratio)
   }
+
+  /** [[ratioBy]]'s input: valued points of the two metrics. */
+  private[graft] def ratioPoints(numName: String, denName: String): Column =
+    col("name").isin(numName, denName) && pointValue.isNotNull
+
+  /** [[ratioBy]]'s two sums over `__v`, as conditional aggregates of one
+    * pass. */
+  private[graft] def ratioAggs(numName: String,
+                               denName: String): (Column, Column) = {
+    require(numName != denName, "numerator and denominator must differ")
+    (sum(when(col("name") === numName, col("__v"))).as("num"),
+      sum(when(col("name") === denName, col("__v"))).as("den"))
+  }
+
+  /** Vector matching: both sides present and a nonzero denominator. */
+  private[graft] val ratioMatched =
+    col("num").isNotNull && col("den").isNotNull && col("den") =!= 0
+
+  private[graft] val ratio = round(col("num") / col("den"), 6).as("ratio")
 
   /** Shared lag-then-window pair aggregation for [[resets]]/[[changes]]:
     * per series in time order, tag each consecutive point pair with
@@ -540,7 +549,7 @@ object Metrics {
                          outCol: String)(
                          tag: (Column, Column) => Column): DataFrame = {
     require(windowSec > 0, "windowSec must be positive")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
+    val v = pointValue
     val w = Window.partitionBy(seriesKey: _*)
       .orderBy(col("time_unix_nano"), v)
     val prevV = lag(v, 1).over(w)
@@ -579,12 +588,11 @@ object Metrics {
     * then a series-keyed partial agg on the same partitioning; replay
     * dedup keys by uniform (series, time). */
   def adjustedTotal(sums: DataFrame): DataFrame = {
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val w = Window.partitionBy(seriesKey: _*)
       .orderBy(col("time_unix_nano"), col("__v"))
-    Replay.dedupWithin(sums.where(v.isNotNull),
+    Replay.dedupWithin(sums.where(pointValue.isNotNull),
         seriesKey :+ col("time_unix_nano"))
-      .withColumn("__v", v)
+      .withColumn("__v", pointValue)
       .withColumn("__pv", lag(col("__v"), 1).over(w))
       .withColumn("__d", when(col("__pv").isNull, lit(null))
         .when(col("__v") < col("__pv"), col("__v"))
@@ -617,12 +625,11 @@ object Metrics {
     * with map-side combine, the replay dedup riding the same exchange. */
   def deriv(sums: DataFrame, windowSec: Long = 300): DataFrame = {
     require(windowSec > 0, "windowSec must be positive")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val wStart = Replay.windowStart(col("time_unix_nano"), windowSec)
     Replay.dedupWithin(
-        sums.where(v.isNotNull).withColumn("window_start", wStart),
+        sums.where(pointValue.isNotNull).withColumn("window_start", wStart),
         seriesKey :+ col("window_start"))
-      .withColumn("__v", v)
+      .withColumn("__v", pointValue)
       .withColumn("__t", unix_micros(col("time_unix_nano")).cast("double") /
         lit(1e6))
       .groupBy(seriesKey :+ col("window_start"): _*)
@@ -645,12 +652,11 @@ object Metrics {
                     aheadSec: Long = 3600): DataFrame = {
     require(windowSec > 0, "windowSec must be positive")
     require(aheadSec >= 0, "aheadSec must be non-negative")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val wStart = Replay.windowStart(col("time_unix_nano"), windowSec)
     Replay.dedupWithin(
-        sums.where(v.isNotNull).withColumn("window_start", wStart),
+        sums.where(pointValue.isNotNull).withColumn("window_start", wStart),
         seriesKey :+ col("window_start"))
-      .withColumn("__v", v)
+      .withColumn("__v", pointValue)
       .withColumn("__t", unix_micros(col("time_unix_nano")).cast("double") /
         lit(1e6))
       .groupBy(seriesKey :+ col("window_start"): _*)
@@ -677,7 +683,7 @@ object Metrics {
                  partition: Seq[String] = Seq("name")): DataFrame = {
     require(k > 0, "k must be positive")
     require(partition.nonEmpty, "topk needs at least one partition label")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
+    val v = pointValue
     val keys = partition.map(col) :+ col("time_unix_nano")
     val w = Window.partitionBy(keys: _*)
       .orderBy(v.desc +: seriesKey.map(_.asc): _*)
@@ -695,7 +701,7 @@ object Metrics {
                     partition: Seq[String] = Seq("name")): DataFrame = {
     require(k > 0, "k must be positive")
     require(partition.nonEmpty, "bottomk needs at least one partition label")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
+    val v = pointValue
     val keys = partition.map(col) :+ col("time_unix_nano")
     val w = Window.partitionBy(keys: _*)
       .orderBy(v.asc +: seriesKey.map(_.asc): _*)
@@ -718,12 +724,11 @@ object Metrics {
                        windowSec: Long = 60): DataFrame = {
     require(q >= 0.0 && q <= 1.0, s"quantile out of [0,1]: $q")
     require(windowSec > 0, "windowSec must be positive")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val wStart = Replay.windowStart(col("time_unix_nano"), windowSec)
     Replay.dedupWithin(
-        sums.where(v.isNotNull).withColumn("window_start", wStart),
+        sums.where(pointValue.isNotNull).withColumn("window_start", wStart),
         seriesKey :+ col("window_start"))
-      .withColumn("__v", v)
+      .withColumn("__v", pointValue)
       .groupBy(seriesKey :+ col("window_start"): _*)
       .agg(round(expr(s"percentile(__v, $q)"), 6).as("quantile"),
         count(lit(1)).as("n_points"))
@@ -743,8 +748,7 @@ object Metrics {
   def countValues(sums: DataFrame,
                   by: Seq[String] = Seq("name")): DataFrame = {
     require(by.nonEmpty, "countValues needs at least one label to keep")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
-    Replay.dedupWithin(sums.where(v.isNotNull).withColumn("value", v),
+    Replay.dedupWithin(valued(sums, "value"),
         seriesKey :+ col("time_unix_nano"))
       .groupBy(by.map(col) :+ col("value"): _*)
       .agg(count(lit(1)).as("n_samples"))
@@ -804,7 +808,7 @@ object Metrics {
                      on: Seq[String]): DataFrame = {
     require(numName != denName, "numerator and denominator must differ")
     require(on.nonEmpty, "group_left needs at least one on() label")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
+    val v = pointValue
     val keys = on.map(col) :+ col("time_unix_nano")
     val num = Replay.dedupWithin(
         sums.where(col("name") === numName && v.isNotNull), keys)
@@ -833,7 +837,7 @@ object Metrics {
   def clampValues(sums: DataFrame, lo: Option[Double], hi: Option[Double]): DataFrame = {
     require(lo.nonEmpty || hi.nonEmpty, "clamp needs at least one bound")
     for (l <- lo; h <- hi) require(l <= h, s"empty clamp range [$l, $h]")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
+    val v = pointValue
     val lower = lo.map(l => greatest(v, lit(l))).getOrElse(v)
     val both = hi.map(h => least(lower, lit(h))).getOrElse(lower)
     // greatest/least SKIP nulls, so an absent sample would fabricate a
@@ -899,14 +903,11 @@ object Metrics {
     * Ties (two samples on one µs) collapse via max — deterministic. */
   def offsetCompare(sums: DataFrame, offsetSec: Long): DataFrame = {
     require(offsetSec > 0, "offsetSec must be positive")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val offUs = offsetSec * 1000000L
     val w = Window.partitionBy(seriesKey: _*)
       .orderBy(unix_micros(col("time_unix_nano")))
       .rangeBetween(-offUs, -offUs)
-    Replay.dedupWithin(sums, seriesKey)
-      .where(v.isNotNull)
-      .withColumn("value", v)
+    valued(Replay.dedupWithin(sums, seriesKey), "value")
       .withColumn("offset_value", max(col("value")).over(w))
       .withColumn("ratio", when(col("offset_value") =!= 0,
         round(col("value") / col("offset_value"), 6)))
@@ -922,12 +923,9 @@ object Metrics {
     * before the per-series rollup — both ride the same exchange with
     * the replay dedup; output is the series space. */
   def instantRate(sums: DataFrame): DataFrame = {
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val w = Window.partitionBy(seriesKey: _*)
-      .orderBy(col("time_unix_nano").desc, v.desc)
-    val base = Replay.dedupWithin(sums, seriesKey)
-      .where(v.isNotNull)
-      .withColumn("__v", v)
+      .orderBy(col("time_unix_nano").desc, pointValue.desc)
+    val base = valued(Replay.dedupWithin(sums, seriesKey))
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") <= 2)
     base.groupBy(seriesKey: _*)
@@ -961,12 +959,9 @@ object Metrics {
     * window keeps two rows per series, replay dedup rides the same
     * exchange, output is the series space. */
   def idelta(points: DataFrame): DataFrame = {
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val w = Window.partitionBy(seriesKey: _*)
-      .orderBy(col("time_unix_nano").desc, v.desc)
-    Replay.dedupWithin(points, seriesKey)
-      .where(v.isNotNull)
-      .withColumn("__v", v)
+      .orderBy(col("time_unix_nano").desc, pointValue.desc)
+    valued(Replay.dedupWithin(points, seriesKey))
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") <= 2)
       .groupBy(seriesKey: _*)
@@ -1015,9 +1010,8 @@ object Metrics {
   def staleSeries(sums: DataFrame, asOf: java.sql.Timestamp,
                   stalenessSec: Long = 300): DataFrame = {
     require(stalenessSec > 0, "stalenessSec must be positive")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     Replay.dedupWithin(sums, seriesKey)
-      .withColumn("__v", v)
+      .withColumn("__v", pointValue)
       .groupBy(seriesKey: _*)
       .agg(max(col("time_unix_nano")).as("last_time"),
         max(struct(col("time_unix_nano").as("t"), col("__v").as("v")))
@@ -1043,9 +1037,8 @@ object Metrics {
     * uniform composite keys. The corpus never self-joins. */
   def gapReport(sums: DataFrame, windowSec: Long = 60): DataFrame = {
     require(windowSec > 0, "windowSec must be positive")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
     val wStart = Replay.windowStart(col("time_unix_nano"), windowSec)
-    val observed = sums.where(v.isNotNull)
+    val observed = sums.where(pointValue.isNotNull)
       .select(seriesKey :+ wStart.as("window_start"): _*)
       .groupBy(seriesKey :+ col("window_start"): _*)
       .agg(count(lit(1)).as("__n"))

@@ -463,7 +463,7 @@ object Traces {
         Seq(col("trace_id")))
       .groupBy("trace_id")
       .agg(count(lit(1)).as("n_spans"),
-        sum(when(col("__status") === 2, 1L).otherwise(0L)).as("n_errors"),
+        countIf(failed(col("__status"))).as("n_errors"),
         min(col("__start_ns")).as("start_ns"),
         (max(col("__end_ns")) - min(col("__start_ns"))).as("wall_ns"))
   }
@@ -496,10 +496,14 @@ object Traces {
       parentExtra = Seq(col(serviceCol).as("caller_service")))
     child.join(parent, col("t") === col("pt") && col("p") === col("ps"))
       .groupBy("caller_service", "callee_service")
-      .agg(count(lit(1)).as("n_calls"),
-        sum(when(col("status") === 2, 1L).otherwise(0L)).as("n_errors"),
-        sum(col("dur")).as("total_callee_ns"))
+      .agg(edgeAggs.head, edgeAggs.tail: _*)
   }
+
+  /** [[serviceGraph]]'s per-edge aggregates over resolved child rows
+    * carrying `status` and `dur`. */
+  private[graft] val edgeAggs = Seq(count(lit(1)).as("n_calls"),
+    countIf(failed(col("status"))).as("n_errors"),
+    sum(col("dur")).as("total_callee_ns"))
 
   /** Service DEPENDENCY CENTRALITY: weighted PageRank over the
     * [[serviceGraph]] edges (damping 0.85, `iters` synchronous rounds
@@ -647,13 +651,30 @@ object Traces {
                  serviceCol: String = "service_name",
                  nameCol: String = "name",
                  statusCol: String = "status_code",
-                 durCol: String = "duration_time_unix_nano"): DataFrame =
+                 durCol: String = "duration_time_unix_nano"): DataFrame = {
+    val aggs = redAggs(col(statusCol), col(durCol))
     spans.groupBy(col(serviceCol).as("service_name"),
         col(nameCol).as("span_name"))
-      .agg(count(lit(1)).as("n_spans"),
-        sum(when(col(statusCol) === 2, 1L).otherwise(0L)).as("n_errors"),
-        sum(col(durCol).cast("long")).as("total_ns"),
-        max(col(durCol).cast("long")).as("max_ns"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** A span in error: OTLP status code 2. */
+  private[graft] def failed(status: Column): Column = status === 2
+
+  /** Rows meeting `cond`, summed as 1/0 (null over no rows). */
+  private[graft] def countIf(cond: Column): Column =
+    sum(when(cond, 1L).otherwise(0L))
+
+  /** Span and error counts: the rollup [[burnRate]] and [[errorBudget]]
+    * derive their rates from. */
+  private[graft] def spanCounts(status: Column): Seq[Column] =
+    Seq(count(lit(1)).as("n_spans"), countIf(failed(status)).as("n_errors"))
+
+  /** [[redMetrics]]' aggregates: span and error counts, total and max
+    * duration. */
+  private[graft] def redAggs(status: Column, dur: Column): Seq[Column] =
+    spanCounts(status) ++ Seq(sum(dur.cast("long")).as("total_ns"),
+      max(dur.cast("long")).as("max_ns"))
 
   /** Exception report from span EVENTS — OpenTelemetry records exceptions
     * as span events named "exception" carrying `exception.type` /
@@ -672,29 +693,40 @@ object Traces {
                       traceCol: String = "trace_id",
                       serviceCol: String = "service_name",
                       eventsCol: String = "events_json"): DataFrame = {
-    val evType = "array<struct<time_unix_nano:bigint,name:string," +
-      "attributes:map<string,string>>>"
-    Replay.dedupWithin(
+    val deduped = Replay.dedupWithin(
         spans.select(col(traceCol).as("t"), col(idCol).as("s"),
             col(serviceCol).as("service_name"), col(eventsCol).as("ej"))
           .where(col("ej").isNotNull),
         // replay dedup keyed by span identity, not the wide events JSON:
         // the string rides as data, never as a shuffle key
         Seq(col("t"), col("s")))
-      .select(col("t"), col("s"), col("service_name"),
-        explode(from_json(col("ej"), org.apache.spark.sql.types.DataType
-          .fromDDL(evType).asInstanceOf[org.apache.spark.sql.types.ArrayType])
-        ).as("e"))
-      .where(col("e.name") === "exception")
-      .groupBy(col("service_name"),
-        coalesce(element_at(col("e.attributes"), "exception.type"),
-          lit("unknown")).as("exception_type"))
-      .agg(count(lit(1)).as("n_events"),
+    exceptionEvents(deduped, col("ej"), col("t"), col("s"),
+        col("service_name"))
+      .groupBy(col("service_name"), exceptionType)
+      .agg(nEvents,
         countDistinct(col("t"), col("s")).as("n_spans"),
         countDistinct(col("t")).as("n_traces"),
         min(element_at(col("e.attributes"), "exception.message"))
           .as("sample_message"))
   }
+
+  /** The span events named 'exception' (the OTel semantic convention),
+    * one row `e` each beside the `keep` columns: a map-only from_json +
+    * explode of each row's own events array. */
+  private[graft] def exceptionEvents(spans: DataFrame, events: Column,
+                                     keep: Column*): DataFrame =
+    spans.select(keep :+ explode(from_json(events, DataType.fromDDL(
+        "array<struct<time_unix_nano:bigint,name:string," +
+          "attributes:map<string,string>>>"))).as("e"): _*)
+      .where(col("e.name") === "exception")
+
+  /** An exception event's type attribute; untyped events report
+    * 'unknown'. */
+  private[graft] val exceptionType =
+    coalesce(element_at(col("e.attributes"), "exception.type"),
+      lit("unknown")).as("exception_type")
+
+  private[graft] val nEvents = count(lit(1)).as("n_events")
 
   /** Per-service EXCLUSIVE (self) time — the flame-graph aggregation:
     * self(span) = duration − Σ duration(direct children), so a service
@@ -895,11 +927,16 @@ object Traces {
       .agg(expr(s"percentile(dur_ns, $q)").as("threshold_ns"),
         count(lit(1)).as("n_group"))
       .where(col("n_group") >= minSpans)
-    base.join(broadcast(thresholds), Seq("service_name", "span_name"))
-      .where(col("dur_ns") >= col("threshold_ns"))
+    tagOutliers(base.join(broadcast(thresholds),
+      Seq("service_name", "span_name")))
+  }
+
+  /** [[slowOutliers]]' verdict on spans joined to their endpoint's
+    * threshold: at or above it, tagged with the exceedance ratio. */
+  private[graft] def tagOutliers(joined: DataFrame): DataFrame =
+    joined.where(col("dur_ns") >= col("threshold_ns"))
       .withColumn("exceedance",
         round(col("dur_ns") / col("threshold_ns"), 4))
-  }
 
   /** Error ORIGINATION report — where do errors START, not where do they
     * surface: an error span is an ORIGINATOR when none of its direct
@@ -953,7 +990,7 @@ object Traces {
             idCol: String = "span_id",
             traceCol: String = "trace_id",
             durCol: String = "duration_time_unix_nano"): DataFrame = {
-    require(thresholdNs > 0, "thresholdNs must be positive")
+    val aggs = apdexAggs(col("dur_ns"), thresholdNs)
     // dedup keyed (service, trace): uniform partitions even for one hot
     // service (the Replay key-choice rule) — the count partials collapse
     // map-side, so the service-level exchange stays services-sized.
@@ -966,19 +1003,24 @@ object Traces {
           col(durCol).cast("long").as("dur_ns"))
         .where(col("dur_ns").isNotNull),
       Seq(col("service_name"), col("trace_id")))
-    base.groupBy("service_name")
-      .agg(count(lit(1)).as("n_spans"),
-        sum(when(col("dur_ns") <= thresholdNs, 1L).otherwise(0L))
-          .as("satisfied"),
-        sum(when(col("dur_ns") > thresholdNs &&
-          col("dur_ns") <= 4 * thresholdNs, 1L).otherwise(0L))
-          .as("tolerating"),
-        sum(when(col("dur_ns") > 4 * thresholdNs, 1L).otherwise(0L))
-          .as("frustrated"))
-      .withColumn("apdex", round(
-        (col("satisfied") + col("tolerating").cast("double") / 2) /
-          col("n_spans"), 4))
+    base.groupBy("service_name").agg(aggs.head, aggs.tail: _*)
+      .select(col("*"), apdexScore)
   }
+
+  /** [[apdex]]'s buckets over measured durations: satisfied (≤ T),
+    * tolerating (≤ 4T) and frustrated. */
+  private[graft] def apdexAggs(dur: Column, thresholdNs: Long): Seq[Column] = {
+    require(thresholdNs > 0, "thresholdNs must be positive")
+    Seq(count(lit(1)).as("n_spans"),
+      countIf(dur <= thresholdNs).as("satisfied"),
+      countIf(dur > thresholdNs && dur <= 4 * thresholdNs).as("tolerating"),
+      countIf(dur > 4 * thresholdNs).as("frustrated"))
+  }
+
+  /** The Apdex score of an [[apdexAggs]] rollup, round(4). */
+  private[graft] val apdexScore = round(
+    (col("satisfied") + col("tolerating").cast("double") / 2) /
+      col("n_spans"), 4).as("apdex")
 
   /** SLO error-budget BURN RATE per (service, aligned window): the
     * multi-window burn-rate alerting input (Google SRE workbook ch. 5) —
@@ -996,7 +1038,7 @@ object Traces {
                traceCol: String = "trace_id",
                statusCol: String = "status_code",
                timeCol: String = "start_time_unix_nano"): DataFrame = {
-    require(sloTarget > 0.0 && sloTarget < 1.0, s"bad SLO target $sloTarget")
+    requireSlo(sloTarget)
     require(windowSec > 0, "windowSec must be positive")
     val base = Replay.dedupWithin(
       spans.select(col(serviceCol).as("service_name"),
@@ -1004,15 +1046,33 @@ object Traces {
         col(statusCol).as("status_code"),
         Replay.windowStart(col(timeCol), windowSec).as("window_start")),
       Seq(col("service_name"), col("window_start")))
+    val counts = spanCounts(col("status_code"))
     base.groupBy("service_name", "window_start")
-      .agg(count(lit(1)).as("n_spans"),
-        sum(when(col("status_code") === 2, 1L).otherwise(0L)).as("n_errors"))
-      .withColumn("error_rate",
-        round(col("n_errors").cast("double") / col("n_spans"), 6))
-      .withColumn("burn_rate",
-        round((col("n_errors").cast("double") / col("n_spans")) /
-          lit(1.0 - sloTarget), 4))
+      .agg(counts.head, counts.tail: _*)
+      .select(col("*") +: burnCols(sloTarget): _*)
   }
+
+  /** An SLO target strictly inside (0, 1): its error budget 1 − target is
+    * what every burn divides by. */
+  private[graft] def requireSlo(sloTarget: Double): Unit =
+    require(sloTarget > 0.0 && sloTarget < 1.0, s"bad SLO target $sloTarget")
+
+  /** Error-budget burn: the error share over the allowed share. */
+  private[graft] def burn(sloTarget: Double, errors: Column = col("n_errors"),
+                          spans: Column = col("n_spans")): Column =
+    (errors.cast("double") / spans) / lit(1.0 - sloTarget)
+
+  private val errorRate =
+    round(col("n_errors").cast("double") / col("n_spans"), 6).as("error_rate")
+
+  /** [[burnRate]]'s rates over a [[spanCounts]] rollup. */
+  private[graft] def burnCols(sloTarget: Double): Seq[Column] =
+    Seq(errorRate, round(burn(sloTarget), 4).as("burn_rate"))
+
+  /** [[errorBudget]]'s rates over a [[spanCounts]] rollup. */
+  private[graft] def budgetCols(sloTarget: Double): Seq[Column] =
+    Seq(errorRate, round(burn(sloTarget), 4).as("budget_used"),
+      round(lit(1.0) - burn(sloTarget), 4).as("budget_remaining"))
 
   /** ERROR-BUDGET accounting per service over the WHOLE frame — the
     * period-to-date rollup next to [[burnRate]]'s windows: observed
@@ -1027,20 +1087,16 @@ object Traces {
                   idCol: String = "span_id",
                   traceCol: String = "trace_id",
                   statusCol: String = "status_code"): DataFrame = {
-    require(sloTarget > 0.0 && sloTarget < 1.0, s"bad SLO target $sloTarget")
-    val rate = col("n_errors").cast("double") / col("n_spans")
-    val burn = rate / lit(1.0 - sloTarget)
+    requireSlo(sloTarget)
+    val counts = spanCounts(col("status_code"))
     Replay.dedupWithin(
         spans.select(col(serviceCol).as("service_name"),
           col(traceCol).as("trace_id"), col(idCol).as("span_id"),
           col(statusCol).as("status_code")),
         Seq(col("service_name"), col("trace_id")))
       .groupBy("service_name")
-      .agg(count(lit(1)).as("n_spans"),
-        sum(when(col("status_code") === 2, 1L).otherwise(0L)).as("n_errors"))
-      .withColumn("error_rate", round(rate, 6))
-      .withColumn("budget_used", round(burn, 4))
-      .withColumn("budget_remaining", round(lit(1.0) - burn, 4))
+      .agg(counts.head, counts.tail: _*)
+      .select(col("*") +: budgetCols(sloTarget): _*)
   }
 
   /** MULTI-WINDOW burn-rate alert (Google SRE workbook ch. 5, the full
@@ -1065,8 +1121,7 @@ object Traces {
                      traceCol: String = "trace_id",
                      statusCol: String = "status_code",
                      timeCol: String = "start_time_unix_nano"): DataFrame = {
-    require(longSec > shortSec && longSec % shortSec == 0,
-      s"shortSec must divide longSec (got $shortSec / $longSec)")
+    requireBurnWindows(longSec, shortSec)
     val longB = burnRate(spans, sloTarget, longSec, serviceCol, idCol,
         traceCol, statusCol, timeCol)
       .select(col("service_name"), col("window_start"),
@@ -1085,6 +1140,14 @@ object Traces {
         lf("n_spans"), lf("n_errors"), col("long_burn"), col("short_burn"))
       .where(col("long_burn") >= threshold && col("short_burn") >= threshold)
   }
+
+  /** [[multiBurnAlert]]'s window pair: a positive `shortSec` (tested
+    * first, so the divisibility test never divides by zero) that divides
+    * `longSec`. */
+  private[graft] def requireBurnWindows(longSec: Long, shortSec: Long): Unit =
+    require(shortSec > 0 && longSec > shortSec && longSec % shortSec == 0,
+      s"shortSec must be positive and divide longSec " +
+        s"(got $shortSec / $longSec)")
 
   /** Trace FANOUT profile: per trace the leaf count, the widest span
     * (max direct children), and the mean children per internal span —

@@ -2274,9 +2274,7 @@ object OtlpReaders {
           Otlp.readMetricsSum(s, s"$fx/label_metrics.jsonl"),
           dst = "deployment", replacement = "$1", src = "pod",
           regex = "([a-z]+)-[0-9a-f]+-.*")
-        .select(col("name"),
-          coalesce(col("double_value"), col("int_value").cast("double"))
-            .as("value"),
+        .select(col("name"), graft.operators.Metrics.pointValue.as("value"),
           col("deployment"))
         .orderBy("name", "value")
     },
@@ -2297,9 +2295,7 @@ object OtlpReaders {
       graft.operators.Metrics.labelJoin(
           Otlp.readMetricsSum(s, s"$fx/label_metrics.jsonl"),
           dst = "instance_key", sep = "/", srcs = Seq("env", "pod"))
-        .select(col("name"),
-          coalesce(col("double_value"), col("int_value").cast("double"))
-            .as("value"),
+        .select(col("name"), graft.operators.Metrics.pointValue.as("value"),
           col("instance_key"))
         .orderBy("name", "value")
     },

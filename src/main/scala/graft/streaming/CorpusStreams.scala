@@ -411,19 +411,16 @@ object CorpusStreams {
       .withColumn(textCol, redactedText(afterCards))
   }
 
-  /** Event-time windowed corpus telemetry per stratum: docs, tokens, and
-    * mean quality per (window, stratum) — the live dashboard a curation
-    * pipeline publishes while filling shards. Append-mode compatible
-    * (watermarked tumbling windows). */
+  /** Event-time windowed corpus telemetry per stratum: docs and tokens
+    * per (window, stratum) — the live dashboard a curation pipeline
+    * publishes while filling shards. Append-mode compatible (the
+    * watermarked tumbling windows of `TelemetryStreams.windowed`). */
   def corpusStats(docs: DataFrame, tsCol: String = "ts",
                   strataCol: String = "lang", textCol: String = "text",
                   windowLen: String = "1 minute",
                   watermark: String = "2 minutes"): DataFrame =
-    docs
-      .withColumn("toks", size(Dedup.tokens(col(textCol))).cast("long"))
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen).as("w"), col(strataCol))
-      .agg(count(lit(1)).as("docs"), sum("toks").as("tokens"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col(strataCol), col("docs"), col("tokens"))
+    TelemetryStreams.windowed(
+        docs.withColumn("toks", size(Dedup.tokens(col(textCol))).cast("long")),
+        tsCol, windowLen, Some(watermark))(col(strataCol))(
+      count(lit(1)).as("docs"), sum("toks").as("tokens"))
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.operators.{Logs, Metrics, Traces}
 import graft.otlp.OtlpSchemas
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -16,6 +17,27 @@ import java.sql.Timestamp
   * README "Late/duplicate data handling: none"; SURVEY §2.3): watermarks,
   * windowed aggregation, and custom per-trace state are *extensions* that
   * Structured Streaming gives the same storage layout.
+  *
+  * Derivation rule: every windowed face here is its batch operator run in
+  * another execution mode (F1 Query's one definition, several modes). The
+  * batch operator exposes its aggregate and derived columns once,
+  * `private[graft]`, and uses them in its own groupBy; `windowed` builds
+  * the stream face from those same columns — watermark, replay dedup
+  * within it, the event-time `window()` in place of the batch `windowSec`
+  * grid (both epoch-aligned, so equal lengths give equal buckets), one
+  * groupBy, window_start/window_end first. No formula is restated. The
+  * deliberate divergences from the batch operators are named in code and
+  * documented on each face:
+  *  - [[exceptionRate]] dedups on span identity, batch on byte-equal rows;
+  *  - [[errorBudgetStream]]'s dedup state is unbounded (the SLO period is
+  *    its window);
+  *  - [[serviceGraphStream]] resolves a parent only within its join slack;
+  *  - [[multiBurnStream]] finds the closing short slice by a flag on the
+  *    event time, in one aggregation, not by a second rollup and a join;
+  *  - [[sumByStream]] and [[ratioByStream]] align on the window, not on
+  *    exact timestamps.
+  * The custom-state operators ([[rateStream]], [[rateLimitStream]],
+  * [[tailSampleStream]], [[traceRollup]]) keep their own state machines.
   *
   * Scale: file-source streams list only new files per micro-batch (the seal
   * layout appends, never rewrites, and compaction is gated to parquet-part
@@ -53,272 +75,176 @@ object TelemetryStreams {
       .option("recursiveFileLookup", "true")
       .parquet(s"$parquetRoot/otlp_traces")
 
-  /** Windowed severity counts per service with an event-time watermark:
-    * the standard error-rate stream. Late rows beyond the watermark are
-    * dropped (documented extension over the reference's no-watermark
-    * contract). */
+  /** Replay dedup on span identity within the watermark. */
+  private val SpanIdentity = Some(Seq("trace_id", "span_id"))
+
+  /** Replay dedup on the whole row within the watermark: a replayed seal
+    * row is byte-identical to the first. */
+  private val WholeRow = Some(Seq.empty[String])
+
+  /** The one windowed rollup behind every stream face here: an event-time
+    * watermark on `timeCol` (None: the frame arrives watermarked), an
+    * optional replay dedup within it on `dedupKeys` (empty keys: the whole
+    * row), the per-row steps `rows`, then one groupBy on the event-time
+    * window and `keys` with the batch operator's own `aggs`. Emits
+    * window_start and window_end first, then the keys and the aggregates.
+    * State is the dedup's and the window's, both watermark-bounded. */
+  private[streaming] def windowed(frame: DataFrame, timeCol: String,
+      windowLen: String, watermark: Option[String],
+      dedupKeys: Option[Seq[String]] = None,
+      rows: DataFrame => DataFrame = identity)(
+      keys: Column*)(aggs: Column*): DataFrame = {
+    val marked = watermark.fold(frame)(frame.withWatermark(timeCol, _))
+    val deduped = dedupKeys.fold(marked)(ks =>
+      if (ks.isEmpty) marked.dropDuplicatesWithinWatermark()
+      else marked.dropDuplicatesWithinWatermark(ks))
+    val rolled = rows(deduped)
+      .groupBy(window(col(timeCol), windowLen).as("w") +: keys: _*)
+      .agg(aggs.head, aggs.tail: _*)
+    rolled.select(col("w.start").as("window_start") +:
+      col("w.end").as("window_end") +: rolled.columns.tail.map(col): _*)
+  }
+
+  /** Windowed severity counts per service: the standard error-rate
+    * stream. */
   def severityRate(logs: DataFrame, windowLen: String = "1 minute",
                    watermark: String = "2 minutes"): DataFrame =
-    logs
-      .withWatermark("time_unix_nano", watermark)
-      .groupBy(
-        window(col("time_unix_nano"), windowLen).as("w"),
-        col("service_name"), col("severity_text"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("service_name"), col("severity_text"), col("cnt"))
+    windowed(logs, "time_unix_nano", windowLen, Some(watermark))(
+      col("service_name"), col("severity_text"))(count(lit(1)).as("cnt"))
 
-  /** Windowed RED metrics on the span stream — the live face of
-    * `operators.Traces.redMetrics`: per (window, service, span name) the
-    * span rate, error count (status code 2), and total/max duration. The
-    * operational dashboard feed, watermark-bounded like every windowed
-    * stream here. */
+  /** `Traces.redMetrics` per (window, service, span name): the
+    * operational dashboard feed. No dedup, like the batch operator. */
   def redRate(spans: DataFrame, windowLen: String = "1 minute",
               watermark: String = "2 minutes"): DataFrame =
-    spans
-      .withWatermark("start_time_unix_nano", watermark)
-      .groupBy(
-        window(col("start_time_unix_nano"), windowLen).as("w"),
-        col("service_name"), col("name"))
-      .agg(count(lit(1)).as("n_spans"),
-        sum(when(col("status_code") === 2, 1L).otherwise(0L)).as("n_errors"),
-        sum(col("duration_time_unix_nano").cast("long")).as("total_ns"),
-        max(col("duration_time_unix_nano").cast("long")).as("max_ns"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("service_name"), col("name").as("span_name"),
-        col("n_spans"), col("n_errors"), col("total_ns"), col("max_ns"))
+    windowed(spans, "start_time_unix_nano", windowLen, Some(watermark))(
+        col("service_name"), col("name").as("span_name"))(
+      Traces.redAggs(col("status_code"), col("duration_time_unix_nano")): _*)
 
-  /** Windowed exception counts on the live span stream — the streaming
-    * face of `operators.Traces.exceptionReport`: span events named
-    * 'exception' (the OTel semantic convention) roll up per (window,
-    * service, exception type). The from_json + explode of each row's own
-    * events array is stateless, so the windowed aggregation and the
-    * replay dedup are the only state, watermark-bounded like every
-    * windowed stream here. The seal export is at-least-once: a replayed
-    * span must not double its exception counts, so spans dedup on
-    * (trace_id, span_id) within the watermark — the batch twin's
-    * convention, applied before the explode.
+  /** `Traces.exceptionReport`'s `n_events` per (window, service,
+    * exception type). The events explode after the dedup, so a replayed
+    * span counts once.
     *
-    * Known divergence from the batch twin (ADVICE r10): the stream keys
-    * dedup on span identity (first row wins), while the batch
-    * `Replay.dedupWithin` drops only BYTE-EQUAL rows — two rows sharing
-    * (trace_id, span_id) but differing in events_json count once here and
-    * twice in batch. Under the byte-equal-replay contract such rows do not
-    * occur (a replayed seal row is byte-identical); if a producer ever
-    * re-emits a span with amended events, batch counts both emissions and
-    * the stream counts the first. */
+    * Divergence: the dedup keys on span identity (first row wins), while
+    * the batch `Replay.dedupWithin` drops only BYTE-EQUAL rows. Two rows
+    * sharing (trace_id, span_id) but differing in events_json count once
+    * here and twice in batch. Under the byte-equal-replay contract such
+    * rows do not occur; if a producer ever re-emits a span with amended
+    * events, batch counts both emissions and the stream the first. */
   def exceptionRate(spans: DataFrame, windowLen: String = "1 minute",
-                    watermark: String = "2 minutes"): DataFrame = {
-    val evType = org.apache.spark.sql.types.DataType.fromDDL(
-      "array<struct<time_unix_nano:bigint,name:string," +
-        "attributes:map<string,string>>>")
-      .asInstanceOf[org.apache.spark.sql.types.ArrayType]
-    spans
-      .withWatermark("start_time_unix_nano", watermark)
-      // filter BEFORE the dedup: replays are byte-equal, so dropping
-      // event-less spans first is semantically identical and bounds the
-      // dedup state by the (rare) event-bearing spans, not span volume
-      .where(col("events_json").isNotNull)
-      .dropDuplicatesWithinWatermark("trace_id", "span_id")
-      .select(col("start_time_unix_nano"), col("service_name"),
-        explode(from_json(col("events_json"), evType)).as("e"))
-      .where(col("e.name") === "exception")
-      .groupBy(
-        window(col("start_time_unix_nano"), windowLen).as("w"),
-        col("service_name"),
-        coalesce(element_at(col("e.attributes"), "exception.type"),
-          lit("unknown")).as("exception_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("service_name"), col("exception_type"), col("n_events"))
-  }
+                    watermark: String = "2 minutes"): DataFrame =
+    // event-less spans drop before the dedup: replays are byte-equal, so
+    // this is semantically identical and bounds the dedup state by the
+    // (rare) event-bearing spans, not span volume
+    windowed(spans.where(col("events_json").isNotNull),
+        "start_time_unix_nano", windowLen, Some(watermark), SpanIdentity,
+        Traces.exceptionEvents(_, col("events_json"),
+          col("start_time_unix_nano"), col("service_name")))(
+      col("service_name"), Traces.exceptionType)(Traces.nEvents)
 
-  /** Windowed cross-series aggregation on the live sum-metric stream — the
-    * streaming face of `operators.Metrics.sumBy` (PromQL `sum by (name)`
-    * over time windows): per (window, name) the summed value and the point
-    * count across every replica series. The batch form sums at exact
+  /** `Metrics.sumBy` over time windows (PromQL `sum by (name)`): per
+    * (window, name) the summed value and the point count across every
+    * replica series. Divergence: the batch form sums at exact
     * timestamps; a stream cannot wait for same-instant alignment, so the
-    * window IS the alignment — the standard dashboard semantics.
-    * Watermark-bounded state like every windowed stream here. */
+    * window is the alignment. A byte-equal replayed point dedups within
+    * the watermark. */
   def sumByStream(sums: DataFrame, windowLen: String = "1 minute",
-                  watermark: String = "2 minutes"): DataFrame = {
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
-    sums
-      .withWatermark("time_unix_nano", watermark)
-      // the seal export is at-least-once: a byte-equal replayed point must
-      // not double into the window sum (the batch twin distinct()s; the
-      // stream dedups on the full point identity within the watermark)
-      .dropDuplicatesWithinWatermark()
-      .where(v.isNotNull)
-      .withColumn("__v", v)
-      .groupBy(window(col("time_unix_nano"), windowLen).as("w"), col("name"))
-      .agg(round(sum(col("__v")), 6).as("value"),
-        count(lit(1)).as("n_points"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("name"), col("value"), col("n_points"))
-  }
+                  watermark: String = "2 minutes"): DataFrame =
+    windowed(sums, "time_unix_nano", windowLen, Some(watermark), WholeRow,
+        Metrics.valued(_))(col("name"))(
+      Metrics.aggOp("sum").as("value"), count(lit(1)).as("n_points"))
 
-  /** Windowed range-vector aggregation on the live sum-metric stream —
-    * the streaming face of `operators.Metrics.overTime`: per (window,
-    * FULL series identity — the batch twin's exact key, so two services
-    * sharing a metric name, or one exporter emitting distinct
-    * metric_attributes label sets, never merge) the window's
-    * avg/min/max/last/count. The recording-rule downsampler running AT
-    * ingest instead of over the stored table; `last_value` takes the
-    * window's max event time (value tiebreak), deterministic like the
-    * batch twin. Replay dedup on full point identity within the
-    * watermark (the sumByStream convention); watermark-bounded window
-    * state, nothing else. */
+  /** `Metrics.overTime` per (window, full series identity): the
+    * recording-rule downsampler running at ingest instead of over the
+    * stored table. Replay dedup as in [[sumByStream]]. */
   def overTimeStream(sums: DataFrame, windowLen: String = "1 minute",
-                     watermark: String = "2 minutes"): DataFrame = {
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
-    val series = graft.operators.Metrics.seriesKey
-    sums
-      .withWatermark("time_unix_nano", watermark)
-      .dropDuplicatesWithinWatermark()
-      .where(v.isNotNull)
-      .withColumn("__v", v)
-      .groupBy(window(col("time_unix_nano"), windowLen).as("w") +: series: _*)
-      .agg(round(avg(col("__v")), 6).as("avg_value"),
-        min(col("__v")).as("min_value"),
-        max(col("__v")).as("max_value"),
-        max(struct(col("time_unix_nano").as("t"), col("__v").as("v")))
-          .getField("v").as("last_value"),
-        count(lit(1)).as("n_points"))
-      .select(col("w.start").as("window_start") +:
-        col("w.end").as("window_end") +: series :+ col("avg_value") :+
-        col("min_value") :+ col("max_value") :+ col("last_value") :+
-        col("n_points"): _*)
-  }
+                     watermark: String = "2 minutes"): DataFrame =
+    windowed(sums, "time_unix_nano", windowLen, Some(watermark), WholeRow,
+      Metrics.valued(_))(Metrics.seriesKey: _*)(Metrics.overTimeAggs: _*)
 
-  /** SLO error-budget burn rate on the LIVE span stream — the streaming
-    * face of `operators.Traces.burnRate`, and the operator that is
-    * inherently live: multi-window burn-rate alerting (SRE workbook ch. 5)
-    * pages on the STREAM, not on yesterday's table. Per (window, service):
-    * span count, error count (status code 2), observed error rate, and
-    * burn = error rate / (1 − SLO target). The batch twin's aligned
-    * `windowSec` grid and the stream's `window()` are both epoch-aligned,
-    * so equal window lengths yield identical buckets (stream≡batch
-    * spec-pinned). Replay dedup on span identity within the watermark
-    * (the [[exceptionRate]] convention); windowed-aggregation state only. */
+  /** `Traces.burnRate` on the live span stream, the operator that is
+    * inherently live: multi-window burn-rate alerting (SRE workbook
+    * ch. 5) pages on the stream, not on yesterday's table. The batch
+    * `windowSec` grid and `window()` are both epoch-aligned, so equal
+    * window lengths give identical buckets. */
   def burnRateStream(spans: DataFrame, sloTarget: Double,
                      windowLen: String = "5 minutes",
                      watermark: String = "10 minutes"): DataFrame = {
-    require(sloTarget > 0.0 && sloTarget < 1.0, s"bad SLO target $sloTarget")
-    spans
-      .withWatermark("start_time_unix_nano", watermark)
-      .dropDuplicatesWithinWatermark("trace_id", "span_id")
-      .groupBy(
-        window(col("start_time_unix_nano"), windowLen).as("w"),
-        col("service_name"))
-      .agg(count(lit(1)).as("n_spans"),
-        sum(when(col("status_code") === 2, 1L).otherwise(0L)).as("n_errors"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("service_name"), col("n_spans"), col("n_errors"),
-        round(col("n_errors").cast("double") / col("n_spans"), 6)
-          .as("error_rate"),
-        round((col("n_errors").cast("double") / col("n_spans")) /
-          lit(1.0 - sloTarget), 4).as("burn_rate"))
+    Traces.requireSlo(sloTarget)
+    windowed(spans, "start_time_unix_nano", windowLen, Some(watermark),
+        SpanIdentity)(col("service_name"))(
+        Traces.spanCounts(col("status_code")): _*)
+      .select(col("*") +: Traces.burnCols(sloTarget): _*)
   }
 
-  /** Multi-window multi-burn alert on the LIVE span stream — the
-    * streaming face of `operators.Traces.multiBurnAlert`: ONE windowed
-    * aggregation carries both arms, because closing-slice membership is
-    * a pure map on the event time (`epoch-sec mod longSec ≥ longSec −
-    * shortSec` — the last aligned short window inside each long one,
-    * exactly the batch operator's join partner). A closed (window,
-    * service) row emits only when the long burn AND the closing
-    * slice's burn both reach `threshold`; windows whose closing slice
-    * saw no spans stay silent (the batch join-drop: no current traffic
-    * is not currently burning). Append mode; stream ≡ batch for
-    * windows fully inside the frame (spec-pinned). */
+  /** `Traces.multiBurnAlert` on the live span stream. Divergence: ONE
+    * windowed aggregation carries both arms, because closing-slice
+    * membership is a pure map on the event time (`epoch-sec mod longSec
+    * ≥ longSec − shortSec`: the last aligned short window inside each
+    * long one, the batch operator's join partner). A closed (window,
+    * service) row emits only when the long burn AND the closing slice's
+    * burn both reach `threshold`; windows whose closing slice saw no
+    * spans stay silent (the batch join-drop). */
   def multiBurnStream(spans: DataFrame, sloTarget: Double,
                       longSec: Long = 300, shortSec: Long = 60,
                       threshold: Double = 1.0,
                       watermark: String = "10 minutes"): DataFrame = {
-    require(sloTarget > 0.0 && sloTarget < 1.0, s"bad SLO target $sloTarget")
-    // shortSec > 0 explicitly: a negative shortSec passes the divisibility
-    // check but makes the closing predicate vacuously false — the batch
-    // twin throws here, so the stream must too (stream≡batch contract)
-    require(shortSec > 0 && longSec > shortSec && longSec % shortSec == 0,
-      s"shortSec must be positive and divide longSec " +
-        s"(got $shortSec / $longSec)")
+    Traces.requireSlo(sloTarget)
+    Traces.requireBurnWindows(longSec, shortSec)
     val closing =
       pmod(unix_timestamp(col("start_time_unix_nano")), lit(longSec)) >=
         lit(longSec - shortSec)
-    val err = col("status_code") === 2
-    spans
-      .withWatermark("start_time_unix_nano", watermark)
-      .dropDuplicatesWithinWatermark("trace_id", "span_id")
-      .withColumn("__closing", closing)
-      .groupBy(
-        window(col("start_time_unix_nano"), s"$longSec seconds").as("w"),
-        col("service_name"))
-      .agg(count(lit(1)).as("n_spans"),
-        sum(when(err, 1L).otherwise(0L)).as("n_errors"),
-        sum(when(col("__closing"), 1L).otherwise(0L)).as("__ns"),
-        sum(when(col("__closing") && err, 1L).otherwise(0L)).as("__ne"))
+    windowed(spans, "start_time_unix_nano", s"$longSec seconds",
+        Some(watermark), SpanIdentity)(col("service_name"))(
+        Traces.spanCounts(col("status_code")) ++ Seq(
+          Traces.countIf(closing).as("__ns"),
+          Traces.countIf(closing && Traces.failed(col("status_code")))
+            .as("__ne")): _*)
       .where(col("__ns") > 0)
-      .select(col("w.start").as("window_start"), col("service_name"),
+      .select(col("window_start"), col("service_name"),
         col("n_spans"), col("n_errors"),
-        round((col("n_errors").cast("double") / col("n_spans")) /
-          lit(1.0 - sloTarget), 4).as("long_burn"),
-        round((col("__ne").cast("double") / col("__ns")) /
-          lit(1.0 - sloTarget), 4).as("short_burn"))
+        round(Traces.burn(sloTarget), 4).as("long_burn"),
+        round(Traces.burn(sloTarget, col("__ne"), col("__ns")), 4)
+          .as("short_burn"))
       .where(col("long_burn") >= threshold && col("short_burn") >= threshold)
   }
 
-  /** Period-to-date ERROR BUDGET on the LIVE span stream — the streaming
-    * face of `operators.Traces.errorBudget`, and the panel SREs watch
-    * BETWEEN the pages [[multiBurnStream]] raises: a running
-    * (n_spans, n_errors) per service since stream start (the SLO
-    * period — start a fresh checkpoint per period), re-emitting each
-    * service's budget spent/remaining as it changes (update or complete
-    * output mode; there is no window to close — the period IS the
-    * window). Replayed spans dedup on (trace_id, span_id) with
-    * UNBOUNDED state by design: period-to-date truth needs
-    * period-long memory — the same price the batch twin pays by
-    * re-scanning the period's seals, and attributionStream's documented
-    * trade. Aggregation state is one row per service; dedup keys are
-    * uniform random ids — both partition cleanly across executors.
-    * Stream ≡ batch pinned on a mid-period micro-batch split. */
+  /** `Traces.errorBudget` on the live span stream: the panel SREs watch
+    * between the pages [[multiBurnStream]] raises. A running count per
+    * service since stream start (the SLO period: start a fresh checkpoint
+    * per period), re-emitted as it changes (update or complete output
+    * mode; the period is the window).
+    *
+    * Divergence: replayed spans dedup on (trace_id, span_id) with
+    * UNBOUNDED state, by design: period-to-date truth needs period-long
+    * memory, the price the batch operator pays by re-scanning the
+    * period's seals. Aggregation state is one row per service; dedup keys
+    * are uniform random ids. */
   def errorBudgetStream(spans: DataFrame, sloTarget: Double): DataFrame = {
-    require(sloTarget > 0.0 && sloTarget < 1.0, s"bad SLO target $sloTarget")
-    val rate = col("n_errors").cast("double") / col("n_spans")
-    val burn = rate / lit(1.0 - sloTarget)
+    Traces.requireSlo(sloTarget)
+    val counts = Traces.spanCounts(col("status_code"))
     spans
       .dropDuplicates("trace_id", "span_id")
       .groupBy(col("service_name"))
-      .agg(count(lit(1)).as("n_spans"),
-        sum(when(col("status_code") === 2, 1L).otherwise(0L)).as("n_errors"))
-      .withColumn("error_rate", round(rate, 6))
-      .withColumn("budget_used", round(burn, 4))
-      .withColumn("budget_remaining", round(lit(1.0) - burn, 4))
+      .agg(counts.head, counts.tail: _*)
+      .select(col("*") +: Traces.budgetCols(sloTarget): _*)
   }
 
-  /** LIVE service dependency edges — `operators.Traces.serviceGraph` on
-    * the span stream, per event-time window: the repo's STREAM-STREAM
-    * self-join (child × parent spans on (trace_id, parent = span)),
-    * watermark-bounded with an explicit time-range predicate — a child
-    * must start within [−skewSlackSec, +joinSlackSec] of its parent —
-    * which is what lets Spark EVICT join state (an unbounded
-    * parent-resolution join would hold every span forever); then one
-    * windowed per-edge aggregation on the parent's start time.
+  /** `Traces.serviceGraph` per event-time window of the parent's start:
+    * a STREAM-STREAM self-join (child × parent spans on (trace_id,
+    * parent = span)), watermarked per side.
     *
-    * Semantics vs the batch twin: identical edges/counts for spans
-    * whose parent resolves within the slack bounds (spec-pinned);
-    * a child that starts further from its parent than the slack is
-    * NOT resolved here by design (batch over sealed history remains
-    * the no-bounds route). Late spans beyond the watermark drop per
-    * the documented extension contract; WITHIN-watermark replays
-    * double-count (the batch twin replay-dedups; chaining a dedup
-    * before a stream-stream join is not supported) — feed
-    * exactly-once micro-batches (the seal stream's contract) or
-    * dedupe upstream.
+    * Divergence: the join carries a time-range predicate (a child must
+    * start within [−skewSlackSec, +joinSlackSec] of its parent), which
+    * is what lets Spark EVICT join state; a child further from its
+    * parent than the slack is not resolved here (batch over sealed
+    * history remains the no-bounds route). Within-watermark replays
+    * double-count (a dedup before a stream-stream join is not
+    * supported): feed exactly-once micro-batches (the seal stream's
+    * contract) or dedupe upstream.
     *
     * Scale: join state is watermark+slack-bounded per side, keyed by
-    * uniform (trace, span) — partitions cleanly; the aggregation
-    * rides (window, caller, callee) keys. */
+    * uniform (trace, span); the aggregation rides (window, caller,
+    * callee) keys. */
   def serviceGraphStream(spans: DataFrame, windowLen: String = "5 minutes",
                          watermark: String = "10 minutes",
                          joinSlackSec: Long = 300,
@@ -336,122 +262,62 @@ object TelemetryStreams {
       .withWatermark("start_time_unix_nano", watermark)
       .select(col("trace_id").as("t"), col("parent_span_id").as("p"),
         col("service_name").as("callee_service"),
-        col("status_code").as("code"),
+        col("status_code").as("status"),
         col("duration_time_unix_nano").cast("long").as("dur"),
         col("start_time_unix_nano").as("cst"))
     val parent = spans.withWatermark("start_time_unix_nano", watermark)
       .select(col("trace_id").as("pt"), col("span_id").as("ps"),
         col("service_name").as("caller_service"),
         col("start_time_unix_nano").as("pst"))
-    child.join(parent,
-        col("t") === col("pt") && col("p") === col("ps") &&
-          col("cst") >= col("pst") - expr(s"INTERVAL $skewSlackSec SECOND") &&
-          col("cst") <= col("pst") + expr(s"INTERVAL $joinSlackSec SECOND"))
-      .groupBy(window(col("pst"), windowLen).as("w"),
-        col("caller_service"), col("callee_service"))
-      .agg(count(lit(1)).as("n_calls"),
-        sum(when(col("code") === 2, 1L).otherwise(0L)).as("n_errors"),
-        sum(col("dur")).as("total_callee_ns"))
-      .select(col("w.start").as("window_start"), col("caller_service"),
-        col("callee_service"), col("n_calls"), col("n_errors"),
-        col("total_callee_ns"))
+    val resolved = child.join(parent,
+      col("t") === col("pt") && col("p") === col("ps") &&
+        col("cst") >= col("pst") - expr(s"INTERVAL $skewSlackSec SECOND") &&
+        col("cst") <= col("pst") + expr(s"INTERVAL $joinSlackSec SECOND"))
+    windowed(resolved, "pst", windowLen, None)(
+        col("caller_service"), col("callee_service"))(Traces.edgeAggs: _*)
+      .drop("window_end")
   }
 
-  /** Apdex on the LIVE span stream — the streaming face of
-    * `operators.Traces.apdex`, windowed: per (window, service) the
-    * satisfied (≤ T) / tolerating (≤ 4T) / frustrated buckets and the
-    * Apdex score (satisfied + tolerating/2) / total, round(4). The batch
-    * twin scores a settled table in one number; the stream scores each
-    * aligned window — a window whose spans all fall inside it reports the
-    * batch twin's exact score (spec-pinned). Null-duration spans are
-    * excluded like the batch twin (only measured samples count). */
+  /** `Traces.apdex` per (window, service): the batch operator scores a
+    * settled table in one number, the stream each aligned window, and a
+    * window whose spans all fall inside it reports the batch score.
+    * Null-duration spans are excluded like in batch. */
   def apdexStream(spans: DataFrame, thresholdNs: Long,
                   windowLen: String = "5 minutes",
                   watermark: String = "10 minutes"): DataFrame = {
-    require(thresholdNs > 0, "thresholdNs must be positive")
-    spans
-      .withWatermark("start_time_unix_nano", watermark)
-      .dropDuplicatesWithinWatermark("trace_id", "span_id")
-      .where(col("duration_time_unix_nano").isNotNull)
-      .withColumn("__dur", col("duration_time_unix_nano").cast("long"))
-      .groupBy(
-        window(col("start_time_unix_nano"), windowLen).as("w"),
-        col("service_name"))
-      .agg(count(lit(1)).as("n_spans"),
-        sum(when(col("__dur") <= thresholdNs, 1L).otherwise(0L))
-          .as("satisfied"),
-        sum(when(col("__dur") > thresholdNs &&
-          col("__dur") <= 4 * thresholdNs, 1L).otherwise(0L))
-          .as("tolerating"),
-        sum(when(col("__dur") > 4 * thresholdNs, 1L).otherwise(0L))
-          .as("frustrated"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("service_name"), col("n_spans"), col("satisfied"),
-        col("tolerating"), col("frustrated"),
-        round((col("satisfied") + col("tolerating").cast("double") / 2) /
-          col("n_spans"), 4).as("apdex"))
+    val dur = col("duration_time_unix_nano").cast("long")
+    windowed(spans, "start_time_unix_nano", windowLen, Some(watermark),
+        SpanIdentity, _.where(dur.isNotNull))(col("service_name"))(
+        Traces.apdexAggs(dur, thresholdNs): _*)
+      .select(col("*"), Traces.apdexScore)
   }
 
-  /** PromQL binary-op ratio on the LIVE sum-metric stream — the streaming
-    * face of `operators.Metrics.ratioBy`: per (window [, kept labels])
-    * the ratio of the two metrics' summed values. The batch form matches
-    * at exact shared timestamps; a stream cannot wait for same-instant
-    * alignment, so the window IS the alignment (the [[sumByStream]]
-    * convention). Windows where the denominator is absent or zero drop —
-    * no match, no sample, never a divide-by-zero. Replay dedup on full
-    * point identity within the watermark; windowed state only. */
+  /** `Metrics.ratioBy` (a PromQL binary-op ratio) per (window [, kept
+    * labels]). Divergence: the window is the alignment, as in
+    * [[sumByStream]]. Windows where the denominator is absent or zero
+    * drop. */
   def ratioByStream(sums: DataFrame, numName: String, denName: String,
                     by: Seq[String] = Seq.empty,
                     windowLen: String = "1 minute",
                     watermark: String = "2 minutes"): DataFrame = {
-    require(numName != denName, "numerator and denominator must differ")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
-    sums
-      .withWatermark("time_unix_nano", watermark)
-      .where(col("name").isin(numName, denName) && v.isNotNull)
-      .dropDuplicatesWithinWatermark()
-      .withColumn("__v", v)
-      .groupBy(window(col("time_unix_nano"), windowLen).as("w") +:
-        by.map(col): _*)
-      .agg(sum(when(col("name") === numName, col("__v"))).as("num"),
-        sum(when(col("name") === denName, col("__v"))).as("den"))
-      .where(col("num").isNotNull && col("den").isNotNull &&
-        col("den") =!= 0)
-      .select(col("w.start").as("window_start") +:
-        col("w.end").as("window_end") +: by.map(col) :+ col("num") :+
-        col("den") :+ round(col("num") / col("den"), 6).as("ratio"): _*)
+    val (num, den) = Metrics.ratioAggs(numName, denName)
+    windowed(sums.where(Metrics.ratioPoints(numName, denName)),
+        "time_unix_nano", windowLen, Some(watermark), WholeRow,
+        _.withColumn("__v", Metrics.pointValue))(by.map(col): _*)(num, den)
+      .where(Metrics.ratioMatched).select(col("*"), Metrics.ratio)
   }
 
-  /** The logs → metrics COUNT CONNECTOR on the live stream — the
-    * streaming face of `operators.Logs.logCountMetric`: per (window,
-    * service, severity) log counts emitted as delta sum-metric points in
-    * the metrics_sum shape, so the output COMPOSES with the metric
-    * streams here ([[sumByStream]], [[overTimeStream]]) exactly like the
-    * batch twin composes with the batch transforms. Same epoch-aligned
-    * windows as the batch `windowSec` grid (stream≡batch spec-pinned);
-    * watermark-bounded windowed state only, append-mode legal. */
+  /** `Logs.logCountMetric`, the logs → metrics COUNT CONNECTOR: per
+    * (window, service, severity) delta sum points in the metrics_sum
+    * shape, so the output composes with the metric streams here
+    * ([[sumByStream]], [[overTimeStream]]) as the batch operator's does
+    * with the batch transforms. Append-mode legal. */
   def logCountStream(logs: DataFrame, windowLen: String = "1 minute",
                      watermark: String = "2 minutes"): DataFrame =
-    logs
-      .withWatermark("time_unix_nano", watermark)
-      .groupBy(
-        window(col("time_unix_nano"), windowLen).as("w"),
-        col("service_name"),
-        coalesce(col("severity_text"), lit("UNSPECIFIED")).as("__sev"))
-      .agg(count(lit(1)).as("int_value"))
-      .select(lit("log.record.count").as("name"),
-        col("service_name"),
-        lit(null).cast("string").as("service_namespace"),
-        lit(null).cast("string").as("service_instance_id"),
-        lit(null).cast("string").as("resource_attributes"),
-        lit("graft.count_connector").as("scope_name"),
-        to_json(map(lit("severity_text"), col("__sev")))
-          .as("metric_attributes"),
-        col("w.start").as("time_unix_nano"),
-        lit(true).as("is_monotonic"),
-        lit(null).cast("double").as("double_value"),
-        col("int_value"),
-        lit(1).as("aggregation_temporality"))
+    windowed(logs, "time_unix_nano", windowLen, Some(watermark))(
+        col("service_name"), Logs.severityKey(col("severity_text")))(
+        Logs.logCount)
+      .select(Logs.countPoint: _*)
 
   /** A span the rate limiter admitted, with its admission rank in its
     * (service, window) budget. */
@@ -513,27 +379,23 @@ object TelemetryStreams {
       }
   }
 
-  /** Live log-volume anomaly against a BATCH-MINED baseline — the
+  /** Live log-volume anomaly against a BATCH-MINED baseline, the
     * batch-mines/stream-scores split [[graft.operators.Logs.matchTemplates]]
-    * established, applied to `operators.Logs.volumeAnomaly`: yesterday's
+    * established, applied to `Logs.volumeAnomaly`: yesterday's
     * per-service mean/stddev (the batch operator's `svc_mean`/`svc_sd`
     * columns, or any frame shaped (service_name, svc_mean, svc_sd))
     * joins stream-static onto live windowed counts, z-scoring each
-    * window AS IT CLOSES. A z-score needs a baseline; computing it on
-    * the stream itself would make every window shift every past score —
-    * the static split is the semantics, not a compromise. Services
-    * absent from the baseline report null z (no baseline to deviate
-    * from), matching the batch twin's no-baseline rule. Windowed
-    * aggregation state only; stream-static joins are append-legal. */
+    * window AS IT CLOSES with the batch operator's z and flag. A z-score
+    * needs a baseline; computing it on the stream itself would make every
+    * window shift every past score, so the static split is the
+    * semantics, not a compromise. Services absent from the baseline
+    * report null z. Stream-static joins are append-legal. */
   def volumeAnomalyStream(logs: DataFrame, baseline: DataFrame,
                           windowLen: String = "1 minute",
                           watermark: String = "2 minutes",
                           zThreshold: Double = 3.0): DataFrame =
-    logs
-      .withWatermark("time_unix_nano", watermark)
-      .groupBy(window(col("time_unix_nano"), windowLen).as("w"),
-        col("service_name"))
-      .agg(count(lit(1)).as("n_logs"))
+    windowed(logs, "time_unix_nano", windowLen, Some(watermark))(
+        col("service_name"))(Logs.nLogs)
       // dropDuplicates: the batch volumeAnomaly output (the docstring's
       // blessed baseline) carries one row PER WINDOW with constant
       // per-service stats — joining it raw would emit each live window
@@ -541,85 +403,44 @@ object TelemetryStreams {
       .join(baseline.select(col("service_name"), col("svc_mean"),
         col("svc_sd")).dropDuplicates("service_name"),
         Seq("service_name"), "left")
-      .select(col("w.start").as("window_start"),
-        col("w.end").as("window_end"),
+      .select(col("window_start"), col("window_end"),
         col("service_name"), col("n_logs"),
         round(col("svc_mean"), 4).as("svc_mean"),
-        round(col("svc_sd"), 4).as("svc_sd"),
-        when(col("svc_sd") > 0,
-          round((col("n_logs") - col("svc_mean")) / col("svc_sd"), 4))
-          .as("z"))
-      .withColumn("anomaly",
-        coalesce(abs(col("z")) >= zThreshold, lit(false)))
+        round(col("svc_sd"), 4).as("svc_sd"), Logs.volumeZ.as("z"))
+      .withColumn("anomaly", Logs.anomaly(zThreshold))
 
-  /** Live windowed ERROR share — `operators.Logs.errorRate`'s streaming
-    * face: severity normalization is map-only (the ONE rule,
-    * `Logs.normalizeSeverity`), so the stream just windows the same two
-    * conditional counts; a window always closes with ≥1 row, so the
-    * ratio never divides by zero. Stream ≡ batch on the same frame
-    * (same epoch-aligned grid). Windowed aggregation state only. */
+  /** `Logs.errorRate` per closed window: severity normalization is
+    * map-only (the ONE rule, `Logs.normalizeSeverity`), so the stream
+    * windows the same two counts. */
   def errorRateStream(logs: DataFrame, windowLen: String = "1 minute",
                       watermark: String = "2 minutes"): DataFrame =
-    graft.operators.Logs.normalizeSeverity(logs)
-      .withWatermark("time_unix_nano", watermark)
-      .groupBy(window(col("time_unix_nano"), windowLen).as("w"),
-        col("service_name"))
-      .agg(count(lit(1)).as("n_logs"),
-        count(when(col("severity_canonical").isin("ERROR", "FATAL"),
-          lit(1))).as("n_errors"))
-      .select(col("w.start").as("window_start"), col("service_name"),
-        col("n_logs"), col("n_errors"),
-        round(col("n_errors") / col("n_logs"), 6).as("error_ratio"))
+    windowed(Logs.normalizeSeverity(logs), "time_unix_nano",
+        windowLen, Some(watermark))(col("service_name"))(
+        Logs.nLogs, Logs.errorLogs)
+      .drop("window_end").select(col("*"), Logs.errorRatio)
 
   /** Live SEASONAL anomaly scoring against a BATCH-MINED time-of-day
-    * baseline — `operators.Metrics.seasonalAnomaly`'s streaming face
-    * under the same static split: the batch [[graft.operators.Metrics
-    * .seasonality]] profile (name, bucket, avg_value, stddev_value)
-    * joins stream-static onto arriving points, scoring each against its
-    * own hour/minute/day-of-week moments. MAP-ONLY on the stream (bucket
-    * extraction + static join + arithmetic): no window, no state.
-    * Zero-spread and absent buckets drop, |z| < k drops — exactly the
-    * batch operator's output rule, so stream ≡ batch on the same frame. */
+    * baseline: `Metrics.seasonalAnomaly`'s bucket rule and verdict
+    * under the same static split, with the batch [[graft.operators
+    * .Metrics.seasonality]] profile (name, bucket, avg_value,
+    * stddev_value) joined stream-static onto arriving points. MAP-ONLY
+    * on the stream: no window, no state. */
   def seasonalAnomalyStream(points: DataFrame, baseline: DataFrame,
                             bucket: String = "hour",
-                            k: Double = 2.0): DataFrame = {
-    // long, matching the batch operator's bucket type (the stream-static
-    // join key must not need an implicit widening cast)
-    val b = (bucket match {
-      case "hour"   => hour(col("time_unix_nano"))
-      case "minute" => minute(col("time_unix_nano"))
-      case "dow"    => dayofweek(col("time_unix_nano"))
-      case other => throw new IllegalArgumentException(
-        s"unknown bucket: $other (hour|minute|dow)")
-    }).cast("long")
-    val v = coalesce(col("double_value"), col("int_value").cast("double"))
-    points
-      .withColumn("bucket", b)
-      .where(v.isNotNull)
-      .withColumn("value", v)
+                            k: Double = 2.0): DataFrame =
+    Metrics.seasonalScores(Metrics.valued(points.withColumn("bucket",
+        Metrics.seasonalBucket(bucket)), "value"),
       // the batch profile carries one row per (name, bucket) already,
       // but dedup defensively like every static side here
-      .join(baseline.select(col("name"), col("bucket"), col("avg_value"),
-          col("stddev_value")).where(col("stddev_value") > 0)
-          .dropDuplicates("name", "bucket"),
-        Seq("name", "bucket"))
-      .withColumn("z_score",
-        round((col("value") - col("avg_value")) / col("stddev_value"), 6))
-      .where(abs(col("z_score")) >= k)
-      .select(col("name"), col("bucket"), col("time_unix_nano"),
-        col("value"), col("avg_value"), col("stddev_value"), col("z_score"))
-  }
+      Metrics.scorable(baseline).dropDuplicates("name", "bucket"), k)
 
   /** Live slow-outlier tagging against BATCH-MINED per-endpoint
-    * thresholds — `operators.Traces.slowOutliers`'s streaming face under
-    * the same static split: the batch operator's (service, span name,
-    * threshold_ns) frame joins stream-static onto the raw span stream,
-    * tagging each arriving span at or above its own endpoint's quantile
-    * with its exceedance. MAP-ONLY on the stream (a filter + arithmetic
-    * after the static join): no window, no state — the exemplar feed a
-    * live dashboard pages on. */
+    * thresholds: `Traces.slowOutliers`' verdict, with the batch
+    * operator's (service, span name, threshold_ns) frame joined
+    * stream-static onto the raw span stream. MAP-ONLY on the stream: no
+    * window, no state; the exemplar feed a live dashboard pages on. */
   def slowOutliersStream(spans: DataFrame, thresholds: DataFrame): DataFrame =
-    spans
+    Traces.tagOutliers(spans
       .select(col("service_name"), col("name").as("span_name"),
         col("trace_id"), col("span_id"),
         col("duration_time_unix_nano").cast("long").as("dur_ns"))
@@ -628,10 +449,7 @@ object TelemetryStreams {
       // joining it raw would tag every live span once per batch outlier
       .join(thresholds.select(col("service_name"), col("span_name"),
         col("threshold_ns")).dropDuplicates("service_name", "span_name"),
-        Seq("service_name", "span_name"))
-      .where(col("dur_ns") >= col("threshold_ns"))
-      .withColumn("exceedance",
-        round(col("dur_ns") / col("threshold_ns"), 4))
+        Seq("service_name", "span_name")))
 
   /** Exact-duplicate suppression on the stream (trace_id+span_id within the
     * watermark horizon) — the dedup the reference documents as a downstream
@@ -707,8 +525,7 @@ object TelemetryStreams {
         col("service_instance_id"), col("resource_attributes"),
         col("scope_name"), col("metric_attributes"),
         unix_micros(col("time_unix_nano")).as("t_us"),
-        coalesce(col("double_value"), col("int_value").cast("double"))
-          .as("value"),
+        Metrics.pointValue.as("value"),
         coalesce(col("is_monotonic"), lit(false)).as("is_monotonic"))
       .where(col("name").isNotNull && col("value").isNotNull)
       .as[SumPoint]

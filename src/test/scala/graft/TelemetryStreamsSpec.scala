@@ -911,4 +911,269 @@ class TelemetryStreamsSpec extends SparkTestBase {
     assert(m("5b8efff798038103d269b633813fc60d")._1 == 2L)
     assert(m("5b8efff798038103d269b633813fc60d")._2 == 2L) // error status spans
   }
+
+  private def minuteFloor(t: Timestamp) =
+    Timestamp.valueOf(t.toLocalDateTime.withSecond(0).withNano(0))
+
+  test("redRate ≡ batch redMetrics on each window's slice (errors, " +
+    "null durations, two services)") {
+    import spark.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val cols = Seq("start_time_unix_nano", "service_name", "name",
+      "status_code", "duration_time_unix_nano")
+    val in = MemoryStream[(Timestamp, String, String, Int, Option[Long])]
+    val rows = Seq(
+      (Timestamp.valueOf("2024-01-01 00:00:05"), "api", "GET /a", 0,
+        Some(100L)),
+      (Timestamp.valueOf("2024-01-01 00:00:25"), "api", "GET /a", 2,
+        Some(300L)),
+      (Timestamp.valueOf("2024-01-01 00:00:40"), "api", "GET /b", 1,
+        None: Option[Long]), // unmeasured: counted, sums stay null
+      (Timestamp.valueOf("2024-01-01 00:00:50"), "db", "SELECT", 2,
+        Some(50L)),
+      (Timestamp.valueOf("2024-01-01 00:01:10"), "api", "GET /a", 0,
+        Some(700L)),
+      (Timestamp.valueOf("2024-01-01 00:01:20"), "db", "SELECT", 0,
+        Some(20L)))
+    val q = TelemetryStreams.redRate(in.toDF().toDF(cols: _*))
+      .writeStream.format("memory").queryName("redparity")
+      .outputMode("complete").start()
+    in.addData(rows: _*)
+    q.processAllAvailable(); q.stop()
+    def vals(r: org.apache.spark.sql.Row) =
+      (r.getAs[Long]("n_spans"), r.getAs[Long]("n_errors"),
+        Option(r.getAs[Any]("total_ns")), Option(r.getAs[Any]("max_ns")))
+    val stream = spark.table("redparity").collect()
+      .map(r => (r.getAs[Timestamp]("window_start"),
+        r.getAs[String]("service_name"), r.getAs[String]("span_name")) ->
+        vals(r)).toMap
+    val batch = rows.groupBy(r => minuteFloor(r._1)).toSeq
+      .flatMap { case (w, slice) =>
+        graft.operators.Traces.redMetrics(slice.toDF(cols: _*)).collect()
+          .map(r => (w, r.getAs[String]("service_name"),
+            r.getAs[String]("span_name")) -> vals(r))
+      }.toMap
+    assert(stream == batch && stream.size == 5,
+      s"stream $stream vs batch $batch")
+  }
+
+  test("overTimeStream ≡ batch overTime per (series, window): replay, " +
+    "int fallback, null points and a same-time last_value tie") {
+    import spark.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def shape(df: org.apache.spark.sql.DataFrame) = df
+      .toDF("time_unix_nano", "name", "service_instance_id",
+        "double_value", "int_value")
+      .selectExpr("time_unix_nano", "name", "'svc' AS service_name",
+        "CAST(NULL AS STRING) AS service_namespace", "service_instance_id",
+        "'{}' AS resource_attributes", "'sc' AS scope_name",
+        "'{}' AS metric_attributes", "double_value", "int_value")
+    val in = MemoryStream[(Timestamp, String, String, Option[Double],
+      Option[Long])]
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:10")
+    val t1 = Timestamp.valueOf("2024-01-01 00:00:40")
+    val t2 = Timestamp.valueOf("2024-01-01 00:01:10")
+    val rows = Seq(
+      (t0, "qps", "i1", Some(4.0), None: Option[Long]),
+      (t1, "qps", "i1", Some(2.0), None),
+      (t1, "qps", "i1", Some(2.0), None), // replay
+      (t1, "qps", "i1", Some(3.0), None), // same time: value breaks the tie
+      (t2, "qps", "i1", None, Some(9L)),  // int fallback
+      (t2, "qps", "i1", None, None),      // no recorded value
+      (t0, "qps", "i2", Some(7.0), None),
+      (t2, "lat", "i2", Some(0.5), None))
+    val q = TelemetryStreams.overTimeStream(shape(in.toDF()))
+      .writeStream.format("memory").queryName("overtimeparity")
+      .outputMode("complete").start()
+    in.addData(rows: _*)
+    q.processAllAvailable(); q.stop()
+    def entry(r: org.apache.spark.sql.Row) =
+      (r.getAs[String]("name"), r.getAs[String]("service_instance_id"),
+        r.getAs[Timestamp]("window_start")) ->
+        ((r.getAs[Double]("avg_value"), r.getAs[Double]("min_value"),
+          r.getAs[Double]("max_value"), r.getAs[Double]("last_value"),
+          r.getAs[Long]("n_points")))
+    val stream = spark.table("overtimeparity").collect().map(entry).toMap
+    val batch = graft.operators.Metrics.overTime(shape(rows.toDF()), 60)
+      .collect().map(entry).toMap
+    assert(stream == batch && stream.size == 4,
+      s"stream $stream vs batch $batch")
+  }
+
+  test("exceptionRate's n_events ≡ batch exceptionReport's on each " +
+    "window's slice") {
+    import spark.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val cols = Seq("start_time_unix_nano", "trace_id", "span_id",
+      "service_name", "events_json")
+    def ev(names: String*) = names.map { n =>
+      val tpe = if (n == "-") "" else s""""exception.type":"$n""""
+      s"""{"time_unix_nano":1,"name":"exception","attributes":{$tpe}}"""
+    }.mkString("[", ",", "]")
+    val in = MemoryStream[(Timestamp, String, String, String, String)]
+    val w0 = Timestamp.valueOf("2024-01-01 00:00:10")
+    val w1 = Timestamp.valueOf("2024-01-01 00:01:10")
+    val rows = Seq(
+      (w0, "t1", "s1", "api", ev("Boom", "Boom")),
+      (w0, "t1", "s1", "api", ev("Boom", "Boom")), // replay: counts once
+      (w0, "t1", "s2", "api", ev("Timeout", "-")), // untyped -> unknown
+      (w0, "t2", "s1", "db", ev("Boom")),
+      (w0, "t3", "s1", "api",
+        """[{"time_unix_nano":2,"name":"retry","attributes":{}}]"""),
+      (w0, "t4", "s1", "api", null: String),
+      (w1, "t5", "s1", "api", ev("Boom")),
+      (w1, "t5", "s2", "db", ev("-")))
+    val q = TelemetryStreams.exceptionRate(in.toDF().toDF(cols: _*))
+      .writeStream.format("memory").queryName("excparity")
+      .outputMode("complete").start()
+    in.addData(rows: _*)
+    q.processAllAvailable(); q.stop()
+    val stream = spark.table("excparity").collect()
+      .map(r => (r.getAs[Timestamp]("window_start"),
+        r.getAs[String]("service_name"), r.getAs[String]("exception_type")) ->
+        r.getAs[Long]("n_events")).toMap
+    val batch = rows.groupBy(r => minuteFloor(r._1)).toSeq
+      .flatMap { case (w, slice) =>
+        graft.operators.Traces.exceptionReport(slice.toDF(cols: _*))
+          .collect().map(r => (w, r.getAs[String]("service_name"),
+            r.getAs[String]("exception_type")) -> r.getAs[Long]("n_events"))
+      }.toMap
+    assert(stream == batch && stream.size == 6,
+      s"stream $stream vs batch $batch")
+  }
+
+  test("sumByStream ≡ batch sumBy when each window holds one timestamp " +
+    "(replicas summed, replay dropped, int fallback)") {
+    import spark.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val cols = Seq("time_unix_nano", "name", "service_instance_id",
+      "double_value", "int_value")
+    val in = MemoryStream[(Timestamp, String, String, Option[Double],
+      Option[Long])]
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:10")
+    val t1 = Timestamp.valueOf("2024-01-01 00:01:30")
+    val rows = Seq(
+      (t0, "qps", "i1", Some(1.25), None: Option[Long]),
+      (t0, "qps", "i2", Some(2.5), None),
+      (t0, "qps", "i2", Some(2.5), None), // replay
+      (t1, "qps", "i1", None, Some(4L)),  // int fallback
+      (t1, "qps", "i2", Some(0.1), None),
+      (t1, "qps", "i3", Some(0.2), None),
+      (t0, "errs", "i1", Some(1.0), None),
+      (t1, "errs", "i1", None, None))     // no recorded value
+    val q = TelemetryStreams.sumByStream(in.toDF().toDF(cols: _*))
+      .writeStream.format("memory").queryName("sumbyparity")
+      .outputMode("complete").start()
+    in.addData(rows: _*)
+    q.processAllAvailable(); q.stop()
+    val stream = spark.table("sumbyparity").collect()
+      .map(r => (r.getAs[String]("name"),
+        r.getAs[Timestamp]("window_start")) ->
+        ((r.getAs[Double]("value"), r.getAs[Long]("n_points")))).toMap
+    val batch = graft.operators.Metrics.sumBy(rows.toDF(cols: _*))
+      .collect().map(r => (r.getAs[String]("name"),
+        minuteFloor(r.getAs[Timestamp]("time_unix_nano"))) ->
+        ((r.getAs[Double]("value"), r.getAs[Long]("n_series")))).toMap
+    assert(stream == batch && stream.size == 3,
+      s"stream $stream vs batch $batch")
+  }
+
+  test("stream face schemas: every windowed twin keeps its column names, " +
+    "order, types and nullability") {
+    import graft.otlp.OtlpSchemas
+    val dir = java.nio.file.Files.createTempDirectory("ts_schema").toString
+    def live(s: org.apache.spark.sql.types.StructType) =
+      spark.readStream.schema(s).parquet(dir)
+    def settled(s: org.apache.spark.sql.types.StructType) =
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+    val spans = live(OtlpSchemas.traces())
+    val logs = live(OtlpSchemas.logs())
+    val sums = live(OtlpSchemas.metricsSum())
+    val docs = live(org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id BIGINT, ts TIMESTAMP, lang STRING, text STRING"))
+    val faces = Seq(
+      "severityRate" -> TelemetryStreams.severityRate(logs),
+      "redRate" -> TelemetryStreams.redRate(spans),
+      "exceptionRate" -> TelemetryStreams.exceptionRate(spans),
+      "sumByStream" -> TelemetryStreams.sumByStream(sums),
+      "overTimeStream" -> TelemetryStreams.overTimeStream(sums),
+      "burnRateStream" -> TelemetryStreams.burnRateStream(spans, 0.99),
+      "multiBurnStream" -> TelemetryStreams.multiBurnStream(spans, 0.99),
+      "errorBudgetStream" -> TelemetryStreams.errorBudgetStream(spans, 0.99),
+      "serviceGraphStream" -> TelemetryStreams.serviceGraphStream(spans),
+      "apdexStream" -> TelemetryStreams.apdexStream(spans, 200L),
+      "ratioByStream" -> TelemetryStreams.ratioByStream(sums, "a", "b"),
+      "ratioByStream(by)" ->
+        TelemetryStreams.ratioByStream(sums, "a", "b", Seq("service_name")),
+      "logCountStream" -> TelemetryStreams.logCountStream(logs),
+      "volumeAnomalyStream" -> TelemetryStreams.volumeAnomalyStream(logs,
+        graft.operators.Logs.volumeAnomaly(settled(OtlpSchemas.logs()))),
+      "errorRateStream" -> TelemetryStreams.errorRateStream(logs),
+      "seasonalAnomalyStream" -> TelemetryStreams.seasonalAnomalyStream(
+        sums, graft.operators.Metrics.seasonality(
+          settled(OtlpSchemas.metricsSum()))),
+      "corpusStats" -> CorpusStreams.corpusStats(docs))
+    val window = Seq("window_start TIMESTAMP", "window_end TIMESTAMP")
+    val series = Seq("name STRING", "service_name STRING",
+      "service_namespace STRING", "service_instance_id STRING",
+      "resource_attributes STRING", "scope_name STRING",
+      "metric_attributes STRING")
+    val want = Seq(
+      "severityRate" -> (window ++ Seq("service_name STRING",
+        "severity_text STRING", "cnt BIGINT NOT NULL")),
+      "redRate" -> (window ++ Seq("service_name STRING", "span_name STRING",
+        "n_spans BIGINT NOT NULL", "n_errors BIGINT", "total_ns BIGINT",
+        "max_ns BIGINT")),
+      "exceptionRate" -> (window ++ Seq("service_name STRING",
+        "exception_type STRING NOT NULL", "n_events BIGINT NOT NULL")),
+      "sumByStream" -> (window ++ Seq("name STRING", "value DOUBLE",
+        "n_points BIGINT NOT NULL")),
+      "overTimeStream" -> (window ++ series ++ Seq("avg_value DOUBLE",
+        "min_value DOUBLE", "max_value DOUBLE", "last_value DOUBLE",
+        "n_points BIGINT NOT NULL")),
+      "burnRateStream" -> (window ++ Seq("service_name STRING",
+        "n_spans BIGINT NOT NULL", "n_errors BIGINT", "error_rate DOUBLE",
+        "burn_rate DOUBLE")),
+      "multiBurnStream" -> Seq("window_start TIMESTAMP",
+        "service_name STRING", "n_spans BIGINT NOT NULL", "n_errors BIGINT",
+        "long_burn DOUBLE", "short_burn DOUBLE"),
+      "errorBudgetStream" -> Seq("service_name STRING",
+        "n_spans BIGINT NOT NULL", "n_errors BIGINT", "error_rate DOUBLE",
+        "budget_used DOUBLE", "budget_remaining DOUBLE"),
+      "serviceGraphStream" -> Seq("window_start TIMESTAMP",
+        "caller_service STRING", "callee_service STRING",
+        "n_calls BIGINT NOT NULL", "n_errors BIGINT",
+        "total_callee_ns BIGINT"),
+      "apdexStream" -> (window ++ Seq("service_name STRING",
+        "n_spans BIGINT NOT NULL", "satisfied BIGINT", "tolerating BIGINT",
+        "frustrated BIGINT", "apdex DOUBLE")),
+      "ratioByStream" -> (window ++ Seq("num DOUBLE", "den DOUBLE",
+        "ratio DOUBLE")),
+      "ratioByStream(by)" -> (window ++ Seq("service_name STRING",
+        "num DOUBLE", "den DOUBLE", "ratio DOUBLE")),
+      "logCountStream" -> Seq("name STRING NOT NULL", "service_name STRING",
+        "service_namespace STRING", "service_instance_id STRING",
+        "resource_attributes STRING", "scope_name STRING NOT NULL",
+        "metric_attributes STRING", "time_unix_nano TIMESTAMP",
+        "is_monotonic BOOLEAN NOT NULL", "double_value DOUBLE",
+        "int_value BIGINT NOT NULL", "aggregation_temporality INT NOT NULL"),
+      "volumeAnomalyStream" -> (window ++ Seq("service_name STRING",
+        "n_logs BIGINT NOT NULL", "svc_mean DOUBLE", "svc_sd DOUBLE",
+        "z DOUBLE", "anomaly BOOLEAN NOT NULL")),
+      "errorRateStream" -> Seq("window_start TIMESTAMP",
+        "service_name STRING", "n_logs BIGINT NOT NULL",
+        "n_errors BIGINT NOT NULL", "error_ratio DOUBLE"),
+      "seasonalAnomalyStream" -> Seq("name STRING", "bucket BIGINT",
+        "time_unix_nano TIMESTAMP", "value DOUBLE", "avg_value DOUBLE",
+        "stddev_value DOUBLE", "z_score DOUBLE"),
+      "corpusStats" -> (window ++ Seq("lang STRING",
+        "docs BIGINT NOT NULL", "tokens BIGINT")))
+    val got = faces.map { case (n, df) =>
+      n -> df.schema.fields.map(_.toDDL).toSeq }
+    assert(got.map(_._1) == want.map(_._1))
+    got.zip(want).foreach { case ((n, g), (_, w)) =>
+      assert(g == w, s"$n: got ${g.mkString(", ")}")
+    }
+  }
 }

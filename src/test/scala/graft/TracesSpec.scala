@@ -564,4 +564,22 @@ class TracesSpec extends SparkTestBase {
     // 0.85*(0.025 + 0.191667)
     assert(got == Map("A" -> 0.05, "B" -> 0.07125, "C" -> 0.234167), got)
   }
+
+  test("multiBurnAlert and multiBurnStream reject a non-positive shortSec " +
+    "with the same IllegalArgumentException") {
+    import spark.implicits._
+    val spans = Seq(("s1", "t1", "a1", 2,
+        java.sql.Timestamp.valueOf("2024-01-01 00:00:10")))
+      .toDF("service_name", "trace_id", "span_id", "status_code",
+        "start_time_unix_nano")
+    for (shortSec <- Seq(0L, -60L)) {
+      intercept[IllegalArgumentException] {
+        Traces.multiBurnAlert(spans, 0.99, longSec = 300, shortSec = shortSec)
+      }
+      intercept[IllegalArgumentException] {
+        graft.streaming.TelemetryStreams.multiBurnStream(spans, 0.99,
+          longSec = 300, shortSec = shortSec)
+      }
+    }
+  }
 }
