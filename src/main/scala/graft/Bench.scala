@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.{GrpcClient, GrpcWire, OtlpServe, OtlpUri}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry (driver-run): times every registered query at the given
@@ -21,21 +22,7 @@ object Bench {
 
   private def mainImpl(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local SFs ship one small parquet file per table, which would pin
-      // CPU-bound per-row operators (md5-heavy dedup/fingerprinting) to a
-      // single task; smaller splits restore the parallelism a production
-      // many-file layout has by default
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QSpec.quietCheckpointRelease()
+    val spark = Sessions.local()
 
     // one cheap action to pay JVM/codegen warmup outside the timings
     Tables.register(spark, sfDir)
@@ -43,45 +30,36 @@ object Bench {
 
     val skipQueries = sys.env.get("SPARK_GRAFT_BENCH_ONLY").contains("ingest")
     // queries-only mode: larger-scale corpus points (SCALE.md sf1 table)
-    // re-measure the query registry without paying the three ingest passes
+    // re-measure the query registry without paying the ingest passes
     val skipIngest = sys.env.get("SPARK_GRAFT_BENCH_ONLY").contains("queries")
 
     // STEADY ingest metric, weather-proofed like the queries (VERDICT r7
     // #2: the r7 driver artifact recorded 93.6k while a clean run of the
     // same harness measured 265k — the two back-to-back windows had both
-    // sat inside one host-contention burst). Three 15 s windows, each
-    // separated from the others by a FULL query sweep (~minutes), max
+    // sat inside one host-contention burst). Three 15 s windows per wire,
+    // each separated from the others by a FULL query sweep (~minutes), max
     // across windows: a window's sample is bad only if the host was bad
     // for the entire bench run. A short un-measured pre-pass first pays
-    // the ingest path's one-time JIT/netty/codegen warmup so window A
-    // measures capacity, not compilation.
-    // Every transport gets the same three-window treatment (VERDICT r11
-    // #1: gRPC ran ONE window, LAST in the whole bench — the exact
-    // poisoned-window shape that faked r10's HTTP regression; its graded
-    // number sat 5-6x under the sustained probes). A = pre-sweep, B =
-    // between sweeps, C = post-sweep; max across windows; per-window
-    // arrays published for all three wires.
-    val steadySamples = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    val grpcSamples = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    val otapSamples = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    def steadyWindow(): Unit = if (!skipIngest) {
+    // each wire's one-time JIT/netty/codegen warmup so window A measures
+    // capacity, not compilation. A = pre-sweep, B = between sweeps,
+    // C = post-sweep; per-window arrays are published for every wire
+    // (VERDICT r11 #1: a single last-in-bench gRPC window was the
+    // poisoned-window shape that faked r10's HTTP regression).
+    val windowed = Seq(Http, Grpc, Otap)
+    val wireSamples = windowed.map(_.name ->
+      scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]).toMap
+    def sample(wire: Wire[_]): Unit = {
       spark.catalog.clearCache(); System.gc()
-      steadySamples += (try ingestBench(spark) catch { case _: Throwable => (0.0, 0.0) })
+      wireSamples(wire.name) += (try window(spark, wire)
+        catch { case _: Throwable => (0.0, 0.0) })
     }
-    def grpcWindow(): Unit = if (!skipIngest) {
-      spark.catalog.clearCache(); System.gc()
-      grpcSamples += (try ingestBenchGrpc(spark) catch { case _: Throwable => (0.0, 0.0) })
-    }
-    def otapWindow(): Unit = if (!skipIngest) {
-      spark.catalog.clearCache(); System.gc()
-      otapSamples += (try ingestBenchOtap(spark) catch { case _: Throwable => (0.0, 0.0) })
-    }
-    def allWindows(): Unit = { steadyWindow(); grpcWindow(); otapWindow() }
+    def allWindows(): Unit = if (!skipIngest) windowed.foreach(sample)
     if (!skipIngest) {
       // each wire pays its own one-time JIT/netty/codegen warmup, uncounted
-      try ingestBench(spark, runMs = 3000) catch { case _: Throwable => () }
-      try ingestBenchGrpc(spark, runMs = 3000) catch { case _: Throwable => () }
-      try ingestBenchOtap(spark, runMs = 3000) catch { case _: Throwable => () }
+      windowed.foreach { w =>
+        System.gc()
+        try window(spark, w, runMs = 3000) catch { case _: Throwable => () }
+      }
       allWindows()
     }
 
@@ -104,38 +82,16 @@ object Bench {
         .filter { case (n, _) => QSpec.nameMatches(nameFilter, n) }
     // a failed run must never win the min: a transient 0.1s failure would
     // silently replace a real 10s timing. Failures count as +inf; two
-    // failures report the explicit -1 error marker.
-    // the ONE query-timing rule (sweeps, the volatile third pass, and the
-    // quiet headline re-run all use it — three inline copies had already
-    // drifted on the failure path):
-    // - release the terminal localCheckpoint blocks the finished query's
-    //   returned frame owns (the operator can only free SUPERSEDED
-    //   rounds; the final checkpoint outlives it by design, so the
-    //   caller frees it). Left to GC + ContextCleaner, those blocks
-    //   piled up across the sweep and squeezed execution memory — the
-    //   r8 bench tail recorded 2-14x regressions with zero code change
-    //   (VERDICT r8 #2). Released through the frame's OWN plan leaves,
-    //   not a global unpersist-everything sweep that would also eat any
-    //   future long-lived cached state.
-    // - if fn() threw during CONSTRUCTION: operators with eager internal
-    //   checkpoints outside Blocks.iterate (semDedup rounds) may
-    //   already hold blocks no frame references — the global sweep is
-    //   the only handle left, and on this failure path nothing
-    //   long-lived can be cached mid-query.
+    // failures report the explicit -1 error marker. The ONE query-timing
+    // rule: sweeps, the volatile third pass and the quiet headline re-run
+    // all use it, and it releases through QSpec.run like Verify does.
     def timeOne(
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      var df: org.apache.spark.sql.DataFrame = null
-      try {
-        df = fn(spark, sfDir)
+      try QSpec.run(spark, sfDir, fn) { df =>
         df.write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       } catch { case _: Throwable => Double.PositiveInfinity }
-      finally {
-        if (df != null) graft.operators.Blocks.release(df)
-        else spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
     }
     def sweep(): Map[String, Double] =
       selected.map { case (name, fn) => name -> timeOne(fn) }.toMap
@@ -198,70 +154,42 @@ object Bench {
     // retry list is published in the headline so the artifact annotates
     // its own weather on its face.
     val weatherRetried = scala.collection.mutable.ArrayBuffer.empty[String]
-    // HTTP is every transport threshold's REFERENCE, so it cannot
-    // self-check intra-run (VERDICT r14 #5: window A recorded 70.3k vs
-    // the 222k steady and nothing could fire). The only available
-    // yardstick is the documented steady band itself — SCALE.md's HTTP
-    // durable steady has sat at 266-316k across every healthy round since
-    // r11 (judge re-runs included), so an ABSOLUTE floor at 0.6 × the
-    // band's low end (160k) only fires when ALL THREE windows sat in
-    // weather bursts, and a retry can only help the artifact tell weather
-    // from regression (pre-retry windows stay visible in ingest_windows).
-    val httpSteadyFloor = sys.env.get("SPARK_GRAFT_BENCH_HTTP_FLOOR")
-      .map(_.toDouble).getOrElse(0.6 * 266000.0)
+    val httpSteady = wireSamples(Http.name)
     // ingest_logs_rows_per_sec is BY LINEAGE the post-sweep window C —
     // snapshot it before a retry can append a fourth sample (a failed or
     // weather-dented retry must never lower a published number)
-    val windowCDurable = steadySamples.lastOption.map(_._2).getOrElse(0.0)
-    if (!skipIngest &&
-        steadySamples.map(_._2).foldLeft(0.0)(math.max) < httpSteadyFloor) {
-      spark.catalog.clearCache(); System.gc(); Thread.sleep(3000)
-      steadySamples += (try ingestBench(spark) catch { case _: Throwable => (0.0, 0.0) })
-      weatherRetried += "http"
+    val windowCDurable = httpSteady.lastOption.map(_._2).getOrElse(0.0)
+    def best(wire: Wire[_]) = wireSamples(wire.name).map(_._2).foldLeft(0.0)(math.max)
+    def retry(wire: Wire[_]): Unit = {
+      System.gc(); Thread.sleep(3000)
+      sample(wire)
+      weatherRetried += wire.name
     }
-    val httpBest = steadySamples.map(_._2).foldLeft(0.0)(math.max)
-    def sagRetry(name: String,
-                 buf: scala.collection.mutable.ArrayBuffer[(Double, Double)],
-                 mult: Double, run: () => (Double, Double),
-                 absFloor: Double = 0.0): Unit = {
-      val best = buf.map(_._2).foldLeft(0.0)(math.max)
-      val floor = math.max(
-        if (httpBest > 0) 0.6 * mult * httpBest else 0.0, absFloor)
-      if (!skipIngest && best < floor) {
-        spark.catalog.clearCache(); System.gc(); Thread.sleep(3000)
-        buf += (try run() catch { case _: Throwable => (0.0, 0.0) })
-        weatherRetried += name
-      }
-    }
+    if (!skipIngest && best(Http) < HttpSteadyFloor) retry(Http)
+    val httpBest = best(Http)
     // conservative multipliers: 60% of these thresholds would NOT have
     // re-fired on any healthy round (r12 grpc 555k/283k HTTP = 1.96x,
-    // catalog 250k = 0.88x) but catches every r13-class sag.
-    // gRPC additionally gets an ABSOLUTE band floor (VERDICT r15 #3):
-    // the r15 artifact rode a 320k weather sag (healthy band 461-555k
-    // across r11-r16 incl. an isolated same-commit re-run at 461k) and
-    // the HTTP-relative check alone could not fire because its
-    // threshold (0.9x HTTP = 247k) is calibrated for r13-class
-    // collapses, not a 1.7x->1.2x sag. 0.75 x the band low (346k) fires
-    // on any such sag while sitting 25% under every healthy round; a
-    // false fire only costs one extra window (max-of-samples keeps the
-    // better number, pre-retry windows stay published).
-    val grpcSteadyFloor = sys.env.get("SPARK_GRAFT_BENCH_GRPC_FLOOR")
-      .map(_.toDouble).getOrElse(0.75 * 461000.0)
-    sagRetry("grpc", grpcSamples, 1.5, () => ingestBenchGrpc(spark),
-      absFloor = grpcSteadyFloor)
-    sagRetry("otap", otapSamples, 2.0, () => ingestBenchOtap(spark))
+    // catalog 250k = 0.88x) but catches every r13-class sag. gRPC also
+    // has an absolute floor (GrpcSteadyFloor).
+    def sagRetry(wire: Wire[_], mult: Double, absFloor: Double = 0.0): Unit = {
+      val floor = math.max(
+        if (httpBest > 0) 0.6 * mult * httpBest else 0.0, absFloor)
+      if (!skipIngest && best(wire) < floor) retry(wire)
+    }
+    sagRetry(Grpc, 1.5, absFloor = GrpcSteadyFloor)
+    sagRetry(Otap, 2.0)
     def aggr(xs: Seq[(Double, Double)]): (Double, Double) =
       if (xs.isEmpty) (0.0, 0.0) else (xs.map(_._1).max, xs.map(_._2).max)
-    val (accepted, steadyDurable) = aggr(steadySamples.toSeq)
-    val (grpcAccepted, grpcDurable) = aggr(grpcSamples.toSeq)
-    val (otapAccepted, otapDurable) = aggr(otapSamples.toSeq)
+    val (accepted, steadyDurable) = aggr(httpSteady.toSeq)
+    val (grpcAccepted, grpcDurable) = aggr(wireSamples(Grpc.name).toSeq)
+    val (otapAccepted, otapDurable) = aggr(wireSamples(Otap.name).toSeq)
     val durable = windowCDurable
     // catalog samples kept as an array like the other wires (ADVICE r14:
     // the retry must not hide the pre-retry number — every window value,
     // original and retried, is published; the metric is the max)
     val catalogSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
     if (!skipIngest) {
-      def once() = try ingestBenchCatalog(spark) catch { case _: Throwable => 0.0 }
+      def once() = try catalogWindow(spark) catch { case _: Throwable => 0.0 }
       catalogSamples += once()
       // catalog rides the same seal core as HTTP (~1.0x its steady rate);
       // a single sample far below that is the same weather class
@@ -286,11 +214,7 @@ object Bench {
       flagHigh("grpc", grpcDurable, 1.5)
       flagHigh("otap", otapDurable, 2.0)
       flagHigh("catalog", catalogDurable, 1.0)
-      // overridable alongside the floor so re-tuning the documented band
-      // on a different host moves BOTH checks, not just one
-      val httpSteadyCeil = sys.env.get("SPARK_GRAFT_BENCH_HTTP_CEIL")
-        .map(_.toDouble).getOrElse(2.0 * 316000.0)
-      if (httpBest > httpSteadyCeil) weatherFlaggedHigh += "http"
+      if (httpBest > HttpSteadyCeil) weatherFlaggedHigh += "http"
     }
 
     // Quiet headline re-run (VERDICT r15 "what's wrong" #3): the two
@@ -366,12 +290,12 @@ object Bench {
     // archaeology. Order: A = pre-sweep, B = between sweeps, C = post-sweep.
     def winJs(xs: Seq[(Double, Double)], f: ((Double, Double)) => Double) =
       xs.map(f(_).round).mkString("[", ",", "]")
-    val windowsJson = winJs(steadySamples.toSeq, _._2)
-    val acceptedJson = winJs(steadySamples.toSeq, _._1)
-    val grpcWindowsJson = winJs(grpcSamples.toSeq, _._2)
-    val grpcAcceptedJson = winJs(grpcSamples.toSeq, _._1)
-    val otapWindowsJson = winJs(otapSamples.toSeq, _._2)
-    val otapAcceptedJson = winJs(otapSamples.toSeq, _._1)
+    val windowsJson = winJs(httpSteady.toSeq, _._2)
+    val acceptedJson = winJs(httpSteady.toSeq, _._1)
+    val grpcWindowsJson = winJs(wireSamples(Grpc.name).toSeq, _._2)
+    val grpcAcceptedJson = winJs(wireSamples(Grpc.name).toSeq, _._1)
+    val otapWindowsJson = winJs(wireSamples(Otap.name).toSeq, _._2)
+    val otapAcceptedJson = winJs(wireSamples(Otap.name).toSeq, _._1)
     val catalogWindowsJson =
       catalogSamples.map(_.round).mkString("[", ",", "]")
     println(s"""{"metric":"total","value":$total,"unit":"sec","query_count":${results.size},"queries":$hqs,"ingest_steady_rows_per_sec":${steadyDurable.round},"ingest_accepted_rows_per_sec":${accepted.round},"ingest_logs_rows_per_sec":${durable.round},"ingest_windows":$windowsJson,"ingest_accepted_windows":$acceptedJson,"ingest_catalog_rows_per_sec":${catalogDurable.round},"catalog_windows":$catalogWindowsJson,"grpc_steady_rows_per_sec":${grpcDurable.round},"grpc_accepted_rows_per_sec":${grpcAccepted.round},"grpc_windows":$grpcWindowsJson,"grpc_accepted_windows":$grpcAcceptedJson,"otap_steady_rows_per_sec":${otapDurable.round},"otap_accepted_rows_per_sec":${otapAccepted.round},"otap_windows":$otapWindowsJson,"otap_accepted_windows":$otapAcceptedJson,"weather_retried":${weatherRetried.map("\"" + _ + "\"").mkString("[", ",", "]")},"weather_flagged_high":${weatherFlaggedHigh.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}""")
@@ -379,29 +303,24 @@ object Bench {
     sys.exit(0)
   }
 
-  /** POST OTLP/JSON log batches from several threads for a few seconds and
-    * report (accepted rows/s, durable rows/s incl. final flush) — mirrors
-    * the reference's capacity bench shape (concurrent HTTP producers,
-    * group-commit sealing included). */
-  private[graft] def ingestBench(spark: SparkSession,
-                                 runMs: Long = IngestWindowMs): (Double, Double) = {
-    val root = java.nio.file.Files.createTempDirectory("bench_ingest").toString
-    // SPARK_GRAFT_BENCH_MAINT_MS: lower the maintenance gate so a
-    // sustained window (SPARK_GRAFT_BENCH_INGEST_MS) can observe
-    // compaction firing MID-LOAD (SCALE.md's ingest scale point; the
-    // default 5 min gate never fires inside a 15 s window). Driver unset.
-    val maint = sys.env.get("SPARK_GRAFT_BENCH_MAINT_MS")
-      .map(ms => Map("maintenance_min_interval_ms" -> ms))
-      .getOrElse(Map.empty)
-    // delete the seal output after the window (ADVICE r10: the grpc twin
-    // accumulated /tmp seal dirs across runs; all three ingest variants
-    // clean up like Tier2Probe)
-    try loadTest(spark, "otlp:127.0.0.1:46900",
-      Map("target" -> "parquet", "parquet_root" -> root,
-        "seal_max_age_ms" -> "2000") ++ maint, runMs = runMs)
-    finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(root))
-  }
+  // The weather bands the sag retries and high flags compare against.
+  // HTTP is every transport threshold's REFERENCE, so it cannot
+  // self-check intra-run (VERDICT r14 #5: window A recorded 70.3k vs the
+  // 222k steady and nothing could fire). The only available yardstick is
+  // the documented steady band itself — SCALE.md's HTTP durable steady
+  // has sat at 266-316k across every healthy round since r11, so an
+  // ABSOLUTE floor at 0.6 × the band's low end (160k) only fires when ALL
+  // THREE windows sat in weather bursts; the ceiling flags a best window
+  // above twice the band's top.
+  private val HttpSteadyFloor = 0.6 * 266000.0
+  private val HttpSteadyCeil = 2.0 * 316000.0
+  // gRPC's ABSOLUTE band floor (VERDICT r15 #3): the r15 artifact rode a
+  // 320k weather sag (healthy band 461-555k across r11-r16) that the
+  // HTTP-relative check, calibrated for r13-class collapses, could not
+  // catch. 0.75 × the band low (346k) fires on any such sag while
+  // sitting 25% under every healthy round; a false fire only costs one
+  // extra window (max-of-samples keeps the better number).
+  private val GrpcSteadyFloor = 0.75 * 461000.0
 
   /** Measured ingest window. 15 s (was 6 s): on this shared-guest host a
     * single 6 s window sat entirely inside one contention burst and
@@ -414,118 +333,175 @@ object Bench {
   private val IngestWindowMs =
     sys.env.get("SPARK_GRAFT_BENCH_INGEST_MS").map(_.toLong).getOrElse(15000L)
 
-  /** The gRPC unary-Export wire against the parquet target — same seal
-    * core, protobuf twin of the NDJSON body, h2c multiplexed producers.
-    * Reported as grpc_*_rows_per_sec in the headline so the transport's
-    * throughput is a per-round artifact, not a dev-run anecdote. */
-  private def ingestBenchGrpc(spark: SparkSession,
-                              runMs: Long = IngestWindowMs): (Double, Double) = {
-    val root = java.nio.file.Files.createTempDirectory("bench_grpc").toString
-    System.gc() // sweep the prior window's garbage before timing
-    try loadTest(spark, "otlp:127.0.0.1:46902",
-      Map("target" -> "parquet", "parquet_root" -> root,
-        "seal_max_age_ms" -> "2000"),
-      runMs = runMs, forceGrpc = true)
-    finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(root))
+  private val Token = "bench-token-0123456789abcdef"
+  private val RowsPerRequest = 500
+
+  /** A producer thread's connection: `send` offers one request of
+    * [[RowsPerRequest]] rows and answers Some(accepted) — a refusal is
+    * backpressure, retried after 20 ms — or None once its stream died. */
+  private[graft] trait Producer {
+    def send(): Option[Boolean]
+    def close(): Unit = ()
   }
+
+  /** One ingest wire of the bench: its listener, its serve params (given
+    * the window's temp root), one of the window's 8 shared clients (given
+    * the port), and the producer each of 32 threads runs on one of them. */
+  private[graft] final case class Wire[C](
+      name: String, uri: String,
+      params: String => Map[String, String],
+      client: Int => C,
+      producer: C => Producer,
+      closeClient: C => Unit = (_: C) => ())
+
+  private def parquet(root: String) = Map("target" -> "parquet",
+    "parquet_root" -> root, "seal_max_age_ms" -> "2000")
+
+  /** OTLP/JSON over HTTP: 500 NDJSON envelopes per POST, ~300 bytes each.
+    * The sync JDK HttpClient adds ~ms per call, which is why a window
+    * runs many producer threads over several clients.
+    * SPARK_GRAFT_BENCH_MAINT_MS lowers the maintenance gate so a
+    * sustained window (SPARK_GRAFT_BENCH_INGEST_MS) can observe
+    * compaction firing MID-LOAD (SCALE.md's ingest scale point; the
+    * default 5 min gate never fires inside a 15 s window). */
+  private[graft] val Http: Wire[(java.net.http.HttpClient, Int)] = Wire(
+    "http", "otlp:127.0.0.1:46900",
+    root => parquet(root) ++ sys.env.get("SPARK_GRAFT_BENCH_MAINT_MS")
+      .map(ms => Map("maintenance_min_interval_ms" -> ms)).getOrElse(Map.empty),
+    port => (java.net.http.HttpClient.newHttpClient(), port),
+    { case (client, port) => () =>
+      val req = java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:$port/v1/logs"))
+        .header("Content-Type", "application/x-ndjson")
+        .header("Authorization", s"Bearer $Token")
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(NdjsonBody))
+        .build()
+      Some(client.send(req,
+        java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode() == 202)
+    })
+
+  /** The gRPC unary-Export wire against the parquet target — same seal
+    * core, protobuf twin of the NDJSON body, h2c multiplexed producers. */
+  private val Grpc: Wire[GrpcClient] = Wire(
+    "grpc", "otlp:127.0.0.1:46902",
+    root => Map("transport" -> "grpc") ++ parquet(root),
+    new GrpcClient("127.0.0.1", _),
+    cli => () => Some(cli.unary(
+      "/opentelemetry.proto.collector.logs.v1.LogsService/Export",
+      GrpcLogsBody, Some(Token))._1 == 0),
+    _.close())
 
   /** The OTAP wire (`otap_serve`, Arrow-stream gRPC) — the reference's
     * designed-for-throughput transport (serve.md "OTel-Arrow protocol
     * support": dictionary/schema reuse across stream messages, no JSON).
-    * Steady-state producer cost per message is one batch-only Arrow IPC
-    * slice; reported as otap_*_rows_per_sec so the claim is a graded
-    * artifact, not a design note (VERDICT r11 #6). */
-  private def ingestBenchOtap(spark: SparkSession,
-                              runMs: Long = IngestWindowMs): (Double, Double) = {
-    val root = java.nio.file.Files.createTempDirectory("bench_otap").toString
-    System.gc()
-    try otapLoadTest(spark, "otap:127.0.0.1:46903",
-      Map("target" -> "parquet", "parquet_root" -> root,
-        "seal_max_age_ms" -> "2000"), runMs = runMs)
-    finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(root))
-  }
-
-  /** OTAP producer loop: each thread holds ONE long-lived Arrow stream —
-    * an initial (schema + batch) message, then batch-only continuations
-    * riding the server decoder's retained reader state. Ack-paced
-    * (BatchStatus per message), nack 8 = backpressure → brief backoff and
-    * resend, mirroring a conforming otel-arrow exporter. */
-  private def otapLoadTest(spark: SparkSession, uri: String,
-                           extraParams: Map[String, String],
-                           runMs: Long): (Double, Double) = {
-    import graft.streaming.{GrpcClient, GrpcWire, OtlpServe}
-    val token = "bench-token-0123456789abcdef"
-    val port = graft.streaming.OtlpUri.parse(uri).port
-    OtlpServe.otapServe(spark, uri, Map("token" -> token) ++ extraParams)
-    val path =
-      "/opentelemetry.proto.experimental.arrow.v1.ArrowLogsService/ArrowLogs"
-    val (logsInit, logsCont, attrsInit, attrsCont) =
-      graft.otlp.OtapEncoder.logsRecordSlices(500)
-    val threads = 32
-    val clients = Array.fill(8)(new GrpcClient("127.0.0.1", port))
-    val sent = new java.util.concurrent.atomic.AtomicLong(0)
-    val deadline = System.currentTimeMillis() + runMs
-    val t0 = System.nanoTime()
-    val pool = (0 until threads).map { i =>
-      val t = new Thread(() => {
-        val cli = clients(i % clients.length)
-        val call = cli.open(path, Some(token))
-        var batchId = 1L
-        def sendOne(logs: Array[Byte], attrs: Array[Byte]): Boolean = {
-          call.send(graft.otlp.OtapEncoder.batchMessage(batchId, logs, attrs))
-          call.nextMessage() match {
-            case Some(m) =>
-              val (_, code, _) = GrpcWire.parseBatchStatus(m)
-              if (code == 0) { sent.addAndGet(500); batchId += 1; true }
-              else { Thread.sleep(20); true } // backpressure/nack: retryable
-            case None => false // stream dead
-          }
+    * Each thread holds ONE long-lived Arrow stream: an initial (schema +
+    * batch) message, then batch-only continuations riding the server
+    * decoder's retained reader state. Ack-paced (BatchStatus per
+    * message); a nack (8 = backpressure) is retried like a conforming
+    * otel-arrow exporter does. */
+  private val Otap: Wire[GrpcClient] = Wire(
+    "otap", "otap:127.0.0.1:46903", parquet,
+    new GrpcClient("127.0.0.1", _),
+    cli => new Producer {
+      private val call = cli.open(
+        "/opentelemetry.proto.experimental.arrow.v1.ArrowLogsService/ArrowLogs",
+        Some(Token))
+      private var batchId = 1L
+      private var first = true
+      def send(): Option[Boolean] = {
+        val (logsInit, logsCont, attrsInit, attrsCont) = OtapSlices
+        val (logs, attrs) =
+          if (first) (logsInit, attrsInit) else (logsCont, attrsCont)
+        first = false
+        call.send(graft.otlp.OtapEncoder.batchMessage(batchId, logs, attrs))
+        call.nextMessage().map { m =>
+          val ok = GrpcWire.parseBatchStatus(m)._2 == 0
+          if (ok) batchId += 1
+          ok
         }
-        var alive = sendOne(logsInit, attrsInit)
-        while (alive && System.currentTimeMillis() < deadline)
-          alive = sendOne(logsCont, attrsCont)
+      }
+      override def close(): Unit =
         try call.halfClose() catch { case _: Throwable => () }
-      })
-      t.start(); t
-    }
-    pool.foreach(_.join())
-    val acceptElapsed = (System.nanoTime() - t0) / 1e9
-    OtlpServe.otlpFlush(spark, uri)
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    val durable = OtlpServe.get(uri).map(_.committedRowsTotal.get()).getOrElse(0L)
-    clients.foreach(_.close())
-    OtlpServe.otlpStop(spark, uri)
-    (sent.get() / acceptElapsed, durable / elapsed)
+    },
+    _.close())
+
+  /** The HTTP load against the CATALOG target (managed tables +
+    * per-signal insert + _seal_id idempotence column) — the reference's
+    * catalog-ingest sweep reports durable rows/s on this path. */
+  private val Catalog = Http.copy(
+    name = "catalog", uri = "otlp:127.0.0.1:46901",
+    params = _ => Map("schema" -> "benchcat", "seal_max_age_ms" -> "2000"))
+
+  private lazy val NdjsonBody: Array[Byte] = {
+    val line = """{"resourceLogs":[{"resource":{"attributes":[{"key":"service.name","value":{"stringValue":"bench-service"}},{"key":"host.name","value":{"stringValue":"bench-host"}}]},"scopeLogs":[{"scope":{"name":"bench-logger"},"logRecords":[{"timeUnixNano":"1640000000000000000","severityNumber":9,"severityText":"INFO","body":{"stringValue":"benchmark log record with a reasonably sized message body"},"attributes":[{"key":"thread.id","value":{"intValue":"42"}}]}]}]}]}"""
+    Array.fill(RowsPerRequest)(line).mkString("\n").getBytes("UTF-8")
+  }
+  private lazy val GrpcLogsBody: Array[Byte] = grpcLogsBody(RowsPerRequest)
+  private lazy val OtapSlices =
+    graft.otlp.OtapEncoder.logsRecordSlices(RowsPerRequest)
+
+  /** One ingest window on `wire`, the shape of the reference's capacity
+    * bench: serve into a fresh temp root, run 32 producer threads over 8
+    * clients until the deadline, flush, and report (accepted rows/s,
+    * durable rows/s incl. the final flush). The seal output is deleted
+    * afterwards (ADVICE r10: seal dirs had accumulated in /tmp). It runs
+    * no GC of its own: a caller that times it sweeps first, and a caller
+    * that runs it next to a query sweep must not get a full GC inside
+    * that sweep. */
+  private[graft] def window[C](spark: SparkSession, wire: Wire[C],
+                               runMs: Long = IngestWindowMs): (Double, Double) = {
+    val root = java.nio.file.Files.createTempDirectory(s"bench_${wire.name}")
+    try {
+      val params = Map("token" -> Token) ++ wire.params(root.toString)
+      if (wire.uri.startsWith("otap:")) OtlpServe.otapServe(spark, wire.uri, params)
+      else OtlpServe.otlpServe(spark, wire.uri, params)
+      val port = OtlpUri.parse(wire.uri).port
+      val clients = Vector.fill(8)(wire.client(port))
+      val sent = new java.util.concurrent.atomic.AtomicLong(0)
+      val deadline = System.currentTimeMillis() + runMs
+      val t0 = System.nanoTime()
+      val pool = (0 until 32).map { i =>
+        val t = new Thread(() => {
+          val p = wire.producer(clients(i % clients.length))
+          var alive = true
+          while (alive && System.currentTimeMillis() < deadline) p.send() match {
+            case Some(true) => sent.addAndGet(RowsPerRequest)
+            case Some(false) => Thread.sleep(20) // backpressure: retryable
+            case None => alive = false // stream dead
+          }
+          p.close()
+        })
+        t.start(); t
+      }
+      pool.foreach(_.join())
+      val acceptElapsed = (System.nanoTime() - t0) / 1e9
+      OtlpServe.otlpFlush(spark, wire.uri)
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      val durable = OtlpServe.get(wire.uri)
+        .map(_.committedRowsTotal.get()).getOrElse(0L)
+      clients.foreach(wire.closeClient)
+      OtlpServe.otlpStop(spark, wire.uri)
+      (sent.get() / acceptElapsed, durable / elapsed)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
-  /** Same load against the CATALOG target (managed tables + per-signal
-    * insert + _seal_id idempotence column) — the reference's
-    * catalog-ingest sweep reports durable rows/s on this path. */
-  private def ingestBenchCatalog(spark: SparkSession): Double = {
-    // managed-table locations outlive the in-memory catalog: a stale
-    // warehouse dir from an earlier bench run would fail saveAsTable
+  /** The catalog window: managed-table locations outlive the in-memory
+    * catalog, so a stale warehouse dir from an earlier bench run would
+    * fail saveAsTable; it is wiped first. */
+  private def catalogWindow(spark: SparkSession): Double = {
     val wh = new java.io.File("spark-warehouse")
     Option(wh.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("benchcat"))
-      .foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
-        }
-        rm(d)
-      }
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
     spark.sql("DROP DATABASE IF EXISTS benchcat CASCADE")
-    System.gc() // sweep the parquet phase's garbage before timing (see main)
-    loadTest(spark, "otlp:127.0.0.1:46901",
-      Map("schema" -> "benchcat", "seal_max_age_ms" -> "2000"),
-      runMs = IngestWindowMs)._2
+    System.gc() // sweep the parquet phase's garbage before timing
+    window(spark, Catalog)._2
   }
 
   /** ExportLogsServiceRequest with `n` copies of the bench log record —
     * the protobuf twin of the NDJSON body (OtlpProtoSpec pins pb ≡ json),
-    * for the SPARK_GRAFT_BENCH_TRANSPORT=grpc ingest variant. Built on
-    * the transport's own Pb writer so the encodings cannot drift. */
+    * for the gRPC wire. Built on the transport's own Pb writer so the
+    * encodings cannot drift. */
   private def grpcLogsBody(n: Int): Array[Byte] = {
     import graft.streaming.GrpcWire.Pb
     def strAttr(k: String, v: String) =
@@ -552,99 +528,5 @@ object Bench {
       })
     }
     Pb.msg(o => (0 until n).foreach(_ => Pb.lenDelim(o, 1, resourceLogs)))
-  }
-
-  private def loadTest(spark: SparkSession, uri: String,
-                       extraParams: Map[String, String],
-                       runMs: Long, forceGrpc: Boolean = false): (Double, Double) = {
-    import graft.streaming.OtlpServe
-    val token = "bench-token-0123456789abcdef"
-    val port = graft.streaming.OtlpUri.parse(uri).port
-    // the dedicated grpc window sets forceGrpc; SPARK_GRAFT_BENCH_TRANSPORT
-    // =grpc additionally flips the MAIN ingest windows to the gRPC wire
-    // (dev aid; the headline ingest metric of record stays HTTP, the
-    // reference's own headline path — BASELINE.md)
-    val grpcWire = forceGrpc ||
-      sys.env.get("SPARK_GRAFT_BENCH_TRANSPORT").contains("grpc")
-    OtlpServe.otlpServe(spark, uri, Map("token" -> token) ++
-      (if (grpcWire) Map("transport" -> "grpc") else Map.empty) ++ extraParams)
-    if (grpcWire) return grpcLoadTest(spark, uri, port, token, runMs)
-    // one envelope per line, ~300 bytes/record, 500 records per request
-    val line = """{"resourceLogs":[{"resource":{"attributes":[{"key":"service.name","value":{"stringValue":"bench-service"}},{"key":"host.name","value":{"stringValue":"bench-host"}}]},"scopeLogs":[{"scope":{"name":"bench-logger"},"logRecords":[{"timeUnixNano":"1640000000000000000","severityNumber":9,"severityText":"INFO","body":{"stringValue":"benchmark log record with a reasonably sized message body"},"attributes":[{"key":"thread.id","value":{"intValue":"42"}}]}]}]}]}"""
-    val body = Array.fill(500)(line).mkString("\n").getBytes("UTF-8")
-    // the sync JDK HttpClient adds ~ms per call, so saturating the server
-    // needs many producer threads spread over several client instances
-    val threads = 32
-    val clients = Array.fill(8)(java.net.http.HttpClient.newHttpClient())
-    val sent = new java.util.concurrent.atomic.AtomicLong(0)
-    val deadline = System.currentTimeMillis() + runMs
-    val t0 = System.nanoTime()
-    val pool = (0 until threads).map { i =>
-      val t = new Thread(() => {
-        val client = clients(i % clients.length)
-        while (System.currentTimeMillis() < deadline) {
-          val req = java.net.http.HttpRequest.newBuilder(
-              java.net.URI.create(s"http://127.0.0.1:$port/v1/logs"))
-            .header("Content-Type", "application/x-ndjson")
-            .header("Authorization", s"Bearer $token")
-            .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(body))
-            .build()
-          val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.discarding())
-          if (resp.statusCode() == 202) sent.addAndGet(500)
-          else Thread.sleep(20) // backpressure
-        }
-      })
-      t.start(); t
-    }
-    pool.foreach(_.join())
-    val acceptElapsed = (System.nanoTime() - t0) / 1e9
-    OtlpServe.otlpFlush(spark, uri)
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    val durable = OtlpServe.get(uri).map(_.committedRowsTotal.get()).getOrElse(0L)
-    if (sys.env.contains("SPARK_GRAFT_BENCH_SEALS"))
-      OtlpServe.get(uri).foreach { s =>
-        s.sealHistory.foreach(ev => System.err.println(
-          s"[seal] trigger=${ev.trigger} rows=${ev.rows} appendMs=${ev.appendMs} commitMs=${ev.commitMs}"))
-        System.err.println(s"[seal-summary] seals=${s.sealHistory.size} " +
-          s"elapsedSec=$elapsed maintenanceRuns=${s.maintenanceRuns.get()} " +
-          s"maintenanceDeferrals=${s.maintenanceDeferrals.get()} " +
-          s"maintenanceFailures=${s.maintenanceFailures.get()}")
-      }
-    OtlpServe.otlpStop(spark, uri)
-    (sent.get() / acceptElapsed, durable / elapsed)
-  }
-
-  /** gRPC twin of the HTTP producer loop: concurrent unary Exports of the
-    * equivalent protobuf body over h2c (multiplexed streams on 8 shared
-    * connections). */
-  private def grpcLoadTest(spark: SparkSession, uri: String, port: Int,
-                           token: String, runMs: Long): (Double, Double) = {
-    import graft.streaming.{GrpcClient, OtlpServe}
-    val path = "/opentelemetry.proto.collector.logs.v1.LogsService/Export"
-    val body = grpcLogsBody(500)
-    val threads = 32
-    val clients = Array.fill(8)(new GrpcClient("127.0.0.1", port))
-    val sent = new java.util.concurrent.atomic.AtomicLong(0)
-    val deadline = System.currentTimeMillis() + runMs
-    val t0 = System.nanoTime()
-    val pool = (0 until threads).map { i =>
-      val t = new Thread(() => {
-        val cli = clients(i % clients.length)
-        while (System.currentTimeMillis() < deadline) {
-          val (st, _, _) = cli.unary(path, body, Some(token))
-          if (st == 0) sent.addAndGet(500)
-          else Thread.sleep(20) // backpressure
-        }
-      })
-      t.start(); t
-    }
-    pool.foreach(_.join())
-    val acceptElapsed = (System.nanoTime() - t0) / 1e9
-    OtlpServe.otlpFlush(spark, uri)
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    val durable = OtlpServe.get(uri).map(_.committedRowsTotal.get()).getOrElse(0L)
-    clients.foreach(_.close())
-    OtlpServe.otlpStop(spark, uri)
-    (sent.get() / acceptElapsed, durable / elapsed)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic corpus generator for larger-scale bench points (SCALE.md):
   * writes `documents.parquet` + `embeddings.parquet` shaped like the
   * driver's testdata (same columns/types, ~10% near-duplicate docs so the
@@ -41,12 +39,7 @@ object GenCorpus {
     val nDocs = args.lift(1).map(_.toLong).getOrElse(50000L)
     val nVecs = args.lift(2).map(_.toLong).getOrElse(20000L)
     val seed = args.lift(3).map(_.toLong).getOrElse(42L)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     import spark.implicits._
 
     val docs = spark.range(nDocs).map { boxed =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Query-during-ingest interference probe (VERDICT r11 #3): the actual
   * 100 TB deployment shape is a SHARED cluster — dashboards sweep the
   * sealed tables while the live ingest path seals new data in the same
@@ -50,24 +48,12 @@ object InterferenceProbe {
       case other => throw new IllegalArgumentException(
         s"unknown subset: $other (spread|heavy)")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // the probe IS the shared-cluster shape, so it runs the scheduler a
-      // shared cluster runs: FAIR, with seal jobs already tagged into
-      // their own 'graft-seals' pool (SealTarget.inSealPool) — queries
-      // and seal drains round-robin instead of queueing FIFO behind a
-      // long sweep stage (override: SPARK_GRAFT_SCHEDULER=FIFO)
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FAIR"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QSpec.quietCheckpointRelease()
+    // the probe IS the shared-cluster shape, so it runs the scheduler a
+    // shared cluster runs: FAIR, with seal jobs already tagged into their
+    // own 'graft-seals' pool (SealTarget.inSealPool) — queries and seal
+    // drains round-robin instead of queueing FIFO behind a long sweep stage
+    val spark = Sessions.open(
+      Sessions.builder().config("spark.scheduler.mode", "FAIR"))
     Tables.register(spark, sfDir)
     spark.table("lineitem").limit(1).count()
 
@@ -76,11 +62,7 @@ object InterferenceProbe {
     def sweepOnce(): Double = {
       val t0 = System.nanoTime()
       queries.foreach { case (_, fn) =>
-        var df: org.apache.spark.sql.DataFrame = null
-        try {
-          df = fn(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-        } finally if (df != null) graft.operators.Blocks.release(df)
+        QSpec.run(spark, sfDir, fn)(_.write.format("noop").mode("overwrite").save())
       }
       (System.nanoTime() - t0) / 1e9
     }
@@ -91,14 +73,14 @@ object InterferenceProbe {
 
     // 2. isolated sustained ingest (same harness as Bench windows)
     spark.catalog.clearCache(); System.gc()
-    Bench.ingestBench(spark, runMs = 3000) // wire warmup, uncounted
-    val (_, isolatedIngest) = Bench.ingestBench(spark, runMs = ingestMs)
+    Bench.window(spark, Bench.Http, runMs = 3000) // wire warmup, uncounted
+    val (_, isolatedIngest) = Bench.window(spark, Bench.Http, runMs = ingestMs)
 
     // 3. concurrent: ingest window in a thread, sweeps loop until it ends
     spark.catalog.clearCache(); System.gc()
     @volatile var concurrentIngest = 0.0
     val ingestThread = new Thread(() => {
-      concurrentIngest = Bench.ingestBench(spark, runMs = ingestMs)._2
+      concurrentIngest = Bench.window(spark, Bench.Http, runMs = ingestMs)._2
     })
     val sweepTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
     ingestThread.start()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement harness (dev tool, not part of the
   * driver contract): for each registered query matching a name-prefix
   * filter, splits one cold invocation into its phases —
@@ -17,93 +15,87 @@ import org.apache.spark.sql.SparkSession
   *            build+plan+codegen-cache-hit: what Bench's second sweep
   *            actually measures)
   *
-  * and writes `<outDir>/<name>.txt` with the timing line plus
-  * explain("formatted") — the before/after evidence files for
+  * and writes `<outDir>/<name>.txt` with the timing line,
+  * explain("formatted"), and one line per Spark job the query ran (both
+  * invocations, eager operator jobs included: its wall time in us and
+  * call site) — the before/after evidence files for
   * OPTIMIZATION_r17.md / plans/r17.
   *
   * Usage: runMain graft.PlanProbe <sfDir> <outDir> <prefix,prefix,...>
-  * env: SPARK_GRAFT_CPUS (default 32) — same session shape as Bench. */
+  * env: SPARK_GRAFT_CPUS — the same session shape as Bench. */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, filter) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QSpec.quietCheckpointRelease()
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_PROBE_JOBS=1: print every Spark job's wall time +
-    // description — names which of an operator's internal actions
-    // (trainer collects, localCheckpoints, convergence checks) the
-    // per-query seconds actually go to
-    if (sys.env.contains("SPARK_GRAFT_PROBE_JOBS"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          private val desc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            t0.put(js.jobId, System.nanoTime())
-            desc.put(js.jobId, Option(js.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short")))
-              .getOrElse(""))
+    // per-query job lines, keyed by the job description set below; the
+    // listener bus delivers them asynchronously, so they are appended to
+    // the query files once spark.stop() has drained it
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.ConcurrentLinkedQueue[String]]()
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        // nanoTime, not the events' whole-ms stamps: the job-count-bound
+        // queries this trace is for run many sub-millisecond jobs
+        private val started = new java.util.concurrent.ConcurrentHashMap[
+          Int, (Long, String, String)]()
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .foreach(d => started.put(js.jobId, (System.nanoTime(), d,
+              // the result stage is named after the action's call site
+              js.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name))))
+        override def onJobEnd(
+            je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          Option(started.remove(je.jobId)).foreach { case (t0, d, site) =>
+            jobs.computeIfAbsent(d,
+              _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
+              .add(f"[job ${je.jobId}%4d] ${(System.nanoTime() - t0) / 1e3}%9.0f us  $site")
           }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val start = t0.remove(je.jobId)
-            if (start != 0L)
-              println(f"    [job ${je.jobId}%4d] ${(System.nanoTime() - start) / 1e3}%9.0f us  ${desc.getOrDefault(je.jobId, "")}")
-          }
-        })
+      })
     Tables.register(spark, sfDir)
     spark.table("lineitem").limit(1).count() // warmup outside timings
 
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => QSpec.nameMatches(Some(filter), n) }
     def ms(t0: Long): Double = (System.nanoTime() - t0) / 1e6
+    def file(name: String) = java.nio.file.Paths.get(s"$outDir/$name.txt")
     println(f"${"query"}%-28s ${"build"}%8s ${"plan"}%8s ${"exec1"}%8s ${"exec2"}%8s  (ms)")
     selected.foreach { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"probe: $name")
-      var df: org.apache.spark.sql.DataFrame = null
-      var df2: org.apache.spark.sql.DataFrame = null
       try {
         val t0 = System.nanoTime()
-        df = fn(spark, sfDir)
-        val tBuild = ms(t0)
-        val t1 = System.nanoTime()
-        df.queryExecution.executedPlan // force analysis->physical planning
-        val tPlan = ms(t1)
-        val t2 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val tExec1 = ms(t2)
-        val t3 = System.nanoTime()
-        df2 = fn(spark, sfDir)
-        df2.write.format("noop").mode("overwrite").save()
-        val tExec2 = ms(t3)
-        val line = f"$name%-28s $tBuild%8.0f $tPlan%8.0f $tExec1%8.0f $tExec2%8.0f"
-        println(line)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/$name.txt"),
-          s"== PlanProbe $name (ms): build=$tBuild plan=$tPlan " +
-            s"exec1=$tExec1 exec2=$tExec2 ==\n\n$plan")
+        QSpec.run(spark, sfDir, fn) { df =>
+          val tBuild = ms(t0)
+          val t1 = System.nanoTime()
+          df.queryExecution.executedPlan // force analysis->physical planning
+          val tPlan = ms(t1)
+          val t2 = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          val tExec1 = ms(t2)
+          val t3 = System.nanoTime()
+          val tExec2 = QSpec.run(spark, sfDir, fn) { df2 =>
+            df2.write.format("noop").mode("overwrite").save()
+            ms(t3)
+          }
+          println(f"$name%-28s $tBuild%8.0f $tPlan%8.0f $tExec1%8.0f $tExec2%8.0f")
+          val plan = df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          java.nio.file.Files.writeString(file(name),
+            s"== PlanProbe $name (ms): build=$tBuild plan=$tPlan " +
+              s"exec1=$tExec1 exec2=$tExec2 ==\n\n$plan")
+        }
       } catch { case e: Throwable =>
         println(s"$name FAILED: ${e.getMessage}")
-      } finally {
-        if (df != null) graft.operators.Blocks.release(df)
-        if (df2 != null) graft.operators.Blocks.release(df2)
-        if (df == null || df2 == null)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
       }
     }
     spark.stop()
+    selected.foreach { case (name, _) =>
+      Option(jobs.get(s"probe: $name")).filter(_ => file(name).toFile.exists)
+        .foreach(lines => java.nio.file.Files.writeString(file(name),
+          lines.toArray.mkString("\n== jobs ==\n", "\n", "\n"),
+          java.nio.file.StandardOpenOption.APPEND))
+    }
   }
 }

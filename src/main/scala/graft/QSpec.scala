@@ -37,6 +37,29 @@ object QSpec {
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
 
+  /** The one query-run rule of the mains: build the frame, hand it to
+    * `sink`, then release the checkpoint blocks it holds.
+    * - A built frame is released through its own plan leaves
+    *   ([[graft.operators.Blocks.release]]): operators free only their
+    *   superseded rounds, so the terminal checkpoint is the caller's.
+    *   Left to GC, those blocks piled up across a sweep and squeezed
+    *   execution memory (2-14x bench-tail slowdowns with no code change).
+    * - If construction threw, an operator's eager checkpoints may hold
+    *   blocks no frame references; the global unpersist sweep is the
+    *   only handle left, and mid-query nothing long-lived is cached. */
+  def run[A](spark: SparkSession, sfDir: String,
+             fn: (SparkSession, String) => DataFrame)(sink: DataFrame => A): A = {
+    var df: DataFrame = null
+    try {
+      df = fn(spark, sfDir)
+      sink(df)
+    } finally {
+      if (df != null) graft.operators.Blocks.release(df)
+      else spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+    }
+  }
+
   /** SQL that is valid and result-identical in both Spark SQL and DuckDB. */
   def sameSql(name: String, sql: String): QSpec =
     QSpec(name, (s, dir) => { Tables.register(s, dir); s.sql(sql) }, Some(sql))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** ANN quality measurement: mean recall@10 of each approximate index vs
   * the brute-force cosine ranking, over a deterministic spread of query
@@ -22,15 +22,7 @@ object RecallBench {
     // family members at +1..+9) — true-neighbor recall, the number that
     // actually differentiates the index structures.
     val mode = args.lift(2).getOrElse("uniform")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     Tables.register(spark, sfDir)
     val emb = spark.table("embeddings")
 

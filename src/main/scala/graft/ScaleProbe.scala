@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off scale-point harness (dev tool, not part of the driver
   * contract): times a single operator configuration so SCALE.md's
   * fixed-k vs paper-scaled-k comparisons are reproducible commands
@@ -27,18 +25,11 @@ import org.apache.spark.sql.SparkSession
   *        full-corpus WARC HTTP gate / nofollow-aware outlinks
   *      piicards (k unused) | mojibake (k = plant-every-k) —
   *        full-corpus Luhn card gate / mojibake detect+repair
-  * env SPARK_GRAFT_PROBE_EXPLAIN=1 prints the executed plan once. */
+  * (PlanProbe writes a registry query's formatted plan.) */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, op, kStr) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     emb.limit(1).count() // JVM/codegen warmup outside the timing
     val k = kStr.toInt
@@ -355,7 +346,6 @@ object ScaleProbe {
             .transform(df => operators.Metrics.expHistogramQuantile(df, 0.9))
         case other => throw new IllegalArgumentException(s"unknown op $other")
       }
-      if (sys.env.contains("SPARK_GRAFT_PROBE_EXPLAIN")) df.explain("formatted")
       df.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }

@@ -31,7 +31,9 @@ import org.apache.spark.sql.SparkSession
   *   _SEAL_MAX_AGE_MS / _TARGET_FILE_SIZE / _MAINTENANCE_RETENTION_MS /
   *   _HTTP_THREADS                          numeric passthroughs
   *   GRAFT_OTLP_STARTUP_TIMEOUT=60          readiness wait seconds
-  *   GRAFT_SPARK_MASTER=local[*]            Spark master for the daemon session
+  *   GRAFT_SPARK_MASTER=local[N]            Spark master for the daemon session
+  *                                          (N = SPARK_GRAFT_CPUS, else every core;
+  *                                          shuffle partitions follow the master)
   *   DRY_RUN=1                              print the planned serve call, exit 0
   */
 object ServerMain {
@@ -106,11 +108,21 @@ object ServerMain {
       tokenMinted = tokenMinted,
       startupTimeoutSecs =
         env("GRAFT_OTLP_STARTUP_TIMEOUT").map(_.toInt).getOrElse(60),
-      sparkMaster = env("GRAFT_SPARK_MASTER").getOrElse {
-        val cpus = env("SPARK_GRAFT_CPUS").getOrElse("*")
-        s"local[$cpus]"
-      },
+      sparkMaster = env("GRAFT_SPARK_MASTER")
+        .getOrElse(s"local[${Sessions.cpusIn(env)}]"),
       dryRun = truthy("DRY_RUN"))
+  }
+
+  private val LocalMaster = """local\[(\*|\d+)(?:,\d+)?\]""".r
+
+  /** The daemon's shuffle width follows its own master: a local master's
+    * thread count, else (a cluster, whose executors are not known before
+    * the session starts) the daemon's long-standing 32. */
+  private[graft] def shufflePartitions(master: String): Int = master match {
+    case "local" => 1
+    case LocalMaster("*") => Runtime.getRuntime.availableProcessors
+    case LocalMaster(n) => n.toInt
+    case _ => 32
   }
 
   // ---- probes (the reference's OtlpHttpStatusOk / OtlpTcpConnectOk) -------
@@ -194,15 +206,9 @@ object ServerMain {
       return 0
     }
 
-    val spark = SparkSession.builder()
-      .master(cfg.sparkMaster)
-      .appName("graft-otlp-server")
-      .config("spark.sql.shuffle.partitions",
-        env("SPARK_GRAFT_CPUS").getOrElse("32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.open(
+      Sessions.builder(cfg.sparkMaster, shufflePartitions(cfg.sparkMaster))
+        .appName("graft-otlp-server"))
 
     try {
       if (shutdownRequested) { println("Shutdown requested during startup; exiting."); return 0 }

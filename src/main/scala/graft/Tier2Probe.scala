@@ -1,8 +1,6 @@
 package graft
 
 import graft.Tier2Layout._
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the tier-2 physical-layout read path — the same
@@ -22,14 +20,7 @@ object Tier2Probe {
   def main(args: Array[String]): Unit = {
     val millions = if (args.nonEmpty) args(0).toDouble else 2.0
     val n = (millions * 1e6).toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
 
     val base = new java.io.File("/tmp/graft_tier2_probe")
     org.apache.commons.io.FileUtils.deleteDirectory(base)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,17 +15,7 @@ object Verify {
 
   private def mainImpl(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — read as raw ns longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QSpec.quietCheckpointRelease()
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // dev-loop aid: SPARK_GRAFT_VERIFY_FILTER=<prefix,prefix,...> dumps only
     // the matching queries (the driver leaves it unset -> full registry; the
@@ -36,24 +25,11 @@ object Verify {
       .filter { case (name, _) => QSpec.nameMatches(nameFilter, name) }
     var failed = List.empty[String]
     selected.foreach { case (name, fn) =>
-      // free the finished query's terminal localCheckpoint blocks through
-      // the frame's own plan leaves (the operator frees only superseded
-      // rounds; the final checkpoint is the caller's to release) —
-      // unreleased, they accumulate across the 155-query dump and squeeze
-      // execution memory (VERDICT r8 #2)
-      var df: org.apache.spark.sql.DataFrame = null
-      try {
-        df = fn(spark, sfDir)
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      try QSpec.run(spark, sfDir, fn)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      catch { case e: Throwable =>
         failed ::= name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        if (df != null) graft.operators.Blocks.release(df)
-        // construction failure: orphaned eager checkpoints have no frame
-        // to release through — the global sweep is the remaining handle
-        else spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
       }
     }
     // zero successful dumps means a harness/environment failure (e.g. the

@@ -367,13 +367,11 @@ object Metrics {
     * replay-dedup exchange keys by uniform (name, time), not the
     * 168-value bucket key — the same skew rule as [[seasonality]]. */
   def seasonalAnomaly(sums: DataFrame, bucket: String = "hour",
-                      k: Double = 2.0): DataFrame = {
-    require(k >= 0, "k must be non-negative")
+                      k: Double = 2.0): DataFrame =
     seasonalScores(valued(Replay.dedupWithin(
         sums.withColumn("bucket", seasonalBucket(bucket)),
         Seq(col("name"), col("time_unix_nano"))), "value"),
       scorable(seasonality(sums, bucket)), k)
-  }
 
   /** A [[seasonality]] profile's buckets that can score: those with
     * spread. */
@@ -384,15 +382,17 @@ object Metrics {
 
   /** [[seasonalAnomaly]]'s verdict on points carrying `bucket` and
     * `value`: z against their bucket's moments, round(6), kept at
-    * |z| ≥ k. */
+    * |z| ≥ k (k ≥ 0). */
   private[graft] def seasonalScores(points: DataFrame, profile: DataFrame,
-                                    k: Double): DataFrame =
+                                    k: Double): DataFrame = {
+    require(k >= 0, "k must be non-negative")
     points.join(profile, Seq("name", "bucket"))
       .withColumn("z_score",
         round((col("value") - col("avg_value")) / col("stddev_value"), 6))
       .where(abs(col("z_score")) >= k)
       .select(col("name"), col("bucket"), col("time_unix_nano"),
         col("value"), col("avg_value"), col("stddev_value"), col("z_score"))
+  }
 
   /** PromQL `holt_winters()` (3.x: `double_exponential_smoothing`): per
     * series, the double-exponentially-smoothed LAST value — level factor
@@ -680,33 +680,28 @@ object Metrics {
     * replica set); replay dedup rides the same exchange; the filter
     * keeps k rows per instant before anything downstream runs. */
   def topkSeries(sums: DataFrame, k: Int,
-                 partition: Seq[String] = Seq("name")): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(partition.nonEmpty, "topk needs at least one partition label")
-    val v = pointValue
-    val keys = partition.map(col) :+ col("time_unix_nano")
-    val w = Window.partitionBy(keys: _*)
-      .orderBy(v.desc +: seriesKey.map(_.asc): _*)
-    Replay.dedupWithin(sums.where(v.isNotNull), keys)
-      .withColumn("value", v)
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-  }
+                 partition: Seq[String] = Seq("name")): DataFrame =
+    extremeK("topk", sums, k, partition, pointValue.desc)
 
   /** PromQL `bottomk(k, metric)` — [[topkSeries]]'s mirror: the k LOWEST
     * valued series at each timestamp (the "which replicas are starved /
     * idle" panel). Same one-window shape, value ascending with the same
     * series-identity tiebreak. */
   def bottomkSeries(sums: DataFrame, k: Int,
-                    partition: Seq[String] = Seq("name")): DataFrame = {
+                    partition: Seq[String] = Seq("name")): DataFrame =
+    extremeK("bottomk", sums, k, partition, pointValue.asc)
+
+  /** [[topkSeries]] and [[bottomkSeries]]: the k series first in `order`
+    * of value per (partition labels, timestamp). */
+  private def extremeK(fn: String, sums: DataFrame, k: Int,
+                       partition: Seq[String], order: Column): DataFrame = {
     require(k > 0, "k must be positive")
-    require(partition.nonEmpty, "bottomk needs at least one partition label")
-    val v = pointValue
+    require(partition.nonEmpty, s"$fn needs at least one partition label")
     val keys = partition.map(col) :+ col("time_unix_nano")
     val w = Window.partitionBy(keys: _*)
-      .orderBy(v.asc +: seriesKey.map(_.asc): _*)
-    Replay.dedupWithin(sums.where(v.isNotNull), keys)
-      .withColumn("value", v)
+      .orderBy(order +: seriesKey.map(_.asc): _*)
+    Replay.dedupWithin(sums.where(pointValue.isNotNull), keys)
+      .withColumn("value", pointValue)
       .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= k)
   }
@@ -922,13 +917,8 @@ object Metrics {
     * Shape at 100 TB: one series-keyed window keeps two rows per series
     * before the per-series rollup — both ride the same exchange with
     * the replay dedup; output is the series space. */
-  def instantRate(sums: DataFrame): DataFrame = {
-    val w = Window.partitionBy(seriesKey: _*)
-      .orderBy(col("time_unix_nano").desc, pointValue.desc)
-    val base = valued(Replay.dedupWithin(sums, seriesKey))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= 2)
-    base.groupBy(seriesKey: _*)
+  def instantRate(sums: DataFrame): DataFrame =
+    lastTwo(sums).groupBy(seriesKey: _*)
       .agg(
         max(when(col("__rn") === 1, col("__v"))).as("__v1"),
         max(when(col("__rn") === 1, unix_micros(col("time_unix_nano"))))
@@ -948,6 +938,15 @@ object Metrics {
               .otherwise(col("__v1") - col("__v2")) /
               ((col("__t1") - col("__t2")).cast("double") / lit(1e6)), 6)))
       .select(seriesKey :+ col("last_time") :+ col("irate_per_sec"): _*)
+
+  /** Each series' newest two deduped points, `__rn` 1 (newest) and 2 —
+    * the one window [[instantRate]] and [[idelta]] share. */
+  private def lastTwo(points: DataFrame): DataFrame = {
+    val w = Window.partitionBy(seriesKey: _*)
+      .orderBy(col("time_unix_nano").desc, pointValue.desc)
+    valued(Replay.dedupWithin(points, seriesKey))
+      .withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= 2)
   }
 
   /** PromQL `idelta()`: per series, the raw difference between its LAST
@@ -958,13 +957,8 @@ object Metrics {
     * Shape at 100 TB: identical to [[instantRate]] — one series-keyed
     * window keeps two rows per series, replay dedup rides the same
     * exchange, output is the series space. */
-  def idelta(points: DataFrame): DataFrame = {
-    val w = Window.partitionBy(seriesKey: _*)
-      .orderBy(col("time_unix_nano").desc, pointValue.desc)
-    valued(Replay.dedupWithin(points, seriesKey))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= 2)
-      .groupBy(seriesKey: _*)
+  def idelta(points: DataFrame): DataFrame =
+    lastTwo(points).groupBy(seriesKey: _*)
       .agg(
         max(when(col("__rn") === 1, col("__v"))).as("__v1"),
         max(when(col("__rn") === 2, col("__v"))).as("__v2"),
@@ -973,7 +967,6 @@ object Metrics {
         when(col("__v2").isNull, lit(null))
           .otherwise(round(col("__v1") - col("__v2"), 6)))
       .select(seriesKey :+ col("last_time") :+ col("idelta_value"): _*)
-  }
 
   /** PromQL `absent()` strict form: of an EXPECTED metric-name list
     * (the alert rules' domain — PromQL evaluates absent() per rule

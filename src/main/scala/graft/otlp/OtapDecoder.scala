@@ -137,7 +137,7 @@ object OtapDecoder {
     * and a values array per row, presenting the full immutable-Map face
     * the decode passes use (apply/getOrElse/updated/groupBy). Replaces
     * the per-row LinkedHashMap→toMap double-build that dominated the
-    * IPC-read stage (OtapStages: ~12 hashed inserts + an immutable
+    * IPC-read stage (SCALE.md's OTAP stage split: ~12 hashed inserts + an immutable
     * rebuild per row, ~6k per 500-row message). Lookups are a linear
     * scan over ≤ 20 interned-ish names with an eq fast path — faster
     * than hashing at this width. */
@@ -220,8 +220,8 @@ object OtapDecoder {
     * vector's concrete type ONCE per column instead of per cell, with
     * tight monomorphic loops for the types every OTAP payload carries.
     * Values are exactly [[cell]]'s (the default arm IS cellRaw); only
-    * the dispatch count changes (OtapStages: per-cell dispatch was the
-    * bulk of the IPC-read stage). */
+    * the dispatch count changes (SCALE.md's OTAP stage split: per-cell
+    * dispatch was the bulk of the IPC-read stage). */
   private[otlp] def columnValues(v: ValueVector, n: Int,
       dicts: java.util.Map[java.lang.Long, Dictionary]): Array[Any] = {
     val out = new Array[Any](n)
@@ -536,7 +536,8 @@ object OtapDecoder {
 
     // id-memoized: a batch's rows overwhelmingly share one resource and
     // one scope, and re-rendering the attr JSON + service triple per ROW
-    // was ~40% of the whole decode stack (OtapStages, 500-row messages)
+    // was ~40% of the whole decode stack (SCALE.md's OTAP stage split,
+    // 500-row messages)
     val resCache = mutable.HashMap[Any, (String, String, String, String)]()
     def resourceInfo(r: ARow): (String, String, String, String) = {
       val res = struct(r.getOrElse("resource", null))
@@ -885,14 +886,6 @@ object OtapDecoder {
 final class OtapStreamDecoder(nsAsLong: Boolean) extends AutoCloseable {
   import OtapDecoder.ARow
 
-  // dev instrumentation (read by OtapStages): last decode()'s nanos in
-  // the three stages — IPC row materialization, attribute assembly, and
-  // the schema-message peek. Two volatile-free longs; decode is already
-  // single-threaded per stream by the server's session lock.
-  private[otlp] var lastReadNanos = 0L
-  private[otlp] var lastAssembleNanos = 0L
-  private[otlp] var lastPeekNanos = 0L
-
   private val alloc = new RootAllocator()
   private val streams = mutable.LinkedHashMap[(String, Int), StreamState]()
 
@@ -1010,7 +1003,6 @@ final class OtapStreamDecoder(nsAsLong: Boolean) extends AutoCloseable {
     * points with no logs/spans/metrics root), the decode fails loudly
     * instead. */
   def decode(message: Array[Byte]): OtlpJsonParser.ParsedFile = {
-    lastReadNanos = 0L; lastAssembleNanos = 0L; lastPeekNanos = 0L
     val ps = OtapDecoder.payloads(message)
     if (ps.isEmpty)
       throw new OtlpParseException("no Arrow payloads in OTAP input")
@@ -1027,20 +1019,16 @@ final class OtapStreamDecoder(nsAsLong: Boolean) extends AutoCloseable {
             s"[${acc.keysIterator.mkString(",")}] — attribute/data-point " +
             "payloads separated from their root table (an interleaved " +
             "multi-segment file is not valid OTAP)")
-      val ta = System.nanoTime()
       parts += OtapDecoder.assemble(
         acc.iterator.map { case (t, (r, m)) => t -> (r.toIndexedSeq, m) }.toMap,
         nsAsLong)
-      lastAssembleNanos += System.nanoTime() - ta
       acc = mutable.LinkedHashMap[Int, (ArrayBuffer[ARow], Map[String, String])]()
       fedKeys.clear()
       fedTypes.clear()
     }
     ps.foreach { case (schemaId, ptype, record) =>
       val key = (schemaId, ptype)
-      val tp = System.nanoTime()
       val fresh = startsWithSchema(record)
-      lastPeekNanos += System.nanoTime() - tp
       if ((fresh && fedKeys.contains(key)) ||
           fedTypes.get(ptype).exists(_ != schemaId))
         flushSegment()
@@ -1051,7 +1039,6 @@ final class OtapStreamDecoder(nsAsLong: Boolean) extends AutoCloseable {
       }
       val st = streams.getOrElseUpdate(key, new StreamState)
       st.feed.append(record)
-      val tr = System.nanoTime()
       val (rows, meta) =
         try st.readNewRows()
         catch {
@@ -1062,7 +1049,6 @@ final class OtapStreamDecoder(nsAsLong: Boolean) extends AutoCloseable {
             throw new OtlpParseException(
               s"invalid OTAP Arrow IPC payload: ${e.getMessage}")
         }
-      lastReadNanos += System.nanoTime() - tr
       val slot = acc.getOrElseUpdate(ptype, (ArrayBuffer[ARow](), meta))
       slot._1 ++= rows
       fedKeys += key

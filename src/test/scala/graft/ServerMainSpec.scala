@@ -71,6 +71,19 @@ class ServerMainSpec extends SparkTestBase {
     assert(ServerMain.run(env(Map("GRAFT_MODE" -> "iceberg"))) == 2)
   }
 
+  test("daemon session: master from the injected env, partitions from the master") {
+    assert(ServerMain.configFromEnv(env(Map("SPARK_GRAFT_CPUS" -> "3")))
+      .sparkMaster == "local[3]")
+    assert(ServerMain.configFromEnv(env(Map("SPARK_GRAFT_CPUS" -> "3",
+      "GRAFT_SPARK_MASTER" -> "local[4]"))).sparkMaster == "local[4]")
+    assert(ServerMain.shufflePartitions("local[4]") == 4)
+    assert(ServerMain.shufflePartitions("local[2,3]") == 2)
+    assert(ServerMain.shufflePartitions("local") == 1)
+    assert(ServerMain.shufflePartitions("local[*]") ==
+      Runtime.getRuntime.availableProcessors)
+    assert(ServerMain.shufflePartitions("spark://head:7077") == 32)
+  }
+
   test("full lifecycle: start, ready, ingest, drain on shutdown, exit 0") {
     ServerMain.reset()
     val root = java.nio.file.Files.createTempDirectory("daemon_seal").toString

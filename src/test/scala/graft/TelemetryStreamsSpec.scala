@@ -743,6 +743,20 @@ class TelemetryStreamsSpec extends SparkTestBase {
     assert(got.size == 2, got) // 4 and 13 qualify at k=1; 10 does not
   }
 
+  test("seasonalAnomalyStream rejects k < 0 with batch seasonalAnomaly's " +
+    "IllegalArgumentException") {
+    import spark.implicits._
+    val pts = Seq(("q", Timestamp.valueOf("2024-01-01 00:00:00"), 1.0))
+      .toDF("name", "time_unix_nano", "double_value")
+      .withColumn("int_value", lit(null).cast("long"))
+    val baseline = graft.operators.Metrics.seasonality(pts, "minute")
+    val batch = intercept[IllegalArgumentException](
+      graft.operators.Metrics.seasonalAnomaly(pts, "minute", k = -1.0))
+    val stream = intercept[IllegalArgumentException](
+      TelemetryStreams.seasonalAnomalyStream(pts, baseline, "minute", k = -1.0))
+    assert(stream.getMessage == batch.getMessage)
+  }
+
   test("streaming dedup drops at-least-once duplicates within the watermark") {
     val q = TelemetryStreams.dedupSpans(
         TelemetryStreams.traceStream(spark, root))
