@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{OtlpServe, OtlpUri}
+import graft.streaming.{OtlpServe, OtlpUri, OtlpUriParts, ServerConfig}
 import org.apache.spark.sql.SparkSession
 
 /** Standalone server daemon — the Spark analog of the reference's headless
@@ -26,7 +26,8 @@ import org.apache.spark.sql.SparkSession
   *   GRAFT_OTLP_DISABLE_AUTH=1              disable auth
   *   GRAFT_OTLP_SCHEMA=otlp                 catalog-mode schema
   *   GRAFT_PARQUET_ROOT=/data/otlp          parquet-mode export root (required)
-  *   GRAFT_OTLP_TRANSPORT=http|grpc         wire (default per scheme)
+  *   GRAFT_OTLP_TRANSPORT=http|grpc         otlp: wire (default http); an otap:
+  *                                          listener is gRPC only
   *   GRAFT_OTLP_MAX_BODY_BYTES / _MAX_BUFFERED_BYTES / _SEAL_TARGET_BYTES /
   *   _SEAL_MAX_AGE_MS / _TARGET_FILE_SIZE / _MAINTENANCE_RETENTION_MS /
   *   _HTTP_THREADS                          numeric passthroughs
@@ -70,7 +71,7 @@ object ServerMain {
     val disableAuth = truthy("GRAFT_OTLP_DISABLE_AUTH")
     val tokenEnv = env("GRAFT_OTLP_TOKEN").filter(_.nonEmpty)
     val tokenMinted = tokenEnv.isEmpty && !disableAuth
-    val token = tokenEnv.getOrElse(graft.streaming.ServerConfig.mintToken())
+    val token = tokenEnv.getOrElse(ServerConfig.mintToken())
 
     val numeric = Seq(
       "GRAFT_OTLP_MAX_BODY_BYTES" -> "max_body_bytes",
@@ -153,18 +154,24 @@ object ServerMain {
   /** `healthcheck` argument entry: probe the configured listener's actual
     * transport (gRPC = TCP connect, HTTP = /readyz). 0 healthy, 1 not. */
   def runHealthCheck(env: String => Option[String]): Int = {
-    val cfg = try configFromEnv(env) catch {
+    val (uri, grpc) = try {
+      val cfg = configFromEnv(env)
+      val uri = OtlpUri.parse(cfg.listenUri)
+      (uri, grpcWire(cfg, uri))
+    } catch {
       case e: Exception =>
         System.err.println(s"ERROR: ${e.getMessage}"); return 2
     }
-    val uri = OtlpUri.parse(cfg.listenUri)
-    val grpc = uri.scheme == "otap" ||
-      cfg.serveParams.get("transport").contains("grpc")
     val host = healthCheckHost(uri.host)
     val ok = if (grpc) tcpConnectOk(host, uri.port)
              else httpStatusOk(host, uri.port, "/readyz")
     if (ok) 0 else 1
   }
+
+  /** A gRPC listener exposes no HTTP /readyz; ServerConfig decides which
+    * wire a listener runs. */
+  private def grpcWire(cfg: DaemonConfig, uri: OtlpUriParts): Boolean =
+    ServerConfig.transportOf(uri.scheme, cfg.serveParams) == "grpc"
 
   // ---- lifecycle ----------------------------------------------------------
 
@@ -247,9 +254,9 @@ object ServerMain {
 
   /** Poll listener state + transport probe until ready or timeout
     * (main.cpp WaitForReady:144-157: 250 ms ticks, startup error aborts). */
-  private def waitForReady(cfg: DaemonConfig, uri: graft.streaming.OtlpUriParts): Boolean = {
+  private def waitForReady(cfg: DaemonConfig, uri: OtlpUriParts): Boolean = {
     val deadline = System.nanoTime() + cfg.startupTimeoutSecs * 1_000_000_000L
-    val grpc = uri.scheme == "otap" || cfg.serveParams.get("transport").contains("grpc")
+    val grpc = grpcWire(cfg, uri)
     val host = healthCheckHost(uri.host)
     while (!shutdownRequested && System.nanoTime() < deadline) {
       OtlpServe.get(cfg.listenUri) match {

@@ -51,78 +51,33 @@ object OtapDecoder {
 
   // ---- protobuf envelope --------------------------------------------------
 
-  /** ArrowPayload entries in file order: (schema_id, type, record bytes). */
+  /** ArrowPayload entries in file order: (schema_id, type, record bytes).
+    * A truncated envelope or payload is an [[OtlpParseException]]. */
   private[otlp] def payloads(content: Array[Byte]): Seq[(String, Int, Array[Byte])] = {
-    var i = 0
     val out = ArrayBuffer[(String, Int, Array[Byte])]()
-    def varint(): Long = {
-      var shift = 0; var v = 0L
-      while (shift < 64) {
-        if (i >= content.length) throw new OtlpParseException("truncated varint")
-        val b = content(i); i += 1
-        v |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return v
-        shift += 7
-      }
-      throw new OtlpParseException("varint too long")
-    }
-    while (i < content.length) {
-      val tag = varint()
-      val (field, wire) = ((tag >>> 3).toInt, (tag & 7).toInt)
-      wire match {
-        case 0 => varint()
-        case 1 => i += 8
-        case 5 => i += 4
-        case 2 =>
-          val len = varint().toInt
-          if (len < 0 || i + len > content.length)
-            throw new OtlpParseException("truncated payload")
-          val sub = java.util.Arrays.copyOfRange(content, i, i + len)
-          i += len
-          if (field == 2) {
-            // ArrowPayload{schema_id=1, type=2, record=3}
-            var j = 0
-            // the FULL id value keys decoder streams — a lossy fold (the
-            // old 32-bit hash) could silently decode a payload against
-            // another schema's reader/dictionaries on collision. Distinct
-            // prefixes keep varint ids and string ids from colliding.
-            var schemaId = "n:0"
-            var ptype = 0
-            var record: Array[Byte] = null
-            def pvarint(): Long = {
-              var shift = 0; var v = 0L
-              while (true) {
-                val b = sub(j); j += 1
-                v |= (b & 0x7fL) << shift
-                if ((b & 0x80) == 0) return v
-                shift += 7
-              }
-              v
-            }
-            while (j < sub.length) {
-              val t = pvarint()
-              val (f2, w2) = ((t >>> 3).toInt, (t & 7).toInt)
-              w2 match {
-                case 0 =>
-                  val v = pvarint()
-                  if (f2 == 2) ptype = v.toInt
-                  else if (f2 == 1) schemaId = "n:" + v
-                case 2 =>
-                  val l2 = pvarint().toInt
-                  val s2 = java.util.Arrays.copyOfRange(sub, j, j + l2); j += l2
-                  if (f2 == 3) record = s2
-                  else if (f2 == 1)
-                    // schema_id is a string in otel-arrow ≥v1
-                    schemaId = "s:" + new String(s2, java.nio.charset.StandardCharsets.UTF_8)
-                case 1 => j += 8
-                case 5 => j += 4
-                case w => throw new OtlpParseException(s"bad wire type $w")
-              }
-            }
-            if (record != null) out += ((schemaId, ptype, record))
-          }
-        case w => throw new OtlpParseException(s"bad wire type $w")
-      }
+    val r = new ProtoReader(content)
+    while (r.hasMore) {
+      val (field, wire) = r.readTag()
+      if (field == 2 && wire == 2) {
+        // ArrowPayload{schema_id=1, type=2, record=3}. The FULL id value
+        // keys decoder streams — a lossy fold (the old 32-bit hash) could
+        // silently decode a payload against another schema's
+        // reader/dictionaries on collision. Distinct prefixes keep varint
+        // ids and string ids from colliding.
+        val p = r.readSub()
+        var schemaId = "n:0"
+        var ptype = 0
+        var record: Array[Byte] = null
+        while (p.hasMore) p.readTag() match {
+          case (1, 0) => schemaId = "n:" + p.readVarint()
+          // schema_id is a string in otel-arrow ≥v1
+          case (1, 2) => schemaId = "s:" + p.readString()
+          case (2, 0) => ptype = p.readVarint().toInt
+          case (3, 2) => record = p.readBytes()
+          case (_, w) => p.skip(w)
+        }
+        if (record != null) out += ((schemaId, ptype, record))
+      } else r.skip(wire)
     }
     out.toSeq
   }

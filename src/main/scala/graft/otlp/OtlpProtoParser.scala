@@ -4,7 +4,6 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
 
 import java.math.BigInteger
-import java.nio.charset.StandardCharsets
 
 /** Hand-rolled protobuf wire decoder for the three OTLP export requests
   * (ExportLogsServiceRequest / ExportTraceServiceRequest /
@@ -34,7 +33,7 @@ object OtlpProtoParser {
     }
     val arr = new ArrayNode(nf)
     try {
-      val r = new Reader(content, 0, content.length)
+      val r = new ProtoReader(content)
       while (r.hasMore) {
         val (field, wire) = r.readTag()
         if (field == 1 && wire == 2) {
@@ -55,60 +54,6 @@ object OtlpProtoParser {
     OtlpJsonParser.parseEnvelopes(Iterator.single(env), nsAsLong, need)
   }
 
-  // ---- wire reader --------------------------------------------------------
-
-  private final class Reader(buf: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
-    def readTag(): (Int, Int) = {
-      val v = readVarint()
-      ((v >>> 3).toInt, (v & 7).toInt)
-    }
-    def readVarint(): Long = {
-      var shift = 0; var out = 0L
-      while (shift < 64) {
-        if (pos >= end) throw new OtlpParseException("truncated varint")
-        val b = buf(pos); pos += 1
-        out |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return out
-        shift += 7
-      }
-      throw new OtlpParseException("varint too long")
-    }
-    def readFixed64(): Long = {
-      if (pos + 8 > end) throw new OtlpParseException("truncated fixed64")
-      var out = 0L; var i = 0
-      while (i < 8) { out |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
-      pos += 8; out
-    }
-    def readFixed32(): Int = {
-      if (pos + 4 > end) throw new OtlpParseException("truncated fixed32")
-      var out = 0; var i = 0
-      while (i < 4) { out |= (buf(pos + i) & 0xff) << (8 * i); i += 1 }
-      pos += 4; out
-    }
-    def readDouble(): Double = java.lang.Double.longBitsToDouble(readFixed64())
-    def readBytes(): Array[Byte] = {
-      val len = readVarint().toInt
-      if (len < 0 || pos + len > end) throw new OtlpParseException("truncated bytes")
-      val out = java.util.Arrays.copyOfRange(buf, pos, pos + len)
-      pos += len; out
-    }
-    def readString(): String = new String(readBytes(), StandardCharsets.UTF_8)
-    def readSub(): Reader = {
-      val len = readVarint().toInt
-      if (len < 0 || pos + len > end) throw new OtlpParseException("truncated message")
-      val r = new Reader(buf, pos, pos + len)
-      pos += len; r
-    }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => readVarint()
-      case 1 => readFixed64()
-      case 2 => readBytes()
-      case 5 => readFixed32()
-      case w => throw new OtlpParseException(s"unsupported wire type $w")
-    }
-  }
-
   /** u64 as decimal string node (JSON encodes 64-bit ints as strings; keeps
     * the >i64::MAX overflow guard in the shared row builder). */
   private def u64Node(v: Long): JsonNode =
@@ -119,7 +64,7 @@ object OtlpProtoParser {
 
   // ---- common submessages -------------------------------------------------
 
-  private def anyValue(r: Reader): ObjectNode = {
+  private def anyValue(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -153,7 +98,7 @@ object OtlpProtoParser {
   }
   private def nodeLong(v: Long): String = v.toString
 
-  private def keyValue(r: Reader): ObjectNode = {
+  private def keyValue(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -172,7 +117,7 @@ object OtlpProtoParser {
     else { val a = new ArrayNode(nf); target.set[JsonNode](name, a); a }
   }
 
-  private def resource(r: Reader): ObjectNode = {
+  private def resource(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -185,7 +130,7 @@ object OtlpProtoParser {
     o
   }
 
-  private def scope(r: Reader): ObjectNode = {
+  private def scope(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -202,7 +147,7 @@ object OtlpProtoParser {
 
   // ---- logs ---------------------------------------------------------------
 
-  private def resourceLogs(r: Reader): ObjectNode = {
+  private def resourceLogs(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     val scopeLogs = new ArrayNode(nf); o.set[JsonNode]("scopeLogs", scopeLogs)
     while (r.hasMore) {
@@ -228,7 +173,7 @@ object OtlpProtoParser {
     o
   }
 
-  private def logRecord(r: Reader): ObjectNode = {
+  private def logRecord(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -252,7 +197,7 @@ object OtlpProtoParser {
 
   // ---- traces -------------------------------------------------------------
 
-  private def resourceSpans(r: Reader): ObjectNode = {
+  private def resourceSpans(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     val scopeSpans = new ArrayNode(nf); o.set[JsonNode]("scopeSpans", scopeSpans)
     while (r.hasMore) {
@@ -278,7 +223,7 @@ object OtlpProtoParser {
     o
   }
 
-  private def span(r: Reader): ObjectNode = {
+  private def span(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -344,7 +289,7 @@ object OtlpProtoParser {
 
   // ---- metrics ------------------------------------------------------------
 
-  private def resourceMetrics(r: Reader): ObjectNode = {
+  private def resourceMetrics(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     val scopeMetrics = new ArrayNode(nf); o.set[JsonNode]("scopeMetrics", scopeMetrics)
     while (r.hasMore) {
@@ -370,7 +315,7 @@ object OtlpProtoParser {
     o
   }
 
-  private def metric(r: Reader): ObjectNode = {
+  private def metric(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -391,7 +336,7 @@ object OtlpProtoParser {
     o
   }
 
-  private def dataPointsMsg(r: Reader, dp: Reader => ObjectNode): ObjectNode = {
+  private def dataPointsMsg(r: ProtoReader, dp: ProtoReader => ObjectNode): ObjectNode = {
     val o = new ObjectNode(nf)
     val dps = new ArrayNode(nf); o.set[JsonNode]("dataPoints", dps)
     while (r.hasMore) {
@@ -400,7 +345,7 @@ object OtlpProtoParser {
     }
     o
   }
-  private def temporalityMsg(r: Reader, dp: Reader => ObjectNode): ObjectNode = {
+  private def temporalityMsg(r: ProtoReader, dp: ProtoReader => ObjectNode): ObjectNode = {
     val o = new ObjectNode(nf)
     val dps = new ArrayNode(nf); o.set[JsonNode]("dataPoints", dps)
     while (r.hasMore) {
@@ -413,7 +358,7 @@ object OtlpProtoParser {
     }
     o
   }
-  private def sumMsg(r: Reader): ObjectNode = {
+  private def sumMsg(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     val dps = new ArrayNode(nf); o.set[JsonNode]("dataPoints", dps)
     while (r.hasMore) {
@@ -428,7 +373,7 @@ object OtlpProtoParser {
     o
   }
 
-  private def exemplar(r: Reader): ObjectNode = {
+  private def exemplar(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -445,7 +390,7 @@ object OtlpProtoParser {
     o
   }
 
-  private def numberDataPoint(r: Reader): ObjectNode = {
+  private def numberDataPoint(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -464,18 +409,18 @@ object OtlpProtoParser {
   }
 
   /** packed (wire 2) or unpacked (wire 1) repeated fixed64. */
-  private def packedFixed64(o: ObjectNode, name: String, r: Reader, w: Int): Unit = {
+  private def packedFixed64(o: ObjectNode, name: String, r: ProtoReader, w: Int): Unit = {
     val arr = attrList(o, name)
     if (w == 1) arr.add(u64Node(r.readFixed64()))
     else { val sub = r.readSub(); while (sub.hasMore) arr.add(u64Node(sub.readFixed64())) }
   }
-  private def packedDouble(o: ObjectNode, name: String, r: Reader, w: Int): Unit = {
+  private def packedDouble(o: ObjectNode, name: String, r: ProtoReader, w: Int): Unit = {
     val arr = attrList(o, name)
     if (w == 1) arr.add(r.readDouble())
     else { val sub = r.readSub(); while (sub.hasMore) arr.add(sub.readDouble()) }
   }
 
-  private def histogramDataPoint(r: Reader): ObjectNode = {
+  private def histogramDataPoint(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -497,7 +442,7 @@ object OtlpProtoParser {
     o
   }
 
-  private def buckets(r: Reader): ObjectNode = {
+  private def buckets(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -513,7 +458,7 @@ object OtlpProtoParser {
     o
   }
 
-  private def expHistogramDataPoint(r: Reader): ObjectNode = {
+  private def expHistogramDataPoint(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) {
       val (f, w) = r.readTag()
@@ -539,7 +484,7 @@ object OtlpProtoParser {
   }
 
   /** Summary points are decoded but skipped by the row builder. */
-  private def summaryDataPoint(r: Reader): ObjectNode = {
+  private def summaryDataPoint(r: ProtoReader): ObjectNode = {
     val o = new ObjectNode(nf)
     while (r.hasMore) { val (_, w) = r.readTag(); r.skip(w) }
     o

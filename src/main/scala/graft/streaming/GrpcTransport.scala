@@ -21,9 +21,10 @@ import io.netty.util.ReferenceCountUtil
   *     `stream BatchStatus`), one stateful decoder per gRPC stream so
   *     later messages reuse Arrow dictionaries/schemas from earlier ones.
   *
-  * Both families share the HTTP transport's buffering/seal core byte for
-  * byte — `OtlpServer.ingestBody` / `OtlpServer.otapMessage` — so auth,
-  * admission backpressure, group commit, and the lifecycle functions
+  * Both families run the HTTP transport's admission pipeline and seal core
+  * byte for byte — `OtlpServer.ingestBody` / `OtlpServer.otapMessage`,
+  * both over `OtlpServer.admit` — so auth, admission backpressure, group
+  * commit, and the lifecycle functions
   * (flush/stop/server_list/seal_list) behave identically across
   * transports, exactly the reference's "three wire protocols feed the
   * same buffering/seal core" architecture.
@@ -191,10 +192,7 @@ final class GrpcTransport(server: OtlpServer, cfg: ServerConfig) {
           sendTrailers(ctx, GrpcWire.Unavailable, "server stopping")
         case OtapOutcome.TooManyStreams =>
           sendTrailers(ctx, GrpcWire.ResourceExhausted, "too many open OTAP streams")
-        case OtapOutcome.BodyTooLarge =>
-          sendTrailers(ctx, GrpcWire.ResourceExhausted, "decompressed message too large")
-        case OtapOutcome.DecompressFailed(m) =>
-          sendTrailers(ctx, GrpcWire.InvalidArgument, s"decompress failed: $m")
+        case OtapOutcome.Refused(r) => refuse(ctx, r)
       }
     }
 
@@ -214,9 +212,16 @@ final class GrpcTransport(server: OtlpServer, cfg: ServerConfig) {
       val msg = if (unaryMessage != null) unaryMessage else Array.emptyByteArray
       val enc = if (unaryCompressed) "gzip" else "identity"
       server.ingestBody(family, "protobuf", msg, enc) match {
-        case IngestOutcome.Buffered(_, _, _, _) =>
+        case _: IngestOutcome.Buffered =>
           sendMessage(ctx, GrpcWire.emptyResponse)
           sendTrailers(ctx, GrpcWire.OK, "")
+        case r: IngestOutcome.Refused => refuse(ctx, r)
+      }
+    }
+
+    /** End the call with the status of a refused admission. */
+    private def refuse(ctx: ChannelHandlerContext, r: IngestOutcome.Refused): Unit =
+      r match {
         case IngestOutcome.Overloaded =>
           trailersOnly(ctx, GrpcWire.ResourceExhausted, "ingest buffer over capacity")
         case IngestOutcome.BodyTooLarge =>
@@ -228,7 +233,6 @@ final class GrpcTransport(server: OtlpServer, cfg: ServerConfig) {
         case IngestOutcome.EncodeFailed(m) =>
           trailersOnly(ctx, GrpcWire.Internal, s"row encode failed: $m")
       }
-    }
 
     // ---- response plumbing -------------------------------------------------
 

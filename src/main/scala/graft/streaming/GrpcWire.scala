@@ -164,32 +164,13 @@ object GrpcWire {
 
   /** Parse a BatchStatus message: (batch_id, status_code, status_message). */
   def parseBatchStatus(msg: Array[Byte]): (Long, Int, String) = {
-    var i = 0
+    val r = new graft.otlp.ProtoReader(msg)
     var id = 0L; var code = 0; var text = ""
-    def varint(): Long = {
-      var shift = 0; var v = 0L
-      while (true) {
-        val b = msg(i); i += 1
-        v |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return v
-        shift += 7
-      }
-      v
-    }
-    while (i < msg.length) {
-      val tag = varint()
-      ((tag >>> 3).toInt, (tag & 7).toInt) match {
-        case (1, 0) => id = varint()
-        case (2, 0) => code = varint().toInt
-        case (3, 2) =>
-          val l = varint().toInt
-          text = new String(msg, i, l, "UTF-8"); i += l
-        case (_, 0) => varint()
-        case (_, 1) => i += 8
-        case (_, 5) => i += 4
-        case (_, 2) => val l = varint().toInt; i += l
-        case _ => i = msg.length
-      }
+    while (r.hasMore) r.readTag() match {
+      case (1, 0) => id = r.readVarint()
+      case (2, 0) => code = r.readVarint().toInt
+      case (3, 2) => text = r.readString()
+      case (_, w) => r.skip(w)
     }
     (id, code, text)
   }

@@ -1,20 +1,19 @@
 package graft.streaming
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.otlp.{OtlpJsonParser, OtlpParseException, OtlpProtoParser}
+import graft.otlp.{OtlpJsonParser, OtlpParseException, OtlpProtoParser, ProtoReader}
 import org.apache.spark.sql.SparkSession
 
-import java.io.{ByteArrayOutputStream, InputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import java.util.zip.{GZIPInputStream, InflaterInputStream}
-import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** One sealed batch of a single signal; rows are UnsafeRow byte images
-  * (encoded by RowBin on the HTTP worker threads at admission).
+  * (encoded by RowBin on the transport threads at admission).
   *
   * `admittedBytes` is the admission-reservation share (max of wire and
   * resident heap bytes — what `release` must return); `wireBytes` is the
@@ -38,19 +37,23 @@ final case class SealEvent(listenUri: String, seq: Long, success: Boolean,
                            sealsTotal: Long, sealFailuresTotal: Long,
                            atMs: Long)
 
-/** Outcome of one transport-agnostic ingest (`OtlpServer.ingestBody`);
-  * each transport maps these onto its own status space (HTTP 202/400/413/
-  * 503, gRPC OK/INVALID_ARGUMENT/RESOURCE_EXHAUSTED). */
+/** Outcome of one admission (`OtlpServer.admit`). Every ingest request —
+  * an HTTP POST, a gRPC unary Export, one OTAP stream message — ends in
+  * one of these; each transport maps them onto its own status space (HTTP
+  * 202/400/413/503, gRPC OK/INVALID_ARGUMENT/RESOURCE_EXHAUSTED, OTAP
+  * BatchStatus codes). */
 private[streaming] sealed trait IngestOutcome
 private[streaming] object IngestOutcome {
   final case class Buffered(rows: Long, batches: Int,
-                            skippedSummary: Long,
-                            skippedInvalid: Long) extends IngestOutcome
-  case object Overloaded extends IngestOutcome
-  case object BodyTooLarge extends IngestOutcome
-  final case class DecompressFailed(msg: String) extends IngestOutcome
-  final case class Malformed(msg: String) extends IngestOutcome
-  final case class EncodeFailed(msg: String) extends IngestOutcome
+                            skipped: OtlpJsonParser.Skipped)
+      extends IngestOutcome
+  /** Refused before any row reached a buffer; the reservation is released. */
+  sealed trait Refused extends IngestOutcome
+  case object Overloaded extends Refused
+  case object BodyTooLarge extends Refused
+  final case class DecompressFailed(msg: String) extends Refused
+  final case class Malformed(msg: String) extends Refused
+  final case class EncodeFailed(msg: String) extends Refused
 }
 
 /** Outcome of one OTAP streaming-session message
@@ -67,22 +70,25 @@ private[streaming] object OtapOutcome {
   case object AlreadyClosed extends OtapOutcome
   case object Stopping extends OtapOutcome
   case object TooManyStreams extends OtapOutcome
-  case object BodyTooLarge extends OtapOutcome
-  final case class DecompressFailed(msg: String) extends OtapOutcome
+  /** Refused before decode (the body did not decompress within the cap);
+    * the call ends with the unary Export's status for the same refusal. */
+  final case class Refused(outcome: IngestOutcome.Refused) extends OtapOutcome
 }
 
-/** The live OTLP/HTTP ingest server: admission → parse → stage →
-  * commit-to-buffer → (async) seal. The Spark-native re-expression of the
-  * reference's otlp_serve pipeline (src/otlp_server.cpp; SURVEY.md §2.3):
+/** The live ingest server (OTLP/HTTP, OTLP/gRPC or OTAP/gRPC): admission
+  * → parse → stage → commit-to-buffer → (async) seal. The Spark-native
+  * re-expression of the reference's otlp_serve pipeline
+  * (src/otlp_server.cpp; SURVEY.md §2.3):
   * per-signal in-memory columnar buffers group-commit ("seal") into catalog
   * tables or hive-partitioned Parquet through a single serialized writer on
   * size (seal_target_bytes) or age (seal_max_age_ms) triggers.
   *
   * Concurrency model (mirrors the reference):
-  *   - HTTP worker threads run admission (CAS byte reservation against
-  *     max_buffered_bytes — 503 over budget, reservation released on any
-  *     failure), parse the whole request, then commit all staged signals
-  *     under per-signal locks only after every signal converted
+  *   - transport threads run one admission pipeline (`admit`: CAS byte
+  *     reservation against max_buffered_bytes — refused over budget,
+  *     reservation released on any failure), parse the whole request,
+  *     then commit all staged signals under per-signal locks only after
+  *     every signal converted
   *     (all-or-nothing per request; a metrics request fans out to ≤4
   *     buffers with admitted bytes split by rows, remainder to last).
   *   - a single sealer thread waits on a condition (≤1 s poll) for a flush
@@ -253,6 +259,13 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
     isListening = false
     if (http != null) http.stop(0)
     if (grpc != null) grpc.stop()
+    // the sealer starts no cycle once it has seen `stopping`; then wait for
+    // the cycles it already swapped out. Checking the buffers first would
+    // miss their rows, and the caller's session stop would cancel their
+    // writes, with the rows neither sealed nor counted as dropped.
+    sealMonitor.synchronized { sealMonitor.notifyAll() }
+    if (sealerThread != null) sealerThread.join()
+    awaitInflight()
     var attempts = 0
     while (attempts < 3 && bufferedRows > 0) {
       sealOnce("stop")
@@ -261,8 +274,6 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
       awaitInflight()
       attempts += 1
     }
-    sealMonitor.synchronized { sealMonitor.notifyAll() }
-    if (sealerThread != null) sealerThread.join(5000)
     // close every streaming-session decoder (frees Arrow buffers)
     val it = otapSessions.values().iterator()
     while (it.hasNext) {
@@ -381,8 +392,6 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
     val fmt = contentType match {
       case "application/json" | "application/x-ndjson" => "json"
       case "application/x-protobuf"                    => "protobuf"
-      case "application/vnd.apache.arrow.stream" | "application/x-otap"
-          if cfg.uri.scheme == "otap" => "otap"
       case _ => respond(ex, 415,
         s"""{"error":"unsupported content type: $contentType"}"""); return
     }
@@ -391,117 +400,110 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
       return
     }
 
-    val raw = readBody(ex.getRequestBody, cfg.maxBodyBytes)
-    raw match {
+    readCapped(ex.getRequestBody, cfg.maxBodyBytes) match {
       case None =>
-        respond(ex, 413, """{"error":"request body too large"}"""); return
-      case Some(rawBytes) =>
-        // OTAP streaming session: an x-otap-stream header selects the
-        // stateful per-stream decode path (HTTP framing of the reference's
-        // gRPC bidirectional stream — one BatchStatus per message)
-        val streamId = Option(headers.getFirst("x-otap-stream"))
-          .map(_.trim).filter(_.nonEmpty)
-        if (fmt == "otap" && streamId.isDefined) {
-          ingestOtapStream(ex, streamId.get, rawBytes, encoding)
-          return
-        }
-        ingestBody(family, fmt, rawBytes, encoding) match {
-          case IngestOutcome.Overloaded =>
-            respond(ex, 503, """{"error":"ingest buffer over capacity"}""")
-          case IngestOutcome.BodyTooLarge =>
-            respond(ex, 413, """{"error":"decompressed body too large"}""")
-          case IngestOutcome.DecompressFailed(m) =>
-            respond(ex, 400, s"""{"error":"decompress failed: ${esc(m)}"}""")
-          case IngestOutcome.Malformed(m) =>
-            respond(ex, 400, s"""{"error":"${esc(m)}"}""")
-          case IngestOutcome.EncodeFailed(m) =>
-            respond(ex, 400, s"""{"error":"row encode failed: ${esc(m)}"}""")
-          case IngestOutcome.Buffered(rows, batches, sk, si) =>
-            val skippedJson =
-              if (sk + si > 0) s""","skipped":{"summary":$sk,"invalid":$si}"""
-              else ""
-            respond(ex, 202,
-              s"""{"status":"buffered","rows":$rows,"batches":$batches$skippedJson}""")
-        }
+        respond(ex, 413, """{"error":"request body too large"}""")
+      case Some(rawBytes) => ingestBody(family, fmt, rawBytes, encoding) match {
+        case IngestOutcome.Overloaded =>
+          respond(ex, 503, """{"error":"ingest buffer over capacity"}""")
+        case IngestOutcome.BodyTooLarge =>
+          respond(ex, 413, """{"error":"decompressed body too large"}""")
+        case IngestOutcome.DecompressFailed(m) =>
+          respond(ex, 400, s"""{"error":"decompress failed: ${esc(m)}"}""")
+        case IngestOutcome.Malformed(m) =>
+          respond(ex, 400, s"""{"error":"${esc(m)}"}""")
+        case IngestOutcome.EncodeFailed(m) =>
+          respond(ex, 400, s"""{"error":"row encode failed: ${esc(m)}"}""")
+        case IngestOutcome.Buffered(rows, batches, skipped) =>
+          val (sk, si) = (skipped.summaryPoints, skipped.invalidPoints)
+          val skippedJson =
+            if (sk + si > 0) s""","skipped":{"summary":$sk,"invalid":$si}"""
+            else ""
+          respond(ex, 202,
+            s"""{"status":"buffered","rows":$rows,"batches":$batches$skippedJson}""")
+      }
     }
   }
 
-  /** Transport-agnostic ingest of one request body (HTTP POST or gRPC
-    * unary Export message — the reference routes both through the same
-    * buffering helpers, `otlp_server_grpc.cpp:16-46`): admission-reserve
-    * the wire size BEFORE decompress/parse, then parse → UnsafeRow-encode
-    * on the calling (transport worker) thread → buffer commit. The caller
-    * maps the outcome onto its transport's status space. */
+  /** One OTLP request body: an HTTP POST or a gRPC unary Export message
+    * (the reference routes both through the same buffering helpers,
+    * `otlp_server_grpc.cpp:16-46`). `batches` is the envelope count the
+    * HTTP ack reports: non-blank NDJSON lines, 1 for protobuf. */
   private[streaming] def ingestBody(family: String, fmt: String,
                                     rawBytes: Array[Byte],
                                     encoding: String): IngestOutcome = {
-    // admission BEFORE parse: CAS-reserve against max_buffered_bytes
+    var batches = 1
+    admit(rawBytes, encoding) { body =>
+      if (fmt == "protobuf") OtlpProtoParser.parse(body, family, nsAsLong = false)
+      else { batches = countBatches(body); OtlpJsonParser.parse(body) }
+    } match {
+      case b: IngestOutcome.Buffered => b.copy(batches = batches)
+      case refused => refused
+    }
+  }
+
+  /** The one admission pipeline every request runs, in the reference's
+    * order (`IngestDecodedArrowBatch`, `otlp_server_grpc.cpp:15-44`):
+    * reserve the wire size against max_buffered_bytes BEFORE anything
+    * else, decompress under the 8× cap, `decode`, encode to UnsafeRow
+    * images on the calling (transport worker) thread, commit to the
+    * buffers. Only an [[OtlpParseException]] from `decode` is a malformed
+    * body; anything else propagates. */
+  private def admit(rawBytes: Array[Byte], encoding: String)
+                   (decode: Array[Byte] => OtlpJsonParser.ParsedFile): IngestOutcome = {
     val reserve = math.max(rawBytes.length.toLong, 1024L)
     if (!tryReserve(reserve)) return IngestOutcome.Overloaded
-    var reserveTransferred = false
-    // exactly-once release: error paths release-then-return, and the outer
-    // catch must not release a second time — a double release would drift
-    // reservedBytes negative and silently inflate admission capacity
-    var reserveReleased = false
-    def releaseOnce(): Unit =
-      if (!reserveReleased) { reserveReleased = true; release(reserve) }
+    // exactly-once release: each refusal releases and returns, a throw
+    // releases unless commitStaged already handed the reservation to the
+    // buffers — a double release would drift reservedBytes negative and
+    // silently inflate admission capacity
+    def refuse(outcome: IngestOutcome.Refused): IngestOutcome = {
+      release(reserve); outcome
+    }
+    var committed = false
     try {
       val body =
-        try decode(rawBytes, encoding)
+        try decompress(rawBytes, encoding)
         catch {
-          case _: DecompressedTooLarge =>
-            releaseOnce(); return IngestOutcome.BodyTooLarge
-          case e: Exception =>
-            releaseOnce(); return IngestOutcome.DecompressFailed(e.getMessage)
+          case _: DecompressedTooLarge => return refuse(IngestOutcome.BodyTooLarge)
+          case e: Exception => return refuse(IngestOutcome.DecompressFailed(e.getMessage))
         }
       val parsed =
-        try fmt match {
-          case "json"     => OtlpJsonParser.parse(body)
-          case "protobuf" => OtlpProtoParser.parse(body, family, nsAsLong = false)
-          case "otap"     => graft.otlp.OtapDecoder.parse(body, nsAsLong = false)
-        } catch {
-          case e: OtlpParseException =>
-            releaseOnce(); return IngestOutcome.Malformed(e.getMessage)
-        }
-      val batches = countBatches(body, fmt)
-      // encode to UnsafeRow images HERE, on the (many) worker threads,
-      // so the single sealer thread ships ready bytes — this is where
-      // the seal pipeline's per-row conversion cost is paid, 32-wide
+        try decode(body)
+        catch { case e: OtlpParseException => return refuse(IngestOutcome.Malformed(e.getMessage)) }
+      // encode HERE, on the (many) worker threads, so the single sealer
+      // thread ships ready bytes — this is where the seal pipeline's
+      // per-row conversion cost is paid, 32-wide
       val encoded =
         try Signals.map(s => s -> {
           val bin = RowBin.forSignal(s)
           parsed.signal(s).map(bin.toBytes)
         }).filter(_._2.nonEmpty)
-        catch {
-          case e: Exception =>
-            releaseOnce(); return IngestOutcome.EncodeFailed(e.getMessage)
-        }
+        catch { case e: Exception => return refuse(IngestOutcome.EncodeFailed(e.getMessage)) }
       val rows = commitStaged(encoded, reserve)
-      reserveTransferred = true // buffers own the reservation now
+      committed = true
       skippedSummary.addAndGet(parsed.skipped.summaryPoints)
       skippedInvalid.addAndGet(parsed.skipped.invalidPoints)
-      IngestOutcome.Buffered(rows, batches,
-        parsed.skipped.summaryPoints, parsed.skipped.invalidPoints)
+      IngestOutcome.Buffered(rows, 1, parsed.skipped)
     } catch {
-      case e: Exception =>
-        // only release if the reservation wasn't handed to the buffers
-        if (!reserveTransferred) releaseOnce()
+      case e: Throwable =>
+        if (!committed) release(reserve)
         throw e
     }
   }
 
   // ---- OTAP streaming sessions ---------------------------------------------
   //
-  // HTTP framing of the reference's OTAP/Arrow bidirectional stream
-  // (serve.md "gRPC transport"; src/otlp_server_grpc.cpp): the client sends
-  // repeated BatchArrowRecords POSTs under one x-otap-stream id, the server
-  // keeps one stateful decoder per stream (dictionary/schema reuse across
-  // messages) and answers each message with a BatchStatus-shaped JSON
-  // {batch_id, status_code} — 0 OK, 3 INVALID_ARGUMENT (decode failure;
-  // poisons and closes the stream), 8 RESOURCE_EXHAUSTED (backpressure;
-  // stream stays open). Unlike the reference, admission is reserved BEFORE
-  // decode, so a backpressure nack leaves the decoder untouched and the
-  // client can replay the same message with no dictionary double-apply.
+  // The reference's OTAP/Arrow bidirectional stream (serve.md "gRPC
+  // transport"; src/otlp_server_grpc.cpp), on the gRPC wire only: the
+  // server keeps one stateful decoder per stream (dictionary/schema reuse
+  // across messages) and answers each BatchArrowRecords with a BatchStatus
+  // — 0 OK, 3 INVALID_ARGUMENT (decode failure; poisons and closes the
+  // stream), 8 RESOURCE_EXHAUSTED (backpressure; stream stays open),
+  // 13 INTERNAL (encode failure after decode; poisons). Unlike the
+  // reference, admission is reserved BEFORE decode, so a backpressure nack
+  // leaves the decoder untouched and the client can replay the same
+  // message with no dictionary double-apply.
 
   private final class OtapSession {
     val decoder = new graft.otlp.OtapStreamDecoder(nsAsLong = false)
@@ -520,98 +522,38 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
 
   def otapStreamsOpen: Int = otapSessions.size()
 
-  /** BatchArrowRecords.batch_id (field 1 varint) for the ack; -1 unknown. */
-  private def otapBatchId(body: Array[Byte]): Long = {
+  /** BatchArrowRecords.batch_id (field 1 varint) for the ack; -1 unknown
+    * (absent, or the bytes before it do not parse). */
+  private def otapBatchId(body: Array[Byte]): Long =
     try {
-      var i = 0
-      def varint(): Long = {
-        var shift = 0; var v = 0L
-        while (true) {
-          val b = body(i); i += 1
-          v |= (b & 0x7fL) << shift
-          if ((b & 0x80) == 0) return v
-          shift += 7
-        }
-        v
-      }
-      while (i < body.length) {
-        val tag = varint()
-        val (f, w) = ((tag >>> 3).toInt, (tag & 7).toInt)
-        if (f == 1 && w == 0) return varint()
-        w match {
-          case 0 => varint()
-          case 1 => i += 8
-          case 5 => i += 4
-          case 2 => val l = varint().toInt; i += l
-          case _ => return -1L
-        }
+      val r = new ProtoReader(body)
+      while (r.hasMore) r.readTag() match {
+        case (1, 0) => return r.readVarint()
+        case (_, w) => r.skip(w)
       }
       -1L
-    } catch { case _: Exception => -1L }
-  }
-
-  private def batchStatus(code: Int, batchId: Long, extra: String = ""): String =
-    s"""{"batch_id":$batchId,"status_code":$code$extra}"""
+    } catch { case _: OtlpParseException => -1L }
 
   /** batch_id from a possibly-compressed body WITHOUT materializing it:
     * decompress at most 128 bytes (BatchArrowRecords.batch_id is field 1,
     * written first by standard serializers) and scan those. -1 unknown. */
-  private def peekBatchId(rawBytes: Array[Byte], encoding: String): Long = {
-    if (encoding == "identity") return otapBatchId(rawBytes)
-    try {
-      val in: InputStream = encoding match {
-        case "gzip" => new GZIPInputStream(new java.io.ByteArrayInputStream(rawBytes))
-        case "deflate" => new InflaterInputStream(new java.io.ByteArrayInputStream(rawBytes))
-        case _ => return -1L
-      }
-      try {
-        val head = new Array[Byte](128)
-        var off = 0
-        var n = in.read(head, off, head.length - off)
-        while (n > 0 && off < head.length) { off += n; n = in.read(head, off, head.length - off) }
-        otapBatchId(java.util.Arrays.copyOf(head, off))
-      } finally in.close()
+  private def peekBatchId(rawBytes: Array[Byte], encoding: String): Long =
+    if (encoding == "identity") otapBatchId(rawBytes)
+    else try {
+      val in = inflate(rawBytes, encoding)
+      try otapBatchId(in.readNBytes(128)) finally in.close()
     } catch { case _: Exception => -1L }
-  }
 
   private def poisonSession(sess: OtapSession): Unit = {
     sess.poisoned = true
     try sess.decoder.close() catch { case _: Exception => () }
   }
 
-  private def ingestOtapStream(ex: HttpExchange, sid: String,
-                               rawBytes: Array[Byte], encoding: String): Unit =
-    otapMessage(sid, rawBytes, encoding) match {
-      case OtapOutcome.Stopping =>
-        respond(ex, 503, """{"error":"server stopping"}""")
-      case OtapOutcome.TooManyStreams =>
-        respond(ex, 503, """{"error":"too many open OTAP streams"}""")
-      case OtapOutcome.AlreadyClosed =>
-        respond(ex, 409, batchStatus(3, -1L,
-          ""","error":"stream closed by an earlier decode failure""""))
-      case OtapOutcome.BodyTooLarge =>
-        respond(ex, 413, """{"error":"decompressed body too large"}""")
-      case OtapOutcome.DecompressFailed(m) =>
-        respond(ex, 400, s"""{"error":"decompress failed: ${esc(m)}"}""")
-      case OtapOutcome.Nack(code, batchId, msg, _) =>
-        val http = code match {
-          case 8 => 503 // backpressure
-          case 13 => 500 // encode failure
-          case _ => 400 // decode failure
-        }
-        respond(ex, http, batchStatus(code, batchId, s""","error":"${esc(msg)}""""))
-      case OtapOutcome.Ok(batchId, rows) =>
-        respond(ex, 202, batchStatus(0, batchId, s""","rows":$rows"""))
-    }
-
-  /** Transport-agnostic OTAP streaming-session message: one stateful
-    * decoder per stream id (dictionary/schema reuse across messages), one
-    * message at a time per stream. Both framings route here — the HTTP
-    * x-otap-stream facade and the canonical gRPC `Arrow*Service` stream
-    * (sid = connection+stream id). The reference's status semantics
-    * (serve.md "gRPC transport"): decode failure nacks with
-    * INVALID_ARGUMENT and closes/poisons the stream; backpressure nacks
-    * with RESOURCE_EXHAUSTED and leaves it open. */
+  /** One OTAP streaming-session message (the gRPC `Arrow*Service` stream;
+    * sid = connection+stream id): one stateful decoder per stream id, one
+    * message at a time per stream, admitted through [[admit]]. A decode
+    * failure nacks with INVALID_ARGUMENT and poisons the stream;
+    * backpressure nacks with RESOURCE_EXHAUSTED and leaves it open. */
   private[streaming] def otapMessage(sid: String, rawBytes: Array[Byte],
                                      encoding: String): OtapOutcome = {
     // acquire a live session: the idle sweep may close one between lookup
@@ -647,64 +589,29 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
       // dead stream id must not keep it alive past the idle sweep
       if (sess.poisoned) return OtapOutcome.AlreadyClosed
       sess.lastUsedMs = System.currentTimeMillis()
-      // admission BEFORE decompress+decode, like the non-stream path: a
-      // nacked message holds no decompressed bytes on the heap and never
-      // touched the decoder, so a retry replays it cleanly. The nack still
-      // carries the real batch_id — standard serializers write field 1
-      // first, so a bounded 128-byte decompression peek recovers it
-      // without materializing the body.
-      val reserve = math.max(rawBytes.length.toLong, 1024L)
-      if (!tryReserve(reserve)) {
-        return OtapOutcome.Nack(8, peekBatchId(rawBytes, encoding),
-          "ingest buffer over capacity", streamDead = false)
-      }
-      var reserveTransferred = false
-      var reserveReleased = false
-      def releaseOnce(): Unit =
-        if (!reserveReleased) { reserveReleased = true; release(reserve) }
-      try {
-        val body =
-          try decode(rawBytes, encoding)
-          catch {
-            case _: DecompressedTooLarge =>
-              releaseOnce(); return OtapOutcome.BodyTooLarge
-            case e: Exception =>
-              releaseOnce(); return OtapOutcome.DecompressFailed(e.getMessage)
-          }
-        val batchId = otapBatchId(body)
-        val parsed =
-          try sess.decoder.decode(body)
-          catch {
-            case e: OtlpParseException =>
-              // decode failure poisons the stream: decoder state may be
-              // partially advanced and cannot be trusted for later messages
-              poisonSession(sess)
-              releaseOnce()
-              return OtapOutcome.Nack(3, batchId, e.getMessage, streamDead = true)
-          }
-        val encoded =
-          try Signals.map(s => s -> {
-            val bin = RowBin.forSignal(s)
-            parsed.signal(s).map(bin.toBytes)
-          }).filter(_._2.nonEmpty)
-          catch {
-            case e: Exception =>
-              // the message was consumed by the decoder; a replay would
-              // double-apply dictionary deltas — poison, like the reference
-              poisonSession(sess)
-              releaseOnce()
-              return OtapOutcome.Nack(13, batchId,
-                s"row encode failed: ${e.getMessage}", streamDead = true)
-          }
-        val rows = commitStaged(encoded, reserve)
-        reserveTransferred = true
-        skippedSummary.addAndGet(parsed.skipped.summaryPoints)
-        skippedInvalid.addAndGet(parsed.skipped.invalidPoints)
-        OtapOutcome.Ok(batchId, rows)
-      } catch {
-        case e: Exception =>
-          if (!reserveTransferred) releaseOnce()
-          throw e
+      var batchId = -1L
+      admit(rawBytes, encoding) { body =>
+        batchId = otapBatchId(body)
+        sess.decoder.decode(body)
+      } match {
+        case IngestOutcome.Buffered(rows, _, _) => OtapOutcome.Ok(batchId, rows)
+        // a nacked message never touched the decoder, so a retry replays
+        // it cleanly; the nack still carries the real batch_id from a
+        // bounded peek that does not materialize the body
+        case IngestOutcome.Overloaded =>
+          OtapOutcome.Nack(8, peekBatchId(rawBytes, encoding),
+            "ingest buffer over capacity", streamDead = false)
+        // decoder state may be partially advanced and cannot be trusted
+        // for later messages
+        case IngestOutcome.Malformed(m) =>
+          poisonSession(sess)
+          OtapOutcome.Nack(3, batchId, m, streamDead = true)
+        // the decoder consumed the message; a replay would double-apply
+        // dictionary deltas — poison, like the reference
+        case IngestOutcome.EncodeFailed(m) =>
+          poisonSession(sess)
+          OtapOutcome.Nack(13, batchId, s"row encode failed: $m", streamDead = true)
+        case refused: IngestOutcome.Refused => OtapOutcome.Refused(refused)
       }
     } finally sess.lock.unlock()
   }
@@ -745,17 +652,23 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
     }
   }
 
-  /** read up to maxBytes; None when exceeded. */
-  private def readBody(in: InputStream, maxBytes: Long): Option[Array[Byte]] = {
+  /** Copy `in` into memory; None once more than `cap` bytes arrive. */
+  private def readCapped(in: InputStream, cap: Long): Option[Array[Byte]] = {
     val out = new ByteArrayOutputStream()
     val buf = new Array[Byte](64 * 1024)
     var n = in.read(buf)
     while (n >= 0) {
       out.write(buf, 0, n)
-      if (out.size() > maxBytes) return None
+      if (out.size() > cap) return None
       n = in.read(buf)
     }
     Some(out.toByteArray)
+  }
+
+  /** The decompressing stream over a gzip or deflate body. */
+  private def inflate(body: Array[Byte], encoding: String): InputStream = {
+    val in = new ByteArrayInputStream(body)
+    if (encoding == "gzip") new GZIPInputStream(in) else new InflaterInputStream(in)
   }
 
   private final class DecompressedTooLarge extends RuntimeException
@@ -763,43 +676,29 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
   /** Decompress with a hard cap (8× the body cap): max_body_bytes limits
     * only the wire size, so an unbounded inflate would be a decompression
     * bomb against the driver. */
-  private def decode(body: Array[Byte], encoding: String): Array[Byte] = {
-    if (encoding == "identity") return body
-    val in: InputStream = encoding match {
-      case "gzip" => new GZIPInputStream(new java.io.ByteArrayInputStream(body))
-      case "deflate" => new InflaterInputStream(new java.io.ByteArrayInputStream(body))
+  private def decompress(body: Array[Byte], encoding: String): Array[Byte] =
+    if (encoding == "identity") body
+    else {
+      val in = inflate(body, encoding)
+      try readCapped(in, 8L * cfg.maxBodyBytes).getOrElse(throw new DecompressedTooLarge)
+      finally in.close()
     }
-    try {
-      val cap = 8L * cfg.maxBodyBytes
-      val out = new ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) {
-        out.write(buf, 0, n)
-        if (out.size() > cap) throw new DecompressedTooLarge
-        n = in.read(buf)
-      }
-      out.toByteArray
-    } finally in.close()
-  }
 
-  /** Envelope count for the response JSON: non-blank lines, counted at the
-    * byte level — decoding the (≤16 MiB) body to a String on the hot ingest
-    * path just to split it was measurable overhead. */
-  private def countBatches(body: Array[Byte], fmt: String): Int = fmt match {
-    case "json" =>
-      var count = 0
-      var lineHasInk = false
-      var i = 0
-      while (i < body.length) {
-        val b = body(i)
-        if (b == '\n') { if (lineHasInk) count += 1; lineHasInk = false }
-        else if (b != ' ' && b != '\t' && b != '\r') lineHasInk = true
-        i += 1
-      }
-      if (lineHasInk) count += 1
-      math.max(1, count)
-    case _ => 1
+  /** NDJSON envelope count for the response JSON: non-blank lines, counted
+    * at the byte level — decoding the (≤16 MiB) body to a String on the hot
+    * ingest path just to split it was measurable overhead. */
+  private def countBatches(body: Array[Byte]): Int = {
+    var count = 0
+    var lineHasInk = false
+    var i = 0
+    while (i < body.length) {
+      val b = body(i)
+      if (b == '\n') { if (lineHasInk) count += 1; lineHasInk = false }
+      else if (b != ' ' && b != '\t' && b != '\r') lineHasInk = true
+      i += 1
+    }
+    if (lineHasInk) count += 1
+    math.max(1, count)
   }
 
   // ---- admission + buffers -------------------------------------------------
@@ -879,7 +778,7 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
   private def sealerLoop(): Unit = {
     while (!stopping.get()) {
       val due = sealMonitor.synchronized {
-        if (!sealRequested && !flushRequested) sealMonitor.wait(1000)
+        if (!sealRequested && !flushRequested && !stopping.get()) sealMonitor.wait(1000)
         val d = sealRequested || flushRequested
         sealRequested = false; flushRequested = false
         d

@@ -49,6 +49,22 @@ object ServerConfig {
 
   private def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
 
+  /** The wire a listener runs, decided here alone. otlp_serve defaults to
+    * OTLP/HTTP, with transport := 'grpc' selecting OTLP/gRPC unary Export.
+    * otap_serve is the OTAP/Arrow gRPC stream only ("otap_serve is
+    * gRPC-only — transport must be 'grpc' or omitted", serve.md). The gRPC
+    * wire runs on Spark's own netty-codec-http2 (GrpcTransport.scala), no
+    * gRPC runtime needed. A gRPC listener exposes no HTTP endpoints
+    * (serve.md), so the wires are exclusive per listener; both feed the
+    * same admission pipeline and seal core. */
+  def transportOf(scheme: String, params: Map[String, String]): String = {
+    val t = params.getOrElse("transport", if (scheme == "otap") "grpc" else "http")
+    if (scheme == "otap" && t != "grpc")
+      fail(s"otap_serve is gRPC-only: transport must be 'grpc' or omitted, got '$t'")
+    if (t != "http" && t != "grpc") fail(s"transport must be 'http' or 'grpc', got '$t'")
+    t
+  }
+
   def mintToken(): String = {
     val b = new Array[Byte](16)
     new SecureRandom().nextBytes(b)
@@ -85,19 +101,7 @@ object ServerConfig {
     }
     val schema = params.getOrElse("schema", "otlp")
     if (schema.isEmpty) fail("schema must not be empty")
-    // otlp_serve defaults to OTLP/HTTP with transport := 'grpc' selecting
-    // OTLP/gRPC unary Export; otap_serve defaults to the canonical
-    // OTAP/Arrow gRPC stream ("otap_serve is gRPC-only — transport must
-    // be 'grpc' or omitted", serve.md), with transport := 'http' kept as
-    // a documented extension: the x-otap-stream POST facade for
-    // HTTP-only clients. The gRPC wire runs on Spark's own
-    // netty-codec-http2 (GrpcTransport.scala) — no gRPC runtime needed.
-    // A gRPC listener exposes no HTTP endpoints (serve.md), so the two
-    // are exclusive per listener; both feed the same buffering/seal core.
-    val transport = params.getOrElse("transport",
-      if (fn == "otap_serve") "grpc" else "http")
-    if (transport != "http" && transport != "grpc")
-      fail(s"transport must be 'http' or 'grpc', got '$transport'")
+    val transport = transportOf(uri.scheme, params)
     // parquet_export_path is the reference's canonical parameter name; the
     // target/parquet_root pair is kept as an accepted spelling of the same
     // thing. A non-empty export path IS the parquet target and is mutually

@@ -251,6 +251,27 @@ class OtapReaderSpec extends SparkTestBase {
     } finally d.close()
   }
 
+  test("a truncated ArrowPayload is an OTLP parse error naming the file") {
+    // BatchArrowRecords{batch_id=1, arrow_payloads=[08 80]}: the envelope
+    // is whole, the payload is cut inside its first varint
+    val truncated = graft.streaming.GrpcWire.Pb.msg { o =>
+      graft.streaming.GrpcWire.Pb.vint(o, 1, 1L)
+      graft.streaming.GrpcWire.Pb.lenDelim(o, 2, Array[Byte](0x08, 0x80.toByte))
+    }
+    val tmp = java.nio.file.Files.createTempFile("logs-truncated", ".bar")
+    java.nio.file.Files.write(tmp, truncated)
+    try {
+      val e = intercept[Exception] {
+        Otlp.readOtapLogs(spark, tmp.toString).count()
+      }
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(e).exists(m => m.contains("OTLP parse error on") &&
+        m.contains(tmp.getFileName.toString) && m.contains("truncated varint")),
+        msgs(e).mkString("|"))
+    } finally java.nio.file.Files.delete(tmp)
+  }
+
   test("otap value spot checks") {
     assume(available)
     val logs = Otlp.readOtapLogs(spark, s"$corpus/logs-initial.bar")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * RESOURCE_EXHAUSTED / UNIMPLEMENTED). Runs over real HTTP/2 h2c via the
   * netty-based GrpcClient. */
 class OtlpGrpcSpec extends SparkTestBase {
-  private val ports = SparkTestBase.freePorts(2)
+  private val ports = SparkTestBase.freePorts(4)
 
   import ProtoW._
 
@@ -143,7 +143,7 @@ class OtlpGrpcSpec extends SparkTestBase {
 
       // one stream, two messages: the second decodes ONLY through the
       // dictionaries message 1 established — the state lives on the gRPC
-      // stream itself, no x-otap-stream header needed on this wire
+      // stream itself
       val call = cli.open(ArrowLogsPath, Some(Token))
       call.send(bar("logs-initial.bar"))
       val ack1 = GrpcWire.parseBatchStatus(call.nextMessage().get)
@@ -182,6 +182,98 @@ class OtlpGrpcSpec extends SparkTestBase {
       val logs = spark.table("otlptest_grpcotap.otlp_logs")
       assert(logs.count() == 6)
       assert(logs.where(col("event_name") === "second-event").count() == 2)
+    } finally {
+      cli.close()
+      OtlpServe.otlpStop(spark, uri)
+    }
+  }
+
+  test("gRPC OTAP stream from OtapEncoder: acks, backpressure nack, replay, " +
+    "fresh-stream nack closes, exactly the acked rows land") {
+    // No corpus needed: the engine's own encoder builds a producer session
+    // whose later batches are larger than its first. Message 1 is an
+    // initial message (schema + a 1-row batch); message 2 is a batch-only
+    // continuation of 200 rows, decodable only through the reader state
+    // message 1 left on the stream.
+    val (logsInit, _, attrsInit, _) =
+      graft.otlp.OtapEncoder.logsRecordSlices(n = 1, service = "enc-service")
+    val (_, logsCont, _, attrsCont) =
+      graft.otlp.OtapEncoder.logsRecordSlices(n = 200, service = "enc-service")
+    val initial = graft.otlp.OtapEncoder.batchMessage(1L, logsInit, attrsInit)
+    val continuation = graft.otlp.OtapEncoder.batchMessage(2L, logsCont, attrsCont)
+    // admission reserves max(wire bytes, 1024) per message: the budget
+    // holds the continuation alone but not on top of the buffered initial
+    // message, which stays under half of it (no pressure-triggered seal)
+    val reserveInitial = math.max(initial.length, 1024)
+    val budget = math.max(continuation.length, 1024) + 512
+    assert(reserveInitial > 512 && 2 * reserveInitial < budget,
+      s"initial ${initial.length} B, continuation ${continuation.length} B")
+    val uri = s"otap:127.0.0.1:${ports(2)}"
+    OtlpServe.otapServe(spark, uri,
+      Map("token" -> Token, "schema" -> "otlptest_grpcotapenc",
+        "max_buffered_bytes" -> budget.toString,
+        "seal_target_bytes" -> "1073741824", "seal_max_age_ms" -> "3600000"))
+    val cli = new GrpcClient("127.0.0.1", ports(2))
+    try {
+      val call = cli.open(ArrowLogsPath, Some(Token))
+      call.send(initial)
+      assert(GrpcWire.parseBatchStatus(call.nextMessage().get) == ((1L, 0, "rows=1")))
+
+      // the continuation does not fit next to message 1: backpressure
+      // nack (8) with its batch id, and the stream stays open
+      call.send(continuation)
+      assert(GrpcWire.parseBatchStatus(call.nextMessage().get) ==
+        ((2L, 8, "ingest buffer over capacity")))
+
+      // drain, then replay on the same stream: it decodes, so the nack
+      // left the decoder untouched
+      OtlpServe.otlpFlush(spark, uri)
+      call.send(continuation)
+      assert(GrpcWire.parseBatchStatus(call.nextMessage().get) == ((2L, 0, "rows=200")))
+      call.halfClose()
+      assert(call.awaitStatus()._1 == GrpcWire.OK)
+
+      // the continuation on a fresh stream has no schema to decode
+      // through: nack 3, and the server closes the stream
+      OtlpServe.otlpFlush(spark, uri)
+      val fresh = cli.open(ArrowLogsPath, Some(Token))
+      fresh.send(continuation)
+      val nack = GrpcWire.parseBatchStatus(fresh.nextMessage().get)
+      assert(nack._1 == 2L && nack._2 == 3, s"nack $nack")
+      assert(fresh.awaitStatus()._1 == GrpcWire.OK)
+      assert(OtlpServe.get(uri).get.otapStreamsOpen == 0)
+      // the stream needs the token too
+      assert(cli.open(ArrowLogsPath, None).awaitStatus()._1 == GrpcWire.Unauthenticated)
+
+      // exactly the acked rows: 1 + 200, none of the nacked messages
+      OtlpServe.otlpFlush(spark, uri)
+      val logs = spark.table("otlptest_grpcotapenc.otlp_logs")
+      assert(logs.count() == 201)
+      assert(logs.where(col("service_name") === "enc-service").count() == 201)
+    } finally {
+      cli.close()
+      OtlpServe.otlpStop(spark, uri)
+    }
+  }
+
+  test("gRPC OTAP stream: a truncated ArrowPayload nacks 3 and closes the stream") {
+    // BatchArrowRecords{batch_id=7, arrow_payloads=[08 80]}: the payload
+    // is cut inside its first varint
+    val truncated = GrpcWire.Pb.msg { o =>
+      GrpcWire.Pb.vint(o, 1, 7L)
+      GrpcWire.Pb.lenDelim(o, 2, Array[Byte](0x08, 0x80.toByte))
+    }
+    val uri = s"otap:127.0.0.1:${ports(3)}"
+    OtlpServe.otapServe(spark, uri,
+      Map("token" -> Token, "schema" -> "otlptest_grpcotaptrunc"))
+    val cli = new GrpcClient("127.0.0.1", ports(3))
+    try {
+      val call = cli.open(ArrowLogsPath, Some(Token))
+      call.send(truncated)
+      val nack = call.nextMessage(5000).map(GrpcWire.parseBatchStatus)
+      assert(nack == Some((7L, 3, "truncated varint")), s"nack $nack")
+      assert(call.awaitStatus()._1 == GrpcWire.OK)
+      assert(OtlpServe.get(uri).get.otapStreamsOpen == 0)
     } finally {
       cli.close()
       OtlpServe.otlpStop(spark, uri)

@@ -112,6 +112,10 @@ class OtlpServeSpec extends SparkTestBase {
     assert(intercept[Exception](
       OtlpServe.otapServe(spark, s"otlp:127.0.0.1:${ports(3)}", Map("token" -> Token)))
       .getMessage.contains("otap_serve requires an 'otap:' URI"))
+    assert(intercept[Exception](
+      OtlpServe.otapServe(spark, s"otap:127.0.0.1:${ports(12)}",
+        Map("token" -> Token, "transport" -> "http")))
+      .getMessage.contains("transport must be 'grpc' or omitted"))
   }
 
   // ---- lifecycle ----------------------------------------------------------
@@ -378,69 +382,6 @@ class OtlpServeSpec extends SparkTestBase {
     // sealing releases the decoded-size reservation and ingest resumes
     assert(OtlpServe.otlpFlush(spark, uri).first().getAs[String]("status") == "sealed")
     assert(post(url, "/v1/logs", gzBody, hdrs).statusCode() == 202)
-    OtlpServe.otlpStop(spark, uri)
-  }
-
-  test("OTAP streaming session: ack, dict reuse, backpressure nack, poison") {
-    // HTTP framing of the reference's bidirectional OTAP stream contract
-    // (serve.md "gRPC transport"; test/manual/otap_serve_arrow_stream.py):
-    // one BatchStatus per message; decode failure poisons and closes the
-    // stream; a backpressure nack leaves it open with state intact.
-    val corpus = "/root/reference/test/data/otap"
-    assume(new java.io.File(s"$corpus/logs-reuse.bar").exists())
-    def bar(name: String) = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$corpus/$name"))
-    val uri = s"otap:127.0.0.1:${ports(12)}"
-    // transport := 'http' selects the x-otap-stream POST facade this test
-    // exercises (the default otap transport is the canonical gRPC stream,
-    // covered by OtlpGrpcSpec)
-    val r = OtlpServe.otapServe(spark, uri,
-      Map("token" -> Token, "schema" -> "otlptest_otapstream",
-        "transport" -> "http",
-        "max_buffered_bytes" -> "25000",
-        "seal_target_bytes" -> "1073741824",
-        "seal_max_age_ms" -> "3600000")).first()
-    val url = r.getAs[String]("listen_url")
-    val hdrs = Map("Content-Type" -> "application/vnd.apache.arrow.stream",
-      "Authorization" -> s"Bearer $Token", "x-otap-stream" -> "s1")
-
-    // message 1: initial (schema + dictionaries) → OK ack with rows
-    val a1 = post(url, "/v1/logs", bar("logs-initial.bar"), hdrs)
-    assert(a1.statusCode() == 202, a1.body())
-    assert(a1.body().contains("\"status_code\":0"), a1.body())
-    assert(a1.body().contains("\"rows\":3"), a1.body())
-
-    // message 2 while message 1 is still buffered: backpressure nack (8);
-    // the stream stays OPEN and the decoder never saw the message
-    val nack = post(url, "/v1/logs", bar("logs-reuse.bar"), hdrs)
-    assert(nack.statusCode() == 503, nack.body())
-    assert(nack.body().contains("\"status_code\":8"), nack.body())
-
-    // drain, then REPLAY the nacked message on the same stream: the reuse
-    // message decodes only through dictionaries established by message 1,
-    // so this ack proves the nack left per-stream state intact
-    OtlpServe.otlpFlush(spark, uri)
-    val a2 = post(url, "/v1/logs", bar("logs-reuse.bar"), hdrs)
-    assert(a2.statusCode() == 202, a2.body())
-    assert(a2.body().contains("\"rows\":3"), a2.body())
-
-    // the same reuse message on a FRESH stream has no dictionary state →
-    // decode nack (3) and the stream is closed (poisoned)
-    val h2 = hdrs.updated("x-otap-stream", "s2")
-    val bad = post(url, "/v1/logs", bar("logs-reuse.bar"), h2)
-    assert(bad.statusCode() == 400, bad.body())
-    assert(bad.body().contains("\"status_code\":3"), bad.body())
-    val closed = post(url, "/v1/logs", bar("logs-initial.bar"), h2)
-    assert(closed.statusCode() == 409, closed.body())
-
-    // the poisoned stream corrupted nothing: both healthy messages landed
-    OtlpServe.otlpFlush(spark, uri)
-    val logs = spark.table("otlptest_otapstream.otlp_logs")
-    assert(logs.count() == 6)
-    assert(logs.select("service_name").distinct().collect()
-      .map(_.getString(0)).toSeq == Seq("fixture-service"))
-    assert(logs.where(col("event_name") === "second-event").count() == 2)
-
     OtlpServe.otlpStop(spark, uri)
   }
 

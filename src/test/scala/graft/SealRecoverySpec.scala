@@ -11,7 +11,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
   * and the cadence-gated post-seal compaction. */
 class SealRecoverySpec extends SparkTestBase {
 
-  private val ports = SparkTestBase.freePorts(7)
+  private val ports = SparkTestBase.freePorts(8)
 
   private val fx = "src/test/resources/otlp"
   private val client = HttpClient.newHttpClient()
@@ -82,6 +82,37 @@ class SealRecoverySpec extends SparkTestBase {
     // stop drains with 3 attempts, then reports the undeliverable rows
     val st = OtlpServe.otlpStop(spark, uri).first()
     assert(st.getAs[Long]("dropped_rows") == 3L)
+  }
+
+  test("otlp_stop waits for a seal cycle in flight and counts the rows it fails to land") {
+    val uri = s"otlp:127.0.0.1:${ports(7)}"
+    // a 1-byte seal target: the sealer thread itself swaps the posted rows
+    // out, as an age or size seal would be when a shutdown arrives
+    OtlpServe.otlpServe(spark, uri, Map(
+      "token" -> Token, "schema" -> "otlptest_stopwait",
+      "seal_max_age_ms" -> "3600000", "seal_target_bytes" -> "1"))
+    val server = OtlpServe.get(uri).get
+    val inWrite = new java.util.concurrent.CountDownLatch(1)
+    val proceed = new java.util.concurrent.CountDownLatch(1)
+    // the cycle blocks inside its write; once let go it loses the table
+    // and fails, so no retry can land its rows
+    server.writer.failAfterCatalogCommit = { s =>
+      inWrite.countDown()
+      proceed.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      spark.sql("DROP TABLE IF EXISTS otlptest_stopwait.otlp_logs")
+      throw new RuntimeException(s"injected failure of the in-flight seal ($s)")
+    }
+    assert(post(ports(7), fixture("logs_simple.jsonl")).statusCode() == 202)
+    assert(inWrite.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    assert(server.bufferedRows == 0L) // swapped out into the blocked cycle
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val stop = scala.concurrent.Future(OtlpServe.otlpStop(spark, uri).first())
+    Thread.sleep(1000)
+    assert(!stop.isCompleted, "otlp_stop returned while a seal cycle was in flight")
+    proceed.countDown()
+    val st = scala.concurrent.Await.result(stop, scala.concurrent.duration.Duration(120, "s"))
+    assert(st.getAs[Long]("dropped_rows") == 3L)
+    server.writer.failAfterCatalogCommit = null
   }
 
   test("cadence-gated post-seal compaction merges small files") {

@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The mains share one session shape, and their dev switches stay
-  * the documented few. */
+/** The mains share one session shape, their dev switches stay the
+  * documented few, and src/main keeps one protobuf varint decoder. */
 class SessionsSpec extends AnyFunSuite {
 
   test("Sessions.conf is Bench's session shape") {
@@ -52,5 +52,14 @@ class SessionsSpec extends AnyFunSuite {
       case (p, src) if src.contains("\"SPARK_GRAFT_CPUS\"") => p.getFileName.toString
     }
     assert(cpuReaders == Seq("Sessions.scala"))
+  }
+
+  test("only ProtoReader decodes a protobuf varint in src/main") {
+    // hand-rolled varint loops drifted apart on bounds checks; every
+    // reader goes through the one bounds-checked ProtoReader
+    val decoders = mainSources.collect {
+      case (p, src) if src.contains("& 0x7fL) <<") => p.getFileName.toString
+    }
+    assert(decoders == Seq("ProtoReader.scala"))
   }
 }
