@@ -16,14 +16,22 @@ package graft
   *            actually measures)
   *
   * and writes `<outDir>/<name>.txt` with the timing line,
-  * explain("formatted"), and one line per Spark job the query ran (both
-  * invocations, eager operator jobs included: its wall time in us and
-  * call site) — the before/after evidence files for
-  * OPTIMIZATION_r17.md / plans/r17.
+  * explain("formatted") (per-run identities masked, see [[masked]]), and
+  * one line per Spark job the query ran (both invocations, eager operator
+  * jobs included: its wall time in us and call site) — the before/after
+  * evidence files for OPTIMIZATION_r17.md / plans/r17.
   *
   * Usage: runMain graft.PlanProbe <sfDir> <outDir> <prefix,prefix,...>
   * env: SPARK_GRAFT_CPUS — the same session shape as Bench. */
 object PlanProbe {
+  /** `plan` with its per-run identities masked (expression ids `#123` ->
+    * `#`, exchange ids `plan_id=45` -> `plan_id=#`, lambda instances ->
+    * `$Lambda`), so that the files of two runs differ only where their
+    * plans do. */
+  private[graft] def masked(plan: String): String =
+    plan.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=#")
+      .replaceAll("\\$Lambda\\$[^\\s,)\\]]+", "\\$Lambda")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, filter) = args.take(3)
     val spark = Sessions.local()
@@ -80,8 +88,8 @@ object PlanProbe {
             ms(t3)
           }
           println(f"$name%-28s $tBuild%8.0f $tPlan%8.0f $tExec1%8.0f $tExec2%8.0f")
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val plan = masked(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
           java.nio.file.Files.writeString(file(name),
             s"== PlanProbe $name (ms): build=$tBuild plan=$tPlan " +
               s"exec1=$tExec1 exec2=$tExec2 ==\n\n$plan")

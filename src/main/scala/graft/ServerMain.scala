@@ -55,7 +55,14 @@ object ServerMain {
       tokenMinted: Boolean,
       startupTimeoutSecs: Int,
       sparkMaster: String,
-      dryRun: Boolean)
+      dryRun: Boolean) {
+    /** The listen URI and its wire, decided when the config is built so
+      * that a bad URI or transport is a config error. A gRPC listener
+      * exposes no HTTP /readyz; ServerConfig decides which wire a
+      * listener runs. */
+    val uri: OtlpUriParts = OtlpUri.parse(listenUri)
+    val grpc: Boolean = ServerConfig.transportOf(uri.scheme, serveParams) == "grpc"
+  }
 
   /** Resolve the daemon configuration from an env lookup (injectable for
     * tests; `main` passes `sys.env.get`). Mirrors ServerConfig::FromEnv. */
@@ -154,24 +161,15 @@ object ServerMain {
   /** `healthcheck` argument entry: probe the configured listener's actual
     * transport (gRPC = TCP connect, HTTP = /readyz). 0 healthy, 1 not. */
   def runHealthCheck(env: String => Option[String]): Int = {
-    val (uri, grpc) = try {
-      val cfg = configFromEnv(env)
-      val uri = OtlpUri.parse(cfg.listenUri)
-      (uri, grpcWire(cfg, uri))
-    } catch {
+    val cfg = try configFromEnv(env) catch {
       case e: Exception =>
         System.err.println(s"ERROR: ${e.getMessage}"); return 2
     }
-    val host = healthCheckHost(uri.host)
-    val ok = if (grpc) tcpConnectOk(host, uri.port)
-             else httpStatusOk(host, uri.port, "/readyz")
+    val host = healthCheckHost(cfg.uri.host)
+    val ok = if (cfg.grpc) tcpConnectOk(host, cfg.uri.port)
+             else httpStatusOk(host, cfg.uri.port, "/readyz")
     if (ok) 0 else 1
   }
-
-  /** A gRPC listener exposes no HTTP /readyz; ServerConfig decides which
-    * wire a listener runs. */
-  private def grpcWire(cfg: DaemonConfig, uri: OtlpUriParts): Boolean =
-    ServerConfig.transportOf(uri.scheme, cfg.serveParams) == "grpc"
 
   // ---- lifecycle ----------------------------------------------------------
 
@@ -188,11 +186,10 @@ object ServerMain {
       case e: NumberFormatException =>
         System.err.println(s"ERROR: bad numeric setting: ${e.getMessage}"); return 2
     }
-    val uri = OtlpUri.parse(cfg.listenUri)
 
     println("Starting graft otlp server\n")
     println(s"Mode: ${cfg.serveParams.getOrElse("target", "catalog")}")
-    println(s"Listen: ${cfg.listenUri} (${uri.url})")
+    println(s"Listen: ${cfg.listenUri} (${cfg.uri.url})")
     if (cfg.tokenMinted)
       // the reference warns when serving with its public built-in dev token
       // (main.cpp:347-352); the analog hazard here is an unset token — the
@@ -205,7 +202,7 @@ object ServerMain {
 
     if (cfg.dryRun) {
       println("\nDRY_RUN=1; planned initialization only.\n")
-      println(s"Planned serve call: ${if (uri.scheme == "otap") "otap_serve"
+      println(s"Planned serve call: ${if (cfg.uri.scheme == "otap") "otap_serve"
         else "otlp_serve"}('${cfg.listenUri}') with parameters:")
       cfg.serveParams.toSeq.sortBy(_._1).foreach { case (k, v) =>
         println(s"  $k = ${if (k == "token") "***" else v}")
@@ -219,10 +216,10 @@ object ServerMain {
 
     try {
       if (shutdownRequested) { println("Shutdown requested during startup; exiting."); return 0 }
-      if (uri.scheme == "otap") OtlpServe.otapServe(spark, cfg.listenUri, cfg.serveParams)
+      if (cfg.uri.scheme == "otap") OtlpServe.otapServe(spark, cfg.listenUri, cfg.serveParams)
       else OtlpServe.otlpServe(spark, cfg.listenUri, cfg.serveParams)
 
-      if (!waitForReady(cfg, uri) && !shutdownRequested)
+      if (!waitForReady(cfg) && !shutdownRequested)
         throw new RuntimeException("Timed out waiting for OTLP listener readiness")
       println("Spark initialization complete")
       println("Starting server...")
@@ -254,10 +251,9 @@ object ServerMain {
 
   /** Poll listener state + transport probe until ready or timeout
     * (main.cpp WaitForReady:144-157: 250 ms ticks, startup error aborts). */
-  private def waitForReady(cfg: DaemonConfig, uri: OtlpUriParts): Boolean = {
+  private def waitForReady(cfg: DaemonConfig): Boolean = {
     val deadline = System.nanoTime() + cfg.startupTimeoutSecs * 1_000_000_000L
-    val grpc = grpcWire(cfg, uri)
-    val host = healthCheckHost(uri.host)
+    val host = healthCheckHost(cfg.uri.host)
     while (!shutdownRequested && System.nanoTime() < deadline) {
       OtlpServe.get(cfg.listenUri) match {
         case Some(s) if s.lastError != null =>
@@ -266,8 +262,8 @@ object ServerMain {
         case Some(s) if s.isListening =>
           // the registry says listening; confirm over the actual wire like
           // the reference's OtlpHttpStatusOk readiness gate
-          if (grpc && tcpConnectOk(host, uri.port)) return true
-          if (!grpc && httpStatusOk(host, uri.port, "/readyz")) return true
+          if (cfg.grpc && tcpConnectOk(host, cfg.uri.port)) return true
+          if (!cfg.grpc && httpStatusOk(host, cfg.uri.port, "/readyz")) return true
         case _ => ()
       }
       Thread.sleep(250)

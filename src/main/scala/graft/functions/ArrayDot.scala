@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -57,17 +58,7 @@ object ArrayDot {
     s
   }
 
-  val FunctionName = "array_dot"
-
-  /** Register `array_dot(a, b)` as a session temp SQL function
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(a, b) => ArrayDot(a, b)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(a, b) expects two array arguments, got $args")
-      },
-      "internal")
+  /** `array_dot(a, b)` over two double-array columns. */
+  def apply(a: Column, b: Column): Column =
+    column(ArrayDot(expression(a), expression(b)))
 }

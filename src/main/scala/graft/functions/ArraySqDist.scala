@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -49,17 +50,7 @@ object ArraySqDist {
     s
   }
 
-  val FunctionName = "array_sqdist"
-
-  /** Register `array_sqdist(a, b)` as a session temp SQL function
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(a, b) => ArraySqDist(a, b)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(a, b) expects two array arguments, got $args")
-      },
-      "internal")
+  /** `array_sqdist(a, b)` over two double-array columns. */
+  def apply(a: Column, b: Column): Column =
+    column(ArraySqDist(expression(a), expression(b)))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared md5 plumbing for the native chunk/window hash expressions —
@@ -90,18 +91,8 @@ object ChunkHashes {
     new GenericArrayData(out)
   }
 
-  val FunctionName = "chunk_hashes"
-
-  /** Register `chunk_hashes(words, l)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(w, Literal(l: Int, IntegerType)) => ChunkHashes(w, l)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(words, l) expects a literal integer l, got $args")
-      },
-      "internal")
+  /** `chunk_hashes(words, l)` over a word-array column. */
+  def apply(words: Column, l: Int): Column = column(ChunkHashes(expression(words), l))
 }
 
 /** Native word n-gram SHINGLE strings (stride 1): element g is words
@@ -153,18 +144,9 @@ object ShingleStrings {
     new GenericArrayData(out)
   }
 
-  val FunctionName = "shingle_strings"
-
-  /** Register `shingle_strings(words, n)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(w, Literal(n: Int, IntegerType)) => ShingleStrings(w, n)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(words, n) expects a literal integer n, got $args")
-      },
-      "internal")
+  /** `shingle_strings(words, n)` over a word-array column. */
+  def apply(words: Column, n: Int): Column =
+    column(ShingleStrings(expression(words), n))
 }
 
 /** Native per-word CDC boundary flags: flag(i) = 1 iff i+1 >= window and
@@ -210,16 +192,7 @@ object CdcFlags {
     new GenericArrayData(out)
   }
 
-  val FunctionName = "cdc_flags"
-
-  /** Register `cdc_flags(words, window)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(w, Literal(l: Int, IntegerType)) => CdcFlags(w, l)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(words, window) expects a literal integer window, got $args")
-      },
-      "internal")
+  /** `cdc_flags(words, window)` over a word-array column. */
+  def apply(words: Column, window: Int): Column =
+    column(CdcFlags(expression(words), window))
 }

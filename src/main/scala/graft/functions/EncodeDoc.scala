@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -32,10 +33,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * list) is kilobytes and rides the expression into the plan — the
   * same train-then-apply contract as the PQ codebooks.
   *
-  * Invocation: the artifact is captured by a registry closure at
-  * operator-call time (`registerWith` below); Dataset construction
-  * analyzes eagerly, so the binding is taken before any later
-  * re-registration. */
+  * Invocation: each family's companion builds the expression over a
+  * word-array column with that call's trained artifact as a field, so a
+  * plan holds its own artifact and no name is bound in the session. */
 abstract class EncodeDocBase extends UnaryExpression {
   /** Segment one word → (tokens, collapsed-to-UNK). */
   def segment(word: String): (Array[String], Boolean)
@@ -108,20 +108,6 @@ object EncodeDocBase {
       java.security.MessageDigest.getInstance("MD5")
   }
   private[functions] val HexChars = "0123456789abcdef".toCharArray
-
-  /** Register `name(words)` bound to `build` NOW (idempotent per name;
-    * re-registration replaces the closure, but Dataset construction
-    * analyzes eagerly so earlier frames keep their binding). */
-  def registerWith(spark: SparkSession, name: String,
-                   build: Expression => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      {
-        case Seq(w) => build(w)
-        case args => throw new IllegalArgumentException(
-          s"$name(words) expects one array argument, got $args")
-      },
-      "internal")
 }
 
 /** WordPiece greedy longest-match-first (BERT semantics — a stuck word
@@ -139,6 +125,12 @@ case class WordpieceEncodeDoc(child: Expression, vocab: Seq[String])
     copy(child = newChild)
 }
 
+object WordpieceEncodeDoc {
+  /** `wp_encode_doc(words)` under a trained vocabulary. */
+  def apply(words: Column, vocab: Seq[String]): Column =
+    column(WordpieceEncodeDoc(expression(words), vocab))
+}
+
 /** Unigram-LM integer-cost Viterbi (micro-nat costs re-derived from the
   * trained (piece, cnt) table exactly as the operator did); delegated to
   * the ONE shared [[graft.operators.TextAnalysis.viterbiSegment]]. */
@@ -154,6 +146,12 @@ case class UnigramEncodeDoc(child: Expression, pieces: Seq[(String, Long)])
     (graft.operators.TextAnalysis.viterbiSegment(word, cost, maxLen), false)
   override protected def withNewChildInternal(newChild: Expression): UnigramEncodeDoc =
     copy(child = newChild)
+}
+
+object UnigramEncodeDoc {
+  /** `uni_encode_doc(words)` under a trained (piece, count) table. */
+  def apply(words: Column, pieces: Seq[(String, Long)]): Column =
+    column(UnigramEncodeDoc(expression(words), pieces))
 }
 
 /** BPE application in learned merge order. Each merge is one
@@ -189,4 +187,10 @@ case class BpeEncodeDoc(child: Expression, merges: Seq[(String, String)])
   }
   override protected def withNewChildInternal(newChild: Expression): BpeEncodeDoc =
     copy(child = newChild)
+}
+
+object BpeEncodeDoc {
+  /** `bpe_encode_doc(words)` under learned merges, in merge order. */
+  def apply(words: Column, merges: Seq[(String, String)]): Column =
+    column(BpeEncodeDoc(expression(words), merges))
 }

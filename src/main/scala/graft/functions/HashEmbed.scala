@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native UNNORMALIZED hashed bag-of-words embedding: per document, the
   * dims-sized array of signed slot sums — slot(term) = floor(u(salt,
@@ -80,19 +81,10 @@ object HashEmbed {
     new GenericArrayData(sums)
   }
 
-  val FunctionName = "hash_embed"
-
-  /** Register `hash_embed(words, dims, salt)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(w, Literal(d: Int, IntegerType), Literal(s, StringType)) =>
-          HashEmbed(w, d, s.toString)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(words, dims, salt) expects literal dims and salt, got $args")
-      },
-      "internal")
+  /** `hash_embed(words, dims, salt)` over a word-array column; the salt
+    * reaches [[compute]] byte for byte. */
+  def apply(words: Column, dims: Int, salt: String): Column =
+    column(HashEmbed(expression(words), dims, salt))
 }
 
 /** Native per-document hashed-bucket COUNT array: counts(b) = number of
@@ -148,17 +140,8 @@ object DocBuckets {
     new GenericArrayData(counts)
   }
 
-  val FunctionName = "doc_buckets"
-
-  /** Register `doc_buckets(words, buckets, salt)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(w, Literal(b: Int, IntegerType), Literal(s, StringType)) =>
-          DocBuckets(w, b, s.toString)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(words, buckets, salt) expects literal buckets and salt, got $args")
-      },
-      "internal")
+  /** `doc_buckets(words, buckets, salt)` over a word-array column; the
+    * salt reaches [[compute]] byte for byte. */
+  def apply(words: Column, buckets: Int, salt: String): Column =
+    column(DocBuckets(expression(words), buckets, salt))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native MinHash signature over a word array: the k hash functions are k
@@ -110,18 +111,7 @@ object MinhashSignature {
     new GenericArrayData(out)
   }
 
-  val FunctionName = "minhash_signature"
-
-  /** Register `minhash_signature(words, n, k)` as a session temp SQL
-    * function (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(w, Literal(n: Int, IntegerType), Literal(k: Int, IntegerType)) =>
-          MinhashSignature(w, n, k)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(words, n, k) expects literal integer n and k, got $args")
-      },
-      "internal")
+  /** `minhash_signature(words, n, k)` over a word-array column. */
+  def apply(words: Column, n: Int, k: Int): Column =
+    column(MinhashSignature(expression(words), n, k))
 }

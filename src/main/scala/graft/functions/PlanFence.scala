@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.DataType
@@ -60,18 +61,6 @@ case class PlanFence(child: Expression) extends UnaryExpression {
 }
 
 object PlanFence {
-  val FunctionName = "plan_fence"
-
-  /** Register `plan_fence(x)` as a session temp SQL function
-    * (idempotent) — callers apply it with
-    * `functions.call_function("plan_fence", col)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(c) => PlanFence(c)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(x) expects one argument, got $args")
-      },
-      "internal")
+  /** `plan_fence(c)`: `c` behind the fence. */
+  def apply(c: Column): Column = column(PlanFence(expression(c)))
 }

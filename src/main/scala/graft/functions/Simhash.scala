@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -61,17 +62,6 @@ object SimhashFingerprint {
     fp
   }
 
-  val FunctionName = "simhash_fingerprint"
-
-  /** Register `simhash_fingerprint(words)` as a session temp SQL function
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(w) => SimhashFingerprint(w)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(words) expects one argument, got $args")
-      },
-      "internal")
+  /** `simhash_fingerprint(words)` over a word-array column. */
+  def apply(words: Column): Column = column(SimhashFingerprint(expression(words)))
 }

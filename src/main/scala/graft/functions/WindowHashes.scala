@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native md5 hex of every length-`l` word window (stride 1) of a word
@@ -82,17 +83,7 @@ object WindowHashes {
     new GenericArrayData(out)
   }
 
-  val FunctionName = "window_hashes"
-
-  /** Register `window_hashes(words, l)` as a session temp SQL function
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(w, Literal(l: Int, IntegerType)) => WindowHashes(w, l)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(words, l) expects a literal integer l, got $args")
-      },
-      "internal")
+  /** `window_hashes(words, l)` over a word-array column. */
+  def apply(words: Column, l: Int): Column =
+    column(WindowHashes(expression(words), l))
 }

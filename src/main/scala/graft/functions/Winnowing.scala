@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for winnowing fingerprints (Schleimer et al.,
@@ -125,19 +126,7 @@ object WinnowingFingerprints {
     new GenericArrayData(out)
   }
 
-  val FunctionName = "winnowing_fingerprints"
-
-  /** Register `winnowing_fingerprints(text, k, w)` as a session temp SQL
-    * function (idempotent) — the public route from a custom Expression to
-    * both the Column API (`expr(...)`) and plain SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      {
-        case Seq(t, Literal(k: Int, IntegerType), Literal(w: Int, IntegerType)) =>
-          WinnowingFingerprints(t, k, w)
-        case args => throw new IllegalArgumentException(
-          s"$FunctionName(text, k, w) expects literal integer k and w, got $args")
-      },
-      "internal")
+  /** `winnowing_fingerprints(text, k, w)` over a string column. */
+  def apply(text: Column, k: Int, w: Int): Column =
+    column(WinnowingFingerprints(expression(text), k, w))
 }

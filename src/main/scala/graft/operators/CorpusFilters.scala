@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.{CdcFlags, ChunkHashes, ShingleStrings, WindowHashes}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -93,7 +94,6 @@ object CorpusFilters {
     * single document's grams across the cluster — the safer shape at
     * 100 TB. */
   def repetitionStats(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.functions.ShingleStrings.register(docs.sparkSession)
     val base = docs.select(col("doc_id"), wordsOf(col(textCol)).as("ws"))
       .where(size(col("ws")) > 0)
     val tot = base.select(col("doc_id"),
@@ -114,8 +114,7 @@ object CorpusFilters {
     // form); a <2-word array yields an empty shingle array, so the old
     // explicit when(size >= 2) guard is the kernel's own contract
     val btop = top(
-      base.select(col("doc_id"), explode(expr(
-        s"${graft.functions.ShingleStrings.FunctionName}(ws, 2)")).as("g")),
+      base.select(col("doc_id"), explode(ShingleStrings(col("ws"), 2)).as("g")),
       "g", "top_2gram", "top_2gram_cnt")
     tot.join(wtop, Seq("doc_id"), "left").join(btop, Seq("doc_id"), "left")
       .select(col("doc_id"), col("total_words"), col("total_chars"),
@@ -135,15 +134,13 @@ object CorpusFilters {
     * shared across documents dies here while unique content survives. */
   def chunkDedup(docs: DataFrame, chunkWords: Int = 16,
                  textCol: String = "text"): DataFrame = {
-    graft.functions.ChunkHashes.register(docs.sparkSession)
     val base = docs.select(col("doc_id"), wordsOf(col(textCol)).as("ws"))
       .where(size(col("ws")) > 0)
     val nc = ceil(size(col("ws")).cast("double") / chunkWords).cast("int")
     // one native call per document (graft.functions.ChunkHashes) —
     // value-identical to the transform/slice/concat_ws/md5 lambda the
     // DuckDB oracle still runs, without per-chunk interpreted dispatch
-    val hashes = expr(
-      s"${graft.functions.ChunkHashes.FunctionName}(ws, $chunkWords)")
+    val hashes = ChunkHashes(col("ws"), chunkWords)
     val ch = base.select(col("doc_id"), posexplode(hashes).as(Seq("pos", "h")))
     val counts = base.select(col("doc_id"), nc.cast("long").as("n_chunks"))
     counts.join(keptPerDoc(ch), Seq("doc_id"), "left")
@@ -166,12 +163,10 @@ object CorpusFilters {
     * against the ref hash set without ever materializing pairs. */
   def crossChunkDedup(docs: DataFrame, ref: DataFrame, chunkWords: Int = 16,
                       textCol: String = "text"): DataFrame = {
-    graft.functions.ChunkHashes.register(docs.sparkSession)
     def chunksOf(d: DataFrame) = {
       val base = d.select(col("doc_id"), wordsOf(col(textCol)).as("ws"))
         .where(size(col("ws")) > 0)
-      base.select(col("doc_id"), explode(expr(
-        s"${graft.functions.ChunkHashes.FunctionName}(ws, $chunkWords)"))
+      base.select(col("doc_id"), explode(ChunkHashes(col("ws"), chunkWords))
         .as("h"))
     }
     val refHashes = chunksOf(ref).select("h").distinct()
@@ -304,7 +299,6 @@ object CorpusFilters {
   def cdcChunks(docs: DataFrame, window: Int = 4,
                 textCol: String = "text",
                 blockWords: Int = 4096): DataFrame = {
-    graft.functions.CdcFlags.register(docs.sparkSession)
     val base = docs.select(col("doc_id"), wordsOf(col(textCol)).as("ws"))
       .where(size(col("ws")) > 0)
     // per-word boundary flags computed natively BEFORE the explode
@@ -316,9 +310,8 @@ object CorpusFilters {
     // through the explode. Exploding arrays_zip(ws, flags) ships each
     // word exactly once.
     val w = base.select(col("doc_id"),
-      posexplode(arrays_zip(col("ws"),
-        expr(s"${graft.functions.CdcFlags.FunctionName}(ws, $window)")
-          .as("fl"))).as(Seq("pos", "zf")))
+      posexplode(arrays_zip(col("ws"), CdcFlags(col("ws"), window).as("fl")))
+        .as(Seq("pos", "zf")))
     val flagged = w
       .select(col("doc_id"), col("pos"), col("zf.ws").as("word"),
         col("zf.fl").as("flag"))
@@ -366,13 +359,11 @@ object CorpusFilters {
     * shared contract), so the DuckDB oracle runs the same bytes. */
   def decontaminate(docs: DataFrame, evalDocs: DataFrame, n: Int = 5,
                     textCol: String = "text"): DataFrame = {
-    graft.functions.WindowHashes.register(docs.sparkSession)
     def grams(d: DataFrame) = {
       val ws = wordsOf(col(textCol))
       d.select(col("doc_id"), ws.as("ws"))
         .where(size(col("ws")) >= n)
-        .select(col("doc_id"), explode(expr(
-          s"${graft.functions.WindowHashes.FunctionName}(ws, $n)")).as("gh"))
+        .select(col("doc_id"), explode(WindowHashes(col("ws"), n)).as("gh"))
     }
     val evalGrams = grams(evalDocs).select("gh").distinct()
     val counts = docs.select(col("doc_id"),
@@ -402,13 +393,11 @@ object CorpusFilters {
   def decontaminateSuites(docs: DataFrame, evalDocs: DataFrame, n: Int = 5,
                           suiteCol: String = "suite",
                           textCol: String = "text"): DataFrame = {
-    graft.functions.WindowHashes.register(docs.sparkSession)
     def grams(d: DataFrame, keep: Seq[String]) = {
       val ws = wordsOf(col(textCol))
       d.select(keep.map(col) :+ ws.as("ws"): _*)
         .where(size(col("ws")) >= n)
-        .select(keep.map(col) :+ explode(expr(
-          s"${graft.functions.WindowHashes.FunctionName}(ws, $n)")).as("gh"): _*)
+        .select(keep.map(col) :+ explode(WindowHashes(col("ws"), n)).as("gh"): _*)
     }
     val evalGrams = broadcast(
       grams(evalDocs, Seq(suiteCol)).select(col(suiteCol), col("gh")).distinct())

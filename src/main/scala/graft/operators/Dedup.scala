@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.{MinhashSignature, ShingleStrings, SimhashFingerprint, WindowHashes}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -43,11 +44,9 @@ object Dedup {
     * to the transform/concat_ws lambda the DuckDB oracles still run). */
   def shingles(docs: DataFrame, n: Int, idCol: String = "doc_id",
                textCol: String = "text"): DataFrame = {
-    graft.functions.ShingleStrings.register(docs.sparkSession)
     docs.select(col(idCol), tokens(col(textCol)).as("w"))
       .where(size(col("w")) >= n)
-      .select(col(idCol), explode(expr(
-        s"${graft.functions.ShingleStrings.FunctionName}(w, $n)")).as("shingle"))
+      .select(col(idCol), explode(ShingleStrings(col("w"), n)).as("shingle"))
   }
 
   /** Exact-duplicate groups: one row per distinct md5(text), with the kept
@@ -130,13 +129,11 @@ object Dedup {
     * was the dedup pipeline's dominant data movement). */
   def minhashSignatures(docs: DataFrame, n: Int = 3, k: Int = 8): DataFrame = {
     require(k <= 8, "at most 8 64-bit fragments fit one md5 digest")
-    graft.functions.MinhashSignature.register(docs.sparkSession)
     val cols = col("doc_id") +:
       (0 until k).map(i => element_at(col("sig"), i + 1).as(s"mh$i"))
     docs.select(col("doc_id"), tokens(col("text")).as("w"))
       .where(size(col("w")) >= n)
-      .select(col("doc_id"),
-        expr(s"${graft.functions.MinhashSignature.FunctionName}(w, $n, $k)").as("sig"))
+      .select(col("doc_id"), MinhashSignature(col("w"), n, k).as("sig"))
       .select(cols: _*)
   }
 
@@ -325,11 +322,9 @@ object Dedup {
     * two are value-identical by the bit identity above.) */
   def simhash(docs: DataFrame, idCol: String = "doc_id",
               textCol: String = "text"): DataFrame = {
-    graft.functions.SimhashFingerprint.register(docs.sparkSession)
     docs.select(col(idCol), tokens(col(textCol)).as("w"))
       .where(size(col("w")) > 0)
-      .select(col(idCol),
-        expr(s"${graft.functions.SimhashFingerprint.FunctionName}(w)").as("simhash"))
+      .select(col(idCol), SimhashFingerprint(col("w")).as("simhash"))
   }
 
   /** Near-duplicate CLUSTERS from a candidate-pair list: connected
@@ -522,7 +517,6 @@ object Dedup {
     * No stage is quadratic and nothing collects to the driver. */
   def substringDedup(docs: DataFrame, l: Int = 8, idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
-    graft.functions.WindowHashes.register(docs.sparkSession)
     val base = docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("ws"))
       .where(size(col("ws")) > 0)
     // every length-l window, 1-based start pos, md5 of the joined words —
@@ -531,9 +525,7 @@ object Dedup {
     // DuckDB oracle still runs, without the per-window interpreted
     // dispatch + slice copies)
     val wins = base.where(size(col("ws")) >= l)
-      .select(col("doc_id"), posexplode(
-        expr(s"${graft.functions.WindowHashes.FunctionName}(ws, $l)"))
-        .as(Seq("p0", "h")))
+      .select(col("doc_id"), posexplode(WindowHashes(col("ws"), l)).as(Seq("p0", "h")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
     // canonical first occurrence per hash (map-side-combinable min-struct)
     val firsts = wins.groupBy("h")

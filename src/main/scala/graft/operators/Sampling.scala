@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.DocBuckets
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -286,13 +287,10 @@ object Sampling {
     // order-of-summation class the cross-engine round(4) contract already
     // absorbs (Spark's shuffle-order avg never matched DuckDB's scan
     // order bit-for-bit; both land inside roundZ(4)).
-    graft.functions.DocBuckets.register(raw.sparkSession)
     def docBuckets(df: DataFrame) = df
       .select(col(idCol), graft.operators.Dedup.tokens(col(textCol)).as("ws"))
       .where(size(col("ws")) > 0)
-      .select(col(idCol), expr(
-        s"${graft.functions.DocBuckets.FunctionName}(ws, $buckets, '$salt')")
-        .as("bc"))
+      .select(col(idCol), DocBuckets(col("ws"), buckets, salt).as("bc"))
     def bucketed(df: DataFrame) = docBuckets(df)
       .select(col(idCol), posexplode(col("bc")).as(Seq("bucket", "cnt")))
       .where(col("cnt") > 0)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.{ArrayDot, ArraySqDist}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,17 +28,13 @@ object Similarity {
     * to double exactly, so the values are identical either way. */
   def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** Cosine of two NAMED double-array columns on the native `array_dot`
+  /** Cosine of two double-array columns on the native `array_dot`
     * kernel — structurally identical to the lambda `cosine` (dot / norms,
     * each dot left-to-right), so values are bit-identical; the lambda form
     * pays ~6 interpreted dispatches per element per evaluation, which
-    * dominates full-corpus and candidate-set scans (see ArrayDot). Caller
-    * must have registered ArrayDot and have both columns addressable by
-    * name (qualified `a.v` names work). */
-  private def nativeCosine(aName: String, bName: String): Column =
-    expr(s"array_dot($aName, $bName)") /
-      (sqrt(expr(s"array_dot($aName, $aName)")) *
-        sqrt(expr(s"array_dot($bName, $bName)")))
+    * dominates full-corpus and candidate-set scans (see ArrayDot). */
+  private def nativeCosine(a: Column, b: Column): Column =
+    ArrayDot(a, b) / (sqrt(ArrayDot(a, a)) * sqrt(ArrayDot(b, b)))
 
   /** Left-to-right dot product of two equally-sized double arrays. */
   def dot(a: Column, b: Column): Column =
@@ -128,7 +125,7 @@ object Similarity {
   private def sq8ExactSim: Column = {
     val vn = expr("aggregate(__v, 0D, (acc, x) -> acc + x * x)")
     val qn = expr("aggregate(qv, 0D, (acc, x) -> acc + x * x)")
-    when(vn > 0 && qn > 0, round(nativeCosine("__v", "qv"), 4))
+    when(vn > 0 && qn > 0, round(nativeCosine(col("__v"), col("qv")), 4))
       .otherwise(lit(-1.0))
   }
 
@@ -156,7 +153,6 @@ object Similarity {
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && rerank >= k, s"bad sq8 config (k=$k, rerank=$rerank)")
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val base = emb.select(col(idCol), asDouble(col(vecCol)).as("__v"))
       .withColumn("__q", int8Codes(col("__v")))
     val qRow = base.where(col(idCol) === queryId)
@@ -206,7 +202,6 @@ object Similarity {
     require(k >= 1 && rerank >= k,
       s"bad sq8 batch config (k=$k, rerank=$rerank)")
     requireIntegralId(emb, idCol); requireIntegralId(queries, queryIdCol)
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val q = broadcast(queries.select(col(queryIdCol).as("qid"),
         asDouble(col(vecCol)).as("qv"))
       .withColumn("qq", int8Codes(col("qv")))
@@ -360,13 +355,12 @@ object Similarity {
                 queryIdCol: String = "query_id"): DataFrame = {
     require(k >= 1, "k must be positive")
     requireIntegralId(emb, idCol); requireIntegralId(queries, queryIdCol)
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val q = broadcast(queries.select(col(queryIdCol).as("qid"),
         asDouble(col(vecCol)).as("qv"))
       // query norm once per query, not once per (corpus row × query)
-      .withColumn("qn", sqrt(expr("array_dot(qv, qv)"))))
+      .withColumn("qn", sqrt(ArrayDot(col("qv"), col("qv")))))
     val scored = emb.select(col(idCol), asDouble(col(vecCol)).as("__v"))
-      .withColumn("nrm", sqrt(expr("array_dot(__v, __v)")))
+      .withColumn("nrm", sqrt(ArrayDot(col("__v"), col("__v"))))
       // a zero-norm vector's cosine is 0/0 = NaN, and NaN sorts ABOVE
       // every real double in Spark — drop undefined rows before they
       // can poison a top-k slot
@@ -374,7 +368,7 @@ object Similarity {
       .crossJoin(q)
       .where(col(idCol) =!= col("qid") && col("qn") > 0)
       .select(col("qid"), col(idCol),
-        round(expr("array_dot(__v, qv)") / (col("nrm") * col("qn")), 4)
+        round(ArrayDot(col("__v"), col("qv")) / (col("nrm") * col("qn")), 4)
           .as("sim"))
     topKPerQuery(scored, k, idCol, queryIdCol)
   }
@@ -400,7 +394,6 @@ object Similarity {
     require(centroids <= 0 || nprobe <= centroids,
       s"nprobe ($nprobe) must be <= centroids ($centroids)")
     requireIntegralId(emb, idCol); requireIntegralId(queries, queryIdCol)
-    graft.functions.ArrayDot.register(emb.sparkSession)
     // AutoCells sentinel resolves like the cell-bounded family's — and the
     // clamped threshold below keeps an oversized nprobe exhaustive rather
     // than out-of-bounds against the resolved count
@@ -408,14 +401,14 @@ object Similarity {
       sampleMod, idCol, vecCol)
     val corpus = ivfCellsWith(emb, cents, idCol, vecCol)
       .withColumn("__v", asDouble(col(vecCol)))
-      .withColumn("nrm", sqrt(expr("array_dot(__v, __v)")))
+      .withColumn("nrm", sqrt(ArrayDot(col("__v"), col("__v"))))
       .drop("cell_scores")
     val q = broadcast(
       ivfCellsWith(queries.select(col(queryIdCol).as("qid"), col(vecCol)),
           cents, "qid", vecCol)
         .select(col("qid"), asDouble(col(vecCol)).as("qv"),
           col("cell_scores").as("qscores"))
-        .withColumn("qn", sqrt(expr("array_dot(qv, qv)")))
+        .withColumn("qn", sqrt(ArrayDot(col("qv"), col("qv"))))
         .withColumn("thr", expr(
           s"sort_array(qscores, false)[least($nprobe, size(qscores)) - 1]")))
     val scored = corpus
@@ -424,7 +417,7 @@ object Similarity {
       .where(col(idCol) =!= col("qid") && col("qn") > 0 &&
         expr("element_at(qscores, cell + 1) >= thr"))
       .select(col("qid"), col(idCol),
-        round(expr("array_dot(__v, qv)") / (col("nrm") * col("qn")), 4)
+        round(ArrayDot(col("__v"), col("qv")) / (col("nrm") * col("qn")), 4)
           .as("sim"))
     topKPerQuery(scored, k, idCol, queryIdCol)
   }
@@ -592,8 +585,8 @@ object Similarity {
     * for why the summation order is preserved verbatim). */
   private def pqDistsNamed(subName: String, codes: Array[Array[Double]]): Column =
     array(codes.map { c =>
-      (expr(s"array_sqdist($subName, " +
-        s"array(${c.map(d => s"${d}D").mkString(",")}))")): Column
+      ArraySqDist(col(subName),
+        expr(s"array(${c.map(d => s"${d}D").mkString(",")})"))
     }.toIndexedSeq: _*)
 
   private def pqArgminNamed(subName: String, codes: Array[Array[Double]]): Column = {
@@ -618,7 +611,6 @@ object Similarity {
   def pqCodesWith(emb: DataFrame, books: Array[Array[Array[Double]]],
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArraySqDist.register(emb.sparkSession)
     val subDims = books(0)(0).length
     val withSubs = books.indices.foldLeft(
       emb.select(col(idCol), asDouble(col(vecCol)).as("__v"))) { (d, s) =>
@@ -675,7 +667,6 @@ object Similarity {
                 vecCol: String = "embedding"): DataFrame = {
     val books = pqCodebooksTrained(emb, m, k, subDims, sampleMod, idCol, vecCol)
     val codes = pqCodesWith(emb, books, idCol, vecCol)
-    graft.functions.ArraySqDist.register(emb.sparkSession)
     val q = broadcast(
       emb.where(col(idCol) === queryId)
         .select(asDouble(col(vecCol)).as("qv")))
@@ -688,7 +679,7 @@ object Similarity {
           element_at(booksLit, col(s"c$s").cast("int") + 1))
     }
     val dist = (0 until m).map(s =>
-      (expr(s"array_sqdist(__q$s, __cent$s)")): Column).reduce(_ + _)
+      ArraySqDist(col(s"__q$s"), col(s"__cent$s"))).reduce(_ + _)
     withParts
       .select(col(idCol), round(dist, 4).as("adc_dist"))
       .orderBy(col("adc_dist").asc, col(idCol))
@@ -700,14 +691,13 @@ object Similarity {
     * this is a map-only scan + global top-k (no shuffle of the corpus). */
   def cosineTopK(emb: DataFrame, queryId: Long, k: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val q = broadcast(
       emb.where(col(idCol) === queryId)
         .select(asDouble(col(vecCol)).as("qv")))
     emb.where(col(idCol) =!= queryId)
       .select(col(idCol), asDouble(col(vecCol)).as("__v"))
       .crossJoin(q)
-      .select(col(idCol), round(nativeCosine("__v", "qv"), 4).as("sim"))
+      .select(col(idCol), round(nativeCosine(col("__v"), col("qv")), 4).as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
   }
@@ -733,7 +723,6 @@ object Similarity {
               idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && feedback >= 1, s"bad prf config ($k, $feedback)")
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val fb = cosineTopK(emb, queryId, feedback, idCol, vecCol)
       .join(emb.select(col(idCol), asDouble(col(vecCol)).as("fv")), idCol)
     // one row: the feedback vectors rank-ordered (−sim, id ascending ==
@@ -751,7 +740,7 @@ object Similarity {
     emb.where(col(idCol) =!= queryId)
       .select(col(idCol), asDouble(col(vecCol)).as("__v"))
       .crossJoin(expanded)
-      .select(col(idCol), round(nativeCosine("__v", "qx"), 4).as("sim"))
+      .select(col(idCol), round(nativeCosine(col("__v"), col("qx")), 4).as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
   }
@@ -781,7 +770,6 @@ object Similarity {
               vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && pool >= k && mmrLambda >= 0 && mmrLambda <= 1,
       s"bad mmr config ($k, $pool, $mmrLambda)")
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val mu = (BigDecimal(1) - BigDecimal(mmrLambda)).toDouble
     val pv = cosineTopK(emb, queryId, pool, idCol, vecCol)
       .join(emb.select(col(idCol), asDouble(col(vecCol)).as("v")), idCol)
@@ -840,10 +828,9 @@ object Similarity {
     * are bit-identical. */
   def lshBuckets(emb: DataFrame, planes: Int, dims: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val bits = (0 until planes).map { p =>
       val arr = (0 until dims).map(d => s"${planeComponent(p, d)}D").mkString(",")
-      when(expr(s"array_dot(__v, array($arr))") > 0, lit("1"))
+      when(ArrayDot(col("__v"), expr(s"array($arr)")) > 0, lit("1"))
         .otherwise(lit("0")): Column
     }
     emb.select(col(idCol), col(vecCol), asDouble(col(vecCol)).as("__v"))
@@ -856,7 +843,6 @@ object Similarity {
     * ~corpus/2^planes rows. */
   def annTopKLsh(emb: DataFrame, queryId: Long, k: Int, planes: Int, dims: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val bucketed = lshBuckets(emb, planes, dims, idCol, vecCol)
     val q = broadcast(
       bucketed.where(col(idCol) === queryId)
@@ -864,7 +850,7 @@ object Similarity {
     bucketed.where(col(idCol) =!= queryId)
       .join(q, col("bucket") === col("qbucket"))
       .withColumn("__v", asDouble(col(vecCol)))
-      .select(col(idCol), round(nativeCosine("__v", "qv"), 4).as("sim"))
+      .select(col(idCol), round(nativeCosine(col("__v"), col("qv")), 4).as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
   }
@@ -987,8 +973,8 @@ object Similarity {
     // literal a DOUBLE (a bare decimal would parse as DECIMAL)
     val scores = cents.map { c =>
       val nc = math.sqrt(c.foldLeft(0.0)((acc, x) => acc + x * x))
-      (expr(s"array_dot($vName, array(${c.map(d => s"${d}D").mkString(",")}))")
-        / lit(nc)): Column
+      ArrayDot(col(vName), expr(s"array(${c.map(d => s"${d}D").mkString(",")})")) /
+        lit(nc)
     }
     array(scores.toIndexedSeq: _*)
   }
@@ -997,7 +983,6 @@ object Similarity {
     * matrix (0-based; first-max wins on ties). Map-only. */
   def ivfCellsWith(emb: DataFrame, cents: Array[Array[Double]],
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
     emb.select(col(idCol), col(vecCol), asDouble(col(vecCol)).as("__v"))
       .withColumn("cell_scores", cellScores("__v", cents))
       .withColumn("cell",
@@ -1076,8 +1061,6 @@ object Similarity {
   def kmeansClusters(emb: DataFrame, k: Int, dims: Int, iters: Int = 2,
                      sampleMod: Int = 5, idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
-    graft.functions.ArraySqDist.register(emb.sparkSession)
     val cents = kmeansCentroids(emb, k, dims, iters, sampleMod, idCol, vecCol)
     val matrix = cents
       .map(c => s"array(${c.map(d => s"${d}D").mkString(",")})")
@@ -1088,7 +1071,8 @@ object Similarity {
         (array_position(col("cell_scores"), array_max(col("cell_scores"))) - 1)
           .cast("int"))
       .withColumn("sqd",
-        round(expr(s"array_sqdist(__v, element_at($matrix, cluster + 1))"), 4))
+        round(ArraySqDist(col("__v"),
+          expr(s"element_at($matrix, cluster + 1)")), 4))
       .select(col(idCol), col("cluster"), col("sqd"))
   }
 
@@ -1126,7 +1110,6 @@ object Similarity {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding",
                        labelCol: String = "label"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val rows = emb.where(col(idCol) % seedMod === 0)
       .select(col(labelCol).cast("int").as("lbl"),
         posexplode(asDouble(col(vecCol))))
@@ -1186,7 +1169,6 @@ object Similarity {
                    subDims: Int = 8, sampleMod: Int = 5,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArraySqDist.register(emb.sparkSession)
     val cents = ivfCentroidsTrained(emb, centroids, dims, sampleMod, idCol, vecCol)
     val books = pqCodebooksTrained(emb, m, kCodes, subDims, sampleMod, idCol, vecCol)
     val cells = ivfCellsWith(emb, cents, idCol, vecCol)
@@ -1217,7 +1199,7 @@ object Similarity {
           element_at(booksLit, col(s"c$s").cast("int") + 1))
     }
     val dist = (0 until m).map(s =>
-      (expr(s"array_sqdist(__q$s, __cent$s)")): Column).reduce(_ + _)
+      ArraySqDist(col(s"__q$s"), col(s"__cent$s"))).reduce(_ + _)
     withCents
       .select(col(idCol), round(dist, 4).as("adc_dist"))
       .orderBy(col("adc_dist").asc, col(idCol))
@@ -1244,7 +1226,6 @@ object Similarity {
                            m: Int = 8, kCodes: Int = 16, subDims: Int = 8,
                            sampleMod: Int = 5, idCol: String = "vec_id",
                            vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArraySqDist.register(emb.sparkSession)
     val cents = ivfCentroidsTrained(emb, centroids, dims, sampleMod, idCol, vecCol)
     val centsLit = array(cents.map(c =>
       array(c.map(lit(_)): _*)).toIndexedSeq: _*)
@@ -1282,7 +1263,7 @@ object Similarity {
           element_at(booksLit, col(s"c$s").cast("int") + 1))
     }
     val dist = (0 until m).map(s =>
-      (expr(s"array_sqdist(__q$s, __cent$s)")): Column).reduce(_ + _)
+      ArraySqDist(col(s"__q$s"), col(s"__cent$s"))).reduce(_ + _)
     withCents
       .select(col(idCol), round(dist, 4).as("adc_dist"))
       .orderBy(col("adc_dist").asc, col(idCol))
@@ -1292,7 +1273,6 @@ object Similarity {
   private def annTopKInCells(cells: DataFrame, queryId: Long, k: Int,
                              nprobe: Int, idCol: String,
                              vecCol: String): DataFrame = {
-    graft.functions.ArrayDot.register(cells.sparkSession)
     val q = broadcast(
       cells.where(col(idCol) === queryId)
         .select(asDouble(col(vecCol)).as("qv"),
@@ -1303,7 +1283,7 @@ object Similarity {
       .crossJoin(q)
       .where(expr("element_at(qscores, cell + 1) >= thr"))
       .withColumn("__v", asDouble(col(vecCol)))
-      .select(col(idCol), round(nativeCosine("__v", "qv"), 4).as("sim"))
+      .select(col(idCol), round(nativeCosine(col("__v"), col("qv")), 4).as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
   }
@@ -1336,7 +1316,6 @@ object Similarity {
     // (dd_semdedup: 237 s -> ~2 s at sf0.1). Native array_dot + norms
     // hoisted to one per ROW keep the pair kernel a single codegen'd call;
     // sum order is unchanged, so round(4) values are bit-identical
-    graft.functions.ArrayDot.register(emb.sparkSession)
     // the assignment frame feeds BOTH sides of the self-join AND the final
     // verdict join — without materialization the trained-IVF assignment
     // (incl. the k-dot cellScores scan) recomputes 3x per run. An eager
@@ -1349,7 +1328,7 @@ object Similarity {
       .localCheckpoint()
     val dups = cells.as("a").join(cells.as("b"),
         col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
-      .where(round(expr("array_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm")),
+      .where(round(ArrayDot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")),
         4) >= threshold)
       .select(col("b.id").as("id")).distinct()
     cells.join(dups.withColumn("dropped", lit(true)), Seq("id"), "left")
@@ -1391,13 +1370,12 @@ object Similarity {
     * (id_a, id_b): returns pairs with similarity >= threshold. */
   def embeddingNearDups(emb: DataFrame, pairs: DataFrame, threshold: Double,
                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val e = emb.select(col(idCol), asDouble(col(vecCol)).as("v"))
     pairs
       .join(e.as("ea"), col("id_a") === col(s"ea.$idCol"))
       .join(e.as("eb"), col("id_b") === col(s"eb.$idCol"))
       .select(col("id_a"), col("id_b"),
-        round(nativeCosine("ea.v", "eb.v"), 4).as("sim"))
+        round(nativeCosine(col("ea.v"), col("eb.v")), 4).as("sim"))
       .where(col("sim") >= threshold)
   }
 
@@ -1419,7 +1397,6 @@ object Similarity {
                         prefilterK: Int, prefixDims: Int,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val q = broadcast(
       emb.where(col(idCol) === queryId)
         .select(asDouble(col(vecCol)).as("qv"))
@@ -1428,13 +1405,11 @@ object Similarity {
       .crossJoin(q)
       .withColumn("__v", asDouble(col(vecCol)))
       .withColumn("__p", slice(col("__v"), 1, prefixDims))
-      .withColumn("psim", round(expr("array_dot(__p, qp)") /
-        (sqrt(expr("array_dot(__p, __p)")) * sqrt(expr("array_dot(qp, qp)"))), 4))
+      .withColumn("psim", round(nativeCosine(col("__p"), col("qp")), 4))
       .orderBy(col("psim").desc, col(idCol))
       .limit(prefilterK)
     cand
-      .withColumn("sim", round(expr("array_dot(__v, qv)") /
-        (sqrt(expr("array_dot(__v, __v)")) * sqrt(expr("array_dot(qv, qv)"))), 4))
+      .withColumn("sim", round(nativeCosine(col("__v"), col("qv")), 4))
       .select(col(idCol), col("psim"), col("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
@@ -1461,7 +1436,6 @@ object Similarity {
                dims: Int = 64,
                sampleMod: Int = 5, idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val nCells = resolveCells(emb, centroids)
     val cells = ivfCellsTrained(emb, nCells, dims, sampleMod, idCol, vecCol)
       .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"), col("cell"))
@@ -1470,7 +1444,7 @@ object Similarity {
     val pairs = cells.as("a").join(cells.as("b"),
         col("a.cell") === col("b.cell") && col("a.id") =!= col("b.id"))
       .select(col("a.id").as("src"), col("b.id").as("dst"),
-        round(expr("array_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm")), 4)
+        round(ArrayDot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")), 4)
           .as("sim"))
     val w = Window.partitionBy("src").orderBy(col("sim").desc, col("dst"))
     pairs.withColumn("rnk", row_number().over(w).cast("int"))
@@ -1498,7 +1472,6 @@ object Similarity {
                     sampleMod: Int = 5, idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     labelCol: String = "label"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
     val nCells = resolveCells(emb, centroids)
     val cents = ivfCentroidsTrained(emb, nCells, dims, sampleMod, idCol, vecCol)
     val cells = emb.select(col(idCol).as("id"), col(labelCol).as("lbl"),
@@ -1515,7 +1488,7 @@ object Similarity {
           col("a.lbl") =!= col("b.lbl"))
       .select(col("a.id").as("src"), col("b.id").as("dst"),
         col("b.lbl").as("neg_label"),
-        round(expr("array_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm")), 4)
+        round(ArrayDot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")), 4)
           .as("sim"))
     val w = Window.partitionBy("src").orderBy(col("sim").desc, col("dst"))
     pairs.withColumn("rnk", row_number().over(w).cast("int"))
@@ -1614,7 +1587,6 @@ object Similarity {
               dropFrac: Double = 0.25, sampleMod: Int = 5,
               idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayDot.register(emb.sparkSession)
     // (id, cell, dropped) — reused for survivors AND the final verdict join
     val sd = semDedup(emb, centroids, dims, threshold, sampleMod, idCol, vecCol)
       .localCheckpoint()
@@ -1630,9 +1602,7 @@ object Similarity {
     val w = Window.partitionBy("cell").orderBy(col("proto_sim").desc, col(idCol))
     val ranked = keep.join(broadcast(cents), Seq("cell"))
       .select(col(idCol), col("cell"),
-        round(expr("array_dot(__v, cent)") /
-          (sqrt(expr("array_dot(__v, __v)")) * sqrt(expr("array_dot(cent, cent)"))), 4)
-          .as("proto_sim"))
+        round(nativeCosine(col("__v"), col("cent")), 4).as("proto_sim"))
       .withColumn("rnk", row_number().over(w))
       .withColumn("cnt", count(lit(1)).over(Window.partitionBy("cell")))
       .withColumn("proto_drop",
@@ -1659,15 +1629,14 @@ object Similarity {
   def embeddingDecontaminate(corpus: DataFrame, evalSet: DataFrame,
                              threshold: Double, idCol: String = "vec_id",
                              vecCol: String = "embedding"): DataFrame = {
-    graft.functions.ArrayDot.register(corpus.sparkSession)
     val c = corpus.select(col(idCol), asDouble(col(vecCol)).as("__v"))
-      .withColumn("__nv", sqrt(expr("array_dot(__v, __v)")))
+      .withColumn("__nv", sqrt(ArrayDot(col("__v"), col("__v"))))
     val ev = broadcast(
       evalSet.select(asDouble(col(vecCol)).as("__ev"))
-        .withColumn("__nev", sqrt(expr("array_dot(__ev, __ev)"))))
+        .withColumn("__nev", sqrt(ArrayDot(col("__ev"), col("__ev")))))
     c.crossJoin(ev)
       .withColumn("__sim",
-        expr("array_dot(__v, __ev)") / (col("__nv") * col("__nev")))
+        ArrayDot(col("__v"), col("__ev")) / (col("__nv") * col("__nev")))
       .groupBy(col(idCol))
       .agg(round(max("__sim"), 4).as("max_eval_sim"))
       .withColumn("contaminated", col("max_eval_sim") >= threshold)

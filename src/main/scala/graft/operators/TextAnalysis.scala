@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.functions.{ArrayDot, BpeEncodeDoc, HashEmbed, ShingleStrings,
+  UnigramEncodeDoc, WinnowingFingerprints, WordpieceEncodeDoc}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -353,12 +355,10 @@ object TextAnalysis {
     // application and the hop-ordered digest run doc-locally — the token
     // digest the oracle pins is byte-identical, and the token-level
     // shuffle (word join + per-doc sorted collect_list) disappears
-    graft.functions.EncodeDocBase.registerWith(docs.sparkSession,
-      "bpe_encode_doc", w => graft.functions.BpeEncodeDoc(w, ms.toSeq))
     docs.select(col(idCol),
         expr(s"regexp_extract_all(lower($textCol), '[a-z]+', 0)").as("ws"))
       .where(size(col("ws")) > 0)
-      .select(col(idCol), expr("bpe_encode_doc(ws)").as("e"))
+      .select(col(idCol), BpeEncodeDoc(col("ws"), ms.toSeq).as("e"))
       .select(col(idCol), col("e.n").as("n_bpe_tokens"),
         col("e.digest").as("tok_digest"))
   }
@@ -605,7 +605,6 @@ object TextAnalysis {
   def unigramEncode(docs: DataFrame, vocab: DataFrame,
                     idCol: String = "doc_id",
                     textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
     val vs = vocab.select(col("piece"), col("cnt")).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     require(vs.nonEmpty, "empty unigram vocabulary")
@@ -613,12 +612,10 @@ object TextAnalysis {
     // same micro-nat cost table, same shared viterbiSegment, byte-
     // identical digest): the distinct-word mapPartitions + token-level
     // join + sorted collect_list pipeline becomes one map-only projection
-    graft.functions.EncodeDocBase.registerWith(spark,
-      "uni_encode_doc", w => graft.functions.UnigramEncodeDoc(w, vs.toSeq))
     docs.select(col(idCol),
         expr(s"regexp_extract_all(lower($textCol), '[a-z]+', 0)").as("ws"))
       .where(size(col("ws")) > 0)
-      .select(col(idCol), expr("uni_encode_doc(ws)").as("e"))
+      .select(col(idCol), UnigramEncodeDoc(col("ws"), vs.toSeq).as("e"))
       .select(col(idCol), col("e.n").as("n_unigram_tokens"),
         col("e.digest").as("tok_digest"))
   }
@@ -868,19 +865,16 @@ object TextAnalysis {
   def wordpieceEncode(docs: DataFrame, vocab: DataFrame,
                       idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
     val vs = vocab.select("piece").collect().map(_.getString(0))
     require(vs.nonEmpty, "empty wordpiece vocabulary")
     // one native call per document (graft.functions.WordpieceEncodeDoc —
     // same shared greedySegment, byte-identical digest): the distinct-
     // word mapPartitions + token-level join + sorted collect_list
     // pipeline becomes one map-only projection
-    graft.functions.EncodeDocBase.registerWith(spark,
-      "wp_encode_doc", w => graft.functions.WordpieceEncodeDoc(w, vs.toSeq))
     docs.select(col(idCol),
         expr(s"regexp_extract_all(lower($textCol), '[a-z]+', 0)").as("ws"))
       .where(size(col("ws")) > 0)
-      .select(col(idCol), expr("wp_encode_doc(ws)").as("e"))
+      .select(col(idCol), WordpieceEncodeDoc(col("ws"), vs.toSeq).as("e"))
       .select(col(idCol), col("e.n").as("n_wp_tokens"),
         col("e.unk").as("n_unk_words"),
         col("e.digest").as("tok_digest"))
@@ -981,12 +975,9 @@ object TextAnalysis {
     // are exact integers, so summation order can't change a value; the
     // DuckDB oracle still replays the relational form), without the
     // corpus-sized token explode and its two shuffles
-    graft.functions.HashEmbed.register(docs.sparkSession)
     val vec = docs.select(col(idCol), Dedup.tokens(col(textCol)).as("ws"))
       .where(size(col("ws")) > 0)
-      .select(col(idCol), expr(
-        s"${graft.functions.HashEmbed.FunctionName}(ws, $dims, '$salt')")
-        .as("raw"))
+      .select(col(idCol), HashEmbed(col("ws"), dims, salt).as("raw"))
     vec.withColumn("nrm", sqrt(Similarity.dot(col("raw"), col("raw"))))
       .select(col(idCol),
         transform(col("raw"), x =>
@@ -1015,7 +1006,6 @@ object TextAnalysis {
                         threshold: Double = 0.5, idCol: String = "doc_id",
                         textCol: String = "text"): DataFrame = {
     require(iters >= 1, "iters must be positive")
-    graft.functions.ArrayDot.register(docs.sparkSession)
     val feat = hashEmbedding(docs, dims, "he", idCol, textCol)
       .join(docs.select(col(idCol),
         when(positive, 1.0).otherwise(0.0).as("y")), Seq(idCol))
@@ -1024,7 +1014,7 @@ object TextAnalysis {
     def wLit = s"array(${w.map(x => s"${x}D").mkString(",")})"
     for (_ <- 0 until iters) {
       val sig = lit(1.0) /
-        (lit(1.0) + exp(-expr(s"array_dot(embedding, $wLit)")))
+        (lit(1.0) + exp(-ArrayDot(col("embedding"), expr(wLit))))
       feat.withColumn("sig", sig)
         .select(col("y"), col("sig"), posexplode(col("embedding")))
         .select((col("pos") + 1).cast("int").as("d"), col("col").as("xv"),
@@ -1037,7 +1027,7 @@ object TextAnalysis {
     }
     feat.withColumn("score",
         round(lit(1.0) /
-          (lit(1.0) + exp(-expr(s"array_dot(embedding, $wLit)"))), 4))
+          (lit(1.0) + exp(-ArrayDot(col("embedding"), expr(wLit)))), 4))
       .select(col(idCol), col("score"), (col("score") >= threshold).as("keep"))
   }
 
@@ -1128,7 +1118,6 @@ object TextAnalysis {
     * per-doc rollup. Rounded to 4 decimals for engine-portable ln. */
   def bigramSurprisal(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
-    graft.functions.ShingleStrings.register(docs.sparkSession)
     val base = docs.select(col(idCol),
       filter(split(lower(col(textCol)), "\\s+"), t => length(t) > 0).as("ws"))
     val toks = base.select(col(idCol), explode(col("ws")).as("term"))
@@ -1140,8 +1129,7 @@ object TextAnalysis {
     // one, and `prev` recovers exactly via substring_index — every nll is
     // value-identical to the struct formulation the DuckDB oracle runs.
     val bg = base.where(size(col("ws")) >= 2)
-      .select(col(idCol), explode(expr(
-        s"${graft.functions.ShingleStrings.FunctionName}(ws, 2)")).as("g"))
+      .select(col(idCol), explode(ShingleStrings(col("ws"), 2)).as("g"))
     val bfreq = bg.groupBy("g").agg(count(lit(1)).as("cb"))
     val ufreq = toks.groupBy("term").agg(count(lit(1)).as("cu"))
     val stats = broadcast(ufreq.agg(count(lit(1)).cast("double").as("vocab")))
@@ -1171,11 +1159,9 @@ object TextAnalysis {
     // element, O(n·w) dispatch steps, ~5x slower at sf0.1). lower() stays
     // OUTSIDE the expression so Spark's own Unicode lowercasing defines
     // case folding, identical to the SQL/oracle formulation.
-    graft.functions.WinnowingFingerprints.register(docs.sparkSession)
     docs.where(length(col(textCol)) >= k)
       .select(col("doc_id"), lower(col(textCol)).as("t"))
-      .withColumn("fingerprints",
-        expr(s"${graft.functions.WinnowingFingerprints.FunctionName}(t, $k, $w)"))
+      .withColumn("fingerprints", WinnowingFingerprints(col("t"), k, w))
       .select(col("doc_id"),
         size(col("fingerprints")).cast("long").as("n_fingerprints"),
         md5(concat_ws(",", col("fingerprints"))).as("fp_digest"))

@@ -28,11 +28,8 @@ object WebFilters {
   /** Optimizer fence for the per-link resolver output ([[PlanFence]]'s
     * scaladoc has the measured blowup): wraps a computed column so the
     * resolver tree is planned and code-generated ONCE instead of being
-    * inlined into every downstream verdict predicate. Value-identical;
-    * callers must have registered the function for `docs.sparkSession`
-    * (each explode-then-resolve operator does, at entry). */
-  private def fenced(c: Column): Column =
-    call_function(graft.functions.PlanFence.FunctionName, c)
+    * inlined into every downstream verdict predicate. Value-identical. */
+  private def fenced(c: Column): Column = graft.functions.PlanFence(c)
 
   /** Minimum visible characters for a block to count as main content. */
   val MinBlockChars = 15
@@ -281,7 +278,6 @@ object WebFilters {
     * Output (doc_id, url). */
   def htmlLinks(docs: DataFrame, htmlCol: String = "html",
                 baseCol: String = "base_url"): DataFrame = {
-    graft.functions.PlanFence.register(docs.sparkSession)
     docs.select(col("doc_id"), col(baseCol),
         explode(regexp_extract_all(col(htmlCol), lit(HrefPat), lit(1)))
           .as("__href"))
@@ -1016,7 +1012,6 @@ object WebFilters {
     val tag = col("__tag")
     val relVal = lower(
       regexp_extract(tag, "(?is)[\\s\"']rel\\s*=\\s*\"([^\"]*)\"", 1))
-    graft.functions.PlanFence.register(docs.sparkSession)
     docs
       .where(!metaNofollow(col(htmlCol)))
       .select(col("doc_id"), col(baseCol),
@@ -1050,7 +1045,6 @@ object WebFilters {
       regexp_extract(tag, "(?is)[\\s\"']hreflang\\s*=\\s*\"([^\"]*)\"", 1))
     val href = decodeEntities(
       regexp_extract(tag, "(?is)[\\s\"']href\\s*=\\s*\"([^\"]*)\"", 1))
-    graft.functions.PlanFence.register(docs.sparkSession)
     docs.select(col("doc_id"), col(baseCol),
         explode(regexp_extract_all(col(htmlCol), lit(LinkTagPat), lit(0)))
           .as("__tag"))
@@ -1161,7 +1155,6 @@ object WebFilters {
     val elem = col("__elem")
     val href = regexp_extract(elem, HrefPat, 1)
     val body = regexp_extract(elem, "(?is)^<a\\b[^>]*>(.*)</a>$", 1)
-    graft.functions.PlanFence.register(docs.sparkSession)
     docs.select(col("doc_id"), col(baseCol),
         explode(regexp_extract_all(col(htmlCol), lit(AnchorElemPat), lit(0)))
           .as("__elem"))
@@ -1489,7 +1482,6 @@ object WebFilters {
                        idCol: String = "doc_id", urlCol: String = "url",
                        htmlCol: String = "html"): DataFrame = {
     require(maxHops >= 1, s"bad maxHops $maxHops")
-    graft.functions.PlanFence.register(pages.sparkSession)
     // Staged + fenced resolution (the htmlLinks contract): urlCanonical
     // textually references its argument ~6 times, so nesting the 27 KB
     // resolveHref tree inside it multiplies AT CONSTRUCTION — the

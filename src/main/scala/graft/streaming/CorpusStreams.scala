@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.MinhashSignature
 import graft.operators.{CorpusFilters, Dedup, MediaItem}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -107,7 +108,6 @@ object CorpusStreams {
   def decontaminationGate(docs: DataFrame, evalDocs: DataFrame, n: Int = 3,
                           k: Int = 8, r: Int = 2,
                           textCol: String = "text"): DataFrame = {
-    graft.functions.MinhashSignature.register(docs.sparkSession)
     val evalKeys: Array[String] =
       Dedup.lshBands(Dedup.minhashSignatures(evalDocs, n, k), k, r)
         .select(concat_ws(":", col("band"), col("bkey")).as("key"))
@@ -123,7 +123,7 @@ object CorpusStreams {
       // array) so the element_at band lookups below never index an empty
       // array — their band keys degrade to 'b:' strings that match no key
       .withColumn("__sig", when(size(col("__w")) >= n,
-        expr(s"${graft.functions.MinhashSignature.FunctionName}(__w, $n, $k)")))
+        MinhashSignature(col("__w"), n, k)))
       .where(col("__sig").isNull ||
         !arrays_overlap(array(bands: _*), lit(evalKeys)))
       .drop("__w", "__sig")

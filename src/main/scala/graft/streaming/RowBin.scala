@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * once per row while requests are being handled 32-wide, is ~2-4× smaller
   * on the heap than the boxed array it replaces, ships to executors as a
   * plain byte[] (near-memcpy Java serialization), and is emitted by the
-  * seal scan without any further conversion (SealRowSource).
+  * seal scan without any further conversion (`graft.sources.SealRowTable`).
   *
   * UnsafeProjection instances are codegen'd and NOT thread-safe → one per
   * thread via ThreadLocal; the projection's output buffer is reused across

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.otlp.OtlpSchemas
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftAccess, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The store-facing seal surface (reference: the SealCatalog/SealParquet/
@@ -107,19 +107,16 @@ private[graft] object SealFrames {
       ("scope_attributes", k, ServerConfig.promotedScopeColumn(k)))
 
   /** Run `fn` over the batch's DataFrame (base signal columns + promoted
-    * attribute columns). Valid only inside the callback — the row handle
-    * is freed after. */
+    * attribute columns): a scan of the batch's own rows
+    * ([[graft.sources.SealRowTable]]). */
   def withBatch[A](spark: SparkSession, cfg: ServerConfig, batch: SealBatch)
                   (fn: DataFrame => A): A = {
-    val handle = graft.sources.SealRowSource.register(
+    val table = new graft.sources.SealRowTable(
       OtlpSchemas.forSignal(batch.signal), chunked(spark, batch.rows))
-    try {
-      var df = graft.sources.SealRowSource.dataFrame(spark, handle)
-      promoted(cfg).foreach { case (src, key, colName) =>
-        df = df.withColumn(colName, get_json_object(col(src), s"$$['$key']"))
-      }
-      fn(df)
-    } finally graft.sources.SealRowSource.unregister(handle)
+    fn(promoted(cfg).foldLeft(GraftAccess.tableFrame(spark, table)) {
+      case (df, (src, key, colName)) =>
+        df.withColumn(colName, get_json_object(col(src), s"$$['$key']"))
+    })
   }
 
   def isParquetFile(st: FileStatus): Boolean =

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.otlp.OtlpSchemas
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,12 +27,6 @@ import org.apache.spark.sql.types._
   * at 100 TB the promoted column is what gives parquet min/max pruning. */
 final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarget {
 
-  /** (source JSON column, attribute key, promoted column name). */
-  private def promoted: Seq[(String, String, String)] = SealFrames.promoted(cfg)
-
-  /** External (Row-compatible) schema of a signal's seal DataFrame. */
-  private def baseSchema(signal: String): StructType = OtlpSchemas.forSignal(signal)
-
   def prepareTables(): Unit = {
     if (cfg.target == "catalog") {
       spark.sql(s"CREATE DATABASE IF NOT EXISTS ${cfg.schema}")
@@ -44,7 +38,7 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
               s"table $table is not available (create_tables := false)")
           val empty = spark.createDataFrame(
             java.util.Collections.emptyList[Row](),
-            withSealId(withPromoted(baseSchema(signal))))
+            withSealId(withPromoted(OtlpSchemas.forSignal(signal))))
           empty.write.saveAsTable(table)
         } else {
           validateTable(table, signal)
@@ -62,7 +56,7 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
     * trailing columns are fine — the promotion / wide-table contract). */
   private def validateTable(table: String, signal: String): Unit = {
     val actual = spark.table(table).schema
-    val base = withPromoted(baseSchema(signal))
+    val base = withPromoted(OtlpSchemas.forSignal(signal))
     if (actual.fields.length < base.fields.length ||
       !base.fields.zip(actual.fields).forall { case (b, a) =>
         b.name == a.name && b.dataType == a.dataType
@@ -73,7 +67,8 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
   }
 
   private def withPromoted(s: StructType): StructType =
-    StructType(s.fields ++ promoted.map { case (_, _, c) => StructField(c, StringType) })
+    StructType(s.fields ++ SealFrames.promoted(cfg).map { case (_, _, c) =>
+      StructField(c, StringType) })
 
   /** Retry-idempotence marker column on catalog tables: every seal attempt
     * tags its rows with the attempt's UUID, so a retry after a failure in
@@ -97,13 +92,6 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
         .where(col(SealIdColumn) === lit(sealId)).limit(1).isEmpty
       catch { case _: Exception => false })
 
-  private def withHandle[A](batch: SealBatch)(fn: DataFrame => A): A =
-    SealFrames.withBatch(spark, cfg, batch)(fn)
-
-  /** Build the seal DataFrame for one batch (base cols + promoted cols).
-    * NOTE: valid only inside the callback — the row handle is freed after. */
-  def toDataFrame[A](batch: SealBatch)(fn: DataFrame => A): A = withHandle(batch)(fn)
-
   /** Per-signal write locks: catalog appends go through insertInto, whose
     * commit protocol stages under the table's shared _temporary dir — two
     * concurrent jobs on one table collide. Parquet seals don't need this:
@@ -111,19 +99,10 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
   private val tableLocks: Map[String, Object] =
     OtlpSchemas.Signals.map(s => s -> new Object).toMap
 
-  /** Seal jobs run in their own scheduler pool: under FIFO they are plain
-    * jobs like any other, but a deployment that enables FAIR scheduling
-    * (spark.scheduler.mode=FAIR) gets seal drains round-robined against
-    * interactive query jobs instead of queued behind them — heavy query
-    * load can no longer starve ingest durability. Pool assignment is a
-    * thread-local property, set on the per-signal writer threads. */
-  private def inSealPool[A](fn: => A): A =
-    SealFrames.inSealPool(spark)(fn)
-
-  def write(batch: SealBatch): Unit = inSealPool { cfg.target match {
+  def write(batch: SealBatch): Unit = SealFrames.inSealPool(spark) { cfg.target match {
     case "catalog" =>
       tableLocks(batch.signal).synchronized {
-        withHandle(batch) { df0 =>
+        SealFrames.withBatch(spark, cfg, batch) { df0 =>
           // align by name with the live table schema: wide tables may carry
           // extra trailing columns (the promotion / schema-evolution
           // contract) — they NULL-fill, like the reference's column-targeted
@@ -141,7 +120,7 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
           if (hook != null) hook(batch.signal)
         }
       }
-    case "parquet" => withHandle(batch) { df =>
+    case "parquet" => SealFrames.withBatch(spark, cfg, batch) { df =>
       // Physical-layout accelerators the reference measured as "tier 2"
       // future work (benchmark/otlp-query-probe: ~3.2x scan-cost win from
       // (service, time) clustering; ~8x bytes-scanned win from a trace_id
@@ -163,9 +142,6 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
 
   private def fs(p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def isParquetFile(st: FileStatus): Boolean =
-    SealFrames.isParquetFile(st)
 
   /** Inspection views over the parquet export layout (reference creates a
     * view via read_parquet over the recursive table glob after sealing,
@@ -218,7 +194,7 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
           val name = st.getPath.getName
           if (st.isDirectory && !name.startsWith(".") && !name.startsWith("_")) {
             deleted += walk(st.getPath, isRoot = false)
-          } else if (isParquetFile(st) && st.getModificationTime < horizon) {
+          } else if (SealFrames.isParquetFile(st) && st.getModificationTime < horizon) {
             if (hfs.delete(st.getPath, false)) deleted += 1
           }
         }
@@ -263,7 +239,7 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
       spark.read.parquet(files.map(_.getPath.toString): _*)
         .coalesce(1).write.mode("overwrite")
         .option("compression", "zstd").parquet(tmp.toString)
-      val parts = hfs.listStatus(tmp).filter(isParquetFile)
+      val parts = hfs.listStatus(tmp).filter(SealFrames.isParquetFile)
       parts.foreach { p =>
         val dest = new Path(dir, s"compact-${java.util.UUID.randomUUID()}.parquet")
         if (!hfs.rename(p.getPath, dest))
@@ -294,7 +270,7 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
         if (kids.isEmpty) Seq(d) else kids.toSeq.flatMap(leafDirs)
       }
       leafDirs(root).map { dir =>
-        val files = hfs.listStatus(dir).filter(isParquetFile)
+        val files = hfs.listStatus(dir).filter(SealFrames.isParquetFile)
         if (files.length > 4 && files.map(_.getLen).sum < cfg.targetFileSize)
           rewriteFiles(dir, files.toSeq)
         else 0L
@@ -307,7 +283,7 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
       if (!hfs.exists(dir)) return 0L
       // oldest small files first; one bounded bin-pack per cycle keeps the
       // write amplification O(target_file_size) however large the table is
-      val small = hfs.listStatus(dir).filter(isParquetFile)
+      val small = hfs.listStatus(dir).filter(SealFrames.isParquetFile)
         .filter(_.getLen < cfg.targetFileSize / 4)
         .sortBy(_.getModificationTime)
       var acc = 0L

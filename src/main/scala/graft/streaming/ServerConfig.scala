@@ -12,7 +12,7 @@ final case class ServerConfig(
     catalog: String,
     createTables: Boolean,
     transport: String,
-    target: String,             // "catalog" | "parquet"
+    target: String,             // "catalog" | "parquet" | "snapshot"
     parquetRoot: String,
     sealTargetBytes: Long,
     sealMaxAgeMs: Long,

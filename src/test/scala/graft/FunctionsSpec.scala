@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.WinnowingFingerprints
+import graft.functions.{ArrayDot, ArraySqDist, DocBuckets, HashEmbed,
+  WinnowingFingerprints}
 import org.apache.spark.sql.functions._
 
 /** The native winnowing expression must be value-identical to the SQL
@@ -24,10 +25,9 @@ class FunctionsSpec extends SparkTestBase {
       .select(col("doc_id"), col("fp"))
 
   private def nativeFormulation(df: org.apache.spark.sql.DataFrame) = {
-    WinnowingFingerprints.register(spark)
     df.where(length(col("text")) >= k)
       .select(col("doc_id"), lower(col("text")).as("t"))
-      .withColumn("fp", expr(s"winnowing_fingerprints(t, $k, $w)"))
+      .withColumn("fp", WinnowingFingerprints(col("t"), k, w))
       .select(col("doc_id"), col("fp"))
   }
 
@@ -126,7 +126,6 @@ class FunctionsSpec extends SparkTestBase {
 
   test("array_sqdist ≡ the zip_with/aggregate lambda squared-L2, bit-for-bit") {
     Tables.register(spark, sfDir)
-    graft.functions.ArraySqDist.register(spark)
     import org.apache.spark.sql.functions._
     val e = spark.table("embeddings")
       .select(col("vec_id"), transform(col("embedding"),
@@ -134,7 +133,7 @@ class FunctionsSpec extends SparkTestBase {
     val pairs = e.as("a").join(e.as("b"),
       col("a.vec_id") + 1 === col("b.vec_id"))
     val diff = pairs.select(
-      expr("array_sqdist(a.v, b.v)").as("nat"),
+      ArraySqDist(col("a.v"), col("b.v")).as("nat"),
       aggregate(zip_with(col("a.v"), col("b.v"), (x, c) => (x - c) * (x - c)),
         lit(0.0), (acc, x) => acc + x).as("lam"))
       .where(col("nat") =!= col("lam"))
@@ -143,7 +142,6 @@ class FunctionsSpec extends SparkTestBase {
 
   test("array_dot ≡ the zip_with/aggregate lambda dot, bit-for-bit") {
     Tables.register(spark, sfDir)
-    graft.functions.ArrayDot.register(spark)
     import org.apache.spark.sql.functions._
     val e = spark.table("embeddings")
       .select(col("vec_id"), transform(col("embedding"),
@@ -153,14 +151,124 @@ class FunctionsSpec extends SparkTestBase {
       col("a.vec_id") === col("b.vec_id") ||
         col("a.vec_id") + 1 === col("b.vec_id"))
     val diff = pairs.select(
-      expr("array_dot(a.v, b.v)").as("nat"),
+      ArrayDot(col("a.v"), col("b.v")).as("nat"),
       aggregate(zip_with(col("a.v"), col("b.v"), (x, y) => x * y),
         lit(0.0), (acc, x) => acc + x).as("lam"))
       .where(col("nat") =!= col("lam")) // exact, not approximate
     assert(diff.isEmpty, "identical summation order must give identical doubles")
     // and it must stay inside whole-stage codegen
-    val plan = e.select(expr("array_dot(v, v)"))
+    val plan = e.select(ArrayDot(col("v"), col("v")))
       .queryExecution.executedPlan.toString
     assert(plan.contains("*("), plan)
+  }
+
+  test("salts reach hash_embed and doc_buckets byte for byte: a quote and " +
+    "a literal backslash-n") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    def words(ws: String*) =
+      new GenericArrayData(ws.map(w => UTF8String.fromString(w): Any).toArray)
+    // a salt read as SQL text would lose the quote (a parse error) or turn
+    // the backslash-n into a newline; `unescaped` is that reading
+    def unescaped(salt: String) = salt.replace("\\n", "\n")
+    val salts = Seq("it's", "a\\nb")
+    assert(salts(1).length == 4)
+
+    val text = "the quick brown fox jumps over the lazy dog"
+    val toks = text.split(" ").toSeq
+    salts.foreach { salt =>
+      val raw = HashEmbed.compute(words(toks: _*), 8, salt).toDoubleArray()
+      if (unescaped(salt) != salt)
+        assert(!raw.sameElements(
+          HashEmbed.compute(words(toks: _*), 8, unescaped(salt)).toDoubleArray()))
+      val nrm = math.sqrt(raw.map(x => x * x).sum)
+      // the operator's normalization: x / norm, Spark's HALF_UP round(4)
+      val want = raw.map(x => BigDecimal(x / nrm)
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble).toSeq
+      val got = graft.operators.TextAnalysis.hashEmbedding(
+        Seq((1L, text)).toDF("doc_id", "text"), dims = 8, salt = salt)
+        .collect().map(_.getSeq[Double](1))
+      assert(got.toSeq == Seq(want), s"salt $salt")
+    }
+
+    // dsirWeights: one raw word x, one target word y, two buckets — the
+    // weight is 0 iff x and y share a bucket, else log(1/2) (-0.6931)
+    def bucket(w: String, salt: String) =
+      DocBuckets.compute(words(w), 2, salt).toLongArray().indexOf(1L)
+    def shared(y: String, salt: String) = bucket("x", salt) == bucket(y, salt)
+    salts.foreach { salt =>
+      // a y of each outcome, flipped under the unescaped salt when one exists
+      val ys = (0 until 1000).map(i => s"y$i")
+      def pick(same: Boolean) = ys.find(y => shared(y, salt) == same &&
+        (unescaped(salt) == salt || shared(y, unescaped(salt)) != same)).get
+      Seq(true, false).foreach { same =>
+        val y = pick(same)
+        val w = graft.operators.Sampling.dsirWeights(
+          Seq((1L, "x")).toDF("doc_id", "text"),
+          Seq((1L, y)).toDF("doc_id", "text"), buckets = 2, salt = salt)
+          .collect().map(_.getAs[Double]("dsir_weight"))
+        assert(w.toSeq == Seq(if (same) 0.0 else -0.6931), s"salt $salt, y $y")
+      }
+    }
+  }
+
+  test("native kernels and a seal write leave the session's functions " +
+    "unchanged") {
+    import spark.implicits._
+    import graft.operators.{CorpusFilters, Dedup, Sampling, Similarity,
+      TextAnalysis, WebFilters}
+    Tables.register(spark, sfDir)
+    def functions() = spark.catalog.listFunctions().collect().map(_.name).toSet ++
+      spark.sessionState.catalog.listTemporaryFunctions().map(f => s"temp:${f.funcName}")
+    val before = functions()
+    val docs = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog again and again",
+      2L -> "the quick brown fox jumps over the lazy cat once more today",
+      3L -> "a completely different sentence about tokenizers and merges")
+      .toDF("doc_id", "text")
+    val emb = spark.table("embeddings")
+    val links = docs.select(col("doc_id"),
+      concat(lit("https://h.example.org/d/"), col("doc_id")).as("base_url"),
+      concat(lit("<a href=\"/x/"), col("doc_id"), lit("\">t</a>")).as("html"))
+    val frames = Seq(
+      "array_dot" -> Similarity.cosineTopK(emb, queryId = 7, k = 3),
+      "array_sqdist" -> Similarity.kmeansClusters(emb, k = 2, dims = 64),
+      "chunk_hashes" -> CorpusFilters.chunkDedup(docs, chunkWords = 4),
+      "shingle_strings" -> Dedup.shingles(docs, 3),
+      "cdc_flags" -> CorpusFilters.cdcChunks(docs, blockWords = 8),
+      "hash_embed" -> TextAnalysis.hashEmbedding(docs),
+      "doc_buckets" -> Sampling.dsirWeights(docs, docs),
+      "minhash_signature" -> Dedup.minhashSignatures(docs),
+      "plan_fence" -> WebFilters.htmlLinks(links),
+      "simhash_fingerprint" -> Dedup.simhash(docs),
+      "window_hashes" -> Dedup.substringDedup(docs, l = 4),
+      "winnowing_fingerprints" -> TextAnalysis.winnowing(docs),
+      "bpe_encode_doc" -> TextAnalysis.bpeEncode(docs,
+        TextAnalysis.bpeMerges(docs, merges = 3)),
+      "uni_encode_doc" -> TextAnalysis.unigramEncode(docs,
+        TextAnalysis.unigramVocab(docs, vocabSize = 16)),
+      "wp_encode_doc" -> TextAnalysis.wordpieceEncode(docs,
+        TextAnalysis.wordpieceVocab(docs, vocabSize = 32)))
+    frames.foreach { case (kernel, df) =>
+      assert(df.queryExecution.analyzed.toString.contains(s"$kernel("), kernel)
+      df.collect()
+    }
+
+    // a seal write scans its batch's rows directly
+    val root = java.nio.file.Files.createTempDirectory("seal_no_registry")
+    val cfg = graft.streaming.ServerConfig("otlp_serve", "otlp:127.0.0.1:4318",
+      Map("disable_auth" -> "true", "target" -> "parquet",
+        "parquet_root" -> root.toString))
+    val rows = (0 until 3).map(i => graft.streaming.RowBin.forSignal("logs")
+      .toBytes(Array[Any](1700000000000000L + i, null, null, null, "svc", null,
+        null, 9, "INFO", null, s"body $i", "{}", null, null, null, null, 0, 0)))
+    new graft.streaming.SealWriter(cfg, spark).write(graft.streaming.SealBatch(
+      "logs", rows, 0L, 0L, 0L, "seal-1", Nil))
+    assert(spark.read.parquet(s"$root/otlp_logs").count() == 3)
+
+    val after = functions()
+    assert((after diff before) ++ (before diff after) == Set.empty[String])
+    assert(frames.map(_._1).toSet.intersect(after).isEmpty)
   }
 }

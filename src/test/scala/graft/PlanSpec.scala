@@ -705,11 +705,8 @@ class PlanSpec extends SparkTestBase {
       s"the fenced resolver must be computed exactly once:\n$p")
     // the sharp edge the scaladoc warns about, demonstrated: fencing a
     // column the scan COULD serve blocks its predicate from pushing down
-    graft.functions.PlanFence.register(spark)
     val misFenced = spark.table("documents")
-      .select(col("doc_id"),
-        call_function(graft.functions.PlanFence.FunctionName,
-          col("doc_id")).as("fid"))
+      .select(col("doc_id"), graft.functions.PlanFence(col("doc_id")).as("fid"))
       .where(col("fid") < 50)
     val mp = plan(misFenced)
     assert(!mp.contains("LessThan(doc_id,50)"),

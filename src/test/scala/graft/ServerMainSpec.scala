@@ -69,6 +69,15 @@ class ServerMainSpec extends SparkTestBase {
     assert(!auto.serveParams.contains("http_threads"))
     // config errors exit with the clean code-2 contract, not a stack trace
     assert(ServerMain.run(env(Map("GRAFT_MODE" -> "iceberg"))) == 2)
+    // the listen URI and its wire are config too: a non-otlp/otap scheme
+    // and an otap: listener on the HTTP wire fail before any session
+    val badUri = Map("GRAFT_OTLP_LISTEN_URI" -> "http://bogus")
+    val otapHttp = Map("GRAFT_OTLP_LISTEN_URI" -> "otap:localhost:4317",
+      "GRAFT_OTLP_TRANSPORT" -> "http")
+    Seq(badUri, otapHttp).foreach { e =>
+      intercept[IllegalArgumentException](ServerMain.configFromEnv(env(e)))
+      assert(ServerMain.run(env(e)) == 2)
+    }
   }
 
   test("daemon session: master from the injected env, partitions from the master") {

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The mains share one session shape, their dev switches stay the
-  * documented few, and src/main keeps one protobuf varint decoder. */
+  * documented few, src/main keeps one protobuf varint decoder, and it
+  * binds nothing by name in a session. */
 class SessionsSpec extends AnyFunSuite {
 
   test("Sessions.conf is Bench's session shape") {
@@ -61,5 +62,18 @@ class SessionsSpec extends AnyFunSuite {
       case (p, src) if src.contains("& 0x7fL) <<") => p.getFileName.toString
     }
     assert(decoders == Seq("ProtoReader.scala"))
+  }
+
+  test("src/main registers no session function and keeps no seal-handle registry") {
+    // native kernels enter plans as expression values (their companions'
+    // Column constructors) and a seal write scans a table value, so
+    // nothing is bound by name in a session or a process-wide map
+    val hits = for {
+      (p, src) <- mainSources
+      needle <- Seq("createOrReplaceTempFunction", "functionRegistry",
+        "udf.register", "FunctionName", "SealRowSource")
+      if src.contains(needle)
+    } yield s"${p.getFileName}: $needle"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
