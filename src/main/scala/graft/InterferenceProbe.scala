@@ -49,9 +49,11 @@ object InterferenceProbe {
         s"unknown subset: $other (spread|heavy)")
     }
     // the probe IS the shared-cluster shape, so it runs the scheduler a
-    // shared cluster runs: FAIR, with seal jobs already tagged into their
-    // own 'graft-seals' pool (SealTarget.inSealPool) — queries and seal
-    // drains round-robin instead of queueing FIFO behind a long sweep stage
+    // shared cluster runs: FAIR. The ingest window seals into the parquet
+    // target, whose seals start no Spark job: they write on the server's
+    // own seal threads and meet the sweep's tasks only as CPU contention.
+    // (Catalog-target seals would run as jobs in their own 'graft-seals'
+    // pool, SealFrames.inSealPool, round-robin with the sweep's jobs.)
     val spark = Sessions.open(
       Sessions.builder().config("spark.scheduler.mode", "FAIR"))
     Tables.register(spark, sfDir)

@@ -91,7 +91,13 @@ object ServerMain {
       .flatMap { case (e, p) => env(e)
         // documented: GRAFT_OTLP_HTTP_THREADS=auto = the server default
         .filterNot(v => p == "http_threads" && v.equalsIgnoreCase("auto"))
-        .map(p -> _) }.toMap
+        .map { v =>
+          // parsed here, so a bad number fails before any session is built
+          val parsed = if (p == "http_threads") v.toIntOption else v.toLongOption
+          if (parsed.isEmpty)
+            throw new IllegalArgumentException(s"$e must be an integer, got '$v'")
+          p -> v
+        } }.toMap
 
     val modeParams =
       if (mode == "parquet" || mode == "snapshot") {
@@ -183,8 +189,6 @@ object ServerMain {
     val cfg = try configFromEnv(env) catch {
       case e: IllegalArgumentException =>
         System.err.println(s"ERROR: ${e.getMessage}"); return 2
-      case e: NumberFormatException =>
-        System.err.println(s"ERROR: bad numeric setting: ${e.getMessage}"); return 2
     }
 
     println("Starting graft otlp server\n")

@@ -1,10 +1,10 @@
 package graft
 
-import graft.streaming.{SealBatch, SealFrames}
+import graft.streaming.SealFrames
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, GraftAccess, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -29,13 +29,13 @@ private[graft] object Tier2Layout {
       col("id").cast("string").as("span_id"),
       format_string("svc%02d", col("id") % services).as("service_name"))
 
-  /** One seal through the production write path (clustering + adaptive
-    * trace_id blooms — SealFrames.stageAndPublish). */
-  def seal(spark: SparkSession, df: DataFrame, root: String,
-           sealId: String): Unit =
-    SealFrames.stageAndPublish(spark,
-      SealBatch("traces", IndexedSeq.empty, 0L, 0L, 0L, sealId, Nil),
-      df, new Path(root))
+  /** One seal of `df`'s collected rows through the production write path
+    * (clustering + adaptive trace_id blooms — SealFrames.stageAndPublish),
+    * as one slice: one file per day, the shape of a large seal's file. */
+  def seal(spark: SparkSession, df: DataFrame, root: String): Unit =
+    SealFrames.stageAndPublish(spark, df.schema,
+      Seq(GraftAccess.collectInternal(df).toIndexedSeq),
+      SealFrames.timeColumn("traces"), Nil, new Path(root))
 
   /** Bytes fetched from the FS while running `fn` (all reads are in-JVM
     * under local[*], so scheme-level FS statistics see every executor

@@ -32,7 +32,7 @@ object Tier2Probe {
     val hconf = spark.sparkContext.hadoopConfiguration
     hconf.set("parquet.block.size", (8 * 1024 * 1024).toString)
 
-    // One file per seal (coalesce(1)): a production seal file is hundreds
+    // One file per seal (one slice): a production seal file is hundreds
     // of MB with many row groups; at probe scale the equivalent shape is a
     // ~500k-row file with ~4 row groups of the 8 MB size set above. A
     // many-tiny-files shape (16 files x 15k rows per seal) has one row
@@ -42,8 +42,7 @@ object Tier2Probe {
     val per = n / seals
     val t0 = System.nanoTime()
     (0 until seals).foreach { i =>
-      seal(spark, spans(spark, i * per, per, services = 20).coalesce(1),
-        clustered, s"t2-$i")
+      seal(spark, spans(spark, i * per, per, services = 20), clustered)
     }
     val sealSec = (System.nanoTime() - t0) / 1e9
     spans(spark, 0L, n, services = 20)

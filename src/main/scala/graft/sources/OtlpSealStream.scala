@@ -29,7 +29,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - Each micro-batch reads the retained seals in `(start, end]`; rows
   *     are the server's ingest-time UnsafeRow images (RowBin), shipped
   *     inside `InputPartition`s and emitted with zero conversion — the
-  *     same zero-copy partitions and reader the seal writer's
+  *     same zero-copy partitions and reader the catalog seal's
   *     `SealRowTable` scans.
   *   - `commit(end)` evicts seals `<= end`; until then a kill + restart of
   *     the query replans the same range from the checkpoint WAL — no loss,

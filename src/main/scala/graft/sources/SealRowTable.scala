@@ -10,15 +10,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** In-memory DSv2 batch table over rows already encoded as UnsafeRow byte
   * images (graft.streaming.RowBin), chunked one chunk per partition.
   *
-  * This is the seal pipeline's bridge from the driver-resident ingest
-  * buffers into a distributed Spark write with ZERO per-row work on the
-  * driver: `planInputPartitions` hands each task a chunk of byte arrays
-  * (fast to serialize — no boxed objects), and the partition reader emits
-  * each image as an `InternalRow` via `UnsafeRow.pointTo` — no conversion,
-  * no copy. On a real cluster the chunks ride inside the InputPartition
-  * exactly as any first-party in-memory source would.
+  * This is the catalog seal's bridge from the driver-resident ingest
+  * buffers into its `insertInto` job, with ZERO per-row work on the driver:
+  * `planInputPartitions` hands each task a chunk of byte arrays (fast to
+  * serialize — no boxed objects), and the partition reader emits each
+  * image as an `InternalRow` via `UnsafeRow.pointTo` — no conversion, no
+  * copy. On a real cluster the chunks ride inside the InputPartition
+  * exactly as any first-party in-memory source would. (Parquet and
+  * snapshot seals read the same images on the seal thread, with no job.)
   *
-  * The rows are a field of the table: the seal writer scans a table value
+  * The rows are a field of the table: the catalog seal scans a table value
   * it built for one batch (`graft.streaming.SealFrames.withBatch`), so
   * nothing is looked up by name and nothing outlives the batch's plan. */
 class SealRowTable(schema0: StructType, chunks: Array[Array[Array[Byte]]])

@@ -99,9 +99,10 @@ private[streaming] object OtapOutcome {
   *     preserved) for retry — at-least-once, like the reference's parquet
   *     path.
   *
-  * Scale: the buffer/seal pipeline is driver-hosted control plane; the seal
-  * write itself is a distributed Spark write (partitioned parquet / catalog
-  * append). At 100 TB one runs many ingest endpoints, each sealing into the
+  * Scale: the buffer/seal pipeline is driver-hosted; a parquet or snapshot
+  * seal writes its partitioned parquet on the seal threads, like the
+  * reference's in-process COPY, and only a catalog append runs as a Spark
+  * job. At 100 TB one runs many ingest endpoints, each sealing into the
   * same partitioned layout — the layout, not the listener, is the scale unit.
   */
 final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
@@ -729,7 +730,7 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
     // binds ADMISSION only: the seal size trigger fires on wire bytes
     // (below), matching the reference's admitted-request-bytes trigger —
     // an inflated trigger would fire seals at a fraction of the configured
-    // target and multiply per-seal Spark job overhead.
+    // target and multiply the fixed per-seal cost (files, footers, renames).
     val heapBytes = nonEmpty.iterator
       .map(_._2.iterator.map(_.length.toLong + 16L).sum).sum
     val bytes = math.max(wireBytes, heapBytes)
@@ -786,7 +787,7 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
       val ageDue = oldestBufferedAgeMs.exists(_ >= cfg.sealMaxAgeMs)
       // a size request can go stale when a concurrent cycle drained the
       // buffers between the signal and this wakeup — a near-empty seal
-      // still pays full Spark job overhead, so require a quarter-target
+      // still pays a seal's fixed cost, so require a quarter-target
       // floor unless the age trigger or admission pressure binds
       val worthSealing = ageDue ||
         bufferedWireBytes >= cfg.sealTargetBytes / 4 ||
@@ -809,11 +810,11 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
 
   private val writerMutex = new Object
   private val maintenanceMutex = new Object
-  /** Bound on overlapping seal cycles: cycle N's distributed write runs
-    * while cycle N+1 swaps and starts its own, hiding job-launch and
-    * output-commit latency between seals (the measured durable-throughput
-    * bottleneck was the serial write tail). Two in flight bounds memory at
-    * ~2× seal_target_bytes of row images. */
+  /** Bound on overlapping seal cycles: cycle N's writes run while cycle
+    * N+1 swaps and starts its own, hiding each seal's write and publish
+    * latency between seals (the measured durable-throughput bottleneck was
+    * the serial write tail). Two in flight bounds memory at ~2×
+    * seal_target_bytes of row images. */
   private val sealSlots = new java.util.concurrent.Semaphore(2)
   private val inflight = new java.util.concurrent.ConcurrentLinkedQueue[SealCycle]()
 
@@ -1032,7 +1033,7 @@ final class OtlpServer(val cfg: ServerConfig, spark: SparkSession) {
     }
   }
 
-  /** One Spark-job write of a sealed batch; returns the error (None = ok).
+  /** One target write of a sealed batch; returns the error (None = ok).
     * Catches Throwable, not just Exception: a write thread dying from an
     * Error (OOM during a large seal) must still produce a failure outcome,
     * or the batch would be neither committed nor restored and its admission

@@ -12,10 +12,12 @@ import org.apache.spark.sql.types.StructType
   * sealer thread (driver-heap Array[Any] → external Row → Catalyst), and
   * `sparkContext.parallelize` Java-serialized the boxed rows into each task
   * — the measured durable-ingest bottleneck. An UnsafeRow image is built
-  * once per row while requests are being handled 32-wide, is ~2-4× smaller
-  * on the heap than the boxed array it replaces, ships to executors as a
-  * plain byte[] (near-memcpy Java serialization), and is emitted by the
-  * seal scan without any further conversion (`graft.sources.SealRowTable`).
+  * once per row while requests are being handled 32-wide, and is ~2-4×
+  * smaller on the heap than the boxed array it replaces. A parquet or
+  * snapshot seal's writer reads the images in place (`UnsafeRow.pointTo`,
+  * `graft.streaming.SealFrames.publishBatch`); the catalog seal's scan and
+  * the `otlp-seals` stream emit them without any further conversion
+  * (`graft.sources.SealRowTable`).
   *
   * UnsafeProjection instances are codegen'd and NOT thread-safe → one per
   * thread via ThreadLocal; the projection's output buffer is reused across

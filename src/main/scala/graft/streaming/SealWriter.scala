@@ -11,14 +11,20 @@ import org.apache.spark.sql.types._
   *
   *   - catalog mode: append into `<schema>.otlp_<signal>` managed tables
   *     (created at startup with the base signal schema plus any promoted
-  *     attribute columns). Spark has no cross-table transaction, so the
-  *     contract is per-signal at-least-once — the documented contract of
-  *     the reference's parquet path; a failed signal re-buffers for retry.
+  *     attribute columns), one `insertInto` Spark job per signal — managed
+  *     tables need the catalog. Spark has no cross-table transaction, so
+  *     the contract is per-signal at-least-once — the documented contract
+  *     of the reference's parquet path; a failed signal re-buffers for
+  *     retry.
   *   - parquet mode: `root/otlp_<signal>/year=YYYY/month=MM/day=DD/` zstd
   *     parquet, partitioned on start_time_unix_nano for traces and
   *     time_unix_nano otherwise; partition columns are not written into
   *     the data files (Spark partitionBy semantics — same as the
-  *     reference's WRITE_PARTITION_COLUMNS false).
+  *     reference's WRITE_PARTITION_COLUMNS false). The seal thread writes
+  *     the files itself through Spark's parquet `OutputWriter`, with no
+  *     Spark job, as the reference seals each signal with one in-process
+  *     `COPY ... TO ... (FORMAT PARQUET, PARTITION_BY ...)`
+  *     ([[SealFrames.stageAndPublish]]).
   *
   * Attribute promotion: each key in promote_resource_attributes becomes a
   * `resource_attr_<sanitized>` STRING column on every signal, computed at
@@ -99,8 +105,8 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
   private val tableLocks: Map[String, Object] =
     OtlpSchemas.Signals.map(s => s -> new Object).toMap
 
-  def write(batch: SealBatch): Unit = SealFrames.inSealPool(spark) { cfg.target match {
-    case "catalog" =>
+  def write(batch: SealBatch): Unit = cfg.target match {
+    case "catalog" => SealFrames.inSealPool(spark) {
       tableLocks(batch.signal).synchronized {
         SealFrames.withBatch(spark, cfg, batch) { df0 =>
           // align by name with the live table schema: wide tables may carry
@@ -120,23 +126,22 @@ final class SealWriter(cfg: ServerConfig, spark: SparkSession) extends SealTarge
           if (hook != null) hook(batch.signal)
         }
       }
-    case "parquet" => SealFrames.withBatch(spark, cfg, batch) { df =>
+    }
+    case "parquet" =>
       // Physical-layout accelerators the reference measured as "tier 2"
       // future work (benchmark/otlp-query-probe: ~3.2x scan-cost win from
       // (service, time) clustering; ~8x bytes-scanned win from a trace_id
-      // bloom filter on point lookups): cluster rows inside each seal file
-      // and attach parquet blooms where a trace_id column exists.
+      // bloom filter on point lookups): rows are clustered inside each seal
+      // file and trace_id columns carry parquet blooms.
       // Isolated staging per seal, then per-file rename into the live
-      // layout: concurrent seal cycles on the SAME signal would otherwise
-      // share the path's _temporary dir (FileOutputCommitter) and clobber
-      // each other's staged files. Publish is at-least-once (a crash
+      // layout, so concurrent seal cycles on the SAME signal never see each
+      // other's staged files. Publish is at-least-once (a crash
       // mid-publish re-seals the batch), the documented contract.
-      // (SealFrames.stageAndPublish carries the mechanics, shared with the
+      // (SealFrames.publishBatch carries the mechanics, shared with the
       // snapshot target whose commit additionally records the file list.)
-      SealFrames.stageAndPublish(spark, batch, df,
+      SealFrames.publishBatch(spark, cfg, batch,
         new Path(s"${cfg.parquetRoot}/otlp_${batch.signal}"))
-    }
-  } }
+  }
 
   // ---- maintenance (Hadoop FS API: works on file:, hdfs:, s3a:, abfs:) ----
 

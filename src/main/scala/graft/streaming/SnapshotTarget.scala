@@ -298,23 +298,21 @@ final class SnapshotTarget(cfg: ServerConfig, spark: SparkSession) extends SealT
 
   // ---- seal ---------------------------------------------------------------
 
-  def write(batch: SealBatch): Unit = SealFrames.inSealPool(spark) {
-    SealFrames.withBatch(spark, cfg, batch) { df =>
-      val root = tableRoot(batch.signal)
-      val published = SealFrames.stageAndPublish(spark, batch, df, root)
-      // stat + crc the NEW files only; parent entries are inherited
-      val newEntries = manifestEntries(batch.signal, published)
-      commitLocks(batch.signal).synchronized {
-        val parent = head(batch.signal)
-        commitSnapshot(batch.signal, Snapshot(
-          seq = parent.map(_.seq + 1).getOrElse(1L),
-          atMs = System.currentTimeMillis(),
-          sealId = batch.sealId,
-          entries = parent.map(_.entries).getOrElse(Seq.empty) ++ newEntries))
-      }
-      val hook = failAfterCatalogCommit
-      if (hook != null) hook(batch.signal)
+  def write(batch: SealBatch): Unit = {
+    val published =
+      SealFrames.publishBatch(spark, cfg, batch, tableRoot(batch.signal))
+    // stat + crc the NEW files only; parent entries are inherited
+    val newEntries = manifestEntries(batch.signal, published)
+    commitLocks(batch.signal).synchronized {
+      val parent = head(batch.signal)
+      commitSnapshot(batch.signal, Snapshot(
+        seq = parent.map(_.seq + 1).getOrElse(1L),
+        atMs = System.currentTimeMillis(),
+        sealId = batch.sealId,
+        entries = parent.map(_.entries).getOrElse(Seq.empty) ++ newEntries))
     }
+    val hook = failAfterCatalogCommit
+    if (hook != null) hook(batch.signal)
   }
 
   /** Seal ids ever observed committed, per signal: initialized ONCE from a

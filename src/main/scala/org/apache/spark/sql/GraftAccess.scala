@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.StructType
   *     field;
   *   - the Column/Expression bridge through which the native kernels of
   *     `graft.functions` enter plans as expression nodes;
-  *   - a frame over a DSv2 table value, for the seal scans. */
+  *   - a frame over a DSv2 table value, for the catalog seal's scan;
+  *   - the active session of a seal's write threads. */
 object GraftAccess {
 
   /** A Column over a Catalyst expression tree. */
@@ -38,6 +39,10 @@ object GraftAccess {
     SQLExecution.withNewExecutionId(qe, Some("collect"))(
       qe.executedPlan.executeCollect())
   }
+
+  /** Run `fn` with `spark` as this thread's active session, so code that
+    * reads `SQLConf.get` off a task thread sees the session's SQL conf. */
+  def withActive[A](spark: SparkSession)(fn: => A): A = spark.withActive(fn)
 
   /** A local frame of `rows` under `schema`: names, types and nullability
     * exactly as given. */

@@ -78,6 +78,23 @@ class ServerMainSpec extends SparkTestBase {
       intercept[IllegalArgumentException](ServerMain.configFromEnv(env(e)))
       assert(ServerMain.run(env(e)) == 2)
     }
+    // the numeric settings parse with the rest of the config: a bad number
+    // fails before any session, and so does an int setting out of int range
+    val parquet = Map("GRAFT_MODE" -> "parquet", "GRAFT_PARQUET_ROOT" -> "/tmp/x")
+    Seq("GRAFT_OTLP_MAX_BODY_BYTES", "GRAFT_OTLP_MAX_BUFFERED_BYTES",
+      "GRAFT_OTLP_SEAL_TARGET_BYTES", "GRAFT_OTLP_SEAL_MAX_AGE_MS",
+      "GRAFT_OTLP_TARGET_FILE_SIZE", "GRAFT_OTLP_MAINTENANCE_RETENTION_MS",
+      "GRAFT_OTLP_HTTP_THREADS").foreach { k =>
+      val e = parquet + (k -> "abc")
+      val err = intercept[IllegalArgumentException](ServerMain.configFromEnv(env(e)))
+      assert(err.getMessage == s"$k must be an integer, got 'abc'")
+      assert(ServerMain.run(env(e)) == 2, k)
+    }
+    intercept[IllegalArgumentException](ServerMain.configFromEnv(env(
+      Map("GRAFT_OTLP_HTTP_THREADS" -> "4294967296"))))
+    assert(ServerMain.configFromEnv(env(parquet +
+      ("GRAFT_OTLP_MAX_BODY_BYTES" -> "4294967296")))
+      .serveParams("max_body_bytes") == "4294967296")
   }
 
   test("daemon session: master from the injected env, partitions from the master") {

@@ -49,8 +49,7 @@ class TierTwoReadSpec extends SparkTestBase {
     // full dictionary encoding on trace_id (the precondition for actually
     // materializing the bloom — a fully dict-encoded chunk gets none).
     (0 until 4).foreach { i =>
-      seal(spark, spans(spark, i * 50000L, 50000L, services = 20),
-        root, s"bloom-$i")
+      seal(spark, spans(spark, i * 50000L, 50000L, services = 20), root)
     }
     val files = parquetFiles(root)
     assert(files.size >= 4, s"expected >=4 sealed files, got ${files.size}")
@@ -113,7 +112,7 @@ class TierTwoReadSpec extends SparkTestBase {
     val unclustered = tmpDir("graft-tier2-unclustered")
     try {
       val df = spans(spark, 0L, 200000L, services = 20)
-      seal(spark, df, clustered, "cluster-0") // production: (svc, time) sort
+      seal(spark, df, clustered) // production: (svc, time) sort
       // identical rows, same y/m/d layout, but hash-scattered row order —
       // what a writer that skips the clustering sort would produce
       df.withColumn("year", date_format(col("start_time_unix_nano"), "yyyy"))
